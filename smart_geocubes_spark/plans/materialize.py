@@ -7,17 +7,33 @@ Re-expresses the reference's load-and-cache lifecycle
     -> LEFT ANTI JOIN lineage            (cache skip, accessor.py:434-436)
     -> mapInPandas block generation      (download_patch analog)
     -> partitioned parquet append        (chunk-region write, backend.py:263-272)
-    -> lineage append = COMMIT           (loaded_patches + icechunk commit,
+    -> lineage append + commit ticket    (loaded_patches + icechunk commit,
                                           backends/simple.py:36-38)
 
-Transactional model: each run writes under ``blocks/batch=<id>/`` and
-then ``lineage/batch=<id>/``; a batch exists iff its lineage write
-completed (Spark's job-level commit + _SUCCESS marker). Readers resolve
-the cube as blocks SEMI JOIN lineage, so a job killed mid-write leaves
-invisible orphans and the next run redoes exactly the missing chunks —
-the same observable semantics as one icechunk commit per patch with
-``loaded_patches`` replay (``backends/threaded.py:119-122``), with
-Spark's task-commit protocol replacing the hand-built retry machinery.
+On-disk layout — the one format every writer produces:
+
+  _meta.json                       CubeSpec (grid, channels, time, dtypes)
+  blocks/batch=<id>/dt-<elem>/     one parquet leaf per storage element
+                                   type (``dt-double`` for float64
+                                   channels), each with its _SUCCESS
+  blocks/batch=<id>/_SUCCESS       every leaf of the batch landed
+  lineage/batch=<id>/              one payload-free row per chunk
+  lineage/_commits/<seq>=<id>      the O_EXCL commit ticket, created
+                                   with the cube by :func:`create_cube`
+
+Fills, patches and compactions all write this layout (beside it:
+``events_write/``, ``metrics/``, ``patches/``, and ``events/`` and
+``overviews/`` once compaction or a pyramid build ran).
+
+Transactional model: each run writes under ``blocks/batch=<id>/``,
+then ``lineage/batch=<id>/``, then takes its commit ticket; a batch
+exists iff its ticket was taken (after its lineage _SUCCESS). Readers
+resolve the cube as blocks SEMI JOIN committed lineage, so a job killed
+at any point before the ticket leaves invisible orphans and the next
+run redoes exactly the missing chunks — the same observable semantics
+as one icechunk commit per patch with ``loaded_patches`` replay
+(``backends/threaded.py:119-122``), with Spark's task-commit protocol
+replacing the hand-built retry machinery.
 
 Scale notes (100 TB cube, 1000 executors):
 - blocks are partitioned by ``pt = tile_id % N_PARTS`` (stable bucket,
@@ -50,7 +66,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from smart_geocubes_spark.geo.geobox import TileGrid
@@ -68,8 +84,7 @@ LINEAGE_SCHEMA = (
     # pixels. Fills and patches stamp their own id; compaction — a
     # verbatim rewrite — carries the shadowed winner's src_batch
     # through, so CDC (load_changes) can tell "rewritten, same bytes"
-    # from "actually new content". Legacy rows read NULL =
-    # coalesce(src_batch, batch_id).
+    # from "actually new content".
     "src_batch string"
 )
 # per-chunk event rows emitted from inside the block-generation kernel;
@@ -101,7 +116,6 @@ BLOCK_WRITE_SCHEMA = (
 # chunk). They ride inside the block files like the event columns do
 # (one write job; stats reads are column-pruned so the 8 KB+ block
 # arrays are never touched), and compaction carries them through.
-# Legacy pre-stats files read NULL = "bounds unknown, keep".
 STATS_COLS = "v_min double, v_max double, n_valid long"
 BLOCK_FILE_SCHEMA = BLOCK_WRITE_SCHEMA + ", " + STATS_COLS
 
@@ -188,16 +202,14 @@ def _with_chunk_stats(df: DataFrame, elem: str) -> DataFrame:
     """Append the zone-map columns (STATS_COLS) to a block frame whose
     ``block`` column already holds the STORED element type. All-JVM
     codegen: widen -> drop NaN -> array_min/max/size. An all-NaN chunk
-    gets (NULL, NULL, 0) — prunable, distinct from the legacy
-    (NULL, NULL, NULL) = unknown."""
-    wide = F.col("block") if elem == "double" else _to_double(elem)
+    gets (NULL, NULL, 0) — prunable by any value range."""
     return (
         # "no data" is NULL-or-NaN (the kernel emits NaN; Arrow's
         # pandas list conversion turns NaN into null crossing into the
         # JVM) — and Spark's isnan(NULL) is FALSE, so both tests are
         # required or null holes count as valid pixels
         df.withColumn(
-            "_valid", F.filter(wide, lambda x: x.isNotNull() & ~F.isnan(x))
+            "_valid", F.filter(_to_double(elem), lambda x: x.isNotNull() & ~F.isnan(x))
         )
         .withColumn("v_min", F.array_min("_valid"))
         .withColumn("v_max", F.array_max("_valid"))
@@ -207,21 +219,13 @@ def _with_chunk_stats(df: DataFrame, elem: str) -> DataFrame:
 
 
 def _block_leaf_dirs(batch_dirs: list[str]) -> dict[str, list[str]]:
-    """Element type -> parquet leaf dirs across batch dirs. A batch
-    written by an all-float64 cube keeps its part files at the top
-    level (the unchanged fast path and the pre-dtype layout); a typed
-    batch holds one ``dt-<elem>`` subdir per storage type."""
+    """Element type -> parquet leaf dirs across batch dirs: every batch
+    holds one ``dt-<elem>`` subdir per storage type it wrote."""
     out: dict[str, list[str]] = {}
     for bd in batch_dirs:
-        subs = [
-            s for s in sorted(os.listdir(bd))
-            if s.startswith("dt-")
-            and os.path.exists(os.path.join(bd, s, "_SUCCESS"))
-        ]
-        for s in subs:
-            out.setdefault(s[3:], []).append(os.path.join(bd, s))
-        if any(f.startswith("part-") for f in os.listdir(bd)):
-            out.setdefault("double", []).append(bd)
+        for s in sorted(os.listdir(bd)):
+            if s.startswith("dt-") and os.path.exists(os.path.join(bd, s, "_SUCCESS")):
+                out.setdefault(s[3:], []).append(os.path.join(bd, s))
     return out
 
 
@@ -311,11 +315,13 @@ def block_base_values(b: pd.DataFrame) -> np.ndarray:
 def create_cube(path: str, spec: CubeSpec) -> None:
     """DDL: write grid/channel/time metadata + empty layout (reference
     ``create()``, ``core/accessor.py:206-296``). Idempotent-checked like
-    its overwrite/exists semantics (``tests/test_creation.py:122-140``)."""
+    its overwrite/exists semantics (``tests/test_creation.py:122-140``).
+    The commit-ticket dir is part of the empty layout, so the very
+    first fill is ticket-gated like every later one."""
     if os.path.exists(os.path.join(path, "_meta.json")):
         raise FileExistsError(path)
     os.makedirs(os.path.join(path, "blocks"), exist_ok=True)
-    os.makedirs(os.path.join(path, "lineage"), exist_ok=True)
+    os.makedirs(_commits_dir(path), exist_ok=True)
     with open(os.path.join(path, "_meta.json"), "w") as f:
         json.dump(spec.to_json(), f)
 
@@ -352,7 +358,7 @@ def add_channel(path: str, name: str, dtype: str = "float64") -> CubeSpec:
     if dtype not in DTYPES:
         raise ValueError(f"unknown dtype {dtype!r}; supported: {sorted(DTYPES)}")
     if spec.dtypes is None and dtype == "float64":
-        new_dtypes = None  # stays the all-double fast path
+        new_dtypes = None  # stays an all-float64 spec
     else:
         new_dtypes = tuple(spec.channel_dtype(c) for c in spec.channels) + (dtype,)
     new = CubeSpec(
@@ -369,10 +375,10 @@ def add_channel(path: str, name: str, dtype: str = "float64") -> CubeSpec:
 
 
 def _lineage_batches(path: str) -> list[str]:
-    """Committed batch dirs: _SUCCESS present AND (when the cube has a
-    ticket dir) a commit ticket taken. The seq snapshot is read FIRST,
-    so a batch ticketing mid-listing is consistently excluded from this
-    read and appears atomically on the next one."""
+    """Committed batch dirs: _SUCCESS present AND a commit ticket
+    taken. The seq snapshot is read FIRST, so a batch ticketing
+    mid-listing is consistently excluded from this read and appears
+    atomically on the next one."""
     seqs = _commit_seqs(path)
     ldir = os.path.join(path, "lineage")
     out = []
@@ -381,7 +387,7 @@ def _lineage_batches(path: str) -> list[str]:
             continue
         if not os.path.exists(os.path.join(ldir, b, "_SUCCESS")):
             continue
-        if seqs is not None and b.split("=", 1)[1] not in seqs:
+        if b.split("=", 1)[1] not in seqs:
             continue  # lineage landed but ticket not yet taken (or crashed)
         out.append(os.path.join(ldir, b))
     return out
@@ -401,42 +407,8 @@ def _allocate_commit_seq(path: str, batch_id: str) -> int:
     (coarse-granularity filesystems and cp/untar/object-store restores
     produce equal or reordered mtimes). A crash between the lineage
     write and the ticket leaves an invisible orphan that the next fill
-    redoes and vacuum() reaps.
-
-    First allocation on a pre-ticket cube backfills tickets for its
-    existing committed batches in (mtime, batch_id) order — the legacy
-    ordering, frozen once. The backfill is ATOMIC: tickets are written
-    into a temp dir and os.rename'd into place, so the _commits dir is
-    either absent (pure legacy mode) or complete — a crash mid-backfill
-    leaves only a temp dir (reaped by vacuum) and the next committer
-    redoes it; readers can never observe a partial ticket set that
-    would make committed batches invisible."""
+    redoes and vacuum() reaps."""
     d = _commits_dir(path)
-    if not os.path.isdir(d):
-        ldir = os.path.join(path, "lineage")
-        legacy = sorted(
-            (
-                (os.path.getmtime(os.path.join(ldir, b, "_SUCCESS")), b.split("=", 1)[1])
-                for b in os.listdir(ldir)
-                if b.startswith("batch=")
-                and os.path.exists(os.path.join(ldir, b, "_SUCCESS"))
-                and b.split("=", 1)[1] != batch_id  # the caller gets its own
-            ),
-        )
-        tmp = f"{d}.tmp.{uuid.uuid4().hex}"
-        os.makedirs(tmp)
-        for _, bid in legacy:
-            _take_ticket(tmp, bid)
-        try:
-            os.rename(tmp, d)  # atomic: all-or-nothing backfill
-        except OSError:  # concurrent committer's backfill won the rename
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-    return _take_ticket(d, batch_id)
-
-
-def _take_ticket(d: str, batch_id: str) -> int:
     seq = 1 + max(
         (int(f.split("=", 1)[0]) for f in os.listdir(d) if "=" in f), default=0
     )
@@ -452,17 +424,13 @@ def _take_ticket(d: str, batch_id: str) -> int:
             seq += 1
 
 
-def _commit_seqs(path: str) -> dict[str, int] | None:
-    """batch_id -> seq, or None when the cube predates tickets (pure
-    legacy mode: _SUCCESS alone gates visibility, mtime orders)."""
-    d = _commits_dir(path)
-    if not os.path.isdir(d):
-        return None
+def _commit_seqs(path: str) -> dict[str, int]:
+    """batch_id -> seq of its commit ticket (one ticket per batch)."""
     out: dict[str, int] = {}
-    for f in os.listdir(d):
+    for f in os.listdir(_commits_dir(path)):
         if "=" in f:
             s, bid = f.split("=", 1)
-            out[bid] = min(int(s), out.get(bid, 1 << 62))
+            out[bid] = int(s)
     return out
 
 
@@ -510,10 +478,9 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
         if os.path.exists(os.path.join(ed, "_SUCCESS")):
             dirs.append(ed)
         elif os.path.isdir(bd):
-            # typed batches keep their parquet under dt-<elem> subdirs;
             # the EVENT_SCHEMA read never touches the block column, so
-            # every leaf reads with the one pruned schema regardless of
-            # its storage element type
+            # every dt-<elem> leaf reads with the one pruned schema
+            # regardless of its storage element type
             for ds in _block_leaf_dirs([bd]).values():
                 dirs.extend(ds)
         wj = os.path.join(path, "events_write", b, "write.json")
@@ -525,16 +492,14 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
     # a compacted batch carries exact COPIES of prior batches' events
     # (history preservation); until vacuum removes the originals both
     # are visible — drop the byte-identical duplicates. Metadata-sized
-    # table, so the distinct is cheap. Legacy pre-event-format block
-    # files have no event columns (schema read fills NULL): drop them.
-    # Block files store no ``action`` column (they ARE the generate
-    # rows); compacted history copies store it explicitly.
+    # table, so the distinct is cheap. Block files store no ``action``
+    # column (they ARE the generate rows); compacted history copies
+    # store it explicitly.
     parts = []
     if dirs:
         parts.append(
             spark.read.schema(EVENT_SCHEMA)
             .parquet(*dirs)
-            .filter(F.col("t_start_us").isNotNull())
             .withColumn("action", F.coalesce(F.col("action"), F.lit("generate")))
         )
     if write_rows:
@@ -570,25 +535,18 @@ def _record_write_events(path: str, batch_id: str, block_dir: str, job_start_us:
     import re as _re
 
     rows = []
-    # typed batches keep their part files under dt-<elem> subdirs —
-    # walk one level of them alongside the top-level layout. Each
-    # subdir is its own write JOB whose part files restart at
-    # part-00000, so the subdir index offsets the recorded
+    # each dt-<elem> leaf is its own write JOB whose part files restart
+    # at part-00000, so the leaf index offsets the recorded
     # partition_id (r6 correctness fix, advisor item #4): without it a
-    # typed batch emitted multiple 'write' rows sharing a partition_id
-    # and event_durations conflated files from different dtype-group
-    # jobs into one lane. Top-level (all-double) files keep offset 0 —
-    # the gen-lane <-> write-lane pid equality the Gantt tests pin.
+    # multi-leaf batch emitted several 'write' rows sharing a
+    # partition_id and event_durations conflated files from different
+    # dtype-group jobs into one lane. The first leaf keeps offset 0 —
+    # a single-dtype cube's gen-lane <-> write-lane pid equality, which
+    # the Gantt tests pin.
+    subs = sorted(s for s in os.listdir(block_dir) if s.startswith("dt-"))
     names = [
-        (fn, os.path.join(block_dir, fn), 0) for fn in sorted(os.listdir(block_dir))
-    ]
-    subs = [
-        sub for sub, _, _ in list(names)
-        if sub.startswith("dt-") and os.path.isdir(os.path.join(block_dir, sub))
-    ]
-    names += [
-        (fn, os.path.join(block_dir, sub, fn), (si + 1) * 100000)
-        for si, sub in enumerate(sorted(subs))
+        (fn, os.path.join(block_dir, sub, fn), si * 100000)
+        for si, sub in enumerate(subs)
         for fn in sorted(os.listdir(os.path.join(block_dir, sub)))
     ]
     for fn, fp, pid_off in names:
@@ -676,6 +634,31 @@ def _item_tiles(grid: TileGrid, item) -> np.ndarray:
     return grid.tiles_overlapping_polygon(px, py)
 
 
+def _roi_tile_ids(grid: TileGrid, roi) -> tuple[list[int], list[tuple[int, int]] | None]:
+    """Any :func:`_roi_items` spelling -> (sorted unique tile ids,
+    ``(tile_id, roi_idx)`` pairs when ``roi`` is a batch list, else
+    None). An ROI outside the cube extent (typo'd / lon-lat swapped)
+    raises: an empty tile set would read as "nothing committed here"
+    and hide the error."""
+    items, is_batch = _roi_items(roi)
+    nx = grid.n_tiles_x
+    pairs = [
+        (int(ty * nx + tx), i)
+        for i, it in enumerate(items)
+        for tx, ty in _item_tiles(grid, it)
+    ]
+    if not pairs:
+        raise ValueError("ROI does not intersect the cube extent")
+    return sorted({t for t, _ in pairs}), (pairs if is_batch else None)
+
+
+def _chunk_key():
+    """THE chunk identity column, ``<time_idx>-<tile_y>-<tile_x>-<channel>``."""
+    return F.concat_ws(
+        "-", F.col("time_idx"), F.col("tile_y"), F.col("tile_x"), F.col("channel")
+    )
+
+
 def candidate_chunks(
     spark: SparkSession,
     spec: CubeSpec,
@@ -697,16 +680,13 @@ def candidate_chunks(
         # entry point — fill, load, read_snapshot — must reject a TOI
         # on an atemporal cube rather than silently ignore it
         raise ValueError("TOI given for an atemporal cube")
-    rois, _ = _roi_items(roi_bbox)
-    tile_arrays = [_item_tiles(spec.grid, r) for r in rois]
-    tiles = np.unique(np.concatenate([t for t in tile_arrays if len(t)] or
-                                     [np.empty((0, 2), dtype=np.int64)]), axis=0)
-    if len(tiles) == 0:
-        raise ValueError("ROI does not intersect the cube extent")
+    tile_ids = np.array(_roi_tile_ids(spec.grid, roi_bbox)[0], dtype=np.int64)
     nx = spec.grid.n_tiles_x
     tdf = spark.createDataFrame(
-        pd.DataFrame({"tile_x": tiles[:, 0], "tile_y": tiles[:, 1]})
-    ).withColumn("tile_id", F.col("tile_y") * F.lit(nx) + F.col("tile_x"))
+        pd.DataFrame(
+            {"tile_x": tile_ids % nx, "tile_y": tile_ids // nx, "tile_id": tile_ids}
+        )
+    )
     if spec.time_epochs is None:
         tdf = tdf.withColumn("time_idx", F.lit(-1).cast("int"))
     else:
@@ -733,11 +713,7 @@ def candidate_chunks(
             )
         )
     ch = spark.createDataFrame(pd.DataFrame({"channel": list(spec.channels)}))
-    out = tdf.crossJoin(F.broadcast(ch))
-    return out.withColumn(
-        "chunk_key",
-        F.concat_ws("-", F.col("time_idx"), F.col("tile_y"), F.col("tile_x"), F.col("channel")),
-    )
+    return tdf.crossJoin(F.broadcast(ch)).withColumn("chunk_key", _chunk_key())
 
 
 def plan_missing(candidates: DataFrame, lineage: DataFrame) -> DataFrame:
@@ -805,15 +781,14 @@ def _write_blocks(
     plan_df: DataFrame,
     block_dir: str,
     make_blocks,
-    present_channels: set[str] | None = None,
+    present_channels: set[str],
 ) -> None:
     """Write a fill/patch's blocks, grouped by storage dtype.
 
     ``make_blocks(plan_subset) -> BLOCK_WRITE_SCHEMA frame`` (double
     blocks, straight from the kernel or the patch-merge pipeline).
-    All-float64 cubes take the single top-level write (the pre-dtype
-    layout, byte-identical fast path); typed cubes write one
-    ``dt-<elem>`` subdir per storage group. Channel filtering happens
+    Every batch writes one ``dt-<elem>`` subdir per storage group
+    (``dt-double`` for float64 channels). Channel filtering happens
     on the PLAN rows — BEFORE the kernel (a filter above mapInPandas
     cannot be pushed through it, so filtering blocks after generation
     would run the kernel once per group over ALL chunks).
@@ -822,18 +797,11 @@ def _write_blocks(
     (callers already know it from the per-channel plan count) — groups
     with no planned chunks are skipped entirely, so a lazy backfill of
     one evolved channel costs one write job, not one per dtype group."""
-    groups = _dtype_groups(spec)
-    if present_channels is not None:
-        groups = {
-            e: kept
-            for e, chans in groups.items()
-            if (kept := [c for c in chans if c in present_channels])
-        }
-    if set(groups) == {"double"} and spec.dtypes is None:
-        _with_chunk_stats(make_blocks(plan_df), "double").write.mode(
-            "overwrite"
-        ).parquet(block_dir)
-        return
+    groups = {
+        e: kept
+        for e, chans in _dtype_groups(spec).items()
+        if (kept := [c for c in chans if c in present_channels])
+    }
 
     def _write_group(item: tuple[str, list[str]]) -> None:
         elem, chans = item
@@ -866,14 +834,98 @@ def _lineage_nbytes(spec: CubeSpec, n_px: int):
     """Per-channel stored-bytes column: typed channels are the whole
     point of the dtype system at 100 TB, so lineage accounting must not
     keep claiming 8 bytes/px for a bool channel."""
-    if spec.dtypes is None:
-        return F.lit(8 * n_px).cast("long")
     expr = F.lit(8 * n_px)
     for elem, chans in _dtype_groups(spec).items():
         expr = F.when(
             F.col("channel").isin(chans), F.lit(_ELEM_NBYTES[elem] * n_px)
         ).otherwise(expr)
     return expr.cast("long")
+
+
+def _bucketed(plan: DataFrame, batch_id: str) -> DataFrame:
+    """Stamp a batch's plan rows with their stable block bucket and
+    batch id, co-locate each bucket, sort, and checkpoint.
+
+    The plan feeds three actions (per-channel count, block write,
+    lineage write): bucket once, sort within partitions so the written
+    files' row-group min/max stats on (tile_id, time_idx, channel) are
+    tight (the pruning the module docstring promises — sorting the PLAN
+    rows is cheap; the kernel preserves row order so the block rows
+    land sorted too), then localCheckpoint. EXPLICIT partition count: a
+    bare repartition(col) is an AQE coalesce target — at bench scale
+    the plan rows are a few KB and AQE folds them into ONE partition,
+    serializing the whole fill kernel + write behind a single task
+    (measured: 2x tiles/sec). N_PARTS pins the bucket layout the module
+    docstring promises (2+ consumers -> checkpoint, never cache, whose
+    evicted partitions silently recompute the anti-join per action)."""
+    return (
+        plan.withColumn("pt", (F.col("tile_id") % N_PARTS).cast("int"))
+        .withColumn("batch_id", F.lit(batch_id))
+        .repartition(N_PARTS, F.col("pt"))
+        .sortWithinPartitions("tile_id", "time_idx", "channel")
+        .localCheckpoint(eager=True)
+    )
+
+
+def _commit_batch(
+    path: str,
+    spec: CubeSpec,
+    batch_id: str,
+    plan: DataFrame,
+    ch_counts: dict[str, int],
+    make_blocks,
+    t0: float,
+    fail_after_blocks: bool = False,
+    **extra,
+) -> dict:
+    """THE commit sequence every fill and patch runs on its
+    :func:`_bucketed` plan for ``batch_id``, whose per-channel chunk
+    counts are ``ch_counts`` (all nonzero): blocks (one ``dt-<elem>``
+    leaf per storage group with planned chunks), write events, lineage,
+    the commit ticket, then the per-run metrics json (event-log analog,
+    core/backend.py:23-28) plus ``extra`` — which it returns.
+    ``fail_after_blocks`` simulates a crash between the block write and
+    the lineage commit."""
+    block_dir = os.path.join(path, "blocks", f"batch={batch_id}")
+    t_write0 = time.time_ns() // 1000
+    _write_blocks(spec, plan, block_dir, make_blocks, set(ch_counts))
+    # the per-chunk 'generate' event rows STAY inside the block files
+    # (read_events column-prunes them out); the per-partition 'write'
+    # rows come from the landed part files' metadata — no second events
+    # write job per fill
+    _record_write_events(path, batch_id, block_dir, t_write0)
+
+    if fail_after_blocks:
+        raise RuntimeError("simulated crash before lineage commit")
+
+    # lineage rows from the SAME pt-bucketed partitions the blocks
+    # were written from, so partition_id names the block write
+    # partition (per-partition lineage contract)
+    n_px = spec.grid.chunk_px * spec.grid.chunk_px
+    lin = (
+        plan.withColumn("partition_id", F.spark_partition_id())
+        .withColumn("n_rows", F.lit(1).cast("long"))
+        .withColumn("n_bytes", _lineage_nbytes(spec, n_px))
+        .withColumn("src_batch", F.col("batch_id"))
+        .select(
+            "chunk_key", "tile_id", "time_idx", "channel",
+            "batch_id", "partition_id", "n_rows", "n_bytes", "src_batch",
+        )
+    )
+    lin.write.mode("overwrite").parquet(os.path.join(path, "lineage", f"batch={batch_id}"))
+    _allocate_commit_seq(path, batch_id)  # THE commit point (atomic ticket)
+
+    metrics = {
+        "batch_id": batch_id,
+        "written": int(sum(ch_counts.values())),
+        **extra,
+        "sec": time.time() - t0,
+    }
+    mdir = os.path.join(path, "metrics")
+    os.makedirs(mdir, exist_ok=True)
+    with open(os.path.join(mdir, f"{batch_id}.json"), "w") as f:
+        json.dump(metrics, f)
+    return metrics
 
 
 def materialize(
@@ -897,97 +949,38 @@ def materialize(
         batch_id = uuid.uuid4().hex[:12]
     t0 = time.time()
 
-    candidates = candidate_chunks(spark, spec, roi_bbox, toi_epochs)
-    lineage = read_lineage(spark, path)
-    missing = plan_missing(candidates, lineage)
-    # one shuffle to co-locate chunks of the same block bucket, so each
-    # output partition maps to one stable pt bucket
-    missing = missing.withColumn("pt", (F.col("tile_id") % N_PARTS).cast("int")).withColumn(
-        "batch_id", F.lit(batch_id)
-    )
-    # the anti-join plan feeds three actions (count, block write,
-    # lineage write): bucket once, sort within partitions so the
-    # written files' row-group min/max stats on (tile_id, time_idx,
-    # channel) are tight (the pruning the module docstring promises —
-    # sorting the PLAN rows is cheap; the kernel preserves row order
-    # so the block rows land sorted too), then localCheckpoint.
-    # EXPLICIT partition count: a bare repartition(col) is an AQE
-    # coalesce target — at bench scale the plan rows are a few KB and
-    # AQE folds them into ONE partition, serializing the whole fill
-    # kernel + write behind a single task (measured: 2x tiles/sec).
-    # N_PARTS pins the bucket layout the module docstring promises
-    # (CLAUDE.md rule: 2+ consumers -> checkpoint, never cache whose
-    # evicted partitions silently recompute the anti-join per action)
-    missing = (
-        missing.repartition(N_PARTS, F.col("pt"))
-        .sortWithinPartitions("tile_id", "time_idx", "channel")
-        .localCheckpoint(eager=True)
+    missing = _bucketed(
+        plan_missing(
+            candidate_chunks(spark, spec, roi_bbox, toi_epochs), read_lineage(spark, path)
+        ),
+        batch_id,
     )
     # per-channel counts in ONE job (replaces the plain count): the
     # total gates the all-cached return, the channel set lets
     # _write_blocks skip dtype groups with no planned chunks (a lazy
     # backfill of one evolved channel = one write job, not one per
-    # dtype group)
-    ch_counts = {r["channel"]: r["n"] for r in
-                 missing.groupBy("channel").agg(F.count("*").alias("n")).collect()}
-    n_missing = sum(ch_counts.values())
-    if n_missing == 0:
+    # dtype group). The collect stays in this function's body:
+    # perfbench names the fill's count phase by its enclosing function.
+    ch_counts = dict(missing.groupBy("channel").count().collect())
+    if not ch_counts:
         # nothing committed under this id — returning it would hand
         # the caller a batch_id that snapshots()/as_of reject
         return {
             "batch_id": None, "written": 0, "skipped": "all cached",
             "sec": time.time() - t0,
         }
-
-    block_dir = os.path.join(path, "blocks", f"batch={batch_id}")
-    t_write0 = time.time_ns() // 1000
-    _write_blocks(
+    return _commit_batch(
+        path,
         spec,
+        batch_id,
         missing,
-        block_dir,
+        ch_counts,
         lambda part: part.mapInPandas(
             _gen_blocks_factory(spec.grid.chunk_px), schema=BLOCK_WRITE_SCHEMA
         ),
-        present_channels=set(ch_counts),
+        t0,
+        fail_after_blocks=fail_after_blocks,
     )
-    # the per-chunk 'generate' event rows STAY inside the block files
-    # (read_events column-prunes them out); the per-partition 'write'
-    # rows come from the landed part files' metadata — no second events
-    # write job per fill
-    _record_write_events(path, batch_id, block_dir, t_write0)
-
-    if fail_after_blocks:
-        raise RuntimeError("simulated crash before lineage commit")
-
-    # lineage rows from the SAME pt-bucketed partitions the blocks
-    # were written from, so partition_id names the block write
-    # partition (per-partition lineage contract) — the COMMIT.
-    n_px = spec.grid.chunk_px * spec.grid.chunk_px
-    lin = (
-        missing.withColumn("partition_id", F.spark_partition_id())
-        .withColumn("n_rows", F.lit(1).cast("long"))
-        .withColumn("n_bytes", _lineage_nbytes(spec, n_px))
-        .withColumn("src_batch", F.col("batch_id"))
-        .select(
-            "chunk_key", "tile_id", "time_idx", "channel",
-            "batch_id", "partition_id", "n_rows", "n_bytes", "src_batch",
-        )
-    )
-    lin_dir = os.path.join(path, "lineage", f"batch={batch_id}")
-    lin.write.mode("overwrite").parquet(lin_dir)
-    _allocate_commit_seq(path, batch_id)  # THE commit point (atomic ticket)
-
-    # per-run metrics (event-log analog, core/backend.py:23-28)
-    metrics = {
-        "batch_id": batch_id,
-        "written": int(n_missing),
-        "sec": time.time() - t0,
-    }
-    mdir = os.path.join(path, "metrics")
-    os.makedirs(mdir, exist_ok=True)
-    with open(os.path.join(mdir, f"{batch_id}.json"), "w") as f:
-        json.dump(metrics, f)
-    return metrics
 
 
 def materialize_patch(
@@ -1039,17 +1032,8 @@ def materialize_patch(
     t0 = time.time()
     batch_id = _compact_id(path)
 
-    cand = candidate_chunks(spark, spec, patch_bbox, toi_epochs)
-    cand = (
-        cand.withColumn("pt", (F.col("tile_id") % N_PARTS).cast("int"))
-        .withColumn("batch_id", F.lit(batch_id))
-        .repartition(N_PARTS, F.col("pt"))
-        .sortWithinPartitions("tile_id", "time_idx", "channel")
-        .localCheckpoint(eager=True)  # feeds kernel + lineage + count
-    )
-    ch_counts = {r["channel"]: r["n"] for r in
-                 cand.groupBy("channel").agg(F.count("*").alias("n")).collect()}
-    n_chunks = sum(ch_counts.values())
+    cand = _bucketed(candidate_chunks(spark, spec, patch_bbox, toi_epochs), batch_id)
+    ch_counts = dict(cand.groupBy("channel").count().collect())
     gb = spec.grid.geobox
     # currently-visible content of exactly these chunks (winner rows,
     # patch-bounded — the same pruned scan load() serves readers);
@@ -1095,37 +1079,11 @@ def materialize_patch(
             .sortWithinPartitions("tile_id", "time_idx", "channel")
         )
 
-    patch_block_dir = os.path.join(path, "blocks", f"batch={batch_id}")
-    t_write0 = time.time_ns() // 1000
-    _write_blocks(spec, cand, patch_block_dir, _merged, present_channels=set(ch_counts))
-    _record_write_events(path, batch_id, patch_block_dir, t_write0)
-
-    n_px = spec.grid.chunk_px * spec.grid.chunk_px
-    lin = (
-        cand.withColumn("partition_id", F.spark_partition_id())
-        .withColumn("n_rows", F.lit(1).cast("long"))
-        .withColumn("n_bytes", _lineage_nbytes(spec, n_px))
-        .withColumn("src_batch", F.col("batch_id"))
-        .select(
-            "chunk_key", "tile_id", "time_idx", "channel",
-            "batch_id", "partition_id", "n_rows", "n_bytes", "src_batch",
-        )
+    metrics = _commit_batch(
+        path, spec, batch_id, cand, ch_counts, _merged, t0, patch_id=patch_id
     )
-    lin.write.mode("overwrite").parquet(os.path.join(path, "lineage", f"batch={batch_id}"))
-    _allocate_commit_seq(path, batch_id)  # THE commit point
-
-    metrics = {
-        "batch_id": batch_id,
-        "written": int(n_chunks),
-        "patch_id": patch_id,
-        "sec": time.time() - t0,
-    }
     with open(marker, "w") as f:
         json.dump({"patch_id": patch_id, "batch_id": batch_id, "bbox": list(patch_bbox)}, f)
-    mdir = os.path.join(path, "metrics")
-    os.makedirs(mdir, exist_ok=True)
-    with open(os.path.join(mdir, f"{batch_id}.json"), "w") as f:
-        json.dump(metrics, f)
     return metrics
 
 
@@ -1135,27 +1093,58 @@ def snapshots(path: str) -> list[dict]:
     Each entry: {batch_id, seq, committed_at}. Order comes from the
     atomic commit counter (_allocate_commit_seq) — NEVER from mtimes,
     which coarse filesystems and cp/untar restores make equal or
-    non-monotonic; mtime ordering survives only as the fallback for
-    pre-counter cubes (and then for the whole list, consistently).
-    Vacuum sets the retention horizon: it physically drops shadowed
-    batches, so time travel reaches only as far back as the last
-    vacuum left intact."""
-    seqs = _commit_seqs(path) or {}
+    non-monotonic. Vacuum sets the retention horizon: it physically
+    drops shadowed batches, so time travel reaches only as far back as
+    the last vacuum left intact."""
+    batches = _lineage_batches(path)
+    # read AFTER the listing: every listed batch's ticket is in it,
+    # even when another batch commits in between
+    seqs = _commit_seqs(path)
     out = []
-    for b in _lineage_batches(path):
+    for b in batches:
         bid = os.path.basename(b).split("=", 1)[1]
         out.append(
             {
                 "batch_id": bid,
-                "seq": seqs.get(bid),
+                "seq": seqs[bid],
                 "committed_at": os.path.getmtime(os.path.join(b, "_SUCCESS")),
             }
         )
-    if seqs:  # every committed batch has a ticket by construction
-        out.sort(key=lambda r: r["seq"])
-    else:  # pre-ticket cube: legacy mtime order for the WHOLE list
-        out.sort(key=lambda r: (r["committed_at"], r["batch_id"]))
-    return out
+    return sorted(out, key=lambda r: r["seq"])
+
+
+def _roi_lineage(
+    spark: SparkSession,
+    path: str,
+    tile_ids: list[int],
+    channels: list[str] | None = None,
+    allowed: set[str] | None = None,
+) -> DataFrame:
+    """Committed lineage pruned to an ROI's tiles — and optionally to
+    ``channels`` and the ``allowed`` batch ids of a snapshot — BEFORE
+    winner ranking: the full winner list is one row per chunk of the
+    whole cube (~10^8-9 chunks at 100 TB) and force-broadcasting that
+    would OOM; the ROI-pruned set is bounded by the query size, so the
+    broadcast is safe. The IN filters are pushed to the lineage parquet
+    scan."""
+    lin = read_lineage(spark, path).filter(F.col("tile_id").isin(tile_ids))
+    if channels is not None:
+        lin = lin.filter(F.col("channel").isin(list(channels)))
+    if allowed is not None:
+        lin = lin.filter(F.col("batch_id").isin(sorted(allowed)))
+    return lin
+
+
+def _winners(lineage: DataFrame) -> DataFrame:
+    """THE read rule: per chunk_key, the lineage row with the min
+    batch_id wins (deterministic; block content is deterministic, so
+    any winner of a double-committed chunk is correct; compactions and
+    patch merges take ids from the reserved "0" namespace so they
+    shadow what they rewrite)."""
+    w = Window.partitionBy("chunk_key").orderBy(F.col("batch_id").asc())
+    return (
+        lineage.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")
+    )
 
 
 def load(
@@ -1180,9 +1169,8 @@ def load(
     set then narrows BOTH the pushed tile_id IN list and the winner
     broadcast, so pruned chunks cost neither scan I/O nor join rows.
     Chunk-granular and conservative: surviving blocks still contain all
-    their pixels (exact per-pixel filtering is the caller's); legacy
-    pre-stats files carry NULL bounds = "unknown" and are always kept.
-    The survivor collect is bounded by the ROI chunk count — the same
+    their pixels (exact per-pixel filtering is the caller's). The
+    survivor collect is bounded by the ROI chunk count — the same
     cardinality load() already broadcasts as its winner set.
 
     ``stats_only=True``: return the zone-map manifest itself (one row
@@ -1227,32 +1215,26 @@ def load(
         ids = [s["batch_id"] for s in snapshots(path)]
         if as_of_batch not in ids:
             raise ValueError(f"unknown snapshot {as_of_batch!r}; committed: {ids}")
-        # PREFIX of the commit order, inclusive — deterministic even if
-        # a legacy-ordered list carries mtime ties
+        # PREFIX of the commit order, inclusive
         allowed = set(ids[: ids.index(as_of_batch) + 1])
-    nx = spec.grid.n_tiles_x
-    items, is_batch = _roi_items(roi_bbox)
-    if not is_batch:
-        tiles = _item_tiles(spec.grid, items[0])
-        tile_ids = [int(ty * nx + tx) for tx, ty in tiles]
-        roi_pairs = None
-    else:
-        roi_pairs = [
-            (int(ty * nx + tx), i)
-            for i, r in enumerate(items)
-            for tx, ty in _item_tiles(spec.grid, r)
-        ]
-        tile_ids = sorted({t for t, _ in roi_pairs})
-    if not tile_ids:
-        # same guard the write path (candidate_chunks) applies: an
-        # out-of-extent bbox (typo'd / lon-lat swapped) must not read
-        # as "nothing committed here" — that silence hides the error
-        raise ValueError("ROI does not intersect the cube extent")
+    tile_ids, roi_pairs = _roi_tile_ids(spec.grid, roi_bbox)
     batches = _block_batches(path)
     if allowed is not None:
         batches = [
             b for b in batches if os.path.basename(b).split("=", 1)[1] in allowed
         ]
+    time_idxs = (
+        None if toi_epochs is None
+        else [list(spec.time_epochs).index(t) for t in toi_epochs]
+    )
+
+    def _pruned(df: DataFrame, tile_ids: list[int]) -> DataFrame:
+        df = df.filter(F.col("tile_id").isin(tile_ids))
+        if channels is not None:
+            df = df.filter(F.col("channel").isin(list(channels)))
+        if time_idxs is not None:
+            df = df.filter(F.col("time_idx").isin(time_idxs))
+        return df.withColumn("chunk_key", _chunk_key())
 
     def _with_roi_idx(out: DataFrame) -> DataFrame:
         if roi_pairs is None:
@@ -1264,7 +1246,7 @@ def load(
         )
         return out.join(F.broadcast(mapdf), "tile_id")
 
-    if not batches:
+    def _empty_blocks() -> DataFrame:
         # match the populated path's exact schema/order (semi-join keys
         # hoisted first: chunk_key, batch_id, then block columns)
         cols = ["chunk_key", "batch_id"] + [
@@ -1273,31 +1255,21 @@ def load(
         return _with_roi_idx(
             spark.createDataFrame([], BLOCK_SCHEMA + ", chunk_key string").select(*cols)
         )
-    # per-dtype leaf scan: typed batches store one dt-<elem> subdir per
+
+    # per-dtype leaf scan: every batch stores one dt-<elem> subdir per
     # storage group; each scan reads its own typed schema and widens to
     # the array<double> compute representation with a JVM cast, then
     # the groups union (filters below push through the union into every
-    # scan). All-float64 cubes hit exactly one scan — the pre-dtype plan.
+    # scan). A single-dtype cube hits exactly one scan.
     leafs = _block_leaf_dirs(batches)
     if channels is not None:
         # dtype-GROUP pruning: a channel projection maps to the storage
         # groups that hold those channels; every other dt-<elem> leaf is
         # dropped from the plan entirely — no file listing, no scan, no
-        # per-leaf winner subplan. (Safe with mixed layouts: a flat
-        # pre-dtype batch only ever holds float64 channels, and those
-        # map to the "double" group.)
+        # per-leaf winner subplan
         wanted = {DTYPES[spec.channel_dtype(c)] for c in channels}
         leafs = {e: dirs for e, dirs in leafs.items() if e in wanted}
-
-    def _empty_blocks() -> DataFrame:
-        cols = ["chunk_key", "batch_id"] + [
-            f.split()[0] for f in BLOCK_SCHEMA.split(", ") if f.split()[0] != "batch_id"
-        ]
-        return _with_roi_idx(
-            spark.createDataFrame([], BLOCK_SCHEMA + ", chunk_key string").select(*cols)
-        )
-
-    if not leafs:  # committed dirs with no data files: same as no batches
+    if not leafs:  # nothing committed (for these channels) yet
         return _empty_blocks()
     # visibility: a block row is visible iff a committed lineage row
     # names BOTH its chunk_key AND its batch_id — orphan blocks from a
@@ -1306,25 +1278,11 @@ def load(
     # fills may both commit the same chunk (both planned against the
     # pre-commit lineage — the reference resolves this with icechunk
     # conflict retries, backends/threaded.py:85-99); we resolve it at
-    # read: exactly one winning batch per chunk_key (min batch_id,
-    # deterministic; block content is deterministic so any winner is
-    # correct).
-    from pyspark.sql import Window
-
-    # Prune lineage to the ROI's tile set BEFORE winner ranking: the
-    # full winner list is one row per chunk of the whole cube (~10^8-9
-    # chunks at 100 TB) and force-broadcasting that would OOM; the
-    # ROI-pruned set is bounded by the query size, so the broadcast is
-    # safe. The tile_id IN filter is pushed to the lineage parquet scan.
-    lineage = read_lineage(spark, path).filter(F.col("tile_id").isin(tile_ids))
-    if channels is not None:
-        lineage = lineage.filter(F.col("channel").isin(list(channels)))
-    if allowed is not None:
-        lineage = lineage.filter(F.col("batch_id").isin(sorted(allowed)))
-    lineage = lineage.select("chunk_key", "batch_id").distinct()
-    w = Window.partitionBy("chunk_key").orderBy(F.col("batch_id").asc())
-    winners = (
-        lineage.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")
+    # read: exactly one winning batch per chunk_key (_winners).
+    winners = _winners(
+        _roi_lineage(spark, path, tile_ids, channels, allowed)
+        .select("chunk_key", "batch_id")
+        .distinct()
     )
 
     if stats_only or value_range is not None:
@@ -1340,32 +1298,20 @@ def load(
         # one pruned scan over every leaf dir: the stats schema is
         # element-type-independent, so no per-dtype union is needed and
         # the block column never appears in the plan
-        sdf = spark.read.schema(stats_schema).parquet(
-            *[d for ds in leafs.values() for d in sorted(ds)]
-        )
-        sdf = sdf.filter(F.col("tile_id").isin(tile_ids))
-        if channels is not None:
-            sdf = sdf.filter(F.col("channel").isin(list(channels)))
-        if toi_epochs is not None and spec.time_epochs is not None:
-            idxs = [list(spec.time_epochs).index(t) for t in toi_epochs]
-            sdf = sdf.filter(F.col("time_idx").isin(idxs))
-        sdf = sdf.withColumn(
-            "chunk_key",
-            F.concat_ws(
-                "-", F.col("time_idx"), F.col("tile_y"), F.col("tile_x"), F.col("channel")
+        sdf = _pruned(
+            spark.read.schema(stats_schema).parquet(
+                *[d for ds in leafs.values() for d in sorted(ds)]
             ),
+            tile_ids,
         ).join(F.broadcast(winners), ["chunk_key", "batch_id"], "left_semi")
         if stats_only:
             return _with_roi_idx(sdf)
         lo, hi = (float(value_range[0]), float(value_range[1]))
         surv = (
             sdf.filter(
-                (F.col("v_min").isNull() & F.col("n_valid").isNull())
-                | (
-                    (F.col("n_valid") > 0)
-                    & (F.col("v_max") >= F.lit(lo))
-                    & (F.col("v_min") <= F.lit(hi))
-                )
+                (F.col("n_valid") > 0)
+                & (F.col("v_max") >= F.lit(lo))
+                & (F.col("v_min") <= F.lit(hi))
             )
             .select("chunk_key", "tile_id")
             .collect()
@@ -1386,17 +1332,9 @@ def load(
     df = parts[0]
     for p_ in parts[1:]:
         df = df.unionByName(p_)
-    df = df.filter(F.col("tile_id").isin(tile_ids))
-    if channels is not None:
-        df = df.filter(F.col("channel").isin(list(channels)))
-    if toi_epochs is not None and spec.time_epochs is not None:
-        idxs = [list(spec.time_epochs).index(t) for t in toi_epochs]
-        df = df.filter(F.col("time_idx").isin(idxs))
-    df = df.withColumn(
-        "chunk_key",
-        F.concat_ws("-", F.col("time_idx"), F.col("tile_y"), F.col("tile_x"), F.col("channel")),
+    return _with_roi_idx(
+        _pruned(df, tile_ids).join(F.broadcast(winners), ["chunk_key", "batch_id"], "left_semi")
     )
-    return _with_roi_idx(df.join(F.broadcast(winners), ["chunk_key", "batch_id"], "left_semi"))
 
 
 def chunk_stats(
@@ -1449,34 +1387,13 @@ def load_changes(
     ids = [s["batch_id"] for s in snapshots(path)]
     if since_batch not in ids:
         raise ValueError(f"unknown snapshot {since_batch!r}; committed: {ids}")
-    spec = open_spec(path)
-    nx = spec.grid.n_tiles_x
-    items, _ = _roi_items(roi_bbox)
-    tile_ids = sorted(
-        {int(ty * nx + tx) for it in items for tx, ty in _item_tiles(spec.grid, it)}
-    )
-    if not tile_ids:
-        raise ValueError("ROI does not intersect the cube extent")
-
-    from pyspark.sql import Window
+    tile_ids, _ = _roi_tile_ids(open_spec(path).grid, roi_bbox)
 
     def _winner_src(allowed: set[str] | None) -> DataFrame:
-        lin = read_lineage(spark, path).filter(F.col("tile_id").isin(tile_ids))
-        if channels is not None:
-            lin = lin.filter(F.col("channel").isin(list(channels)))
-        if allowed is not None:
-            lin = lin.filter(F.col("batch_id").isin(sorted(allowed)))
-        lin = lin.select(
-            "chunk_key",
-            "batch_id",
-            F.coalesce(F.col("src_batch"), F.col("batch_id")).alias("src_batch"),
-        ).distinct()
-        w = Window.partitionBy("chunk_key").orderBy(F.col("batch_id").asc())
-        return (
-            lin.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("chunk_key", "src_batch")
-        )
+        lin = _roi_lineage(spark, path, tile_ids, channels, allowed)
+        return _winners(
+            lin.select("chunk_key", "batch_id", "src_batch").distinct()
+        ).select("chunk_key", "src_batch")
 
     old = _winner_src(set(ids[: ids.index(since_batch) + 1])).withColumnRenamed(
         "src_batch", "old_src"
@@ -1556,8 +1473,7 @@ def build_overviews(
             gb.x0 + gb.width * gb.res,
             gb.y0,
         )
-    seqs = _commit_seqs(path) or {}
-    built_at = max(seqs.values(), default=0)
+    built_at = max(_commit_seqs(path).values(), default=0)
     snaps = snapshots(path)
     built_at_batch = snaps[-1]["batch_id"] if snaps else None
     # record the level's COVERAGE (r6 correctness fix, advisor item
@@ -1567,11 +1483,7 @@ def build_overviews(
     # partial zoom-out served as complete. The built tile-id set (the
     # same enumeration load() prunes by; <= n_tiles ints) makes the
     # claim exact for every ROI spelling.
-    nx = spec.grid.n_tiles_x
-    items, _ = _roi_items(roi_bbox)
-    built_tiles = sorted(
-        {int(ty * nx + tx) for it in items for tx, ty in _item_tiles(spec.grid, it)}
-    )
+    built_tiles, _ = _roi_tile_ids(spec.grid, roi_bbox)
     src = load(spark, path, roi_bbox)
     n = 0
     for f in factors:
@@ -1601,7 +1513,8 @@ def refresh_overviews(
     (:func:`load_changes`) and carry the rest of the level forward
     untouched. At 100 TB a fill touches a tiny ROI, so refresh cost
     tracks the FILL, not the cube — the full rebuild is the fallback
-    (missing level, pre-CDC meta, or the build snapshot vacuumed away).
+    (missing level, or a build snapshot that no longer exists: built on
+    an empty cube, or vacuumed away).
     A fresh level (no commits since) is a no-op.
 
     Crash-safety (derived data): the merged level lands in a tmp dir,
@@ -1612,29 +1525,25 @@ def refresh_overviews(
     full_bbox = (
         gb.x0, gb.y0 - gb.height * gb.res, gb.x0 + gb.width * gb.res, gb.y0,
     )
-    seqs = _commit_seqs(path) or {}
-    cur_seq = max(seqs.values(), default=0)
+    cur_seq = max(_commit_seqs(path).values(), default=0)
     changed_total = 0
     levels = 0
     for f in factors:
         f = int(f)
         d = os.path.join(path, "overviews", f"f={f}")
         meta_p = os.path.join(d, "_overview.json")
-        meta = None
-        if os.path.exists(meta_p):
-            with open(meta_p) as fh:
-                meta = json.load(fh)
-        since = (meta or {}).get("built_at_batch")
-        if meta is None or since is None:
+        if not os.path.exists(meta_p):
             build_overviews(spark, path, factors=(f,))
             levels += 1
             continue
+        with open(meta_p) as fh:
+            meta = json.load(fh)
         if meta["built_at_seq"] >= cur_seq:
             levels += 1  # already current
             continue
         try:
-            ch = load_changes(spark, path, full_bbox, since)
-        except ValueError:  # snapshot vacuumed away: rebuild
+            ch = load_changes(spark, path, full_bbox, meta["built_at_batch"])
+        except ValueError:  # build snapshot gone (or never existed): rebuild
             build_overviews(spark, path, factors=(f,))
             levels += 1
             continue
@@ -1649,12 +1558,10 @@ def refresh_overviews(
             "factor": f, "chunk_px": spec.grid.chunk_px // f,
             "built_at_seq": cur_seq,
             "built_at_batch": snaps[-1]["batch_id"] if snaps else None,
+            # a refresh never widens the level's coverage claim: carry
+            # the original built tile set through
+            "built_tile_ids": meta["built_tile_ids"],
         }
-        # a refresh never widens the level's coverage claim: carry the
-        # original built tile set through (legacy meta without it =
-        # pre-fix full-extent build, left absent)
-        if "built_tile_ids" in meta:
-            new_meta["built_tile_ids"] = meta["built_tile_ids"]
         if n_changed == 0:
             # nothing to merge (e.g. only a compaction landed): the
             # level content is already correct — just advance the meta
@@ -1704,33 +1611,24 @@ def load_overview(
         )
     with open(meta_p) as fh:
         meta = json.load(fh)
-    seqs = _commit_seqs(path) or {}
-    cur = max(seqs.values(), default=0)
+    cur = max(_commit_seqs(path).values(), default=0)
     if cur > meta["built_at_seq"]:
         raise ValueError(
             f"overview f={factor} is stale (built at seq "
             f"{meta['built_at_seq']}, cube at {cur}); rebuild first"
         )
-    nx = spec.grid.n_tiles_x
-    items, _ = _roi_items(roi_bbox)
-    tile_ids = sorted(
-        {int(ty * nx + tx) for it in items for tx, ty in _item_tiles(spec.grid, it)}
-    )
-    if not tile_ids:
-        raise ValueError("ROI does not intersect the cube extent")
+    tile_ids, _ = _roi_tile_ids(spec.grid, roi_bbox)
     # coverage gate (advisor item #3): a level built for a partial ROI
     # must refuse reads beyond it instead of silently serving an empty
-    # (or partial) zoom-out as complete. Legacy meta without the tile
-    # set predates partial builds (always full-extent) — no gate.
-    if "built_tile_ids" in meta:
-        outside = sorted(set(tile_ids) - set(meta["built_tile_ids"]))
-        if outside:
-            raise ValueError(
-                f"overview f={factor} covers {len(meta['built_tile_ids'])} "
-                f"tiles but the requested ROI needs {len(outside)} outside "
-                "the built region (e.g. tile_id "
-                f"{outside[0]}); rebuild with a covering ROI"
-            )
+    # (or partial) zoom-out as complete
+    outside = sorted(set(tile_ids) - set(meta["built_tile_ids"]))
+    if outside:
+        raise ValueError(
+            f"overview f={factor} covers {len(meta['built_tile_ids'])} "
+            f"tiles but the requested ROI needs {len(outside)} outside "
+            "the built region (e.g. tile_id "
+            f"{outside[0]}); rebuild with a covering ROI"
+        )
     df = spark.read.schema(OVERVIEW_SCHEMA).parquet(d)
     df = df.filter(F.col("tile_id").isin(tile_ids))
     if channels is not None:
@@ -1768,10 +1666,7 @@ def _compact_id(path: str) -> str:
     shadowed predecessors (overwrite-while-reading)."""
     lo = 0x0FFFFFFFFFFF + 1
     for sub in ("lineage", "blocks"):
-        d = os.path.join(path, sub)
-        if not os.path.isdir(d):
-            continue
-        for b in os.listdir(d):
+        for b in os.listdir(os.path.join(path, sub)):
             if b.startswith("batch=0"):
                 lo = min(lo, int(b.split("=", 1)[1], 16))
     return format(lo - 1, "012x")
@@ -1783,44 +1678,23 @@ def compact(spark: SparkSession, path: str) -> dict:
     append-only log — maintenance must not erase it; read_events
     de-duplicates the carried copies). Returns
     {batch_id, chunks, batches_covered}."""
-    from pyspark.sql import Window
-
     committed = _lineage_batches(path)
     if len(committed) <= 1:
         return {"batch_id": None, "chunks": 0, "batches_covered": 0}
     new_id = _compact_id(path)
-    lineage = read_lineage(spark, path)
-    w = Window.partitionBy("chunk_key").orderBy(F.col("batch_id").asc())
-    winners = (
-        lineage.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")
-    ).localCheckpoint(eager=True)  # feeds blocks semi-join AND the new lineage
+    # feeds blocks semi-join AND the new lineage
+    winners = _winners(read_lineage(spark, path)).localCheckpoint(eager=True)
 
     # per-dtype leaf groups: each storage element type is read with its
-    # typed schema, semi-joined, and rewritten AS STORED — compaction
-    # never round-trips typed blocks through double
+    # typed schema, semi-joined, and rewritten AS STORED into its own
+    # dt-<elem> leaf — compaction never round-trips typed blocks
+    # through double
     leafs = _block_leaf_dirs(_block_batches(path))
     new_dir = os.path.join(path, "blocks", f"batch={new_id}")
-    typed_layout = sorted(leafs) != ["double"] or not all(
-        os.path.basename(d).startswith("batch=") for d in leafs.get("double", [])
-    )
     for elem in sorted(leafs):
         # BLOCK_FILE_SCHEMA so zone-map stats survive the rewrite
-        # (legacy batches read NULL and stay NULL — "unknown, keep")
         blocks = spark.read.schema(_typed_schema(BLOCK_FILE_SCHEMA, elem)).parquet(
             *leafs[elem]
-        )
-        # blocks written by the pre-event-log format carry no chunk_key
-        # column (schema read fills NULL, and NULL never semi-joins):
-        # recompute it so legacy batches compact instead of silently
-        # vanishing from the rewritten set
-        blocks = blocks.withColumn(
-            "chunk_key",
-            F.coalesce(
-                F.col("chunk_key"),
-                F.concat_ws(
-                    "-", F.col("time_idx"), F.col("tile_y"), F.col("tile_x"), F.col("channel")
-                ),
-            ),
         )
         # NO broadcast hint: winners is one row per visible chunk — cube-
         # sized, the exact thing load() refuses to force-broadcast (its ROI
@@ -1832,10 +1706,8 @@ def compact(spark: SparkSession, path: str) -> dict:
             ["chunk_key", "batch_id"],
             "left_semi",
         ).withColumn("batch_id", F.lit(new_id))
-        target = os.path.join(new_dir, f"dt-{elem}") if typed_layout else new_dir
-        visible.write.mode("overwrite").parquet(target)
-    if typed_layout:
-        open(os.path.join(new_dir, "_SUCCESS"), "w").close()
+        visible.write.mode("overwrite").parquet(os.path.join(new_dir, f"dt-{elem}"))
+    open(os.path.join(new_dir, "_SUCCESS"), "w").close()
 
     # event history: copy every committed event row (original batch_id
     # values preserved in the COLUMN; the dir is the visibility unit)
@@ -1847,12 +1719,9 @@ def compact(spark: SparkSession, path: str) -> dict:
     )
 
     new_lineage = (
-        winners
-        # provenance survives the verbatim rewrite: CDC must see "same
-        # content" across a compaction (legacy rows coalesce to their
-        # pre-compaction batch id)
-        .withColumn("src_batch", F.coalesce(F.col("src_batch"), F.col("batch_id")))
-        .withColumn("batch_id", F.lit(new_id))
+        # provenance survives the verbatim rewrite (src_batch carried
+        # as is): CDC must see "same content" across a compaction
+        winners.withColumn("batch_id", F.lit(new_id))
         .select(
             "chunk_key", "tile_id", "time_idx", "channel",
             "batch_id", "partition_id", "n_rows", "n_bytes", "src_batch",
@@ -1939,12 +1808,9 @@ def vacuum(spark: SparkSession, path: str, min_orphan_age_sec: float = 86400.0) 
     # have drained (ticket mtime = commit time)?
     cdir = _commits_dir(path)
     ticket_mtime: dict[str, float] = {}
-    if os.path.isdir(cdir):
-        for f in os.listdir(cdir):
-            if "=" in f:
-                bid = f.split("=", 1)[1]
-                m = os.path.getmtime(os.path.join(cdir, f))
-                ticket_mtime[bid] = min(m, ticket_mtime.get(bid, m))
+    for f in os.listdir(cdir):
+        if "=" in f:
+            ticket_mtime[f.split("=", 1)[1]] = os.path.getmtime(os.path.join(cdir, f))
     vouched: set[str] = set()
     for b in sorted(committed):
         bid = b.split("=", 1)[1]
@@ -1970,23 +1836,15 @@ def vacuum(spark: SparkSession, path: str, min_orphan_age_sec: float = 86400.0) 
 
     # commit-ticket hygiene: entries of removed batches, plus any
     # dangling ticket whose lineage no longer exists, past the same
-    # age guard; also crashed atomic-backfill temp dirs
-    for f in os.listdir(os.path.join(path, "lineage")):
-        p = os.path.join(path, "lineage", f)
-        if (
-            f.startswith("_commits.tmp.")
-            and now - os.path.getmtime(p) >= min_orphan_age_sec
-        ):
-            shutil.rmtree(p, ignore_errors=True)
+    # age guard
     live = {b.split("=", 1)[1] for b in committed} - removed_bids
-    if os.path.isdir(cdir):
-        for f in os.listdir(cdir):
-            if "=" not in f:
-                continue
-            bid = f.split("=", 1)[1]
-            p = os.path.join(cdir, f)
-            if bid in removed_bids or (
-                bid not in live and now - os.path.getmtime(p) >= min_orphan_age_sec
-            ):
-                os.unlink(p)
+    for f in os.listdir(cdir):
+        if "=" not in f:
+            continue
+        bid = f.split("=", 1)[1]
+        p = os.path.join(cdir, f)
+        if bid in removed_bids or (
+            bid not in live and now - os.path.getmtime(p) >= min_orphan_age_sec
+        ):
+            os.unlink(p)
     return {"orphans_removed": removed_orphans, "shadowed_removed": removed_shadowed}

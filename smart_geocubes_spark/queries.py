@@ -4910,92 +4910,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "label_propagation": q_label_propagation,
 }
 
-# The driver's CORRECTNESS snapshot caps at 50 entries, taken in registry
-# order.  Entries listed here are hoisted to the front of the window so
-# queries that have never received a green driver row (r1-r3 rotation gaps)
-# plus this round's new queries get validated; everything else already has
-# a green row in some CORRECTNESS_r*.json.  The repo's replica gate
-# (tests/test_oracle_parity.py) always runs ALL entries regardless of order.
-_DRIVER_WINDOW_PRIORITY = [
-    # r6 window, COMPUTED from the CORRECTNESS_r01..r05.json records
-    # (r5 verdict ask #3: derive the rotation, don't hand-claim it).
-    # Ages at r6 start: 5 entries are r1-green only (below, first),
-    # 49 are r4-green, 50 are r5-green; no entry is never-green.
-    # Priority: (1) the five r1-only rows — 4 rounds stale, the
-    # oldest records in the registry; (2) every query whose PLAN
-    # changed in this optimization round (spatial_join_pip closed-form
-    # refine; dedup/simhash checkpoint restructures) — results are
-    # replica-gate-identical, but the driver hash should re-pin them;
-    # (3) the r4-green rows, so post-r6 no row is older than 2 rounds.
-    "rolling_hash_fp",
-    "image_decode",
-    "image_resize",
-    "audio_features",
-    "video_frame_sample",
-    # (2) r6 plan changes
-    "spatial_join_pip",
-    "dedup_minhash_lsh",
-    "dedup_clusters",
-    "dedup_ngram_jaccard",
-    "simhash_neardup",
-    # (3) r4-green refresh (registry order)
-    "geoparse",
-    "extract_text",
-    "tile_assign",
-    "cell_encode",
-    "spatial_join_bbox",
-    "spatial_join_polygon",
-    "knn_ring",
-    "distance_join",
-    "asof_time_nearest",
-    "range_join_time",
-    "merge_asof_by",
-    "zonal_stats",
-    "chunk_plan_antijoin",
-    "event_durations",
-    "antimeridian_norm",
-    "dedup_exact",
-    "decontaminate_ac",
-    "tile_assign_polar",
-    "host_quota_sample",
-    "pagerank_hosts",
-    "prefix_dup",
-    "bm25_rank",
-    "kmv_distinct_cells",
-    "cohort_retention",
-    "funnel_steps",
-    "triangle_count",
-    "resample_ffill",
-    "token_rarity",
-    "patch_overlap_area",
-    "url_rules_filter",
-    "hits_hosts",
-    "stream_session_windows",
-    "cms_heavy_hitters",
-    "exact_quantiles",
-    "bfs_hops",
-    "approx_quantiles_hist",
-    "pmi_collocations",
-    "focal_mean3",
-    "focal_cube",
-    "label_propagation",
-    # r4-green entries left OUT to fit 50 slots (each exits r6 at age
-    # 2, inside the max-age<=2 discipline, with its kernel exercised
-    # by an in-window sibling): image_decode_bmp / audio_features_wav
-    # (the same BMP/WAV decoder kernels as the in-window image_decode,
-    # image_resize, audio_features), decontaminate (decontaminate_ac
-    # runs the same Aho-Corasick automaton), pyramid_overview (the
-    # pooling math is the r5-green overview_store path; zonal_stats is
-    # in-window), zonal_histogram (same block source as zonal_stats;
-    # the JVM histogram fold is plan-tested), focal_max3 (focal_mean3 +
-    # focal_cube share the halo pipeline; the max fold is plan-tested).
-    # All 104 remain covered by the repo replica gate every run.
-]
-
-QUERIES = {name: QUERIES[name] for name in _DRIVER_WINDOW_PRIORITY} | {
-    k: v for k, v in QUERIES.items() if k not in _DRIVER_WINDOW_PRIORITY
-}
-
 ORACLES: dict[str, str] = {
     "hits_hosts": _hits_oracle_sql(2),
     "stream_session_windows": SQL_STREAM_SESSION_WINDOWS,

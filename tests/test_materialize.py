@@ -42,6 +42,8 @@ def cube(tmp_path):
 def test_create_exists_semantics(cube):
     spec = open_spec(cube)
     assert spec.grid.n_tiles_x == 20 and spec.grid.n_tiles_y == 20
+    # commit tickets from birth: the first fill is ticket-gated too
+    assert os.path.isdir(os.path.join(cube, "lineage", "_commits"))
     with pytest.raises(FileExistsError):
         create_cube(cube, CubeSpec(grid=SMALL_GRID, channels=("dem",), time_epochs=None))
 
@@ -104,6 +106,25 @@ def test_kill_and_restart_resume(spark, cube):
     df = load(spark, cube, ROI_A)
     assert df.count() == 18
     assert df.select("chunk_key").distinct().count() == 18
+
+
+def test_crash_before_first_ticket_is_invisible(spark, cube, monkeypatch):
+    """Crash after the FIRST fill's lineage write but before its commit
+    ticket: the batch must stay invisible (no blocks, no snapshot) and
+    a clean rerun redoes every chunk — the same gate as every later
+    fill, with no ticket-less first-fill mode."""
+    import smart_geocubes_spark.plans.materialize as mat
+
+    def crash(path, batch_id):
+        raise RuntimeError("simulated crash before the commit ticket")
+
+    monkeypatch.setattr(mat, "_allocate_commit_seq", crash)
+    with pytest.raises(RuntimeError, match="commit ticket"):
+        materialize(spark, cube, ROI_A)
+    monkeypatch.undo()
+    assert load(spark, cube, ROI_A).count() == 0
+    assert mat.snapshots(cube) == []
+    assert materialize(spark, cube, ROI_A)["written"] == 18
 
 
 def _visible_state(spark, cube, roi):
@@ -742,7 +763,7 @@ class TestChannelDtypes:
             total = 0
             d = None
             for root, dirs, files in os.walk(os.path.join(cube_path, "blocks")):
-                if os.path.basename(root) == sub or (sub is None and "dt-" not in root):
+                if os.path.basename(root) == sub:
                     for f in files:
                         if not f.startswith("part-"):
                             continue
@@ -763,7 +784,8 @@ class TestChannelDtypes:
         materialize(spark, plain, ROI_A)
         bool_bytes, bool_t = block_col_bytes(typed, "dt-boolean")
         float_bytes, float_t = block_col_bytes(typed, "dt-float")
-        plain_bytes, plain_t = block_col_bytes(plain, None)
+        # an all-float64 cube writes the same leaf layout: dt-double
+        plain_bytes, plain_t = block_col_bytes(plain, "dt-double")
         assert (bool_t, float_t, plain_t) == ("BOOLEAN", "FLOAT", "DOUBLE")
         per_plain_channel = plain_bytes / 3  # 3 channels share the files
         assert bool_bytes < 0.05 * per_plain_channel, (bool_bytes, plain_bytes)
@@ -904,9 +926,9 @@ class TestChannelDtypes:
 
     def test_typed_evolution_mixed_layout(self, spark, tmp_path):
         """SCHEMA EVOLUTION onto the dtype system: a cube filled while
-        all-float64 (top-level batch layout) gains a bool channel; the
-        lazy backfill lands in the NEW typed dt-<elem> layout and
-        load() unions both layouts transparently."""
+        all-float64 (a dt-double leaf) gains a bool channel; the lazy
+        backfill lands in its own dt-boolean leaf and load() unions
+        both leaves transparently."""
         import numpy as np
 
         from smart_geocubes_spark.plans.materialize import add_channel
@@ -915,9 +937,9 @@ class TestChannelDtypes:
         create_cube(
             path, CubeSpec(grid=SMALL_GRID, channels=("dem",), time_epochs=None)
         )
-        materialize(spark, path, ROI_A)  # pre-evolution: top-level layout
+        m0 = materialize(spark, path, ROI_A)  # pre-evolution: dt-double
         add_channel(path, "datamask", dtype="bool")
-        m = materialize(spark, path, ROI_A)  # lazy backfill, typed layout
+        m = materialize(spark, path, ROI_A)  # lazy backfill: dt-boolean
         assert m["written"] == 9  # only the new channel's chunks
         df = load(spark, path, ROI_A)
         assert df.count() == 18
@@ -930,15 +952,12 @@ class TestChannelDtypes:
         formula = 3 * 1000.0 + 2 + 0.5 * np.arange(100 * 100)
         assert np.array_equal(by_ch["dem"], formula)  # untouched float64
         assert np.array_equal(by_ch["datamask"], (formula != 0).astype(float))
-        # the backfill batch physically holds a dt-boolean leaf
-        bdir = os.path.join(path, "blocks")
-        leaves = {
-            s
-            for b in os.listdir(bdir)
-            for s in os.listdir(os.path.join(bdir, b))
-            if s.startswith("dt-")
-        }
-        assert leaves == {"dt-boolean"}
+        # each batch physically holds only its own dtype leaf + _SUCCESS
+        def entries(batch_id):
+            return set(os.listdir(os.path.join(path, "blocks", f"batch={batch_id}")))
+
+        assert entries(m0["batch_id"]) == {"dt-double", "_SUCCESS"}
+        assert entries(m["batch_id"]) == {"dt-boolean", "_SUCCESS"}
 
 
 def test_zone_map_stats_and_value_range_pruning(spark, cube):

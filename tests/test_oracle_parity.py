@@ -60,3 +60,22 @@ def test_every_query_has_oracle_or_is_flagged():
     # tile_assign_polar gained shared-constant SQL oracles)
     allowed_rows_only: set[str] = set()
     assert set(missing) <= allowed_rows_only, f"queries without oracle: {missing}"
+
+
+# sha256 over json.dumps(sorted(ORACLES.items())) and over the sorted
+# query names: a refactor of the query layer must leave both unchanged
+# (re-pin only for an intended oracle or registry change)
+ORACLES_SHA256 = "530fbadf3db6fe805c31ebc10c1eda77d9b3a4b5c1cd3ffcc46d386c109330f1"
+QUERY_NAMES_SHA256 = "defc5498121c53287c7918881695f4396e975650e6f75b5657feadd71a6c5e44"
+
+
+def test_registry_and_oracles_pinned():
+    import hashlib
+    import json
+
+    def sha(obj) -> str:
+        return hashlib.sha256(json.dumps(obj).encode()).hexdigest()
+
+    assert len(_QUERIES) == 104 and sorted(_QUERIES) == sorted(_ORACLES)
+    assert sha(sorted(_QUERIES)) == QUERY_NAMES_SHA256
+    assert sha(sorted(_ORACLES.items())) == ORACLES_SHA256
