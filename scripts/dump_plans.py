@@ -28,12 +28,14 @@ NODE_RE = re.compile(
 
 
 def main() -> None:
-    # r6 (verdict r5 item #5): let PLANS.md see through the store
-    # queries' result checkpoint — without this every store-path row
-    # showed an empty plan (bare ExistingRDD). Plan-dump only; the
-    # frames are explained, never executed.
-    os.environ["SPARK_GRAFT_DUMP_PLANS"] = "1"
     from pyspark.sql import SparkSession
+
+    from smart_geocubes_spark import queries
+
+    # see through the store queries' result checkpoint — without this
+    # every store-path row shows an empty plan (bare ExistingRDD). Only
+    # this process is affected; the frames are explained, never executed
+    queries._result_ckpt = lambda df: df
 
     spark = (
         SparkSession.builder.master("local[8]")

@@ -10,7 +10,11 @@ same IEEE doubles, and timestamps are exported as epoch BIGINTs
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import os
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,19 +60,68 @@ pts AS (
 
 
 def _result_ckpt(df: DataFrame) -> DataFrame:
-    """Store-path queries checkpoint their RESULT eagerly so the temp
-    cube can be deleted in the enclosing ``finally`` before the driver
-    collects. That makes ``dump_plans`` record an empty plan (a bare
-    ExistingRDD scan) for every store query — r5 verdict "what's
-    wrong" #3. Plan-dump mode (``SPARK_GRAFT_DUMP_PLANS=1``) skips the
-    checkpoint so PLANS.md shows the real shape; NEVER set it for
-    execution — the un-checkpointed frame references the deleted temp
-    store and any action on it will fail."""
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_DUMP_PLANS") == "1":
-        return df
+    """Store-path queries checkpoint their RESULT eagerly so the scratch
+    cube can be deleted before the driver collects. ``dump_plans``
+    swaps this for the identity inside its own process so PLANS.md
+    shows the real shape instead of a bare ExistingRDD scan; such an
+    un-checkpointed frame references the deleted store and is only
+    ever explained, never executed."""
     return df.localCheckpoint(eager=True)
+
+
+@contextmanager
+def _scratch(prefix: str) -> Iterator[str]:
+    """A fresh temp dir, removed however the block exits."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield root
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _filled_cube(
+    spark: SparkSession,
+    prefix: str,
+    channels: tuple[str, ...],
+    rois: list,
+    read: Callable[[str, list[dict]], DataFrame],
+    dtypes: tuple[str, ...] | None = None,
+    time_epochs: tuple[int, ...] | None = None,
+) -> DataFrame:
+    """The store path under the driver's value-hash: create a scratch
+    cube on GRID, fill each ROI in order with the real materialize
+    kernel, and return ``read(path, fill_results)`` checkpointed so the
+    cube is already deleted when the caller gets the frame."""
+    from smart_geocubes_spark.plans.materialize import CubeSpec, create_cube, materialize
+
+    with _scratch(prefix) as root:
+        path = root + "/cube"
+        create_cube(
+            path,
+            CubeSpec(grid=GRID, channels=channels, dtypes=dtypes, time_epochs=time_epochs),
+        )
+        fills = [materialize(spark, path, roi) for roi in rois]
+        return _result_ckpt(read(path, fills))
+
+
+def _block_stats(
+    df: DataFrame,
+    scale: int = 2,
+    n_col: str = "n_px",
+    block: str = "block",
+    keys: tuple[str, ...] = ("tile_id", "channel"),
+) -> DataFrame:
+    """Per-chunk integer stats over the ``block`` array expression:
+    its size and ``sum * scale`` as a BIGINT. The fixture values are
+    half-steps (eighths after 2x2 pooling), so the scaled sum is exact
+    in any accumulation order."""
+    return df.select(
+        *keys,
+        F.expr(f"size({block})").cast("long").alias(n_col),
+        F.expr(
+            f"CAST(aggregate({block}, 0.0D, (a, x) -> a + x) * {float(scale)!r} AS BIGINT)"
+        ).alias(f"sum_x{scale}"),
+    )
 
 
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -395,29 +448,43 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return zonal_stats(spark, GRID, ZONAL_ROIS, [c for c, _ in _ZONAL_CHANNELS])
 
 
-def _zonal_tile_ranges() -> list[str]:
-    conds = []
-    for roi in ZONAL_ROIS:
-        t = GRID.tiles_overlapping_bbox(*roi)
-        conds.append(
-            f"(tx BETWEEN {t[:, 0].min()} AND {t[:, 0].max()} "
-            f"AND ty BETWEEN {t[:, 1].min()} AND {t[:, 1].max()})"
-        )
-    return conds
+def _tile_range(roi) -> str:
+    """Oracle predicate on (tx, ty): the tile rectangle covering ``roi``."""
+    t = GRID.tiles_overlapping_bbox(*roi)
+    return (
+        f"(tx BETWEEN {t[:, 0].min()} AND {t[:, 0].max()} "
+        f"AND ty BETWEEN {t[:, 1].min()} AND {t[:, 1].max()})"
+    )
+
+
+_ZONAL_TILES = [_tile_range(roi) for roi in ZONAL_ROIS]
+_ZONAL_TILES_ANY = " OR ".join(_ZONAL_TILES)
+
+
+# every GRID tile as (tx, ty) — the body of each oracle's tile CTE
+_ALL_TILES = f"""  SELECT range % {GRID.n_tiles_x} AS tx,
+         CAST(floor(range / {GRID.n_tiles_x}.0) AS BIGINT) AS ty
+  FROM range({GRID.n_tiles_x * GRID.n_tiles_y})"""
+
+
+def _tile_cte(where: str, coords: bool = True) -> str:
+    """Oracle tile enumeration: every GRID tile as ``zt`` (tx, ty), and
+    the ones matching ``where`` as ``ztf`` (tile_id, plus tx, ty when
+    ``coords``). Opens the WITH clause; the caller continues after
+    ``ztf``'s closing paren."""
+    return f"""WITH zt AS (
+{_ALL_TILES}
+),
+ztf AS (
+  SELECT ty * {GRID.n_tiles_x} + tx AS tile_id{", tx, ty" if coords else ""} FROM zt
+  WHERE {where}
+)"""
 
 
 _N_PX = GRID.chunk_px * GRID.chunk_px
 _ZONAL_CH_VALUES = ",".join(f"('{c}', {o!r})" for c, o in _ZONAL_CHANNELS)
 
-SQL_ZONAL_STATS = f"""WITH zt AS (
-  SELECT range % {GRID.n_tiles_x} AS tx,
-         CAST(floor(range / {GRID.n_tiles_x}.0) AS BIGINT) AS ty
-  FROM range({GRID.n_tiles_x * GRID.n_tiles_y})
-),
-ztf AS (
-  SELECT ty * {GRID.n_tiles_x} + tx AS tile_id, tx, ty FROM zt
-  WHERE {" OR ".join(_zonal_tile_ranges())}
-),
+SQL_ZONAL_STATS = f"""{_tile_cte(_ZONAL_TILES_ANY)},
 zc AS (
   SELECT tile_id, tx, ty, channel, off
   FROM ztf CROSS JOIN (VALUES {_ZONAL_CH_VALUES}) ch(channel, off)
@@ -440,15 +507,7 @@ def q_zonal_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return zonal_value_histogram(spark, GRID, ZONAL_ROIS, [c for c, _ in _ZONAL_CHANNELS])
 
 
-SQL_ZONAL_HISTOGRAM = f"""WITH zt AS (
-  SELECT range % {GRID.n_tiles_x} AS tx,
-         CAST(floor(range / {GRID.n_tiles_x}.0) AS BIGINT) AS ty
-  FROM range({GRID.n_tiles_x * GRID.n_tiles_y})
-),
-ztf AS (
-  SELECT ty * {GRID.n_tiles_x} + tx AS tile_id, tx, ty FROM zt
-  WHERE {" OR ".join(_zonal_tile_ranges())}
-),
+SQL_ZONAL_HISTOGRAM = f"""{_tile_cte(_ZONAL_TILES_ANY)},
 zc AS (
   SELECT tile_id, tx, ty, channel, off
   FROM ztf CROSS JOIN (VALUES {_ZONAL_CH_VALUES}) ch(channel, off)
@@ -484,15 +543,7 @@ def q_pyramid_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pyramid_sql() -> str:
     W = GRID.chunk_px
-    return f"""WITH zt AS (
-  SELECT range % {GRID.n_tiles_x} AS tx,
-         CAST(floor(range / {GRID.n_tiles_x}.0) AS BIGINT) AS ty
-  FROM range({GRID.n_tiles_x * GRID.n_tiles_y})
-),
-ztf AS (
-  SELECT ty * {GRID.n_tiles_x} + tx AS tile_id, tx, ty FROM zt
-  WHERE {" OR ".join(_zonal_tile_ranges())}
-),
+    return f"""{_tile_cte(_ZONAL_TILES_ANY)},
 px AS (
   SELECT tile_id, channel, level, k,
          (ty * 1000.0 + tx + off)
@@ -530,15 +581,7 @@ def q_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return plan.select("tile_id", "channel")
 
 
-SQL_CHUNK_PLAN = f"""WITH zt AS (
-  SELECT range % {GRID.n_tiles_x} AS tx,
-         CAST(floor(range / {GRID.n_tiles_x}.0) AS BIGINT) AS ty
-  FROM range({GRID.n_tiles_x * GRID.n_tiles_y})
-),
-ztf AS (
-  SELECT ty * {GRID.n_tiles_x} + tx AS tile_id FROM zt
-  WHERE {_zonal_tile_ranges()[0]}
-),
+SQL_CHUNK_PLAN = f"""{_tile_cte(_ZONAL_TILES[0], coords=False)},
 cands AS (
   SELECT tile_id, channel
   FROM ztf CROSS JOIN (VALUES ('dem'), ('slope')) ch(channel)
@@ -582,27 +625,21 @@ def q_chunk_plan_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tdf.crossJoin(F.broadcast(ch))
 
 
-def _chunk_plan_polygon_sql() -> str:
-    import numpy as _n
-
-    from smart_geocubes_spark.geo.pip import rect_polygon_predicate_sql
-
-    px = _n.array([p[0] for p in _POLY_ROI])
-    py = _n.array([p[1] for p in _POLY_ROI])
+def _poly_window_cte(px, py) -> str:
+    """Oracle CTEs ``t`` (every GRID tile) and ``tb`` (the tiles of the
+    polygon's bbox window with their float bounds). Opens the WITH
+    clause; the caller continues after ``tb``'s closing paren."""
     cand = GRID.tiles_overlapping_bbox(
         float(px.min()), float(py.min()), float(px.max()), float(py.max())
     )
     bx0, bx1 = int(cand[:, 0].min()), int(cand[:, 0].max())
     by0, by1 = int(cand[:, 1].min()), int(cand[:, 1].max())
     gb, t = GRID.geobox, GRID.tile_size
-    pred = rect_polygon_predicate_sql(px, py, "minx", "miny", "maxx", "maxy")
     # bound expressions mirror TileGrid.tile_bounds ASSOCIATIVITY
     # (miny = maxy - t, maxx = minx + t) — exact doubles either way on
     # this grid, but parity must not depend on that
     return f"""WITH t AS (
-  SELECT range % {GRID.n_tiles_x} AS tx,
-         CAST(floor(range / {GRID.n_tiles_x}.0) AS BIGINT) AS ty
-  FROM range({GRID.n_tiles_x * GRID.n_tiles_y})
+{_ALL_TILES}
 ),
 tb AS (
   SELECT tx, ty, ty * {GRID.n_tiles_x} + tx AS tile_id,
@@ -612,7 +649,18 @@ tb AS (
          CAST({gb.y0!r} - ty * {t!r} AS DOUBLE) AS maxy
   FROM t
   WHERE tx BETWEEN {bx0} AND {bx1} AND ty BETWEEN {by0} AND {by1}
-)
+)"""
+
+
+def _chunk_plan_polygon_sql() -> str:
+    import numpy as _n
+
+    from smart_geocubes_spark.geo.pip import rect_polygon_predicate_sql
+
+    px = _n.array([p[0] for p in _POLY_ROI])
+    py = _n.array([p[1] for p in _POLY_ROI])
+    pred = rect_polygon_predicate_sql(px, py, "minx", "miny", "maxx", "maxy")
+    return f"""{_poly_window_cte(px, py)}
 SELECT tile_id, tx AS tile_x, ty AS tile_y, channel
 FROM tb CROSS JOIN (VALUES ('dem'), ('slope')) ch(channel)
 WHERE {pred}
@@ -712,31 +760,13 @@ def _zonal_polygon_sql() -> str:
 
     px = _n.array([p[0] for p in _POLY_ROI])
     py = _n.array([p[1] for p in _POLY_ROI])
-    cand = GRID.tiles_overlapping_bbox(
-        float(px.min()), float(py.min()), float(px.max()), float(py.max())
-    )
-    bx0, bx1 = int(cand[:, 0].min()), int(cand[:, 0].max())
-    by0, by1 = int(cand[:, 1].min()), int(cand[:, 1].max())
-    gb, t, W = GRID.geobox, GRID.tile_size, GRID.chunk_px
+    gb, W = GRID.geobox, GRID.chunk_px
     rect_pred = rect_polygon_predicate_sql(px, py, "minx", "miny", "maxx", "maxy")
     # the SAME generator the engine's plan uses, with the oracle's
     # qualified column spellings — one math definition, two dialect uses
     pxe, pye = pixel_center_sql("k.tx", "k.ty", "p.i", gb.x0, gb.y0, gb.res, W)
     pip = point_in_polygon_predicate_sql(px, py, pxe, pye)
-    return f"""WITH t AS (
-  SELECT range % {GRID.n_tiles_x} AS tx,
-         CAST(floor(range / {GRID.n_tiles_x}.0) AS BIGINT) AS ty
-  FROM range({GRID.n_tiles_x * GRID.n_tiles_y})
-),
-tb AS (
-  SELECT tx, ty, ty * {GRID.n_tiles_x} + tx AS tile_id,
-         CAST({gb.x0!r} + tx * {t!r} AS DOUBLE) AS minx,
-         CAST({gb.y0!r} - ty * {t!r} - {t!r} AS DOUBLE) AS miny,
-         CAST({gb.x0!r} + tx * {t!r} + {t!r} AS DOUBLE) AS maxx,
-         CAST({gb.y0!r} - ty * {t!r} AS DOUBLE) AS maxy
-  FROM t
-  WHERE tx BETWEEN {bx0} AND {bx1} AND ty BETWEEN {by0} AND {by1}
-),
+    return f"""{_poly_window_cte(px, py)},
 keep AS (
   SELECT tile_id, tx, ty FROM tb WHERE {rect_pred}
 ),
@@ -768,49 +798,25 @@ def q_event_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form as chunk_plan_antijoin). The wall-clock half (start/end
     -> duration merge, per-partition lanes) is nondeterministic by
     nature and is pinned by tests/test_materialize.py instead."""
-    import tempfile
+    from smart_geocubes_spark.plans.materialize import read_events
 
-    from smart_geocubes_spark.plans.materialize import (
-        CubeSpec,
-        create_cube,
-        materialize,
-        read_events,
-    )
-
-    import shutil
-
-    path = tempfile.mkdtemp(prefix="evcube_")
-    try:
-        create_cube(path, CubeSpec(grid=GRID, channels=("dem", "slope"), time_epochs=None))
-        materialize(spark, path, ZONAL_ROIS[0])
-        ev = read_events(spark, path)
+    def read(path, _fills):
         # the 'generate' half is deterministic (chunk set x exact byte
         # accounting); 'write' rows carry wall-clock/file-size values
         # pinned by tests/test_materialize.py instead of the oracle
-        out = ev.filter(F.col("action") == "generate").groupBy(
+        ev = read_events(spark, path)
+        return ev.filter(F.col("action") == "generate").groupBy(
             "chunk_key", "tile_id", "channel", "action"
         ).agg(
             F.count("*").cast("long").alias("n_events"),
             F.sum("n_bytes").cast("long").alias("n_bytes"),
         )
-        # materialize the (tiny) rollup so the temp cube can be deleted
-        # NOW instead of leaking an evcube_* dir per invocation (the
-        # lazy frame would otherwise still need the files on disk)
-        return _result_ckpt(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+
+    return _filled_cube(spark, "evcube_", ("dem", "slope"), [ZONAL_ROIS[0]], read)
 
 
 def _event_durations_sql() -> str:
-    return f"""WITH zt AS (
-  SELECT range % {GRID.n_tiles_x} AS tx,
-         CAST(floor(range / {GRID.n_tiles_x}.0) AS BIGINT) AS ty
-  FROM range({GRID.n_tiles_x * GRID.n_tiles_y})
-),
-ztf AS (
-  SELECT ty * {GRID.n_tiles_x} + tx AS tile_id, tx, ty FROM zt
-  WHERE {_zonal_tile_ranges()[0]}
-)
+    return f"""{_tile_cte(_ZONAL_TILES[0])}
 SELECT '-1-' || CAST(ty AS VARCHAR) || '-' || CAST(tx AS VARCHAR) || '-' || channel AS chunk_key,
        tile_id, channel,
        'generate' AS action,
@@ -1869,30 +1875,27 @@ def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-stream table is oracle-checked rows+schema+hash. Window starts
     export as epoch BIGINTs (1-day windows are epoch-aligned in both
     engines)."""
-    import os
-    import shutil
-    import tempfile
-
     from smart_geocubes_spark.streaming.pipeline import stream_windowed_event_counts
 
-    # FileStreamSource needs a DIRECTORY; the fixture ships events as a
-    # single file — expose it through a symlinked dir (no copy)
-    src = os.path.join(sf_dir, "events.parquet")
-    d = None
-    if os.path.isfile(src):
-        d = tempfile.mkdtemp(prefix="evstream_")
-        os.symlink(src, os.path.join(d, "part-0.parquet"))
-        src = d
-    try:
+    with _events_source(sf_dir, "evstream_") as src:
         # availableNow terminates, so a FIXED sink name is safe and the
         # memory table is REPLACED across gate runs (a uuid-per-call
         # name would accumulate one driver-memory temp view per run)
         return stream_windowed_event_counts(
             spark, src, query_name="stream_event_counts_gate"
         )
-    finally:
-        if d is not None:
-            shutil.rmtree(d, ignore_errors=True)
+
+
+@contextmanager
+def _events_source(sf_dir: str, prefix: str) -> Iterator[str]:
+    """FileStreamSource needs a DIRECTORY; the fixture ships events as a
+    single file — expose it through a symlinked scratch dir (no copy)."""
+    src = os.path.join(sf_dir, "events.parquet")
+    with _scratch(prefix) as d:
+        if os.path.isfile(src):
+            os.symlink(src, os.path.join(d, "part-0.parquet"))
+            src = d
+        yield src
 
 
 SQL_STREAM_WINDOW_COUNTS = """SELECT
@@ -1964,33 +1967,27 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon and no row can be dropped as late REGARDLESS of file
     processing order (the bounded-state eviction behavior itself is
     pinned by tests/test_streaming.py)."""
-    import shutil
-    import tempfile
-
     from smart_geocubes_spark.streaming.pipeline import stream_dedup_within_watermark
 
     ensure_base_views(spark, sf_dir)
     pages = spark.sql(
         f"SELECT page_id, host_id, warc_epoch FROM ({pages_sql('orders')})"
     )
-    # two appends into ONE flat dir = two part files = two micro-batches
-    # under maxFilesPerTrigger=1; replays are byte-identical, so the
-    # output is order-independent
-    root = tempfile.mkdtemp(prefix="dedupstream_")
-    d = root + "/src"
-    pages.coalesce(1).write.mode("append").parquet(d)
-    pages.filter(F.col("page_id") % 5 == 0).coalesce(1).write.mode("append").parquet(d)
-    try:
+    # the memory sink holds the rows driver-side; the source copy and
+    # checkpoint are dead weight once the drain finishes
+    with _scratch("dedupstream_") as root:
+        # two appends into ONE flat dir = two part files = two
+        # micro-batches under maxFilesPerTrigger=1; replays are
+        # byte-identical, so the output is order-independent
+        d = root + "/src"
+        pages.coalesce(1).write.mode("append").parquet(d)
+        pages.filter(F.col("page_id") % 5 == 0).coalesce(1).write.mode("append").parquet(d)
         # availableNow terminates, so a fixed sink name is safe and the
         # memory table is replaced (not accumulated) across gate runs
         return stream_dedup_within_watermark(
             spark, d, root + "/ckpt", query_name="gate_stream_dedup",
             delay="1500 days",
         )
-    finally:
-        # the memory sink holds the rows driver-side; the source copy
-        # and checkpoint are dead weight once the drain finishes
-        shutil.rmtree(root, ignore_errors=True)
 
 
 SQL_STREAM_DEDUP = f"""WITH pages AS ({pages_sql("orders")})
@@ -2177,15 +2174,7 @@ _N_PX_Z = GRID.chunk_px * GRID.chunk_px
 _N_NAN = (_N_PX_Z - 1) // 97 + 1
 _MERGE_CONST = 0.5 * (_N_PX_Z - 1) * _N_PX_Z / 2 + 100.0 * (_N_PX_Z - _N_NAN)
 
-SQL_COALESCE_MERGE = f"""WITH zt AS (
-  SELECT range % {GRID.n_tiles_x} AS tx,
-         CAST(floor(range / {GRID.n_tiles_x}.0) AS BIGINT) AS ty
-  FROM range({GRID.n_tiles_x * GRID.n_tiles_y})
-),
-ztf AS (
-  SELECT ty * {GRID.n_tiles_x} + tx AS tile_id, tx, ty FROM zt
-  WHERE {_zonal_tile_ranges()[0]}
-)
+SQL_COALESCE_MERGE = f"""{_tile_cte(_ZONAL_TILES[0])}
 SELECT tile_id,
        (ty * 1000.0 + tx) * {_N_PX_Z} + {_MERGE_CONST!r} AS merged_sum
 FROM ztf
@@ -2319,15 +2308,7 @@ def _temporal_blocks(batches, chunk_px):
         yield out
 
 
-SQL_TEMPORAL_MAX_MOSAIC = f"""WITH zt AS (
-  SELECT range % {GRID.n_tiles_x} AS tx,
-         CAST(floor(range / {GRID.n_tiles_x}.0) AS BIGINT) AS ty
-  FROM range({GRID.n_tiles_x * GRID.n_tiles_y})
-),
-ztf AS (
-  SELECT ty * {GRID.n_tiles_x} + tx AS tile_id, tx, ty FROM zt
-  WHERE {_zonal_tile_ranges()[1]}
-),
+SQL_TEMPORAL_MAX_MOSAIC = f"""{_tile_cte(_ZONAL_TILES[1])},
 zc AS (
   SELECT tile_id, tx, ty, channel, off
   FROM ztf CROSS JOIN (VALUES {_ZONAL_CH_VALUES}) ch(channel, off)
@@ -3429,27 +3410,14 @@ def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACTLY prev + gap MERGES into the session (Spark merges touching
     windows), so a new session starts only when gap > 1800 s — the
     same strict rule as the batch ``sessionize`` query."""
-    import os
-    import shutil
-    import tempfile
-
     from smart_geocubes_spark.streaming.pipeline import stream_session_windows
 
-    src = os.path.join(sf_dir, "events.parquet")
-    d = None
-    if os.path.isfile(src):
-        d = tempfile.mkdtemp(prefix="sessstream_")
-        os.symlink(src, os.path.join(d, "part-0.parquet"))
-        src = d
-    try:
+    with _events_source(sf_dir, "sessstream_") as src:
         # availableNow terminates, so a fixed sink name is safe and the
         # memory table is replaced (not accumulated) across gate runs
         return stream_session_windows(
             spark, src, gap_seconds=1800, query_name="gate_stream_sessions"
         )
-    finally:
-        if d is not None:
-            shutil.rmtree(d, ignore_errors=True)
 
 
 SQL_STREAM_SESSION_WINDOWS = """WITH e AS (
@@ -4085,27 +4053,12 @@ def q_focal_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     puts create -> fill -> commit -> load -> halo end-to-end under
     rows+schema+hash. The result is eagerly checkpointed so the temp
     cube can be deleted before the gate collects."""
-    import shutil
-    import tempfile
-
     from smart_geocubes_spark.operators.focal import focal_mean3_cube
-    from smart_geocubes_spark.plans.materialize import (
-        CubeSpec,
-        create_cube,
-        materialize,
-    )
 
-    root = tempfile.mkdtemp(prefix="focalcube_")
-    try:
-        path = root + "/cube"
-        create_cube(
-            path, CubeSpec(grid=GRID, channels=("dem", "slope"), time_epochs=None)
-        )
-        materialize(spark, path, FOCAL_ROIS[0])
-        # 18 result rows: checkpoint eagerly, then the store can go
-        return _result_ckpt(focal_mean3_cube(spark, path, FOCAL_ROIS[0]))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _filled_cube(
+        spark, "focalcube_", ("dem", "slope"), [FOCAL_ROIS[0]],
+        lambda path, _: focal_mean3_cube(spark, path, FOCAL_ROIS[0]),
+    )
 
 
 def q_typed_cube_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4121,54 +4074,18 @@ def q_typed_cube_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a wrong cast, a missed dtype leaf, or a double round-trip in
     the store shows up as a hash mismatch. Eagerly checkpointed so
     the temp cube can be deleted before the gate collects."""
-    import shutil
-    import tempfile
+    from smart_geocubes_spark.plans.materialize import load
 
-    from smart_geocubes_spark.plans.materialize import (
-        CubeSpec,
-        create_cube,
-        load,
-        materialize,
+    return _filled_cube(
+        spark, "typedcube_", ("dem", "mask", "cls"), [FOCAL_ROIS[0]],
+        lambda path, _: _block_stats(load(spark, path, FOCAL_ROIS[0])),
+        dtypes=("float32", "bool", "int16"),
     )
-
-    root = tempfile.mkdtemp(prefix="typedcube_")
-    try:
-        path = root + "/cube"
-        create_cube(
-            path,
-            CubeSpec(
-                grid=GRID,
-                channels=("dem", "mask", "cls"),
-                dtypes=("float32", "bool", "int16"),
-                time_epochs=None,
-            ),
-        )
-        materialize(spark, path, FOCAL_ROIS[0])
-        df = load(spark, path, FOCAL_ROIS[0])
-        out = df.select(
-            "tile_id",
-            "channel",
-            F.size("block").cast("long").alias("n_px"),
-            F.expr(
-                "CAST(aggregate(block, 0.0D, (a, x) -> a + x) * 2.0 AS BIGINT)"
-            ).alias("sum_x2"),
-        )
-        return _result_ckpt(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _typed_cube_sql() -> str:
     W = GRID.chunk_px
-    return f"""WITH zt AS (
-  SELECT range % {GRID.n_tiles_x} AS tx,
-         CAST(floor(range / {GRID.n_tiles_x}.0) AS BIGINT) AS ty
-  FROM range({GRID.n_tiles_x * GRID.n_tiles_y})
-),
-ztf AS (
-  SELECT ty * {GRID.n_tiles_x} + tx AS tile_id, tx, ty FROM zt
-  WHERE {_zonal_tile_ranges()[0]}
-),
+    return f"""{_tile_cte(_ZONAL_TILES[0])},
 px AS (
   SELECT z.tile_id, ch.channel,
          CASE ch.channel
@@ -4213,59 +4130,23 @@ def q_range_scan_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership stats. The oracle replays every ROI pixel in SQL with
     the same range predicate, so both a false prune (missing rows) and
     a stale/wrong bound (extra rows) break the hash."""
-    import shutil
-    import tempfile
+    from smart_geocubes_spark.plans.materialize import load
 
-    from smart_geocubes_spark.plans.materialize import (
-        CubeSpec,
-        create_cube,
-        load,
-        materialize,
-    )
-
-    root = tempfile.mkdtemp(prefix="rangescan_")
-    try:
-        path = root + "/cube"
-        create_cube(
-            path,
-            CubeSpec(grid=GRID, channels=("dem", "mask"), time_epochs=None),
-        )
-        materialize(spark, path, ZONAL_ROIS[0])
+    def read(path, _fills):
         df = load(spark, path, ZONAL_ROIS[0], value_range=(RS_LO, RS_HI))
-        out = (
-            df.select(
-                "tile_id",
-                "channel",
-                F.expr(
-                    f"filter(block, x -> x >= {RS_LO!r} AND x <= {RS_HI!r})"
-                ).alias("m"),
-            )
-            .select(
-                "tile_id",
-                "channel",
-                F.size("m").cast("long").alias("n_in"),
-                F.expr(
-                    "CAST(aggregate(m, 0.0D, (a, x) -> a + x) * 2.0 AS BIGINT)"
-                ).alias("sum_x2"),
-            )
-            .filter(F.col("n_in") > 0)
+        m = df.select(
+            "tile_id",
+            "channel",
+            F.expr(f"filter(block, x -> x >= {RS_LO!r} AND x <= {RS_HI!r})").alias("m"),
         )
-        return _result_ckpt(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return _block_stats(m, n_col="n_in", block="m").filter(F.col("n_in") > 0)
+
+    return _filled_cube(spark, "rangescan_", ("dem", "mask"), [ZONAL_ROIS[0]], read)
 
 
 def _range_scan_sql() -> str:
     W = GRID.chunk_px
-    return f"""WITH zt AS (
-  SELECT range % {GRID.n_tiles_x} AS tx,
-         CAST(floor(range / {GRID.n_tiles_x}.0) AS BIGINT) AS ty
-  FROM range({GRID.n_tiles_x * GRID.n_tiles_y})
-),
-ztf AS (
-  SELECT ty * {GRID.n_tiles_x} + tx AS tile_id, tx, ty FROM zt
-  WHERE {_zonal_tile_ranges()[0]}
-),
+    return f"""{_tile_cte(_ZONAL_TILES[0])},
 px AS (
   SELECT z.tile_id, ch.channel,
          CAST(z.ty * 1000 + z.tx AS DOUBLE) + 0.5 * CAST(p.i AS DOUBLE) AS val
@@ -4299,60 +4180,20 @@ def q_store_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity diff (instead of provenance) or a broken anti-join
     changes the row set; the per-pixel oracle replays the B-minus-A
     tile set in SQL."""
-    import shutil
-    import tempfile
+    from smart_geocubes_spark.plans.materialize import load_changes
 
-    from smart_geocubes_spark.plans.materialize import (
-        CubeSpec,
-        create_cube,
-        load_changes,
-        materialize,
+    return _filled_cube(
+        spark, "cdccube_", ("dem", "mask"), [ZONAL_ROIS[0], CDC_ROI_B],
+        lambda path, fills: _block_stats(
+            load_changes(spark, path, CDC_ROI_B, fills[0]["batch_id"])
+        ),
     )
-
-    root = tempfile.mkdtemp(prefix="cdccube_")
-    try:
-        path = root + "/cube"
-        create_cube(
-            path,
-            CubeSpec(grid=GRID, channels=("dem", "mask"), time_epochs=None),
-        )
-        m1 = materialize(spark, path, ZONAL_ROIS[0])
-        materialize(spark, path, CDC_ROI_B)
-        df = load_changes(spark, path, CDC_ROI_B, m1["batch_id"])
-        out = df.select(
-            "tile_id",
-            "channel",
-            F.size("block").cast("long").alias("n_px"),
-            F.expr(
-                "CAST(aggregate(block, 0.0D, (a, x) -> a + x) * 2.0 AS BIGINT)"
-            ).alias("sum_x2"),
-        )
-        return _result_ckpt(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _store_changes_sql() -> str:
     W = GRID.chunk_px
-    ta = GRID.tiles_overlapping_bbox(*ZONAL_ROIS[0])
-    tb = GRID.tiles_overlapping_bbox(*CDC_ROI_B)
-    in_a = (
-        f"(tx BETWEEN {ta[:, 0].min()} AND {ta[:, 0].max()} "
-        f"AND ty BETWEEN {ta[:, 1].min()} AND {ta[:, 1].max()})"
-    )
-    in_b = (
-        f"(tx BETWEEN {tb[:, 0].min()} AND {tb[:, 0].max()} "
-        f"AND ty BETWEEN {tb[:, 1].min()} AND {tb[:, 1].max()})"
-    )
-    return f"""WITH zt AS (
-  SELECT range % {GRID.n_tiles_x} AS tx,
-         CAST(floor(range / {GRID.n_tiles_x}.0) AS BIGINT) AS ty
-  FROM range({GRID.n_tiles_x * GRID.n_tiles_y})
-),
-ztf AS (
-  SELECT ty * {GRID.n_tiles_x} + tx AS tile_id, tx, ty FROM zt
-  WHERE {in_b} AND NOT {in_a}
-),
+    b_not_a = _tile_range(CDC_ROI_B) + " AND NOT " + _ZONAL_TILES[0]
+    return f"""{_tile_cte(b_not_a)},
 px AS (
   SELECT z.tile_id, ch.channel,
          CAST(z.ty * 1000 + z.tx AS DOUBLE) + 0.5 * CAST(p.i AS DOUBLE) AS val
@@ -4381,51 +4222,18 @@ def q_overview_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel from the closed form base + 100*r0 + c0 + 25.25 (the 2x2
     window's average source index) — an independent derivation, not a
     replay of the engine expression."""
-    import shutil
-    import tempfile
+    from smart_geocubes_spark.plans.materialize import build_overviews, load_overview
 
-    from smart_geocubes_spark.plans.materialize import (
-        CubeSpec,
-        build_overviews,
-        create_cube,
-        load_overview,
-        materialize,
-    )
-
-    root = tempfile.mkdtemp(prefix="ovcube_")
-    try:
-        path = root + "/cube"
-        create_cube(
-            path,
-            CubeSpec(grid=GRID, channels=("dem", "mask"), time_epochs=None),
-        )
-        materialize(spark, path, ZONAL_ROIS[0])
+    def read(path, _fills):
         build_overviews(spark, path, factors=(2,))
-        df = load_overview(spark, path, ZONAL_ROIS[0], 2)
-        out = df.select(
-            "tile_id",
-            "channel",
-            F.size("block").cast("long").alias("n_px"),
-            F.expr(
-                "CAST(aggregate(block, 0.0D, (a, x) -> a + x) * 8.0 AS BIGINT)"
-            ).alias("sum_x8"),
-        )
-        return _result_ckpt(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return _block_stats(load_overview(spark, path, ZONAL_ROIS[0], 2), scale=8)
+
+    return _filled_cube(spark, "ovcube_", ("dem", "mask"), [ZONAL_ROIS[0]], read)
 
 
 def _overview_store_sql() -> str:
     W2 = GRID.chunk_px // 2
-    return f"""WITH zt AS (
-  SELECT range % {GRID.n_tiles_x} AS tx,
-         CAST(floor(range / {GRID.n_tiles_x}.0) AS BIGINT) AS ty
-  FROM range({GRID.n_tiles_x * GRID.n_tiles_y})
-),
-ztf AS (
-  SELECT ty * {GRID.n_tiles_x} + tx AS tile_id, tx, ty FROM zt
-  WHERE {_zonal_tile_ranges()[0]}
-),
+    return f"""{_tile_cte(_ZONAL_TILES[0])},
 px AS (
   SELECT z.tile_id, ch.channel,
          CAST(z.ty * 1000 + z.tx AS DOUBLE)
@@ -4454,50 +4262,20 @@ def q_band_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     zip_with (x + 2y — half-step-exact, so sum*2 is an exact BIGINT in
     any order). The oracle replays every pixel from the closed form
     3*base + 1000000 + 1.5*i."""
-    import shutil
-    import tempfile
-
     from smart_geocubes_spark.operators.algebra import band_math
-    from smart_geocubes_spark.plans.materialize import (
-        CubeSpec,
-        create_cube,
-        load,
-        materialize,
-    )
+    from smart_geocubes_spark.plans.materialize import load
 
-    root = tempfile.mkdtemp(prefix="bandmath_")
-    try:
-        path = root + "/cube"
-        create_cube(
-            path,
-            CubeSpec(grid=GRID, channels=("dem", "slope"), time_epochs=None),
-        )
-        materialize(spark, path, ZONAL_ROIS[0])
+    def read(path, _fills):
         blocks = load(spark, path, ZONAL_ROIS[0])
         out = band_math(blocks, "dem", "slope", "(x, y) -> x + 2.0D * y")
-        res = out.select(
-            "tile_id",
-            F.size("block").cast("long").alias("n_px"),
-            F.expr(
-                "CAST(aggregate(block, 0.0D, (a, x) -> a + x) * 2.0 AS BIGINT)"
-            ).alias("sum_x2"),
-        )
-        return _result_ckpt(res)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return _block_stats(out, keys=("tile_id",))
+
+    return _filled_cube(spark, "bandmath_", ("dem", "slope"), [ZONAL_ROIS[0]], read)
 
 
 def _band_math_sql() -> str:
     W = GRID.chunk_px
-    return f"""WITH zt AS (
-  SELECT range % {GRID.n_tiles_x} AS tx,
-         CAST(floor(range / {GRID.n_tiles_x}.0) AS BIGINT) AS ty
-  FROM range({GRID.n_tiles_x * GRID.n_tiles_y})
-),
-ztf AS (
-  SELECT ty * {GRID.n_tiles_x} + tx AS tile_id, tx, ty FROM zt
-  WHERE {_zonal_tile_ranges()[0]}
-),
+    return f"""{_tile_cte(_ZONAL_TILES[0])},
 px AS (
   SELECT z.tile_id,
          3.0 * CAST(z.ty * 1000 + z.tx AS DOUBLE) + 1000000.0
@@ -4525,54 +4303,21 @@ def q_temporal_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle replays base + off + 0.5*i + 10 per pixel — a wrong
     sort, an off-by-one median index, or a missing time step all move
     the hash."""
-    import shutil
-    import tempfile
-
     from smart_geocubes_spark.operators.algebra import temporal_composite
-    from smart_geocubes_spark.plans.materialize import (
-        CubeSpec,
-        create_cube,
-        load,
-        materialize,
-    )
+    from smart_geocubes_spark.plans.materialize import load
 
-    root = tempfile.mkdtemp(prefix="tmedian_")
-    try:
-        path = root + "/cube"
-        create_cube(
-            path,
-            CubeSpec(
-                grid=GRID,
-                channels=("dem", "slope"),
-                time_epochs=tuple(CUBE_TIME_EPOCHS),
-            ),
-        )
-        materialize(spark, path, ZONAL_ROIS[2])
-        med = temporal_composite(load(spark, path, ZONAL_ROIS[2]), stat="median")
-        out = med.select(
-            "tile_id",
-            "channel",
-            F.size("block").cast("long").alias("n_px"),
-            F.expr(
-                "CAST(aggregate(block, 0.0D, (a, x) -> a + x) * 2.0 AS BIGINT)"
-            ).alias("sum_x2"),
-        )
-        return _result_ckpt(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _filled_cube(
+        spark, "tmedian_", ("dem", "slope"), [ZONAL_ROIS[2]],
+        lambda path, _: _block_stats(
+            temporal_composite(load(spark, path, ZONAL_ROIS[2]), stat="median")
+        ),
+        time_epochs=tuple(CUBE_TIME_EPOCHS),
+    )
 
 
 def _temporal_median_sql() -> str:
     W = GRID.chunk_px
-    return f"""WITH zt AS (
-  SELECT range % {GRID.n_tiles_x} AS tx,
-         CAST(floor(range / {GRID.n_tiles_x}.0) AS BIGINT) AS ty
-  FROM range({GRID.n_tiles_x * GRID.n_tiles_y})
-),
-ztf AS (
-  SELECT ty * {GRID.n_tiles_x} + tx AS tile_id, tx, ty FROM zt
-  WHERE {_zonal_tile_ranges()[2]}
-),
+    return f"""{_tile_cte(_ZONAL_TILES[2])},
 px AS (
   SELECT z.tile_id, ch.channel,
          CAST(z.ty * 1000 + z.tx AS DOUBLE) + ch.off
@@ -4614,42 +4359,20 @@ def q_regrid_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     the numpy mirror in operators/regrid.py), so boundary pixels agree
     bit-for-bit; pixels over unfilled source chunks are NULL and
     excluded on both sides."""
-    import shutil
-    import tempfile
+    return _regrid_filled(spark, "regrid_", _regrid_target(), ZONAL_ROIS[0])
 
+
+def _regrid_filled(spark: SparkSession, prefix: str, tgt: "TileGrid", roi) -> DataFrame:
+    """Fill ZONAL_ROIS[0], regrid it onto ``tgt`` over ``roi`` and fold
+    per-(target tile, channel) stats over the non-NULL, non-NaN pixels."""
     from smart_geocubes_spark.operators.regrid import regrid_nearest
-    from smart_geocubes_spark.plans.materialize import (
-        CubeSpec,
-        create_cube,
-        materialize,
-    )
 
-    root = tempfile.mkdtemp(prefix="regrid_")
-    try:
-        path = root + "/cube"
-        create_cube(
-            path,
-            CubeSpec(grid=GRID, channels=("dem", "slope"), time_epochs=None),
-        )
-        materialize(spark, path, ZONAL_ROIS[0])
-        out = regrid_nearest(spark, path, _regrid_target(), ZONAL_ROIS[0])
-        res = (
-            out.select(
-                "tile_id",
-                "channel",
-                F.expr(
-                    "size(filter(block, x -> x IS NOT NULL AND NOT isnan(x)))"
-                ).cast("long").alias("n_valid"),
-                F.expr(
-                    "CAST(aggregate(filter(block, x -> x IS NOT NULL AND "
-                    "NOT isnan(x)), 0.0D, (a, x) -> a + x) * 2.0 AS BIGINT)"
-                ).alias("sum_x2"),
-            )
-            .filter(F.col("n_valid") > 0)
-        )
-        return _result_ckpt(res)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    def read(path, _fills):
+        out = regrid_nearest(spark, path, tgt, roi)
+        valid = "filter(block, x -> x IS NOT NULL AND NOT isnan(x))"
+        return _block_stats(out, n_col="n_valid", block=valid).filter(F.col("n_valid") > 0)
+
+    return _filled_cube(spark, prefix, ("dem", "slope"), [ZONAL_ROIS[0]], read)
 
 
 def _regrid_store_sql() -> str:
@@ -4722,43 +4445,8 @@ def q_regrid_mercator(spark: SparkSession, sf_dir: str) -> DataFrame:
     atan/exp chain with every constant interpolated; the numpy kernel
     mirrors it term for term), so the gathered half-step values — and
     hence the integer stats — agree exactly."""
-    import shutil
-    import tempfile
-
-    from smart_geocubes_spark.operators.regrid import regrid_nearest
-    from smart_geocubes_spark.plans.materialize import (
-        CubeSpec,
-        create_cube,
-        materialize,
-    )
-
-    root = tempfile.mkdtemp(prefix="regridm_")
-    try:
-        path = root + "/cube"
-        create_cube(
-            path,
-            CubeSpec(grid=GRID, channels=("dem", "slope"), time_epochs=None),
-        )
-        materialize(spark, path, ZONAL_ROIS[0])
-        tgt = _regrid_merc_target()
-        out = regrid_nearest(spark, path, tgt, tgt.geobox.extent)
-        res = (
-            out.select(
-                "tile_id",
-                "channel",
-                F.expr(
-                    "size(filter(block, x -> x IS NOT NULL AND NOT isnan(x)))"
-                ).cast("long").alias("n_valid"),
-                F.expr(
-                    "CAST(aggregate(filter(block, x -> x IS NOT NULL AND "
-                    "NOT isnan(x)), 0.0D, (a, x) -> a + x) * 2.0 AS BIGINT)"
-                ).alias("sum_x2"),
-            )
-            .filter(F.col("n_valid") > 0)
-        )
-        return _result_ckpt(res)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    tgt = _regrid_merc_target()
+    return _regrid_filled(spark, "regridm_", tgt, tgt.geobox.extent)
 
 
 def _regrid_mercator_sql() -> str:

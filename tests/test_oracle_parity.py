@@ -3,6 +3,9 @@ vs its DuckDB oracle at sf0.01 (same sf the driver uses)."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -15,9 +18,13 @@ _ORACLES = entrymod.oracle_sql()
 
 
 @pytest.mark.parametrize("name", sorted(_QUERIES))
-def test_query_matches_oracle(spark, name):
+def test_query_matches_oracle(spark, name, tmp_path, monkeypatch):
+    # every scratch dir a query makes lands in tmp_path and must be
+    # gone once the gate has collected the result
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     problems = run_gate(spark, SF, name, _QUERIES[name], _ORACLES.get(name))
     assert not problems, f"{name}: " + "; ".join(problems)
+    assert os.listdir(tmp_path) == [], f"{name} left scratch dirs behind"
 
 
 def test_entry_smoke(spark):

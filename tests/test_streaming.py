@@ -122,6 +122,26 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
     assert out.select("page_id").distinct().count() == 50
 
 
+def test_stream_dedup_query_cleans_scratch_on_failed_write(spark, tmp_path, monkeypatch):
+    """The gate's stream_dedup query stages its source under a scratch
+    dir; a write that fails while staging must still remove it."""
+    import tempfile
+
+    import pytest
+    from pyspark.sql import DataFrameWriter
+
+    from smart_geocubes_spark.queries import q_stream_dedup
+
+    def fail(self, path, *args, **kwargs):
+        raise OSError(f"injected write failure: {path}")
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(DataFrameWriter, "parquet", fail)
+    with pytest.raises(OSError, match="injected write failure"):
+        q_stream_dedup(spark, SF)
+    assert os.listdir(tmp_path) == []
+
+
 def test_stream_session_windows(spark, tmp_path):
     """session_window boundary rule: an event at EXACTLY prev + gap
     MERGES (Spark merges touching windows) — pinned here because the
