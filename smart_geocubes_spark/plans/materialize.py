@@ -36,10 +36,13 @@ as one icechunk commit per patch with ``loaded_patches`` replay
 replacing the hand-built retry machinery.
 
 Scale notes (100 TB cube, 1000 executors):
-- blocks are partitioned by ``pt = tile_id % N_PARTS`` (stable bucket,
-  bounded partition count) and sorted within files by (tile_id,
-  time_idx, channel) -> partition pruning on reads, no small-file blowup
-  at high tile counts;
+- every block row carries ``pt = tile_id % N_PARTS``, a stored bucket
+  COLUMN (there are no ``pt=`` directories); a fill hash-partitions its
+  plan rows on ``pt`` into ``min(N_PARTS, defaultParallelism)``
+  partitions — one kernel task per task slot, so a leaf holds at most
+  that many part files — and sorts them within files by (tile_id,
+  time_idx, channel) -> row-group min/max pruning on reads, no
+  small-file blowup at high tile counts;
 - the lineage side of the anti-join is tiny relative to the data
   (one row per chunk, no payload) and is auto-broadcast;
 - block generation is an Arrow ``mapInPandas`` producing whole chunk
@@ -851,17 +854,25 @@ def _bucketed(plan: DataFrame, batch_id: str) -> DataFrame:
     files' row-group min/max stats on (tile_id, time_idx, channel) are
     tight (the pruning the module docstring promises — sorting the PLAN
     rows is cheap; the kernel preserves row order so the block rows
-    land sorted too), then localCheckpoint. EXPLICIT partition count: a
-    bare repartition(col) is an AQE coalesce target — at bench scale
-    the plan rows are a few KB and AQE folds them into ONE partition,
-    serializing the whole fill kernel + write behind a single task
-    (measured: 2x tiles/sec). N_PARTS pins the bucket layout the module
-    docstring promises (2+ consumers -> checkpoint, never cache, whose
-    evicted partitions silently recompute the anti-join per action)."""
+    land sorted too), then localCheckpoint (2+ consumers -> checkpoint,
+    never cache, whose evicted partitions silently recompute the
+    anti-join per action).
+
+    ``pt`` is the stored bucket column; the frame is hash-partitioned on
+    it into ``min(N_PARTS, defaultParallelism)`` partitions. EXPLICIT
+    count: a bare repartition(col) is an AQE coalesce target — at bench
+    scale the plan rows are a few KB and AQE folds them into ONE
+    partition, serializing the whole fill kernel + write behind a
+    single task (measured round 4: 2x tiles/sec). Not N_PARTS itself:
+    every partition of the ``mapInPandas`` frames built on this one
+    pays a Python task, even an empty one, and each dtype group's write
+    is its own job — a two-dtype fill at local[4] runs 8 kernel tasks
+    where 64 buckets ran 128 (~4x cube_cache throughput, 4-core host)."""
+    n = min(N_PARTS, plan.sparkSession.sparkContext.defaultParallelism)
     return (
         plan.withColumn("pt", (F.col("tile_id") % N_PARTS).cast("int"))
         .withColumn("batch_id", F.lit(batch_id))
-        .repartition(N_PARTS, F.col("pt"))
+        .repartition(n, F.col("pt"))
         .sortWithinPartitions("tile_id", "time_idx", "channel")
         .localCheckpoint(eager=True)
     )
@@ -1071,10 +1082,10 @@ def materialize_patch(
             .select(*[f.split()[0] for f in BLOCK_WRITE_SCHEMA.split(", ")])
             # advisory repartition (no pinned count): these rows carry
             # the ~80 KB block arrays, so AQE sizes the write sensibly —
-            # a tiny patch lands 1-2 part files instead of N_PARTS
-            # near-empty ones (the kernel-feeding frame above IS pinned:
-            # its rows are KB-sized plan rows AQE would fold into one
-            # serial task)
+            # a tiny patch lands 1-2 part files instead of one near-empty
+            # file per task slot (the kernel-feeding frame above IS
+            # pinned: its rows are KB-sized plan rows AQE would fold
+            # into one serial task)
             .repartition(F.col("pt"))
             .sortWithinPartitions("tile_id", "time_idx", "channel")
         )

@@ -6,6 +6,7 @@ and kill/concurrency tests (``tests/test_creation.py``,
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -370,6 +371,32 @@ def test_visualize_state_renders_partition_lanes(spark, cube):
     # '=' bars for generate, '~' bars for write
     assert "  p" in s and "generate" in s and "=" in s
     assert "write" in s and "~" in s
+
+
+def test_fill_runs_one_kernel_task_per_slot(spark, cube):
+    """The kernel-feeding repartition is sized to the session's task
+    slots, not the N_PARTS bucket count: every partition of a
+    mapInPandas frame is a Python task (even an empty one), so 64
+    buckets cost 64 tasks per dtype-group write whatever the chunk
+    count. The count stays explicit, though: a 9-tile fill must still
+    spread over several kernel tasks, not the ONE serial task AQE folds
+    a bare repartition(col) of KB-sized plan rows into (round 4)."""
+    from smart_geocubes_spark.plans.materialize import N_PARTS, read_events
+
+    slots = min(N_PARTS, spark.sparkContext.defaultParallelism)
+    materialize(spark, cube, ROI_A)
+    gen_pids = {
+        r.partition_id
+        for r in read_events(spark, cube).filter(F.col("action") == "generate").collect()
+    }
+    assert max(gen_pids) < slots
+    assert len(gen_pids) >= 2
+
+    leaves = glob.glob(os.path.join(cube, "blocks", "batch=*", "dt-*"))
+    leaves += glob.glob(os.path.join(cube, "lineage", "batch=*"))
+    assert len(leaves) == 2  # one dt-double leaf + the lineage dir
+    for d in leaves:
+        assert len(glob.glob(os.path.join(d, "part-*"))) <= slots, d
 
 
 def test_plan_missing_antijoin(spark, cube):
