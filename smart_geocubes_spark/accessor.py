@@ -339,7 +339,8 @@ class GeocubeAccessor:
         API parity — it is cube-sized (one entry per committed chunk).
         At 100 TB use ``read_lineage(spark, path)`` and keep it a
         DataFrame; the engine itself never calls this (the cache skip
-        is the distributed anti-join in plans/materialize.py)."""
+        in plans/materialize.py collects only the keys of the ROI's
+        tiles — bounded by the query, not the cube)."""
         return [
             r.chunk_key
             for r in read_lineage(self.spark, self.path).select("chunk_key").distinct().collect()

@@ -4,7 +4,7 @@ Re-expresses the reference's load-and-cache lifecycle
 (``docs/how_it_works.md:48-53``; ``core/accessor.py:400-443``):
 
   candidates (tiles x time x channels intersecting ROI/TOI)
-    -> LEFT ANTI JOIN lineage            (cache skip, accessor.py:434-436)
+    -> minus the ROI's lineage keys      (cache skip, accessor.py:434-436)
     -> mapInPandas block generation      (download_patch analog)
     -> partitioned parquet append        (chunk-region write, backend.py:263-272)
     -> lineage append + commit ticket    (loaded_patches + icechunk commit,
@@ -43,8 +43,12 @@ Scale notes (100 TB cube, 1000 executors):
   that many part files — and sorts them within files by (tile_id,
   time_idx, channel) -> row-group min/max pruning on reads, no
   small-file blowup at high tile counts;
-- the lineage side of the anti-join is tiny relative to the data
-  (one row per chunk, no payload) and is auto-broadcast;
+- the cache skip is a driver-side set difference: the candidate rows
+  are built in pandas and diffed against ONE collect of the committed
+  chunk keys pruned to the ROI's tiles (pushed ``tile_id IN``) — bounded
+  by the ROI's chunk count x commits per chunk, never by the cube; only
+  a non-empty plan becomes a Spark frame, so a fully cached fill costs
+  that one lineage job;
 - block generation is an Arrow ``mapInPandas`` producing whole chunk
   arrays — one task per candidate partition, no Python row loop;
 - the kernel emits a per-chunk EVENT row alongside each block
@@ -342,7 +346,7 @@ def add_channel(path: str, name: str, dtype: str = "float64") -> CubeSpec:
 
     Backfill is LAZY and falls out of the store's own planning: the new
     channel's chunks simply have no lineage rows yet, so the next
-    ``fill()``'s anti-join plans exactly the missing (tile × time × new
+    ``fill()``'s cache skip plans exactly the missing (tile × time × new
     channel) cells for whatever ROI is filled — no eager rewrite of any
     existing block, which is the only behavior that survives a 100-TB
     cube. Readers are unaffected: ``load()`` returns committed blocks
@@ -656,22 +660,35 @@ def _roi_tile_ids(grid: TileGrid, roi) -> tuple[list[int], list[tuple[int, int]]
 
 
 def _chunk_key():
-    """THE chunk identity column, ``<time_idx>-<tile_y>-<tile_x>-<channel>``."""
+    """THE chunk identity column, ``<time_idx>-<tile_y>-<tile_x>-<channel>``.
+    :func:`candidate_chunks` builds the same string on the driver; the
+    two must stay byte-equal or a fill's chunks never match its reads."""
     return F.concat_ws(
         "-", F.col("time_idx"), F.col("tile_y"), F.col("tile_x"), F.col("channel")
     )
 
 
+# the fill plan's row schema: explicit, because a pandas int32 column
+# converted without one widens to LONG — temporal lineage parquet would
+# then land ``time_idx`` INT64 under a LINEAGE_SCHEMA that declares int
+# (latent until a reader materializes the column, then FAILED_READ_FILE)
+PLAN_SCHEMA = (
+    "tile_x long, tile_y long, tile_id long, time_idx int, channel string, "
+    "chunk_key string"
+)
+
+
 def candidate_chunks(
-    spark: SparkSession,
     spec: CubeSpec,
     roi_bbox,
     toi_epochs: list[int] | None = None,
-) -> DataFrame:
+) -> pd.DataFrame:
     """Tile-coverage enumeration x TOI x channels (reference
     ``adjacent_patches``: grid tiles intersecting ROI,
     ``accessors/gee.py:109-112``; temporal cross product
-    ``accessors/gee.py:128-143``).
+    ``accessors/gee.py:128-143``) as driver-side :data:`PLAN_SCHEMA`
+    rows — the plan is metadata-sized, so it never costs a Spark job.
+    ``chunk_key`` is built to equal :func:`_chunk_key`'s ``concat_ws``.
 
     ``roi_bbox`` takes every :func:`_roi_items` spelling — bbox,
     polygon (WKT or vertex pairs), or a list of them (the reference's
@@ -684,44 +701,39 @@ def candidate_chunks(
         # on an atemporal cube rather than silently ignore it
         raise ValueError("TOI given for an atemporal cube")
     tile_ids = np.array(_roi_tile_ids(spec.grid, roi_bbox)[0], dtype=np.int64)
-    nx = spec.grid.n_tiles_x
-    tdf = spark.createDataFrame(
-        pd.DataFrame(
-            {"tile_x": tile_ids % nx, "tile_y": tile_ids // nx, "tile_id": tile_ids}
-        )
-    )
     if spec.time_epochs is None:
-        tdf = tdf.withColumn("time_idx", F.lit(-1).cast("int"))
+        idxs = [-1]
     else:
         sel = toi_epochs if toi_epochs is not None else list(spec.time_epochs)
         idxs = [list(spec.time_epochs).index(t) for t in sel]
-        # BROADCAST the time axis like the channel crossJoin below: a
-        # bare crossJoin of two driver-created frames is a
-        # CartesianProduct whose partition count is the PRODUCT of the
-        # sides' (32 x 32 = 1024 tasks for ~100 plan rows — measured
-        # r6: the downstream localCheckpoint took 13-15 s of pure task
-        # scheduling vs ~1 s for the atemporal path; guide §2.4
-        # "Exchange/partition shapes you did not expect")
-        tdf = tdf.crossJoin(
-            F.broadcast(
-                spark.createDataFrame(
-                    pd.DataFrame({"time_idx": np.array(idxs, dtype=np.int32)})
-                )
-                # pandas->Spark conversion widens int32 to LONG; without
-                # this cast temporal lineage parquet lands INT64 under a
-                # LINEAGE_SCHEMA that declares int — latent until a reader
-                # actually materializes the column (every anti-join/count
-                # path prunes it), then FAILED_READ_FILE on the scan
-                .withColumn("time_idx", F.col("time_idx").cast("int"))
-            )
-        )
-    ch = spark.createDataFrame(pd.DataFrame({"channel": list(spec.channels)}))
-    return tdf.crossJoin(F.broadcast(ch)).withColumn("chunk_key", _chunk_key())
+    n_t, n_c = len(idxs), len(spec.channels)
+    tile = np.repeat(tile_ids, n_t * n_c)
+    nx = spec.grid.n_tiles_x
+    plan = pd.DataFrame({
+        "tile_x": tile % nx,
+        "tile_y": tile // nx,
+        "tile_id": tile,
+        "time_idx": np.tile(np.repeat(np.array(idxs, dtype=np.int32), n_c), len(tile_ids)),
+        "channel": np.tile(np.array(spec.channels, dtype=object), len(tile_ids) * n_t),
+    })
+    plan["chunk_key"] = (
+        plan["time_idx"].astype(str) + "-" + plan["tile_y"].astype(str) + "-"
+        + plan["tile_x"].astype(str) + "-" + plan["channel"]
+    )
+    return plan
 
 
-def plan_missing(candidates: DataFrame, lineage: DataFrame) -> DataFrame:
-    """The cache-skip anti-join (reference ``core/accessor.py:434-436``)."""
-    return candidates.join(lineage.select("chunk_key"), "chunk_key", "left_anti")
+def plan_missing(spark: SparkSession, path: str, candidates: pd.DataFrame) -> pd.DataFrame:
+    """THE cache skip (reference ``core/accessor.py:434-436``): the
+    ``candidates`` rows whose chunk no committed batch holds. One Spark
+    job — a collect of the committed keys pruned to the candidates'
+    tiles — and none on an empty cube. Raw keys, deduped in Python: a
+    ``distinct()`` first would add a shuffle job to every fill."""
+    if candidates.empty or not _lineage_batches(path):
+        return candidates
+    tile_ids = np.unique(candidates["tile_id"].to_numpy()).tolist()
+    done = {r[0] for r in _roi_lineage(spark, path, tile_ids).select("chunk_key").collect()}
+    return candidates[~candidates["chunk_key"].isin(done)]
 
 
 def _gen_blocks_factory(
@@ -797,9 +809,10 @@ def _write_blocks(
     would run the kernel once per group over ALL chunks).
 
     ``present_channels``: the channels the plan actually contains
-    (callers already know it from the per-channel plan count) — groups
-    with no planned chunks are skipped entirely, so a lazy backfill of
-    one evolved channel costs one write job, not one per dtype group."""
+    (callers already know it from the driver-side plan's per-channel
+    counts) — groups with no planned chunks are skipped entirely, so a
+    lazy backfill of one evolved channel costs one write job, not one
+    per dtype group."""
     groups = {
         e: kept
         for e, chans in _dtype_groups(spec).items()
@@ -845,18 +858,20 @@ def _lineage_nbytes(spec: CubeSpec, n_px: int):
     return expr.cast("long")
 
 
-def _bucketed(plan: DataFrame, batch_id: str) -> DataFrame:
-    """Stamp a batch's plan rows with their stable block bucket and
-    batch id, co-locate each bucket, sort, and checkpoint.
+def _bucketed(spark: SparkSession, rows: pd.DataFrame, batch_id: str) -> DataFrame:
+    """Turn a batch's driver-side plan ``rows`` into a Spark frame,
+    stamp them with their stable block bucket and batch id, co-locate
+    each bucket, sort, and checkpoint.
 
-    The plan feeds three actions (per-channel count, block write,
-    lineage write): bucket once, sort within partitions so the written
-    files' row-group min/max stats on (tile_id, time_idx, channel) are
-    tight (the pruning the module docstring promises — sorting the PLAN
-    rows is cheap; the kernel preserves row order so the block rows
-    land sorted too), then localCheckpoint (2+ consumers -> checkpoint,
-    never cache, whose evicted partitions silently recompute the
-    anti-join per action).
+    The plan feeds two actions (block write, lineage write): bucket
+    once, sort within partitions so the written files' row-group
+    min/max stats on (tile_id, time_idx, channel) are tight (the
+    pruning the module docstring promises — sorting the PLAN rows is
+    cheap; the kernel preserves row order so the block rows land sorted
+    too), then localCheckpoint (2+ consumers -> checkpoint, never cache,
+    whose evicted partitions silently recompute the shuffle per action
+    — and the lineage rows' ``partition_id`` must name the partition
+    the blocks were written from).
 
     ``pt`` is the stored bucket column; the frame is hash-partitioned on
     it into ``min(N_PARTS, defaultParallelism)`` partitions. EXPLICIT
@@ -868,9 +883,10 @@ def _bucketed(plan: DataFrame, batch_id: str) -> DataFrame:
     pays a Python task, even an empty one, and each dtype group's write
     is its own job — a two-dtype fill at local[4] runs 8 kernel tasks
     where 64 buckets ran 128 (~4x cube_cache throughput, 4-core host)."""
-    n = min(N_PARTS, plan.sparkSession.sparkContext.defaultParallelism)
+    n = min(N_PARTS, spark.sparkContext.defaultParallelism)
     return (
-        plan.withColumn("pt", (F.col("tile_id") % N_PARTS).cast("int"))
+        spark.createDataFrame(rows, PLAN_SCHEMA)
+        .withColumn("pt", (F.col("tile_id") % N_PARTS).cast("int"))
         .withColumn("batch_id", F.lit(batch_id))
         .repartition(n, F.col("pt"))
         .sortWithinPartitions("tile_id", "time_idx", "channel")
@@ -960,19 +976,12 @@ def materialize(
         batch_id = uuid.uuid4().hex[:12]
     t0 = time.time()
 
-    missing = _bucketed(
-        plan_missing(
-            candidate_chunks(spark, spec, roi_bbox, toi_epochs), read_lineage(spark, path)
-        ),
-        batch_id,
-    )
-    # per-channel counts in ONE job (replaces the plain count): the
-    # total gates the all-cached return, the channel set lets
-    # _write_blocks skip dtype groups with no planned chunks (a lazy
-    # backfill of one evolved channel = one write job, not one per
-    # dtype group). The collect stays in this function's body:
-    # perfbench names the fill's count phase by its enclosing function.
-    ch_counts = dict(missing.groupBy("channel").count().collect())
+    missing = plan_missing(spark, path, candidate_chunks(spec, roi_bbox, toi_epochs))
+    # per-channel counts off the driver-side plan: the total gates the
+    # all-cached return, the channel set lets _write_blocks skip dtype
+    # groups with no planned chunks (a lazy backfill of one evolved
+    # channel = one write job, not one per dtype group)
+    ch_counts = missing["channel"].value_counts().to_dict()
     if not ch_counts:
         # nothing committed under this id — returning it would hand
         # the caller a batch_id that snapshots()/as_of reject
@@ -984,7 +993,7 @@ def materialize(
         path,
         spec,
         batch_id,
-        missing,
+        _bucketed(spark, missing, batch_id),
         ch_counts,
         lambda part: part.mapInPandas(
             _gen_blocks_factory(spec.grid.chunk_px), schema=BLOCK_WRITE_SCHEMA
@@ -1043,8 +1052,8 @@ def materialize_patch(
     t0 = time.time()
     batch_id = _compact_id(path)
 
-    cand = _bucketed(candidate_chunks(spark, spec, patch_bbox, toi_epochs), batch_id)
-    ch_counts = dict(cand.groupBy("channel").count().collect())
+    cand = candidate_chunks(spec, patch_bbox, toi_epochs)
+    ch_counts = cand["channel"].value_counts().to_dict()
     gb = spec.grid.geobox
     # currently-visible content of exactly these chunks (winner rows,
     # patch-bounded — the same pruned scan load() serves readers);
@@ -1091,7 +1100,8 @@ def materialize_patch(
         )
 
     metrics = _commit_batch(
-        path, spec, batch_id, cand, ch_counts, _merged, t0, patch_id=patch_id
+        path, spec, batch_id, _bucketed(spark, cand, batch_id), ch_counts, _merged, t0,
+        patch_id=patch_id,
     )
     with open(marker, "w") as f:
         json.dump({"patch_id": patch_id, "batch_id": batch_id, "bbox": list(patch_bbox)}, f)

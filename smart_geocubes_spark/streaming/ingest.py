@@ -10,7 +10,7 @@ existing mechanisms rather than inventing a new one:
    the same checkpoint processes nothing new.
 2. **Sink side, replay** — a micro-batch replayed after a driver
    crash (sink ran, checkpoint commit didn't) re-enters
-   ``materialize``, whose lineage anti-join sees every chunk already
+   ``materialize``, whose lineage cache skip sees every chunk already
    committed and skips the whole fill ("all cached"): chunk-level
    idempotency, independent of Spark's epoch bookkeeping.
 3. **Sink side, mid-fill crash** — a fill that died between the block

@@ -4,11 +4,17 @@ The driver compares row count + schema (column names) + an
 order-insensitive value hash. We reproduce that: sort columns by name,
 canonicalize every cell to a string (floats via shortest-roundtrip
 repr, NaN/None normalized), sort rows, compare the full multiset.
+
+Also :func:`spark_jobs`, the job counter that pins a code path's Spark
+job budget.
 """
 
 from __future__ import annotations
 
 import math
+import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 import duckdb
 import numpy as np
@@ -106,3 +112,30 @@ def run_gate(spark, sf_dir: str, name: str, query_fn, oracle: str | None) -> lis
     finally:
         con.close()  # no leak when the oracle itself raises
     return compare_frames(spark_pdf, duck_pdf)
+
+
+@contextmanager
+def spark_jobs(spark) -> Iterator[list[list[str]]]:
+    """Yield a list that, once the ``with`` block exits, holds one
+    entry per Spark job the CALLING thread ran inside it: the names of
+    the job's stages (``"collect at <file>:<line>"``, ...). Counted
+    through a job group, so jobs other threads submit are not in it."""
+    sc = spark.sparkContext
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    prev = {k: sc.getLocalProperty(k) for k in keys}
+    jobs: list[list[str]] = []
+    sc.setJobGroup(group, "spark_jobs")
+    try:
+        yield jobs
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)
+        # the status store is fed by the async listener bus: drain it
+        # so the last job of the block is already recorded
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        for job_id in sorted(tracker.getJobIdsForGroup(group)):
+            info = tracker.getJobInfo(job_id)
+            stages = [tracker.getStageInfo(s) for s in (info.stageIds if info else [])]
+            jobs.append([st.name for st in stages if st is not None])

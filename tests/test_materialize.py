@@ -12,9 +12,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from smart_geocubes_spark.accessor import arcticdem_like
 from smart_geocubes_spark.geo.geobox import GeoBox, TileGrid
 from smart_geocubes_spark.plans.materialize import (
+    PLAN_SCHEMA,
     CubeSpec,
+    _chunk_key,
     candidate_chunks,
     create_cube,
     load,
@@ -23,6 +26,7 @@ from smart_geocubes_spark.plans.materialize import (
     plan_missing,
     read_lineage,
 )
+from smart_geocubes_spark.testing import spark_jobs
 
 SMALL_GRID = TileGrid(
     geobox=GeoBox(crs="EPSG:4326", x0=0.0, y0=20.0, res=0.01, width=2000, height=2000),
@@ -31,6 +35,9 @@ SMALL_GRID = TileGrid(
 
 ROI_A = (2.3, 15.2, 4.8, 17.9)  # tiles tx 2..4, ty 2..4 -> 3x3 = 9 tiles
 ROI_B = (3.3, 14.2, 6.8, 16.9)  # overlaps ROI_A
+# arcticdem_like (EPSG:3413) ROIs: tx 10..11 and tx 11..12, both ty 15..17
+ROI_POLAR = (-800_000.0, -1_500_000.0, -300_000.0, -1_000_000.0)
+ROI_POLAR_E = (-470_000.0, -1_500_000.0, 20_000.0, -1_000_000.0)
 
 
 @pytest.fixture()
@@ -51,10 +58,10 @@ def test_create_exists_semantics(cube):
 
 def test_candidate_enumeration(spark, cube):
     spec = open_spec(cube)
-    cands = candidate_chunks(spark, spec, ROI_A)
-    assert cands.count() == 9 * 2  # 9 tiles x 2 channels
+    cands = candidate_chunks(spec, ROI_A)
+    assert len(cands) == 9 * 2  # 9 tiles x 2 channels
     with pytest.raises(ValueError):
-        candidate_chunks(spark, spec, (-50.0, -50.0, -40.0, -40.0))
+        candidate_chunks(spec, (-50.0, -50.0, -40.0, -40.0))
 
 
 def test_materialize_load_golden(spark, cube):
@@ -402,13 +409,81 @@ def test_fill_runs_one_kernel_task_per_slot(spark, cube):
 def test_plan_missing_antijoin(spark, cube):
     spec = open_spec(cube)
     materialize(spark, cube, ROI_A)
-    cands = candidate_chunks(spark, spec, ROI_B)
-    missing = plan_missing(cands, read_lineage(spark, cube))
-    assert missing.count() == 16
-    # anti-join never invents chunks
-    keys = {r.chunk_key for r in missing.collect()}
+    missing = plan_missing(spark, cube, candidate_chunks(spec, ROI_B))
+    assert len(missing) == 16
+    # the cache skip never invents chunks
+    keys = set(missing["chunk_key"])
     done = {r.chunk_key for r in read_lineage(spark, cube).collect()}
     assert not keys & done
+
+
+def test_cached_fill_runs_one_lineage_job(spark, cube):
+    """The cache skip is planned on the driver: a fill's per-channel
+    counts come off the pandas plan (no count job), and a fully cached
+    fill costs at most the one ROI-pruned lineage key collect."""
+    with spark_jobs(spark) as cold:
+        assert materialize(spark, cube, ROI_A)["written"] == 18
+    # an empty cube has no lineage to collect: no collect job at all
+    assert not [j for j in cold if any(n.startswith("collect at ") for n in j)], cold
+    with spark_jobs(spark) as partial:
+        assert materialize(spark, cube, ROI_B)["written"] == 16
+    # one lineage collect, no count on top of it
+    assert len([j for j in partial if any(n.startswith("collect at ") for n in j)]) == 1, partial
+    with spark_jobs(spark) as cached:
+        assert materialize(spark, cube, ROI_A)["skipped"] == "all cached"
+    assert len(cached) <= 1, cached
+
+
+@pytest.mark.parametrize("kind", ["atemporal", "temporal_toi", "arcticdem_like"])
+def test_driver_plan_keys_match_spark_chunk_keys(spark, tmp_path, kind):
+    """The driver-built ``chunk_key`` must equal :func:`_chunk_key`'s
+    ``concat_ws`` — the key ``load()`` computes on the block rows and
+    semi-joins to lineage. A mismatch would hide every fill from its
+    readers and plan every chunk as missing forever. Covers
+    ``time_idx = -1``, a TOI subset, a two-dtype cube, and a partially
+    cached ROI planning exactly its uncached chunks."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "c")
+    first, second, toi = ROI_A, ROI_B, None
+    if kind == "arcticdem_like":
+        arcticdem_like(spark, path).create()
+        first, second = ROI_POLAR, ROI_POLAR_E
+    else:
+        epochs = None if kind == "atemporal" else (1577836800, 1609459200, 1640995200)
+        create_cube(path, CubeSpec(grid=SMALL_GRID, channels=("dem", "slope"), time_epochs=epochs))
+        if epochs:
+            toi = [epochs[0], epochs[2]]
+    spec = open_spec(path)
+    cands = candidate_chunks(spec, second, toi)
+    if kind == "temporal_toi":
+        assert set(cands["time_idx"]) == {0, 2}
+    else:
+        assert set(cands["time_idx"]) == {-1}
+    spark_keys = (
+        spark.createDataFrame(cands, PLAN_SCHEMA)
+        .select("chunk_key", _chunk_key().alias("spark_key"))
+        .collect()
+    )
+    assert len(spark_keys) == len(cands)
+    assert all(r.chunk_key == r.spark_key for r in spark_keys)
+
+    materialize(spark, path, first, toi)
+    missing = plan_missing(spark, path, cands)
+    assert 0 < len(missing) < len(cands)  # partially cached
+    m = materialize(spark, path, second, toi)
+    assert m["written"] == len(missing)
+    written = read_lineage(spark, path).filter(F.col("batch_id") == m["batch_id"])
+    assert {r.chunk_key for r in written.collect()} == set(missing["chunk_key"])
+    # load() keys the block rows with _chunk_key() and keeps only those
+    # a committed lineage row names: every candidate must come back
+    served = load(spark, path, second, toi).select("chunk_key").collect()
+    assert sorted(r.chunk_key for r in served) == sorted(cands["chunk_key"])
+    assert plan_missing(spark, path, cands).empty
+    # the plan's explicit schema keeps time_idx INT32 on disk (a pandas
+    # int32 column converted without one widens to LONG)
+    for f in glob.glob(os.path.join(path, "lineage", "batch=*", "part-*.parquet")):
+        assert str(pq.read_schema(f).field("time_idx").type) == "int32", f
 
 
 def test_temporal_cube(spark, tmp_path):
@@ -544,8 +619,8 @@ def test_patch_merge_preserves_borders_and_time_travel(spark, cube):
     # patch identity: re-applying is a no-op (loaded_patches semantics)
     assert materialize_patch(spark, cube, A, "patchA")["written"] == 0
     # the merged chunks are committed lineage: a normal fill skips them
-    missing = plan_missing(candidate_chunks(spark, open_spec(cube), roi), read_lineage(spark, cube))
-    assert missing.count() == 0
+    missing = plan_missing(spark, cube, candidate_chunks(open_spec(cube), roi))
+    assert len(missing) == 0
 
 
 def test_patch_merge_over_full_fill(spark, cube):
