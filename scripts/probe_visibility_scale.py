@@ -1,0 +1,88 @@
+"""Measure what an ROI read's driver-side visibility costs at large ROIs.
+
+Builds a one-channel cube of ``side`` x ``side`` tiny chunks (2x2 px),
+fills it in two halves, compacts it ``compactions`` times (each
+compaction adds one committed lineage row per chunk, until a vacuum),
+then reads the whole extent and prints one line per phase: the
+lineage rows collected, the driver time of the collect, of the read
+rule and of building ``load()``'s plan, the size of that plan's
+formatted description (what the SQL UI and the event log store), and
+the wall time of the block count. Run:
+
+    python scripts/probe_visibility_scale.py --side 100 --compactions 1
+"""
+
+from __future__ import annotations
+
+import argparse
+import os
+import sys
+import tempfile
+import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--side", type=int, default=100, help="tiles per side (chunks = side^2)")
+    ap.add_argument("--compactions", type=int, default=1)
+    ap.add_argument("--master", default="local[2]")
+    args = ap.parse_args()
+
+    from pyspark.sql import SparkSession
+
+    import smart_geocubes_spark.plans.materialize as M
+    from smart_geocubes_spark.geo.geobox import GeoBox, TileGrid
+
+    spark = (
+        SparkSession.builder.master(args.master)
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.session.timeZone", "UTC")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    px, res = 2, 0.01
+    grid = TileGrid(
+        geobox=GeoBox(crs="EPSG:4326", x0=0.0, y0=20.0, res=res,
+                      width=args.side * px, height=args.side * px),
+        chunk_px=px,
+    )
+    span = args.side * px * res
+    roi = (0.0, 20.0 - span, span, 20.0)
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "cube")
+        M.create_cube(path, M.CubeSpec(grid=grid, channels=("dem",), time_epochs=None))
+        t = time.perf_counter()
+        M.materialize(spark, path, (0.0, 20.0 - span, span / 2, 20.0))
+        M.materialize(spark, path, roi)
+        for _ in range(args.compactions):
+            M.compact(spark, path)
+        print(f"build_s {time.perf_counter() - t:.1f}")
+
+        tile_ids, _ = M._roi_tile_ids(grid, roi)
+        for rep in range(2):  # the first pass warms the JVM
+            t = time.perf_counter()
+            lin = M._lineage_rows(spark, path, tile_ids)
+            t_collect = time.perf_counter() - t
+            t = time.perf_counter()
+            vis = M._visible(lin)
+            t_rule = time.perf_counter() - t
+            t = time.perf_counter()
+            df = M.load(spark, path, roi)
+            desc = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+            t_load = time.perf_counter() - t
+            t = time.perf_counter()
+            n = df.count()
+            t_count = time.perf_counter() - t
+            print(
+                f"rep {rep} chunks {len(vis)} lineage_rows {len(lin)} "
+                f"collect_s {t_collect:.3f} rule_s {t_rule:.3f} "
+                f"load_plan_s {t_load:.3f} plan_desc_kb {len(desc) / 1024:.0f} "
+                f"count_s {t_count:.3f} blocks {n}"
+            )
+    spark.stop()
+
+
+if __name__ == "__main__":
+    main()

@@ -28,12 +28,13 @@ Fills, patches and compactions all write this layout (beside it:
 Transactional model: each run writes under ``blocks/batch=<id>/``,
 then ``lineage/batch=<id>/``, then takes its commit ticket; a batch
 exists iff its ticket was taken (after its lineage _SUCCESS). Readers
-resolve the cube as blocks SEMI JOIN committed lineage, so a job killed
-at any point before the ticket leaves invisible orphans and the next
-run redoes exactly the missing chunks — the same observable semantics
-as one icechunk commit per patch with ``loaded_patches`` replay
-(``backends/threaded.py:119-122``), with Spark's task-commit protocol
-replacing the hand-built retry machinery.
+serve a block row only if its (chunk_key, batch_id) wins in committed
+lineage (resolved on the driver from one ROI-pruned lineage collect),
+so a job killed at any point before the ticket leaves invisible
+orphans and the next run redoes exactly the missing chunks — the same
+observable semantics as one icechunk commit per patch with
+``loaded_patches`` replay (``backends/threaded.py:119-122``), with
+Spark's task-commit protocol replacing the hand-built retry machinery.
 
 Scale notes (100 TB cube, 1000 executors):
 - every block row carries ``pt = tile_id % N_PARTS``, a stored bucket
@@ -43,12 +44,12 @@ Scale notes (100 TB cube, 1000 executors):
   that many part files — and sorts them within files by (tile_id,
   time_idx, channel) -> row-group min/max pruning on reads, no
   small-file blowup at high tile counts;
-- the cache skip is a driver-side set difference: the candidate rows
-  are built in pandas and diffed against ONE collect of the committed
-  chunk keys pruned to the ROI's tiles (pushed ``tile_id IN``) — bounded
-  by the ROI's chunk count x commits per chunk, never by the cube; only
-  a non-empty plan becomes a Spark frame, so a fully cached fill costs
-  that one lineage job;
+- a fill and a read each collect the committed lineage rows pruned to
+  the ROI's tiles (pushed ``tile_id IN``) ONCE — bounded by the ROI's
+  chunk count x commits per chunk, never by the cube. The cache skip
+  diffs the pandas-built candidates against the keys (only a non-empty
+  plan becomes a Spark frame); a read applies the read rule in pandas
+  and filters its block scan by a literal IN list — no window or join;
 - block generation is an Arrow ``mapInPandas`` producing whole chunk
   arrays — one task per candidate partition, no Python row loop;
 - the kernel emits a per-chunk EVENT row alongside each block
@@ -73,7 +74,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from smart_geocubes_spark.geo.geobox import TileGrid
@@ -668,6 +669,18 @@ def _chunk_key():
     )
 
 
+def _toi_idxs(spec: CubeSpec, toi_epochs: list[int] | None) -> list[int] | None:
+    """TOI epochs -> ``time_idx`` values (None: the whole time axis).
+    Shared-layer guard (reference assert_temporal_cube): every entry
+    point — fill, load, read_snapshot — must reject a TOI on an
+    atemporal cube rather than silently ignore it."""
+    if toi_epochs is None:
+        return None
+    if spec.time_epochs is None:
+        raise ValueError("TOI given for an atemporal cube")
+    return [list(spec.time_epochs).index(t) for t in toi_epochs]
+
+
 # the fill plan's row schema: explicit, because a pandas int32 column
 # converted without one widens to LONG — temporal lineage parquet would
 # then land ``time_idx`` INT64 under a LINEAGE_SCHEMA that declares int
@@ -695,17 +708,10 @@ def candidate_chunks(
     GeoDataFrame branch, ``core/accessor.py:400-426``): tile sets are
     unioned and deduped, so one fill covers them all. A concave
     polygon fills strictly fewer chunks than its bbox."""
-    if toi_epochs is not None and spec.time_epochs is None:
-        # shared-layer guard (reference assert_temporal_cube): every
-        # entry point — fill, load, read_snapshot — must reject a TOI
-        # on an atemporal cube rather than silently ignore it
-        raise ValueError("TOI given for an atemporal cube")
+    idxs = _toi_idxs(spec, toi_epochs)
     tile_ids = np.array(_roi_tile_ids(spec.grid, roi_bbox)[0], dtype=np.int64)
-    if spec.time_epochs is None:
-        idxs = [-1]
-    else:
-        sel = toi_epochs if toi_epochs is not None else list(spec.time_epochs)
-        idxs = [list(spec.time_epochs).index(t) for t in sel]
+    if idxs is None:
+        idxs = [-1] if spec.time_epochs is None else list(range(len(spec.time_epochs)))
     n_t, n_c = len(idxs), len(spec.channels)
     tile = np.repeat(tile_ids, n_t * n_c)
     nx = spec.grid.n_tiles_x
@@ -725,14 +731,13 @@ def candidate_chunks(
 
 def plan_missing(spark: SparkSession, path: str, candidates: pd.DataFrame) -> pd.DataFrame:
     """THE cache skip (reference ``core/accessor.py:434-436``): the
-    ``candidates`` rows whose chunk no committed batch holds. One Spark
-    job — a collect of the committed keys pruned to the candidates'
-    tiles — and none on an empty cube. Raw keys, deduped in Python: a
-    ``distinct()`` first would add a shuffle job to every fill."""
-    if candidates.empty or not _lineage_batches(path):
+    ``candidates`` rows whose chunk no committed batch holds — a set
+    difference against :func:`_lineage_rows` of the candidates' tiles
+    (one Spark job, none on an empty cube)."""
+    if candidates.empty:
         return candidates
     tile_ids = np.unique(candidates["tile_id"].to_numpy()).tolist()
-    done = {r[0] for r in _roi_lineage(spark, path, tile_ids).select("chunk_key").collect()}
+    done = set(_lineage_rows(spark, path, tile_ids)["chunk_key"])
     return candidates[~candidates["chunk_key"].isin(done)]
 
 
@@ -1140,20 +1145,33 @@ def _roi_lineage(
     tile_ids: list[int],
     channels: list[str] | None = None,
     allowed: set[str] | None = None,
+    time_idxs: list[int] | None = None,
 ) -> DataFrame:
     """Committed lineage pruned to an ROI's tiles — and optionally to
-    ``channels`` and the ``allowed`` batch ids of a snapshot — BEFORE
-    winner ranking: the full winner list is one row per chunk of the
-    whole cube (~10^8-9 chunks at 100 TB) and force-broadcasting that
-    would OOM; the ROI-pruned set is bounded by the query size, so the
-    broadcast is safe. The IN filters are pushed to the lineage parquet
-    scan."""
-    lin = read_lineage(spark, path).filter(F.col("tile_id").isin(tile_ids))
+    ``channels``, the ``allowed`` batch ids of a snapshot and the
+    ``time_idxs`` of a TOI. The IN filters are pushed to the lineage
+    parquet scan, so what :func:`_lineage_rows` collects is bounded by
+    the query, never by the cube: ROI chunks x commits per chunk."""
+    lin = read_lineage(spark, path).filter(_in_literal("tile_id", tile_ids))
     if channels is not None:
-        lin = lin.filter(F.col("channel").isin(list(channels)))
+        lin = lin.filter(_in_literal("channel", channels))
     if allowed is not None:
-        lin = lin.filter(F.col("batch_id").isin(sorted(allowed)))
+        lin = lin.filter(_in_literal("batch_id", sorted(allowed)))
+    if time_idxs is not None:
+        lin = lin.filter(_in_literal("time_idx", time_idxs))
     return lin
+
+
+def _lineage_rows(spark: SparkSession, path: str, *pruning) -> pd.DataFrame:
+    """THE lineage read of a fill or an ROI read: the committed
+    ``(chunk_key, batch_id, src_batch)`` rows of ``_roi_lineage(spark,
+    path, *pruning)`` in ONE collect, and no Spark job on an empty cube.
+    Raw rows (more than one per chunk): a ``distinct()`` adds a job."""
+    cols = ["chunk_key", "batch_id", "src_batch"]
+    if not _lineage_batches(path):
+        return pd.DataFrame(columns=cols)
+    lin = _roi_lineage(spark, path, *pruning).select(*cols)
+    return pd.DataFrame(lin.collect(), columns=cols)
 
 
 def _winners(lineage: DataFrame) -> DataFrame:
@@ -1161,11 +1179,28 @@ def _winners(lineage: DataFrame) -> DataFrame:
     batch_id wins (deterministic; block content is deterministic, so
     any winner of a double-committed chunk is correct; compactions and
     patch merges take ids from the reserved "0" namespace so they
-    shadow what they rewrite)."""
+    shadow what they rewrite). This Spark form is for whole-cube
+    lineage (compact, vacuum); ROI reads use :func:`_visible`."""
     w = Window.partitionBy("chunk_key").orderBy(F.col("batch_id").asc())
     return (
         lineage.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")
     )
+
+
+def _visible(lineage: pd.DataFrame) -> pd.DataFrame:
+    """The read rule of :func:`_winners` on the driver, over
+    :func:`_lineage_rows`: one row per chunk_key, its min batch_id's."""
+    return lineage.sort_values(["chunk_key", "batch_id"]).drop_duplicates("chunk_key")
+
+
+def _in_literal(expr: str, values) -> Column:
+    """``expr IN (v, ...)`` in ONE JVM call: THE IN filter of the read
+    path (``Column.isin`` pays a py4j round trip per value, ~0.35 ms).
+    Ints are BIGINT literals: no per-value cast against ``tile_id``, and
+    an int column's cast unwraps, so both still push to parquet."""
+    vals = [f"{int(v)}L" if isinstance(v, (int, np.integer)) else
+            "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'" for v in values]
+    return F.expr(f"{expr} IN ({', '.join(vals)})") if vals else F.lit(False)
 
 
 def load(
@@ -1180,28 +1215,30 @@ def load(
 ) -> DataFrame:
     """ROI read: materialize() first for the reference's full load()
     semantics; this is the scan+crop step (snapshot = committed lineage
-    only). Partition pruning: blocks are filtered on tile_id membership
-    (small set -> pushed to parquet row groups).
+    only). Visibility is resolved on the driver (:func:`_lineage_rows`,
+    :func:`_visible`) and filters the pruned block scan as a literal IN
+    list: no lineage scan, window or join in the returned plan. Partition
+    pruning: blocks are filtered on tile_id membership (small set ->
+    pushed to parquet row groups).
 
     ``value_range=(lo, hi)``: ZONE-MAP pruning — a metadata pass reads
     only the per-chunk (v_min, v_max, n_valid) columns (the block
     arrays are never touched; parquet column pruning) and drops every
     chunk whose stored bounds cannot intersect [lo, hi]. The surviving
-    set then narrows BOTH the pushed tile_id IN list and the winner
-    broadcast, so pruned chunks cost neither scan I/O nor join rows.
-    Chunk-granular and conservative: surviving blocks still contain all
-    their pixels (exact per-pixel filtering is the caller's). The
-    survivor collect is bounded by the ROI chunk count — the same
-    cardinality load() already broadcasts as its winner set.
+    set then narrows BOTH the pushed tile_id IN list and the visible
+    set, in Python, so pruned chunks cost no scan I/O. Chunk-granular
+    and conservative: surviving blocks still contain all their pixels
+    (exact per-pixel filtering is the caller's). The survivor collect
+    is bounded by the ROI chunk count (one row per visible chunk).
 
     ``stats_only=True``: return the zone-map manifest itself (one row
     per visible chunk with its bounds) instead of block rows.
 
     ``channels``: band projection (P4, reference ``load(..., bands)``
     slicing) — the IN filter is pushed to BOTH parquet scans (blocks
-    and lineage), so a 1-of-64-channel read scans and winner-ranks
-    1/64th of the ROI's rows, not all of them. Unknown names raise
-    (silently returning nothing would read as "not filled yet").
+    and lineage), so a 1-of-64-channel read scans and collects 1/64th
+    of the ROI's rows, not all of them. Unknown names raise (silently
+    returning nothing would read as "not filled yet").
 
     ``roi_bbox`` may be a LIST of bboxes (the reference's GeoDataFrame
     batch branch, ``core/accessor.py:400-426``): ONE pruned scan over
@@ -1218,8 +1255,7 @@ def load(
     though its id sorts first, so historical as-of views are
     unchanged); vacuum bounds how far back travel reaches."""
     spec = open_spec(path)
-    if toi_epochs is not None and spec.time_epochs is None:
-        raise ValueError("TOI given for an atemporal cube")
+    time_idxs = _toi_idxs(spec, toi_epochs)
     if channels is not None:
         if not channels:
             # an explicitly EMPTY projection is a caller bug — silently
@@ -1239,23 +1275,30 @@ def load(
         # PREFIX of the commit order, inclusive
         allowed = set(ids[: ids.index(as_of_batch) + 1])
     tile_ids, roi_pairs = _roi_tile_ids(spec.grid, roi_bbox)
-    batches = _block_batches(path)
-    if allowed is not None:
-        batches = [
-            b for b in batches if os.path.basename(b).split("=", 1)[1] in allowed
-        ]
-    time_idxs = (
-        None if toi_epochs is None
-        else [list(spec.time_epochs).index(t) for t in toi_epochs]
-    )
+    # visibility: a block row is visible iff the winning lineage row of
+    # its chunk_key names its batch_id — orphan blocks from a crashed
+    # batch never match even when a later batch re-wrote the same chunk
+    # (icechunk-commit visibility semantics). CONCURRENT fills may both
+    # commit the same chunk (both planned against the pre-commit
+    # lineage — the reference resolves this with icechunk conflict
+    # retries, backends/threaded.py:85-99); we resolve it at read:
+    # exactly one winning batch per chunk_key. Read BEFORE the block
+    # listing: a batch's blocks land before its ticket.
+    vis = _visible(_lineage_rows(spark, path, tile_ids, channels, allowed, time_idxs))
+    stats_schema = BLOCK_SCHEMA.replace("block array<double>", STATS_COLS)
 
-    def _pruned(df: DataFrame, tile_ids: list[int]) -> DataFrame:
-        df = df.filter(F.col("tile_id").isin(tile_ids))
+    def _pruned(df: DataFrame, tile_ids: list[int], vis: pd.DataFrame) -> DataFrame:
+        df = df.filter(_in_literal("tile_id", tile_ids))
         if channels is not None:
-            df = df.filter(F.col("channel").isin(list(channels)))
+            df = df.filter(_in_literal("channel", channels))
         if time_idxs is not None:
-            df = df.filter(F.col("time_idx").isin(time_idxs))
-        return df.withColumn("chunk_key", _chunk_key())
+            df = df.filter(_in_literal("time_idx", time_idxs))
+        df = df.withColumn("chunk_key", _chunk_key()).filter(
+            _in_literal("concat(batch_id, ':', chunk_key)", vis["batch_id"] + ":" + vis["chunk_key"])
+        )
+        # visibility keys first: chunk_key, batch_id, then the rest
+        rest = [c for c in df.columns if c not in ("chunk_key", "batch_id")]
+        return df.select("chunk_key", "batch_id", *rest)
 
     def _with_roi_idx(out: DataFrame) -> DataFrame:
         if roi_pairs is None:
@@ -1267,14 +1310,10 @@ def load(
         )
         return out.join(F.broadcast(mapdf), "tile_id")
 
-    def _empty_blocks() -> DataFrame:
-        # match the populated path's exact schema/order (semi-join keys
-        # hoisted first: chunk_key, batch_id, then block columns)
-        cols = ["chunk_key", "batch_id"] + [
-            f.split()[0] for f in BLOCK_SCHEMA.split(", ") if f.split()[0] != "batch_id"
-        ]
+    def _empty(schema: str) -> DataFrame:
+        # the populated path's exact schema and column order
         return _with_roi_idx(
-            spark.createDataFrame([], BLOCK_SCHEMA + ", chunk_key string").select(*cols)
+            _pruned(spark.createDataFrame([], schema), tile_ids, vis.iloc[:0])
         )
 
     # per-dtype leaf scan: every batch stores one dt-<elem> subdir per
@@ -1282,40 +1321,20 @@ def load(
     # the array<double> compute representation with a JVM cast, then
     # the groups union (filters below push through the union into every
     # scan). A single-dtype cube hits exactly one scan.
-    leafs = _block_leaf_dirs(batches)
+    winning = set(vis["batch_id"])
+    leafs = _block_leaf_dirs(
+        [b for b in _block_batches(path) if os.path.basename(b).split("=", 1)[1] in winning]
+    )
     if channels is not None:
         # dtype-GROUP pruning: a channel projection maps to the storage
         # groups that hold those channels; every other dt-<elem> leaf is
-        # dropped from the plan entirely — no file listing, no scan, no
-        # per-leaf winner subplan
+        # dropped from the plan entirely — no file listing, no scan
         wanted = {DTYPES[spec.channel_dtype(c)] for c in channels}
         leafs = {e: dirs for e, dirs in leafs.items() if e in wanted}
-    if not leafs:  # nothing committed (for these channels) yet
-        return _empty_blocks()
-    # visibility: a block row is visible iff a committed lineage row
-    # names BOTH its chunk_key AND its batch_id — orphan blocks from a
-    # crashed batch never match even when a later batch re-wrote the
-    # same chunk (icechunk-commit visibility semantics). CONCURRENT
-    # fills may both commit the same chunk (both planned against the
-    # pre-commit lineage — the reference resolves this with icechunk
-    # conflict retries, backends/threaded.py:85-99); we resolve it at
-    # read: exactly one winning batch per chunk_key (_winners).
-    winners = _winners(
-        _roi_lineage(spark, path, tile_ids, channels, allowed)
-        .select("chunk_key", "batch_id")
-        .distinct()
-    )
+    if not leafs:  # nothing visible (for these channels) in the ROI
+        return _empty(stats_schema if stats_only else BLOCK_SCHEMA)
 
     if stats_only or value_range is not None:
-        if value_range is not None:
-            # winners feeds the survivor ACTION below and then the block
-            # scan's semi-join — 2 consumers -> eager checkpoint
-            # (CLAUDE.md rule: never let the lineage window recompute)
-            winners = winners.localCheckpoint(eager=True)
-        stats_schema = (
-            "tile_y long, tile_x long, tile_id long, time_idx int, "
-            "channel string, pt int, batch_id string, " + STATS_COLS
-        )
         # one pruned scan over every leaf dir: the stats schema is
         # element-type-independent, so no per-dtype union is needed and
         # the block column never appears in the plan
@@ -1324,7 +1343,8 @@ def load(
                 *[d for ds in leafs.values() for d in sorted(ds)]
             ),
             tile_ids,
-        ).join(F.broadcast(winners), ["chunk_key", "batch_id"], "left_semi")
+            vis,
+        )
         if stats_only:
             return _with_roi_idx(sdf)
         lo, hi = (float(value_range[0]), float(value_range[1]))
@@ -1338,11 +1358,9 @@ def load(
             .collect()
         )
         if not surv:
-            return _empty_blocks()
+            return _empty(BLOCK_SCHEMA)
         tile_ids = sorted({int(r["tile_id"]) for r in surv})
-        winners = winners.filter(
-            F.col("chunk_key").isin(sorted({r["chunk_key"] for r in surv}))
-        )
+        vis = vis[vis["chunk_key"].isin({r["chunk_key"] for r in surv})]
 
     parts = []
     for elem in sorted(leafs):
@@ -1353,9 +1371,7 @@ def load(
     df = parts[0]
     for p_ in parts[1:]:
         df = df.unionByName(p_)
-    return _with_roi_idx(
-        _pruned(df, tile_ids).join(F.broadcast(winners), ["chunk_key", "batch_id"], "left_semi")
-    )
+    return _with_roi_idx(_pruned(df, tile_ids, vis))
 
 
 def chunk_stats(
@@ -1402,31 +1418,26 @@ def load_changes(
     A compaction rewrites blocks verbatim under a new batch_id but
     carries ``src_batch`` through, so it reports ZERO changes; a patch
     merge stamps its own id, so it reports exactly its footprint. New
-    chunks (no winner at the snapshot) always report. All pruning is
-    metadata-sized: two ROI-bounded lineage winner frames and one
-    broadcast key set on top of the normal pruned block scan."""
+    chunks (no winner at the snapshot) always report. The winners now
+    and at the snapshot come from one ROI-pruned lineage collect; the
+    changed keys filter :func:`load`'s result (its own, second collect)
+    as a literal IN list."""
     ids = [s["batch_id"] for s in snapshots(path)]
     if since_batch not in ids:
         raise ValueError(f"unknown snapshot {since_batch!r}; committed: {ids}")
-    tile_ids, _ = _roi_tile_ids(open_spec(path).grid, roi_bbox)
-
-    def _winner_src(allowed: set[str] | None) -> DataFrame:
-        lin = _roi_lineage(spark, path, tile_ids, channels, allowed)
-        return _winners(
-            lin.select("chunk_key", "batch_id", "src_batch").distinct()
-        ).select("chunk_key", "src_batch")
-
-    old = _winner_src(set(ids[: ids.index(since_batch) + 1])).withColumnRenamed(
-        "src_batch", "old_src"
+    spec = open_spec(path)
+    tile_ids, _ = _roi_tile_ids(spec.grid, roi_bbox)
+    lin = _lineage_rows(spark, path, tile_ids, channels, None, _toi_idxs(spec, toi_epochs))
+    then = _visible(lin[lin["batch_id"].isin(ids[: ids.index(since_batch) + 1])])
+    old_src = dict(zip(then["chunk_key"], then["src_batch"]))
+    now = _visible(lin)
+    changed = [
+        k for k, src in zip(now["chunk_key"], now["src_batch"])
+        if k not in old_src or old_src[k] != src
+    ]
+    return load(spark, path, roi_bbox, toi_epochs, channels=channels).filter(
+        _in_literal("chunk_key", changed)
     )
-    changed = (
-        _winner_src(None)
-        .join(old, "chunk_key", "left")
-        .filter(F.col("old_src").isNull() | (F.col("src_batch") != F.col("old_src")))
-        .select("chunk_key")
-    )
-    now = load(spark, path, roi_bbox, toi_epochs, channels=channels)
-    return now.join(F.broadcast(changed), "chunk_key", "left_semi")
 
 
 # ---------------------------------------------------------------------------
@@ -1651,14 +1662,14 @@ def load_overview(
             f"{outside[0]}); rebuild with a covering ROI"
         )
     df = spark.read.schema(OVERVIEW_SCHEMA).parquet(d)
-    df = df.filter(F.col("tile_id").isin(tile_ids))
+    df = df.filter(_in_literal("tile_id", tile_ids))
     if channels is not None:
         unknown = [c for c in channels if c not in spec.channels]
         if unknown:
             raise ValueError(
                 f"unknown channels {unknown}; cube has {list(spec.channels)}"
             )
-        df = df.filter(F.col("channel").isin(list(channels)))
+        df = df.filter(_in_literal("channel", channels))
     return df
 
 
@@ -1667,7 +1678,7 @@ def load_overview(
 # ---------------------------------------------------------------------------
 # Incremental fills accumulate one blocks/lineage batch dir per run; at
 # cluster scale that means (a) a growing file listing per scan, (b) a
-# winner-ranking window whose input grows with batch count, (c) dead
+# lineage collect whose rows grow with commits per chunk, (c) dead
 # "loser" blocks from racing fills. Compaction rewrites the VISIBLE
 # winner set as one batch whose id sorts BEFORE every fill batch (the
 # reserved "0"-prefixed namespace), so under the unchanged read rule
@@ -1718,8 +1729,8 @@ def compact(spark: SparkSession, path: str) -> dict:
             *leafs[elem]
         )
         # NO broadcast hint: winners is one row per visible chunk — cube-
-        # sized, the exact thing load() refuses to force-broadcast (its ROI
-        # prune is what makes its broadcast safe; compact has no ROI). Let
+        # sized, the exact thing load() never collects (its ROI prune is
+        # what bounds its lineage collect; compact has no ROI). Let
         # Catalyst/AQE pick: shuffled semi-join at scale, auto-broadcast
         # only when the registry actually fits.
         visible = blocks.join(
@@ -1806,23 +1817,13 @@ def vacuum(spark: SparkSession, path: str, min_orphan_age_sec: float = 86400.0) 
                 shutil.rmtree(p, ignore_errors=True)
                 removed_orphans.append(f"{sub}/{b}")
 
-    # shadowed committed batches: all chunk_keys present under a
-    # strictly smaller batch_id (lineage is payload-free — this is a
-    # metadata-only anti-join, never touches block data)
-    lineage = read_lineage(spark, path)
-    a = lineage.select("chunk_key", "batch_id")
-    covered = (
-        a.alias("x")
-        .join(
-            a.alias("y"),
-            (F.col("x.chunk_key") == F.col("y.chunk_key"))
-            & (F.col("y.batch_id") < F.col("x.batch_id")),
-            "left_anti",
-        )
-        .select(F.col("batch_id"))
-        .distinct()
-    )
-    winning = {r["batch_id"] for r in covered.collect()}
+    # batches that win at least one chunk under the read rule; every
+    # other committed batch is shadowed (lineage is payload-free — a
+    # metadata-only read, never touches block data)
+    winning = {
+        r["batch_id"]
+        for r in _winners(read_lineage(spark, path)).select("batch_id").distinct().collect()
+    }
 
     # which shadowed batches did a compaction actually CARRY, and has
     # that compaction been committed long enough for lazy readers to

@@ -565,20 +565,24 @@ FROM px GROUP BY 1, 2, 3
 SQL_PYRAMID_OVERVIEW = _pyramid_sql()
 
 
+def _zonal_candidates(roi):
+    """The engine's driver-side chunk plan (``candidate_chunks``) of an
+    atemporal cube over ``GRID`` with the zonal channels."""
+    from smart_geocubes_spark.plans.materialize import CubeSpec, candidate_chunks
+
+    spec = CubeSpec(grid=GRID, channels=tuple(c for c, _ in _ZONAL_CHANNELS), time_epochs=None)
+    return candidate_chunks(spec, roi)
+
+
 def q_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidates (ROI tiles x channels) LEFT ANTI JOIN committed
-    lineage -> exactly the chunks a resume run must write
-    (core/accessor.py:434-436 semantics)."""
-    from smart_geocubes_spark.operators.zonal import roi_tiles_df
-
-    tiles = roi_tiles_df(spark, GRID, [ZONAL_ROIS[0]])
-    import pandas as pd
-
-    ch = spark.createDataFrame(pd.DataFrame({"channel": [c for c, _ in _ZONAL_CHANNELS]}))
-    cands = tiles.crossJoin(F.broadcast(ch))
-    committed = cands.filter((F.col("tile_id") % 2 == 0) & (F.col("channel") == "dem"))
-    plan = cands.join(committed.select("tile_id", "channel"), ["tile_id", "channel"], "left_anti")
-    return plan.select("tile_id", "channel")
+    """Candidates (ROI tiles x channels) minus the committed chunk keys
+    -> exactly the chunks a resume run must write
+    (core/accessor.py:434-436 semantics): a pandas set difference, as
+    ``plan_missing`` diffs a fill against its lineage."""
+    cands = _zonal_candidates(ZONAL_ROIS[0])
+    committed = cands[(cands["tile_id"] % 2 == 0) & (cands["channel"] == "dem")]
+    plan = cands[~cands["chunk_key"].isin(committed["chunk_key"])]
+    return spark.createDataFrame(plan[["tile_id", "channel"]], "tile_id long, channel string")
 
 
 SQL_CHUNK_PLAN = f"""{_tile_cte(_ZONAL_TILES[0], coords=False)},
@@ -609,20 +613,10 @@ def q_chunk_plan_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle re-derives the identical tile set in pure SQL through
     the shared predicate generator (rect_polygon_predicate_sql), so
     the numpy kernel and its SQL mirror are pinned against each other
-    by the driver's value hash."""
-    import numpy as _n
-    import pandas as _pd
-
-    tiles = GRID.tiles_overlapping_polygon(
-        _n.array([p[0] for p in _POLY_ROI]), _n.array([p[1] for p in _POLY_ROI])
-    )
-    pdf = _pd.DataFrame({"tile_x": tiles[:, 0], "tile_y": tiles[:, 1]})
-    pdf["tile_id"] = pdf["tile_y"] * GRID.n_tiles_x + pdf["tile_x"]
-    tdf = spark.createDataFrame(pdf[["tile_id", "tile_x", "tile_y"]])
-    ch = spark.createDataFrame(
-        _pd.DataFrame({"channel": [c for c, _ in _ZONAL_CHANNELS]})
-    )
-    return tdf.crossJoin(F.broadcast(ch))
+    by the driver's value hash. Built by the engine's own
+    :func:`candidate_chunks`, like :func:`q_chunk_plan`."""
+    plan = _zonal_candidates(_POLY_ROI)[["tile_id", "tile_x", "tile_y", "channel"]]
+    return spark.createDataFrame(plan, "tile_id long, tile_x long, tile_y long, channel string")
 
 
 def _poly_window_cte(px, py) -> str:
@@ -4126,7 +4120,7 @@ def q_range_scan_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the event columns), read it back with ``load(value_range=...)`` —
     the metadata pass reads ONLY the stats columns, drops every chunk
     whose bounds miss the range, and narrows both the pushed tile_id
-    IN list and the winner broadcast — then fold exact per-pixel
+    IN list and the visible set — then fold exact per-pixel
     membership stats. The oracle replays every ROI pixel in SQL with
     the same range predicate, so both a false prune (missing rows) and
     a stale/wrong bound (extra rows) break the hash."""

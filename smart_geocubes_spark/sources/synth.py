@@ -205,16 +205,17 @@ def patches_sql(dialect: str) -> str:
 #: (measured 1.3-4 s per call at local[32], once per headline query —
 #: guide §5 "the driver should do almost no data work" / §6 listing
 #: reuse). Keyed by sf_dir: a session that switches fixtures (the test
-#: suite does) re-registers.
+#: suite does) re-registers; so does one whose views were dropped.
 _VIEWS_KEY = "smart_geocubes.base_views_dir"
 
 
 def ensure_base_views(spark: SparkSession, sf_dir: str) -> None:
     """Register the driver parquet tables as temp views (idempotent) and
     pin UTC so timestamp semantics match the DuckDB oracle. Repeat
-    calls with the same ``sf_dir`` on the same session are no-ops."""
+    calls with the same ``sf_dir`` on the same session are no-ops while
+    every view still exists (catalog lookups, no Spark job)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if spark.conf.get(_VIEWS_KEY, None) == sf_dir:
+    if spark.conf.get(_VIEWS_KEY, None) == sf_dir and all(map(spark.catalog.tableExists, TABLES)):
         return
     for t in TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
@@ -239,7 +240,8 @@ def pages_df(
         # (the repartition exchange itself still runs in every query
         # that reads the view — only the schema read is reused)
         tag = f"{sf_dir}|{parallelism}"
-        if spark.conf.get("smart_geocubes.orders_spread", None) != tag:
+        cached = spark.conf.get("smart_geocubes.orders_spread", None) == tag
+        if not (cached and spark.catalog.tableExists("orders_spread")):
             spark.read.parquet(f"{sf_dir}/orders.parquet").repartition(
                 parallelism
             ).createOrReplaceTempView("orders_spread")

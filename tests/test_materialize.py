@@ -533,6 +533,83 @@ def test_concurrent_fills_no_duplicates(spark, cube):
     assert materialize(spark, cube, ROI_A)["written"] == 0
 
 
+@pytest.mark.parametrize("later_wins", [True, False], ids=["later_commit_wins", "earlier_commit_wins"])
+def test_read_rule_min_batch_wins_on_every_read(spark, cube, monkeypatch, later_wins):
+    """THE read rule, deterministically: a second fill re-commits every
+    cached chunk under a new batch id (its cache skip forced off), so
+    each chunk has two committed lineage rows. Every read path serves
+    each chunk exactly once, from the min batch_id — whether that batch
+    committed first or last."""
+    import types
+
+    import smart_geocubes_spark.plans.materialize as M
+    from smart_geocubes_spark.plans.materialize import chunk_stats, load_changes
+
+    first, second = ("b" * 12, "a" * 12) if later_wins else ("a" * 12, "b" * 12)
+    ids = iter([first + "0" * 20, second + "0" * 20])
+    with monkeypatch.context() as mp:
+        mp.setattr(M, "uuid", types.SimpleNamespace(uuid4=lambda: types.SimpleNamespace(hex=next(ids))))
+        assert materialize(spark, cube, ROI_A)["batch_id"] == first
+        mp.setattr(M, "plan_missing", lambda spark, path, candidates: candidates)
+        m2 = materialize(spark, cube, ROI_A)
+    assert (m2["batch_id"], m2["written"]) == (second, 18)
+    winner = min(first, second)
+    keys = sorted(candidate_chunks(open_spec(cube), ROI_A)["chunk_key"])
+
+    def served(df, batch):
+        rows = df.select("chunk_key", "batch_id").collect()
+        assert sorted(r.chunk_key for r in rows) == keys  # each chunk exactly once
+        assert {r.batch_id for r in rows} == {batch}
+
+    served(load(spark, cube, ROI_A), winner)
+    served(chunk_stats(spark, cube, ROI_A), winner)
+    served(load(spark, cube, ROI_A, value_range=(-1e12, 1e12)), winner)
+    served(load(spark, cube, ROI_A, as_of_batch=first), first)
+    served(load(spark, cube, ROI_A, as_of_batch=second), winner)
+    changes = load_changes(spark, cube, ROI_A, first)
+    if winner == first:
+        assert changes.count() == 0  # the re-commit lost every chunk
+    else:
+        served(changes, second)
+
+
+def test_in_literal_quotes_values(spark):
+    """The read path's literal IN list matches values with SQL quote
+    and escape characters verbatim (channel names are free-form), keeps
+    integers numeric, and an empty list matches nothing."""
+    import numpy as np
+
+    from smart_geocubes_spark.plans.materialize import _in_literal
+
+    vals = ["-1-2-3-dem", "it's", "back\\slash", "q'\\'q"]
+    df = spark.createDataFrame([(v,) for v in vals + ["other"]], "k string")
+    assert sorted(r.k for r in df.filter(_in_literal("k", vals)).collect()) == sorted(vals)
+    assert df.filter(_in_literal("k", [])).count() == 0
+    # integers stay numeric literals (numpy ints too), against a bigint
+    # column (tile_id) and an int one (time_idx)
+    for typ in ("bigint", "int"):
+        nums = spark.range(10).selectExpr(f"CAST(id AS {typ}) AS n")
+        got = nums.filter(_in_literal("n", [np.int64(3), 7])).collect()
+        assert sorted(r.n for r in got) == [3, 7], typ
+
+
+def test_cached_accessor_load_runs_three_jobs(spark, tmp_path):
+    """A cached ``accessor.load(persist=True)`` is three Spark jobs: the
+    fill's lineage collect, the read's lineage collect and the block
+    collect — no winner window, broadcast or checkpoint job. A
+    ``value_range`` read narrows its survivors in Python: no
+    localCheckpoint."""
+    acc = arcticdem_like(spark, str(tmp_path / "c"))
+    acc.create()
+    n = len(acc.load(ROI_POLAR, persist=True))
+    with spark_jobs(spark) as cached:
+        assert len(acc.load(ROI_POLAR, persist=True)) == n
+    assert len(cached) <= 3, cached
+    with spark_jobs(spark) as ranged:
+        assert len(acc.load(ROI_POLAR, persist=True, value_range=(-1e12, 1e12))) == n
+    assert not [j for j in ranged if any(s.startswith("localCheckpoint") for s in j)], ranged
+
+
 def test_vacuum_never_deletes_unvouched_shadowed_batch(spark, cube):
     """A committed batch that wins zero chunks (dup-only concurrent
     fill) is shadowed, but if no compaction ever carried its event
@@ -726,13 +803,25 @@ class TestChannelProjection:
         with pytest.raises(ValueError, match="unknown channels"):
             load(spark, cube, ROI_A, channels=["nope"])
 
-    def test_channel_filter_pushed_to_both_scans(self, spark, cube):
+    def test_channel_filter_pushed_to_both_scans(self, spark, cube, monkeypatch):
+        """The channel IN filter reaches both parquet scans of a read:
+        the lineage read that load() collects to resolve visibility on
+        the driver, and the block scan — the only scan in load()'s
+        returned plan."""
+        from tests.test_plan_quality import (
+            _assert_lineage_pushes,
+            _assert_no_visibility_subplan,
+            _lineage_plans,
+            _pushed,
+            plan_of,
+        )
+
         materialize(spark, cube, ROI_A)
-        plan = load(spark, cube, ROI_A, channels=["dem"])._jdf.queryExecution(
-        ).executedPlan().toString()
-        pushed = [seg[:300] for seg in plan.split("PushedFilters: ")[1:]]
-        with_ch = [s for s in pushed if "channel" in s.split("]", 1)[0]]
-        assert len(with_ch) >= 2, f"channel not pushed to both scans: {pushed}"
+        df, lplans = _lineage_plans(monkeypatch, lambda: load(spark, cube, ROI_A, channels=["dem"]))
+        plan = plan_of(df)
+        assert len(_pushed(plan, "channel")) == 1, plan
+        _assert_no_visibility_subplan(plan)
+        _assert_lineage_pushes(lplans, "tile_id", "channel")
 
 
 class TestPolygonROI:

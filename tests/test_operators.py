@@ -255,6 +255,21 @@ class TestPagesContract:
         assert types["text"] == "string"
         assert types["lang"] == "string"
 
+    def test_dropped_views_are_registered_again(self, spark):
+        """The per-session registration cache is checked against the
+        catalog, not trusted from its conf key: a dropped base view (or
+        the spread ``orders`` view) is registered again by the next call
+        with the same ``sf_dir``."""
+        from smart_geocubes_spark.sources.synth import ensure_base_views
+
+        ensure_base_views(spark, SF)
+        spark.catalog.dropTempView("orders")
+        ensure_base_views(spark, SF)
+        assert spark.table("orders").limit(1).count() == 1
+        pages_df(spark, SF, parallelism=2)
+        spark.catalog.dropTempView("orders_spread")
+        assert pages_df(spark, SF, parallelism=2).limit(1).count() == 1
+
     def test_skew_clusters_exist(self, spark):
         """~30% of geo pages live in 3 dense clusters (FIXTURES.md)."""
         pts = geoparsed_points(

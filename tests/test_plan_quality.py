@@ -169,11 +169,53 @@ def test_knn_exact_path_stays_distributed(spark, monkeypatch):
     assert len(got) == 6  # 2 queries x top-3, fully distributed
 
 
-def test_load_prunes_lineage_before_broadcast(spark, tmp_path):
-    """load()'s winner resolution must read only the ROI's lineage rows:
-    the tile_id IN filter is pushed to BOTH parquet scans (blocks and
-    lineage), so the broadcast side is bounded by the query, not the
-    cube."""
+# a lineage parquet scan: block scans never read a stored chunk_key
+_LINEAGE_SCAN = "ReadSchema: struct<chunk_key:"
+
+
+def _pushed(plan: str, col: str) -> list[str]:
+    """The PushedFilters segments of ``plan`` that name ``col``."""
+    pushed = [seg[:300] for seg in plan.split("PushedFilters: ")[1:]]
+    return [s for s in pushed if col in s.split("]", 1)[0]]
+
+
+def _lineage_plans(monkeypatch, read):
+    """Run ``read()`` with ``_roi_lineage`` wrapped: its result, and the
+    executed plans of the lineage frames it built — the lineage read
+    that load() really collects, with the pruning it really passes."""
+    import smart_geocubes_spark.plans.materialize as M
+
+    frames, real = [], M._roi_lineage
+    with monkeypatch.context() as mp:
+        mp.setattr(M, "_roi_lineage", lambda *a, **k: frames.append(real(*a, **k)) or frames[-1])
+        out = read()
+    return out, [plan_of(f) for f in frames]
+
+
+def _assert_lineage_pushes(plans: list[str], *cols: str) -> None:
+    """Each recorded lineage read scans lineage and pushes ``cols``."""
+    assert plans, "no lineage read recorded"
+    for lplan in plans:
+        assert _LINEAGE_SCAN in lplan, lplan
+        for col in cols:
+            assert _pushed(lplan, col), (col, lplan)
+
+
+def _assert_no_visibility_subplan(plan: str) -> None:
+    """load()'s visibility is resolved on the driver: the returned plan
+    holds no lineage scan, no winner window and no visibility join."""
+    assert _LINEAGE_SCAN not in plan, "lineage scan in load() plan"
+    assert "Window" not in plan
+    assert "Join" not in plan and "BroadcastExchange" not in plan
+
+
+def test_load_prunes_lineage_before_broadcast(spark, tmp_path, monkeypatch):
+    """load()'s visibility read must read only the ROI's lineage rows:
+    the tile_id IN filter is pushed to the lineage parquet scan that
+    load() collects, so the collected set is bounded by the query, not
+    the cube — and to the block scan, the only scan left in load()'s
+    returned plan. A snapshot read of a temporal cube also pushes its
+    channels, allowed batch ids and TOI steps to that lineage read."""
     from smart_geocubes_spark.plans.materialize import (
         CubeSpec,
         create_cube,
@@ -183,12 +225,20 @@ def test_load_prunes_lineage_before_broadcast(spark, tmp_path):
     from tests.test_materialize import ROI_A, SMALL_GRID
 
     path = str(tmp_path / "cube")
-    create_cube(path, CubeSpec(grid=SMALL_GRID, channels=("dem",), time_epochs=None))
-    materialize(spark, path, ROI_A)
-    plan = plan_of(load(spark, path, ROI_A))
-    pushed = [seg[:300] for seg in plan.split("PushedFilters: ")[1:]]
-    with_tile = [s for s in pushed if "tile_id" in s.split("]", 1)[0]]
-    assert len(with_tile) >= 2, f"expected tile_id pushed to both scans: {pushed}"
+    epochs = (1577836800, 1609459200)
+    create_cube(path, CubeSpec(grid=SMALL_GRID, channels=("dem", "slope"), time_epochs=epochs))
+    bid = materialize(spark, path, ROI_A)["batch_id"]
+    df, lplans = _lineage_plans(monkeypatch, lambda: load(spark, path, ROI_A))
+    assert len(lplans) == 1
+    _assert_lineage_pushes(lplans, "tile_id")
+    plan = plan_of(df)
+    _assert_no_visibility_subplan(plan)
+    assert len(_pushed(plan, "tile_id")) == 1, plan
+    _, lplans = _lineage_plans(
+        monkeypatch,
+        lambda: load(spark, path, ROI_A, toi_epochs=[epochs[1]], as_of_batch=bid, channels=["dem"]),
+    )
+    _assert_lineage_pushes(lplans, "tile_id", "channel", "batch_id", "time_idx")
 
 
 def test_ann_ivf_big_side_is_projection(spark):
@@ -601,7 +651,7 @@ def test_polygon_zonal_mask_stays_jvm_side(spark):
     assert plan.count("BroadcastNestedLoopJoin") <= 1
 
 
-def test_typed_load_prunes_every_dtype_leaf(spark, tmp_path):
+def test_typed_load_prunes_every_dtype_leaf(spark, tmp_path, monkeypatch):
     """A channel-projected read of a typed cube (a) prunes WHOLE dtype
     groups whose channels aren't requested (the boolean leaf never
     enters the plan), and (b) pushes the channel IN filter into every
@@ -625,19 +675,22 @@ def test_typed_load_prunes_every_dtype_leaf(spark, tmp_path):
                  time_epochs=None),
     )
     materialize(spark, path, (2.3, 15.2, 4.8, 17.9))
-    df = load(spark, path, (2.3, 15.2, 4.8, 17.9), channels=["dem"])
+    df, lplans = _lineage_plans(
+        monkeypatch, lambda: load(spark, path, (2.3, 15.2, 4.8, 17.9), channels=["dem"])
+    )
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
     # (a) group pruning: dem is float32, so the boolean leaf (and its
-    # whole union branch + duplicated winner subplan) must be absent
+    # whole union branch) must be absent
     assert "dt-float" in plan and "array<float>" in plan
     assert "dt-boolean" not in plan and "array<boolean>" not in plan
     assert "Union" not in plan
-    # (b) pushdown into the surviving scans (blocks leaf + lineage)
-    pushed = [seg[:300] for seg in plan.split("PushedFilters: ")[1:]]
-    with_ch = [s for s in pushed if "channel" in s.split("]", 1)[0]]
-    assert len(with_ch) >= 2, f"channel filter not pushed everywhere: {pushed}"
+    # (b) pushdown into the surviving leaf scan and into the lineage
+    # read that resolved its visibility (which is not in load()'s plan)
+    assert len(_pushed(plan, "channel")) == 1, plan
+    _assert_no_visibility_subplan(plan)
+    _assert_lineage_pushes(lplans, "tile_id", "channel")
     # both-group read keeps the per-leaf typed schemas under one union
     both = load(spark, path, (2.3, 15.2, 4.8, 17.9))
     bplan = both._sc._jvm.PythonSQLUtils.explainString(
@@ -715,11 +768,10 @@ def test_band_math_single_shuffle_no_join(spark):
         for bad in ("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct",
                     "ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
             assert bad not in plan, f"{bad} in band_math plan"
-        # winner semi-join is broadcast; the only BLOCK-carrying shuffle
-        # is the pairing aggregate (the other two hashpartitioning
-        # exchanges are the winner window's metadata-sized lineage rows)
-        assert "BroadcastHashJoin" in plan
-        assert plan.count("hashpartitioning") <= 3
+        # visibility is a literal filter on the block scan (no join, no
+        # winner window), so the only shuffle is the pairing aggregate
+        assert "Join" not in plan and "Window" not in plan
+        assert plan.count("hashpartitioning") <= 1
         assert "zip_with" in plan
         assert df.count() > 0
     finally:
