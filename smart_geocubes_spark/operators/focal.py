@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smart_geocubes_spark.geo.geobox import TileGrid
+from smart_geocubes_spark.sources.local import local_frame
 
 V2_BLOCK_SCHEMA = (
     "roi_idx int, time_idx int, tile_x long, tile_y long, "
@@ -122,8 +123,8 @@ def _focal(
         pdf = pd.DataFrame({"tile_x": t[:, 0], "tile_y": t[:, 1]})
         pdf["roi_idx"] = np.int32(i)
         parts.append(pdf)
-    tiles = spark.createDataFrame(pd.concat(parts, ignore_index=True))
-    ch = spark.createDataFrame(pd.DataFrame({"channel": channels}))
+    tiles = local_frame(spark, pd.concat(parts, ignore_index=True))
+    ch = local_frame(spark, pd.DataFrame({"channel": channels}))
     cand = tiles.crossJoin(F.broadcast(ch)).withColumn(
         "time_idx", F.lit(-1).cast("int")  # synth path is atemporal
     )

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from smart_geocubes_spark.sources.local import local_frame
+
 
 def _cell_cols(lon_col, lat_col, cell_deg: float):
     cx = F.floor((lon_col + F.lit(180.0)) / F.lit(cell_deg)).cast("long")
@@ -129,7 +131,7 @@ def knn_join(
             "cy": (np.repeat(qcy, n_off) + np.tile(dy, n_q)),
         }
     )
-    disk_df = F.broadcast(spark.createDataFrame(disk))
+    disk_df = F.broadcast(local_frame(spark, disk))
 
     # 3. candidates via hash equi-join on (cx, cy)
     d2 = (F.col("lon") - F.col("qx")) * (F.col("lon") - F.col("qx")) + (
@@ -165,7 +167,7 @@ def knn_join(
 
     # fallback: brute force for the (few) unguaranteed queries
     fq = queries_pdf[queries_pdf["qid"].isin(failed)]
-    fq_df = F.broadcast(spark.createDataFrame(fq))
+    fq_df = F.broadcast(local_frame(spark, fq))
     fcand = points.select("point_id", "lon", "lat").crossJoin(fq_df).withColumn("d2", d2)
     fexact = _topk(fcand, k).select("qid", "neighbor_id", "rank")
     return exact.unionByName(fexact)

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smart_geocubes_spark.geo.geobox import TileGrid
+from smart_geocubes_spark.sources.local import local_frame
 
 REGRID_SCHEMA = (
     "tile_y long, tile_x long, tile_id long, time_idx int, channel string, "
@@ -162,8 +163,9 @@ def regrid_nearest(
             covered_src.add(sid)
     if not pairs:
         raise ValueError("ROI does not intersect the cube extent")
-    pairs_df = spark.createDataFrame(
-        pd.DataFrame(pairs, columns=["t_tx", "t_ty", "tile_id"]).astype("int64")
+    pairs_df = local_frame(
+        spark,
+        pd.DataFrame(pairs, columns=["t_tx", "t_ty", "tile_id"]).astype("int64"),
     )
     # ONE pruned source scan over the union of covering source tiles
     # (load's bbox enumeration would re-derive the same set; the pair

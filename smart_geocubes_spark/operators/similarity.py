@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from smart_geocubes_spark.sources.local import local_frame
+
 N_PLANES = 8
 
 
@@ -78,10 +80,11 @@ def embedding_neardup_pairs(
         _as_double("embedding").alias("v"),
         F.pmod(F.col("vec_id"), F.lit(B)).cast("int").alias("blk"),
     )
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         pd.DataFrame(
             [(i, j) for i in range(B) for j in range(i, B)], columns=["bi", "bj"]
-        ).astype("int32")
+        ).astype("int32"),
     )
     left = base.join(F.broadcast(grid), base["blk"] == grid["bi"]).select(
         "bi", "bj", "vec_id", "v", F.lit(0).alias("side")

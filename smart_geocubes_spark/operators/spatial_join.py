@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smart_geocubes_spark.geo.pip import points_in_polygon
+from smart_geocubes_spark.sources.local import local_frame
 
 #: coarse prejoin grid: 3-degree cells, aligned to the patch layout.
 CELL_DEG = 3.0
@@ -78,7 +79,7 @@ def explode_catalog_to_cells(spark: SparkSession, catalog: DataFrame) -> DataFra
     gy = y_lo[idx] + off % ny[idx]
     out = pdf.iloc[idx].reset_index(drop=True)
     out.insert(0, "join_cell", gx * 100000 + gy)
-    return spark.createDataFrame(out)
+    return local_frame(spark, out)
 
 
 _UDF_CACHE: dict[str, object] = {}
@@ -179,7 +180,7 @@ def polygon_catalog_cells(spark: SparkSession, catalog: DataFrame) -> DataFrame:
         rows,
         columns=["join_cell", "patch_idx", "patch_id", "minx", "miny", "maxx", "maxy", "poly_x", "poly_y"],
     )
-    return spark.createDataFrame(out)
+    return local_frame(spark, out)
 
 
 def polygon_pip_join(points: DataFrame, poly_cells: DataFrame) -> DataFrame:

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from smart_geocubes_spark.geo.geobox import TileGrid
 from smart_geocubes_spark.plans.materialize import block_base_values as _block_base
+from smart_geocubes_spark.sources.local import local_frame
 
 ZONAL_BLOCK_SCHEMA = "tile_id long, tile_x long, tile_y long, channel string, block array<double>"
 
@@ -32,7 +33,7 @@ def roi_tiles_df(
     tiles = np.unique(np.concatenate(parts), axis=0)
     pdf = pd.DataFrame({"tile_x": tiles[:, 0], "tile_y": tiles[:, 1]})
     pdf["tile_id"] = pdf["tile_y"] * grid.n_tiles_x + pdf["tile_x"]
-    return spark.createDataFrame(pdf)
+    return local_frame(spark, pdf)
 
 
 def _candidates(
@@ -43,7 +44,7 @@ def _candidates(
 ) -> DataFrame:
     """ROI tiles x channels — shared candidate preamble."""
     tiles = roi_tiles_df(spark, grid, rois)
-    ch = spark.createDataFrame(pd.DataFrame({"channel": channels}))
+    ch = local_frame(spark, pd.DataFrame({"channel": channels}))
     return tiles.crossJoin(F.broadcast(ch))
 
 
@@ -200,8 +201,8 @@ def polygon_zonal_stats(
     tiles = grid.tiles_overlapping_polygon(px_a, py_a)
     pdf = pd.DataFrame({"tile_x": tiles[:, 0], "tile_y": tiles[:, 1]})
     pdf["tile_id"] = pdf["tile_y"] * grid.n_tiles_x + pdf["tile_x"]
-    cand = spark.createDataFrame(pdf).crossJoin(
-        F.broadcast(spark.createDataFrame(pd.DataFrame({"channel": channels})))
+    cand = local_frame(spark, pdf).crossJoin(
+        F.broadcast(local_frame(spark, pd.DataFrame({"channel": channels})))
     )
     blocks = cand.mapInPandas(_gen(grid.chunk_px), schema=ZONAL_BLOCK_SCHEMA)
     gb = grid.geobox

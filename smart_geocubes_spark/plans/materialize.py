@@ -78,6 +78,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from smart_geocubes_spark.geo.geobox import TileGrid
+from smart_geocubes_spark.sources.local import local_frame
 
 N_PARTS = 64  # stable block-bucket count (tile_id % N_PARTS)
 
@@ -457,7 +458,7 @@ def read_lineage(spark: SparkSession, path: str) -> DataFrame:
     """Committed lineage (the ``loaded_patches`` list)."""
     batches = _lineage_batches(path)
     if not batches:
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
+        return local_frame(spark, [], LINEAGE_SCHEMA)
     return spark.read.schema(LINEAGE_SCHEMA).parquet(*batches)
 
 
@@ -496,7 +497,7 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
             with open(wj) as f:
                 write_rows.extend(json.load(f))
     if not dirs and not write_rows:
-        return spark.createDataFrame([], EVENT_SCHEMA)
+        return local_frame(spark, [], EVENT_SCHEMA)
     # a compacted batch carries exact COPIES of prior batches' events
     # (history preservation); until vacuum removes the originals both
     # are visible — drop the byte-identical duplicates. Metadata-sized
@@ -513,7 +514,7 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
     if write_rows:
         wdf = pd.DataFrame(write_rows)
         parts.append(
-            spark.createDataFrame(wdf).select(
+            local_frame(spark, wdf).select(
                 F.lit(None).cast("string").alias("chunk_key"),
                 F.lit(None).cast("long").alias("tile_id"),
                 F.lit(None).cast("int").alias("time_idx"),
@@ -729,16 +730,23 @@ def candidate_chunks(
     return plan
 
 
-def plan_missing(spark: SparkSession, path: str, candidates: pd.DataFrame) -> pd.DataFrame:
+def _missing(candidates: pd.DataFrame, lineage: pd.DataFrame) -> pd.DataFrame:
     """THE cache skip (reference ``core/accessor.py:434-436``): the
-    ``candidates`` rows whose chunk no committed batch holds — a set
-    difference against :func:`_lineage_rows` of the candidates' tiles
-    (one Spark job, none on an empty cube)."""
-    if candidates.empty:
-        return candidates
-    tile_ids = np.unique(candidates["tile_id"].to_numpy()).tolist()
-    done = set(_lineage_rows(spark, path, tile_ids)["chunk_key"])
-    return candidates[~candidates["chunk_key"].isin(done)]
+    ``candidates`` rows whose chunk no row of ``lineage`` (the
+    :func:`_lineage_rows` of their tiles) holds — a set difference."""
+    return candidates[~candidates["chunk_key"].isin(set(lineage["chunk_key"]))]
+
+
+def _candidate_lineage(spark: SparkSession, path: str, candidates: pd.DataFrame) -> pd.DataFrame:
+    """:func:`_lineage_rows` of the ``candidates``' tiles."""
+    return _lineage_rows(spark, path, np.unique(candidates["tile_id"].to_numpy()).tolist())
+
+
+def plan_missing(spark: SparkSession, path: str, candidates: pd.DataFrame) -> pd.DataFrame:
+    """The ``candidates`` rows whose chunk no committed batch holds:
+    :func:`_missing` against their lineage (one Spark job, none on an
+    empty cube or for no candidates)."""
+    return _missing(candidates, _candidate_lineage(spark, path, candidates))
 
 
 def _gen_blocks_factory(
@@ -890,7 +898,7 @@ def _bucketed(spark: SparkSession, rows: pd.DataFrame, batch_id: str) -> DataFra
     where 64 buckets ran 128 (~4x cube_cache throughput, 4-core host)."""
     n = min(N_PARTS, spark.sparkContext.defaultParallelism)
     return (
-        spark.createDataFrame(rows, PLAN_SCHEMA)
+        local_frame(spark, rows, PLAN_SCHEMA)
         .withColumn("pt", (F.col("tile_id") % N_PARTS).cast("int"))
         .withColumn("batch_id", F.lit(batch_id))
         .repartition(n, F.col("pt"))
@@ -973,6 +981,22 @@ def materialize(
     between the block write and the lineage commit (for resume tests —
     the reference's kill-safety comes from icechunk commits; ours from
     lineage-gated visibility)."""
+    return _fill(spark, path, roi_bbox, toi_epochs, fail_after_blocks)[0]
+
+
+def _fill(
+    spark: SparkSession,
+    path: str,
+    roi_bbox,
+    toi_epochs: list[int] | None = None,
+    fail_after_blocks: bool = False,
+) -> tuple[dict, pd.DataFrame | None]:
+    """:func:`materialize`'s run, and the ROI's lineage rows when it
+    committed nothing: they are then still the ROI's committed state,
+    so the read that follows takes them (``load(..., _lineage=)``)
+    instead of collecting them again. After a commit it returns None:
+    that read collects afresh, after the ticket, so two concurrent fills
+    of one chunk still resolve by the min-batch_id rule."""
     spec = open_spec(path)
     batch_id = uuid.uuid4().hex[:12]
     # the "0"-prefixed batch-id namespace is RESERVED for compaction
@@ -981,7 +1005,9 @@ def materialize(
         batch_id = uuid.uuid4().hex[:12]
     t0 = time.time()
 
-    missing = plan_missing(spark, path, candidate_chunks(spec, roi_bbox, toi_epochs))
+    cands = candidate_chunks(spec, roi_bbox, toi_epochs)
+    lineage = _candidate_lineage(spark, path, cands)
+    missing = _missing(cands, lineage)
     # per-channel counts off the driver-side plan: the total gates the
     # all-cached return, the channel set lets _write_blocks skip dtype
     # groups with no planned chunks (a lazy backfill of one evolved
@@ -993,7 +1019,7 @@ def materialize(
         return {
             "batch_id": None, "written": 0, "skipped": "all cached",
             "sec": time.time() - t0,
-        }
+        }, lineage
     return _commit_batch(
         path,
         spec,
@@ -1005,7 +1031,7 @@ def materialize(
         ),
         t0,
         fail_after_blocks=fail_after_blocks,
-    )
+    ), None
 
 
 def materialize_patch(
@@ -1162,15 +1188,18 @@ def _roi_lineage(
     return lin
 
 
-def _lineage_rows(spark: SparkSession, path: str, *pruning) -> pd.DataFrame:
+def _lineage_rows(spark: SparkSession, path: str, tile_ids: list[int], *pruning) -> pd.DataFrame:
     """THE lineage read of a fill or an ROI read: the committed
-    ``(chunk_key, batch_id, src_batch)`` rows of ``_roi_lineage(spark,
-    path, *pruning)`` in ONE collect, and no Spark job on an empty cube.
-    Raw rows (more than one per chunk): a ``distinct()`` adds a job."""
-    cols = ["chunk_key", "batch_id", "src_batch"]
-    if not _lineage_batches(path):
+    ``(chunk_key, batch_id, src_batch, time_idx, channel)`` rows of
+    ``_roi_lineage(spark, path, tile_ids, *pruning)`` in ONE collect,
+    and no Spark job on an empty cube or ROI. Raw rows (more than one
+    per chunk): a ``distinct()`` adds a job. ``time_idx`` and
+    ``channel`` let a read narrow rows collected for a wider query
+    (:func:`_roi_visible`) without parsing ``chunk_key``."""
+    cols = ["chunk_key", "batch_id", "src_batch", "time_idx", "channel"]
+    if not tile_ids or not _lineage_batches(path):
         return pd.DataFrame(columns=cols)
-    lin = _roi_lineage(spark, path, *pruning).select(*cols)
+    lin = _roi_lineage(spark, path, tile_ids, *pruning).select(*cols)
     return pd.DataFrame(lin.collect(), columns=cols)
 
 
@@ -1193,6 +1222,28 @@ def _visible(lineage: pd.DataFrame) -> pd.DataFrame:
     return lineage.sort_values(["chunk_key", "batch_id"]).drop_duplicates("chunk_key")
 
 
+def _roi_visible(
+    spark: SparkSession,
+    path: str,
+    tile_ids: list[int],
+    channels: list[str] | None,
+    allowed: set[str] | None,
+    time_idxs: list[int] | None,
+    lineage: pd.DataFrame | None = None,
+) -> pd.DataFrame:
+    """THE visibility read of every ROI read: :func:`_visible` over the
+    ROI's lineage rows pruned to ``channels``, the ``allowed`` batches
+    of a snapshot and the ``time_idxs`` of a TOI — collected here, or
+    narrowed in pandas from ``lineage``, rows the caller already
+    collected for these tiles (a cached fill's, or load_changes')."""
+    if lineage is None:
+        return _visible(_lineage_rows(spark, path, tile_ids, channels, allowed, time_idxs))
+    for col, keep in (("channel", channels), ("batch_id", allowed), ("time_idx", time_idxs)):
+        if keep is not None:
+            lineage = lineage[lineage[col].isin(keep)]
+    return _visible(lineage)
+
+
 def _in_literal(expr: str, values) -> Column:
     """``expr IN (v, ...)`` in ONE JVM call: THE IN filter of the read
     path (``Column.isin`` pays a py4j round trip per value, ~0.35 ms).
@@ -1212,6 +1263,7 @@ def load(
     channels: list[str] | None = None,
     value_range: tuple[float, float] | None = None,
     stats_only: bool = False,
+    _lineage: pd.DataFrame | None = None,
 ) -> DataFrame:
     """ROI read: materialize() first for the reference's full load()
     semantics; this is the scan+crop step (snapshot = committed lineage
@@ -1253,7 +1305,11 @@ def load(
     batch's commit, i.e. the cube exactly as a reader saw it then.
     Composes with compaction (a compacted batch commits LAST even
     though its id sorts first, so historical as-of views are
-    unchanged); vacuum bounds how far back travel reaches."""
+    unchanged); vacuum bounds how far back travel reaches.
+
+    ``_lineage``: the ROI's :func:`_lineage_rows`, already collected by
+    the caller (a fill that committed nothing, or load_changes) — the
+    read narrows them in pandas instead of collecting them again."""
     spec = open_spec(path)
     time_idxs = _toi_idxs(spec, toi_epochs)
     if channels is not None:
@@ -1284,7 +1340,7 @@ def load(
     # retries, backends/threaded.py:85-99); we resolve it at read:
     # exactly one winning batch per chunk_key. Read BEFORE the block
     # listing: a batch's blocks land before its ticket.
-    vis = _visible(_lineage_rows(spark, path, tile_ids, channels, allowed, time_idxs))
+    vis = _roi_visible(spark, path, tile_ids, channels, allowed, time_idxs, _lineage)
     stats_schema = BLOCK_SCHEMA.replace("block array<double>", STATS_COLS)
 
     def _pruned(df: DataFrame, tile_ids: list[int], vis: pd.DataFrame) -> DataFrame:
@@ -1303,17 +1359,18 @@ def load(
     def _with_roi_idx(out: DataFrame) -> DataFrame:
         if roi_pairs is None:
             return out
-        mapdf = spark.createDataFrame(
+        mapdf = local_frame(
+            spark,
             pd.DataFrame(roi_pairs, columns=["tile_id", "roi_idx"]).astype(
                 {"tile_id": "int64", "roi_idx": "int32"}
-            )
+            ),
         )
         return out.join(F.broadcast(mapdf), "tile_id")
 
     def _empty(schema: str) -> DataFrame:
         # the populated path's exact schema and column order
         return _with_roi_idx(
-            _pruned(spark.createDataFrame([], schema), tile_ids, vis.iloc[:0])
+            _pruned(local_frame(spark, [], schema), tile_ids, vis.iloc[:0])
         )
 
     # per-dtype leaf scan: every batch stores one dt-<elem> subdir per
@@ -1419,9 +1476,9 @@ def load_changes(
     carries ``src_batch`` through, so it reports ZERO changes; a patch
     merge stamps its own id, so it reports exactly its footprint. New
     chunks (no winner at the snapshot) always report. The winners now
-    and at the snapshot come from one ROI-pruned lineage collect; the
-    changed keys filter :func:`load`'s result (its own, second collect)
-    as a literal IN list."""
+    and at the snapshot come from one ROI-pruned lineage collect, which
+    :func:`load` reuses; the changed keys filter its result as a
+    literal IN list."""
     ids = [s["batch_id"] for s in snapshots(path)]
     if since_batch not in ids:
         raise ValueError(f"unknown snapshot {since_batch!r}; committed: {ids}")
@@ -1435,7 +1492,7 @@ def load_changes(
         k for k, src in zip(now["chunk_key"], now["src_batch"])
         if k not in old_src or old_src[k] != src
     ]
-    return load(spark, path, roi_bbox, toi_epochs, channels=channels).filter(
+    return load(spark, path, roi_bbox, toi_epochs, channels=channels, _lineage=lin).filter(
         _in_literal("chunk_key", changed)
     )
 

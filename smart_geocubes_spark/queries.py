@@ -34,6 +34,7 @@ from smart_geocubes_spark.operators.tiles import (
     in_extent_filter,
     with_tiles_native,
 )
+from smart_geocubes_spark.sources.local import local_frame
 from smart_geocubes_spark.sources.synth import (
     GRID,
     catalog_df,
@@ -356,10 +357,11 @@ def q_asof_time(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from smart_geocubes_spark.operators.temporal import asof_nearest
 
-    axis = spark.createDataFrame(
+    axis = local_frame(
+        spark,
         pd.DataFrame(
             {"time_idx": range(len(CUBE_TIME_EPOCHS)), "epoch": list(CUBE_TIME_EPOCHS)}
-        )
+        ),
     ).selectExpr("CAST(time_idx AS INT) AS time_idx", "CAST(epoch AS LONG) AS epoch")
     ev = _points(spark, sf_dir).select("page_id", "warc_epoch")
     return asof_nearest(ev, axis).selectExpr("page_id", "CAST(time_idx AS BIGINT) AS time_idx")
@@ -582,7 +584,7 @@ def q_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = _zonal_candidates(ZONAL_ROIS[0])
     committed = cands[(cands["tile_id"] % 2 == 0) & (cands["channel"] == "dem")]
     plan = cands[~cands["chunk_key"].isin(committed["chunk_key"])]
-    return spark.createDataFrame(plan[["tile_id", "channel"]], "tile_id long, channel string")
+    return local_frame(spark, plan[["tile_id", "channel"]], "tile_id long, channel string")
 
 
 SQL_CHUNK_PLAN = f"""{_tile_cte(_ZONAL_TILES[0], coords=False)},
@@ -616,7 +618,7 @@ def q_chunk_plan_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the driver's value hash. Built by the engine's own
     :func:`candidate_chunks`, like :func:`q_chunk_plan`."""
     plan = _zonal_candidates(_POLY_ROI)[["tile_id", "tile_x", "tile_y", "channel"]]
-    return spark.createDataFrame(plan, "tile_id long, tile_x long, tile_y long, channel string")
+    return local_frame(spark, plan, "tile_id long, tile_x long, tile_y long, channel string")
 
 
 def _poly_window_cte(px, py) -> str:
@@ -683,9 +685,7 @@ def q_cell_polyfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         res=8,
     )
     ix, iy, _res = cell_decode(ids)
-    return spark.createDataFrame(
-        _pd.DataFrame({"cell_id": ids, "ix": ix, "iy": iy})
-    )
+    return local_frame(spark, _pd.DataFrame({"cell_id": ids, "ix": ix, "iy": iy}))
 
 
 def _cell_polyfill_sql() -> str:
@@ -2271,7 +2271,7 @@ def q_temporal_max_mosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smart_geocubes_spark.operators.zonal import roi_tiles_df
 
     tiles = roi_tiles_df(spark, GRID, [ZONAL_ROIS[1]])
-    ch = spark.createDataFrame(pd.DataFrame({"channel": [c for c, _ in _ZONAL_CHANNELS]}))
+    ch = local_frame(spark, pd.DataFrame({"channel": [c for c, _ in _ZONAL_CHANNELS]}))
     times = spark.range(len(CUBE_TIME_EPOCHS)).selectExpr("CAST(id AS INT) AS time_idx")
     cand = tiles.crossJoin(F.broadcast(ch)).crossJoin(F.broadcast(times))
 

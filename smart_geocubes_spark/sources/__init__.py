@@ -1,3 +1,4 @@
+from smart_geocubes_spark.sources.local import local_frame
 from smart_geocubes_spark.sources.synth import (
     CUBE_TIME_EPOCHS,
     GRID,
@@ -16,4 +17,5 @@ __all__ = [
     "pages_sql",
     "patches_sql",
     "ensure_base_views",
+    "local_frame",
 ]

@@ -550,7 +550,7 @@ def test_read_rule_min_batch_wins_on_every_read(spark, cube, monkeypatch, later_
     with monkeypatch.context() as mp:
         mp.setattr(M, "uuid", types.SimpleNamespace(uuid4=lambda: types.SimpleNamespace(hex=next(ids))))
         assert materialize(spark, cube, ROI_A)["batch_id"] == first
-        mp.setattr(M, "plan_missing", lambda spark, path, candidates: candidates)
+        mp.setattr(M, "_missing", lambda candidates, lineage: candidates)
         m2 = materialize(spark, cube, ROI_A)
     assert (m2["batch_id"], m2["written"]) == (second, 18)
     winner = min(first, second)
@@ -593,21 +593,48 @@ def test_in_literal_quotes_values(spark):
         assert sorted(r.n for r in got) == [3, 7], typ
 
 
-def test_cached_accessor_load_runs_three_jobs(spark, tmp_path):
-    """A cached ``accessor.load(persist=True)`` is three Spark jobs: the
-    fill's lineage collect, the read's lineage collect and the block
-    collect — no winner window, broadcast or checkpoint job. A
-    ``value_range`` read narrows its survivors in Python: no
-    localCheckpoint."""
+def test_cached_accessor_load_runs_two_jobs(spark, tmp_path):
+    """A cached ``accessor.load(persist=True)`` is two Spark jobs: the
+    fill's lineage collect, which the read reuses, and the block
+    collect — no second lineage collect, no winner window, broadcast or
+    checkpoint job. A ``value_range`` read narrows its survivors in
+    Python: no localCheckpoint."""
     acc = arcticdem_like(spark, str(tmp_path / "c"))
     acc.create()
     n = len(acc.load(ROI_POLAR, persist=True))
     with spark_jobs(spark) as cached:
         assert len(acc.load(ROI_POLAR, persist=True)) == n
-    assert len(cached) <= 3, cached
+    assert len(cached) <= 2, cached
     with spark_jobs(spark) as ranged:
         assert len(acc.load(ROI_POLAR, persist=True, value_range=(-1e12, 1e12))) == n
     assert not [j for j in ranged if any(s.startswith("localCheckpoint") for s in j)], ranged
+
+
+def test_shared_lineage_read_matches_own_collect(spark, tmp_path):
+    """A read handed the ROI's unpruned lineage rows (a cached fill's)
+    narrows them by channel, TOI and snapshot in pandas to exactly what
+    its own pruned collect serves."""
+    from smart_geocubes_spark.plans.materialize import _fill, _lineage_rows, _roi_tile_ids
+
+    path = str(tmp_path / "cube")
+    epochs = (1577836800, 1609459200)
+    create_cube(path, CubeSpec(grid=SMALL_GRID, channels=("dem", "slope"), time_epochs=epochs))
+    first = materialize(spark, path, ROI_A, [epochs[0]])["batch_id"]
+    materialize(spark, path, ROI_A)
+    m, rows = _fill(spark, path, ROI_A)
+    assert m["written"] == 0 and len(rows) == 36  # 9 tiles x 2 steps x 2 channels
+    tile_ids = _roi_tile_ids(SMALL_GRID, ROI_A)[0]
+    assert sorted(rows["chunk_key"]) == sorted(_lineage_rows(spark, path, tile_ids)["chunk_key"])
+
+    def served(df):
+        return sorted((r.chunk_key, r.batch_id) for r in df.select("chunk_key", "batch_id").collect())
+
+    for kw in ({}, {"channels": ["slope"]}, {"toi_epochs": [epochs[1]]}, {"as_of_batch": first}):
+        own = served(load(spark, path, ROI_A, **kw))
+        assert own and served(load(spark, path, ROI_A, _lineage=rows, **kw)) == own, kw
+    # a fill that commits hands nothing on: the read collects after its ticket
+    m, rows = _fill(spark, path, (6.3, 15.2, 6.8, 15.9))
+    assert m["written"] == 4 and rows is None
 
 
 def test_vacuum_never_deletes_unvouched_shadowed_batch(spark, cube):

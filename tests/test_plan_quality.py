@@ -169,6 +169,68 @@ def test_knn_exact_path_stays_distributed(spark, monkeypatch):
     assert len(got) == 6  # 2 queries x top-3, fully distributed
 
 
+def _assert_local_leaf(df) -> None:
+    """``df`` reads its driver-built rows from a JVM local relation —
+    no pickled Python RDD (``LogicalRDD`` / ``Scan ExistingRDD``), whose
+    evaluation runs one Python task per task slot."""
+    qe = df._jdf.queryExecution()
+    logical, physical = qe.optimizedPlan().toString(), qe.executedPlan().toString()
+    assert "LocalRelation" in logical, logical
+    for leaf in ("LogicalRDD", "ExistingRDD"):
+        assert leaf not in logical and leaf not in physical, (leaf, physical)
+
+
+def _before_checkpoint(spark, monkeypatch, build) -> list:
+    """The frames ``build()`` hands to ``localCheckpoint``, unexecuted
+    (a checkpointed frame's own leaf is the checkpoint RDD)."""
+    seen: list = []
+    with monkeypatch.context() as mp:
+        mp.setattr(
+            type(spark.range(1)), "localCheckpoint",
+            lambda self, eager=True: seen.append(self) or self,
+        )
+        build()
+    return seen
+
+
+def test_driver_built_frames_are_local_relations(spark, tmp_path, monkeypatch):
+    """Driver-built frames enter Spark as Arrow tables: the fill's plan
+    frame, the broadcast catalog cells, kNN's query disk, an unfilled
+    ROI's load() and an empty cube's lineage each have a LocalRelation
+    leaf and no ExistingRDD."""
+    import pandas as pd
+
+    from smart_geocubes_spark.operators.knn import knn_join
+    from smart_geocubes_spark.operators.spatial_join import explode_catalog_to_cells
+    from smart_geocubes_spark.plans.materialize import (
+        CubeSpec,
+        _bucketed,
+        candidate_chunks,
+        create_cube,
+        load,
+        read_lineage,
+    )
+    from smart_geocubes_spark.sources.synth import catalog_df
+    from tests.test_materialize import ROI_A, SMALL_GRID
+
+    path = str(tmp_path / "cube")
+    spec = CubeSpec(grid=SMALL_GRID, channels=("dem",), time_epochs=None)
+    create_cube(path, spec)
+    (plan,) = _before_checkpoint(
+        spark, monkeypatch, lambda: _bucketed(spark, candidate_chunks(spec, ROI_A), "b" * 12)
+    )
+    _assert_local_leaf(plan)
+    _assert_local_leaf(explode_catalog_to_cells(spark, catalog_df(spark)))
+    pts = spark.range(200).selectExpr(
+        "id AS point_id", "CAST(-150 + id * 0.01 AS DOUBLE) AS lon", "CAST(62 AS DOUBLE) AS lat"
+    )
+    q = pd.DataFrame({"qid": [1], "qx": [-149.5], "qy": [62.0]})
+    (prov,) = _before_checkpoint(spark, monkeypatch, lambda: knn_join(spark, pts, q, k=3))
+    _assert_local_leaf(prov)
+    _assert_local_leaf(load(spark, path, ROI_A))
+    _assert_local_leaf(read_lineage(spark, path))
+
+
 # a lineage parquet scan: block scans never read a stored chunk_key
 _LINEAGE_SCAN = "ReadSchema: struct<chunk_key:"
 
