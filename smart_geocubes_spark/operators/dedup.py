@@ -325,8 +325,7 @@ def dedup_clusters(spark: SparkSession, pairs: DataFrame, max_iter: int = 50) ->
     diameter a few hops), so this is a handful of rounds even at 10^12
     docs. Each round is checkpointed via localCheckpoint to truncate
     the lineage (iterative plans otherwise grow unboundedly). This is
-    the simple-propagation variant of the large-star/small-star
-    connected-components algorithm.
+    plain min-label propagation, not large-star/small-star.
     """
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")

@@ -38,12 +38,12 @@ Spark's task-commit protocol replacing the hand-built retry machinery.
 
 Scale notes (100 TB cube, 1000 executors):
 - every block row carries ``pt = tile_id % N_PARTS``, a stored bucket
-  COLUMN (there are no ``pt=`` directories); a fill hash-partitions its
-  plan rows on ``pt`` into ``min(N_PARTS, defaultParallelism)``
-  partitions — one kernel task per task slot, so a leaf holds at most
-  that many part files — and sorts them within files by (tile_id,
-  time_idx, channel) -> row-group min/max pruning on reads, no
-  small-file blowup at high tile counts;
+  COLUMN (there are no ``pt=`` directories); a fill slices its plan
+  rows on the driver — sorted by (tile_id, time_idx, channel), cut
+  into one contiguous slice per task slot — so no Spark job runs
+  before the kernel, a leaf holds at most one part file per slot, and
+  each file covers a contiguous tile_id range -> row-group min/max
+  pruning on reads, no small-file blowup at high tile counts;
 - a fill and a read each collect the committed lineage rows pruned to
   the ROI's tiles (pushed ``tile_id IN``) ONCE — bounded by the ROI's
   chunk count x commits per chunk, never by the cube. The cache skip
@@ -51,11 +51,11 @@ Scale notes (100 TB cube, 1000 executors):
   plan becomes a Spark frame); a read applies the read rule in pandas
   and filters its block scan by a literal IN list — no window or join;
 - block generation is an Arrow ``mapInPandas`` producing whole chunk
-  arrays — one task per candidate partition, no Python row loop;
+  arrays — one task per plan slice, no Python row loop;
 - the kernel emits a per-chunk EVENT row alongside each block
   (chunk_key, partition_id, t_start_us, t_end_us, n_bytes — the
   reference's per-patch event log, ``core/backend.py:23-28,59-93``,
-  with Spark partition ids standing in for thread ids); event rows
+  with kernel task partition ids standing in for thread ids); event rows
   live INSIDE the block files (one write job per fill — read_events
   column-prunes them out, lineage-gated like blocks; only compaction
   materializes a separate ``events/`` history copy), and
@@ -150,12 +150,9 @@ DTYPES = {  # dtype name -> parquet/Spark element type it is stored as
 _ELEM_NBYTES = {"double": 8, "float": 4, "smallint": 2, "boolean": 1}
 
 
-def _dtype_groups(spec: "CubeSpec") -> dict[str, list[str]]:
-    """Storage element type -> channels stored with it."""
-    out: dict[str, list[str]] = {}
-    for ch in spec.channels:
-        out.setdefault(DTYPES[spec.channel_dtype(ch)], []).append(ch)
-    return out
+def _names(ddl: str) -> list[str]:
+    """The column names of a flat DDL schema string, in order."""
+    return [f.split()[0] for f in ddl.split(", ")]
 
 
 def _typed_schema(base: str, elem: str) -> str:
@@ -767,10 +764,6 @@ def _gen_blocks_factory(
     n_px = chunk_px * chunk_px
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = int(ctx.partitionId()) if ctx is not None else -1
         ramp = np.arange(n_px, dtype=np.float64) * 0.5
         if patch is not None:
             x0, y0, res, bbox, value_offset = patch
@@ -790,12 +783,14 @@ def _gen_blocks_factory(
                 cy = y0 - (ty[:, None] * chunk_px + rows_i[None, :] + 0.5) * res
                 inside = (cx >= pminx) & (cx < pmaxx) & (cy > pminy) & (cy <= pmaxy)
                 blocks = np.where(inside, blocks + value_offset, np.nan)
-            out = b[["tile_y", "tile_x", "tile_id", "time_idx", "channel", "batch_id"]].copy()
-            out["pt"] = (b["tile_id"] % N_PARTS).astype("int32")
+            # pt and partition_id come stamped on the plan rows
+            # (_sliced_plan): the driver is their one source
+            out = b[[
+                "tile_y", "tile_x", "tile_id", "time_idx", "channel", "pt", "batch_id",
+                "chunk_key", "partition_id",
+            ]].copy()
             out["block"] = list(blocks)
             # event columns: the download/write record of this chunk
-            out["chunk_key"] = b["chunk_key"].to_numpy()
-            out["partition_id"] = np.int32(pid)
             out["t_start_us"] = np.int64(t0)
             out["t_end_us"] = np.int64(time.time_ns() // 1000)
             out["n_bytes"] = np.int64(8 * n_px)
@@ -804,42 +799,73 @@ def _gen_blocks_factory(
     return gen
 
 
+# a kernel task's input rows: plan rows stamped on the driver with their
+# stored bucket, their batch and the slice (task) that generates them
+KERNEL_SCHEMA = PLAN_SCHEMA + ", pt int, batch_id string, partition_id int"
+
+
+def _sliced_plan(
+    spark: SparkSession, spec: CubeSpec, rows: pd.DataFrame, batch_id: str
+) -> dict[str, pd.DataFrame]:
+    """A batch's driver-side plan ``rows`` per storage element type,
+    stamped with ``pt``, ``batch_id`` and ``partition_id`` — plain
+    pandas, no Spark job before the kernel.
+
+    Each group is sorted by (tile_id, time_idx, channel): the kernel
+    keeps row order, so the written files' row-group min/max stats are
+    tight (the pruning the module docstring promises) and each part
+    file covers a contiguous tile_id range. A group becomes one
+    :func:`~smart_geocubes_spark.sources.local.local_frame`, whose
+    ``LocalTableScan`` hands its m rows to k = min(m,
+    leafNodeDefaultParallelism) tasks in contiguous slices bounded at
+    ``i*m//k`` (``SparkContext.parallelize``); ``partition_id`` is that
+    slice, so a chunk's lineage row, block row and ``part-<i>`` file
+    name the same task. Never ``spark_partition_id()`` over a local
+    frame: ``ConvertToLocalRelation`` folds it to 0 for every row.
+    Past ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB,
+    ~6*10^5 plan rows) Spark ships a group as one partition per Arrow
+    batch instead: lineage and block rows still agree, but part files
+    then follow the batches."""
+    slots = int(
+        spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    )
+    elem = rows["channel"].map({c: DTYPES[spec.channel_dtype(c)] for c in spec.channels})
+    plan = rows.assign(pt=(rows["tile_id"] % N_PARTS).astype("int32"), batch_id=batch_id)
+    groups = {}
+    for e, g in plan.groupby(elem, sort=True):
+        g = g.sort_values(["tile_id", "time_idx", "channel"], ignore_index=True)
+        k = min(len(g), slots)
+        bounds = np.arange(k + 1) * len(g) // k
+        g["partition_id"] = np.repeat(np.arange(k, dtype=np.int32), np.diff(bounds))
+        groups[e] = g
+    return groups
+
+
 def _write_blocks(
+    spark: SparkSession,
     spec: CubeSpec,
-    plan_df: DataFrame,
+    groups: dict[str, pd.DataFrame],
     block_dir: str,
     make_blocks,
-    present_channels: set[str],
 ) -> None:
-    """Write a fill/patch's blocks, grouped by storage dtype.
+    """Write a fill/patch's blocks: one ``dt-<elem>`` leaf per
+    :func:`_sliced_plan` group (``dt-double`` for float64 channels).
 
-    ``make_blocks(plan_subset) -> BLOCK_WRITE_SCHEMA frame`` (double
-    blocks, straight from the kernel or the patch-merge pipeline).
-    Every batch writes one ``dt-<elem>`` subdir per storage group
-    (``dt-double`` for float64 channels). Channel filtering happens
-    on the PLAN rows — BEFORE the kernel (a filter above mapInPandas
-    cannot be pushed through it, so filtering blocks after generation
-    would run the kernel once per group over ALL chunks).
+    ``make_blocks(plan_frame) -> BLOCK_WRITE_SCHEMA frame`` (double
+    blocks, straight from the kernel or the patch-merge pipeline). Each
+    group's plan rows enter Spark as their own local frame, so the
+    kernel runs once per chunk, and a lazy backfill of one evolved
+    channel costs one write job, not one per dtype group."""
 
-    ``present_channels``: the channels the plan actually contains
-    (callers already know it from the driver-side plan's per-channel
-    counts) — groups with no planned chunks are skipped entirely, so a
-    lazy backfill of one evolved channel costs one write job, not one
-    per dtype group."""
-    groups = {
-        e: kept
-        for e, chans in _dtype_groups(spec).items()
-        if (kept := [c for c in chans if c in present_channels])
-    }
-
-    def _write_group(item: tuple[str, list[str]]) -> None:
-        elem, chans = item
-        sub = make_blocks(plan_df.filter(F.col("channel").isin(chans)))
+    def _write_group(item: tuple[str, pd.DataFrame]) -> None:
+        elem, rows = item
+        sub = make_blocks(local_frame(spark, rows[_names(KERNEL_SCHEMA)], KERNEL_SCHEMA))
         sub = sub.withColumn("block", _to_stored(spec, elem))
         sub = _with_chunk_stats(sub, elem)
         sub.write.mode("overwrite").parquet(os.path.join(block_dir, f"dt-{elem}"))
 
-    items = sorted(groups.items())
+    items = list(groups.items())
     if len(items) == 1:
         _write_group(items[0])
     else:
@@ -859,76 +885,28 @@ def _write_blocks(
     open(os.path.join(block_dir, "_SUCCESS"), "w").close()
 
 
-def _lineage_nbytes(spec: CubeSpec, n_px: int):
-    """Per-channel stored-bytes column: typed channels are the whole
-    point of the dtype system at 100 TB, so lineage accounting must not
-    keep claiming 8 bytes/px for a bool channel."""
-    expr = F.lit(8 * n_px)
-    for elem, chans in _dtype_groups(spec).items():
-        expr = F.when(
-            F.col("channel").isin(chans), F.lit(_ELEM_NBYTES[elem] * n_px)
-        ).otherwise(expr)
-    return expr.cast("long")
-
-
-def _bucketed(spark: SparkSession, rows: pd.DataFrame, batch_id: str) -> DataFrame:
-    """Turn a batch's driver-side plan ``rows`` into a Spark frame,
-    stamp them with their stable block bucket and batch id, co-locate
-    each bucket, sort, and checkpoint.
-
-    The plan feeds two actions (block write, lineage write): bucket
-    once, sort within partitions so the written files' row-group
-    min/max stats on (tile_id, time_idx, channel) are tight (the
-    pruning the module docstring promises — sorting the PLAN rows is
-    cheap; the kernel preserves row order so the block rows land sorted
-    too), then localCheckpoint (2+ consumers -> checkpoint, never cache,
-    whose evicted partitions silently recompute the shuffle per action
-    — and the lineage rows' ``partition_id`` must name the partition
-    the blocks were written from).
-
-    ``pt`` is the stored bucket column; the frame is hash-partitioned on
-    it into ``min(N_PARTS, defaultParallelism)`` partitions. EXPLICIT
-    count: a bare repartition(col) is an AQE coalesce target — at bench
-    scale the plan rows are a few KB and AQE folds them into ONE
-    partition, serializing the whole fill kernel + write behind a
-    single task (measured round 4: 2x tiles/sec). Not N_PARTS itself:
-    every partition of the ``mapInPandas`` frames built on this one
-    pays a Python task, even an empty one, and each dtype group's write
-    is its own job — a two-dtype fill at local[4] runs 8 kernel tasks
-    where 64 buckets ran 128 (~4x cube_cache throughput, 4-core host)."""
-    n = min(N_PARTS, spark.sparkContext.defaultParallelism)
-    return (
-        local_frame(spark, rows, PLAN_SCHEMA)
-        .withColumn("pt", (F.col("tile_id") % N_PARTS).cast("int"))
-        .withColumn("batch_id", F.lit(batch_id))
-        .repartition(n, F.col("pt"))
-        .sortWithinPartitions("tile_id", "time_idx", "channel")
-        .localCheckpoint(eager=True)
-    )
-
-
 def _commit_batch(
+    spark: SparkSession,
     path: str,
     spec: CubeSpec,
     batch_id: str,
-    plan: DataFrame,
-    ch_counts: dict[str, int],
+    rows: pd.DataFrame,
     make_blocks,
     t0: float,
     fail_after_blocks: bool = False,
     **extra,
 ) -> dict:
-    """THE commit sequence every fill and patch runs on its
-    :func:`_bucketed` plan for ``batch_id``, whose per-channel chunk
-    counts are ``ch_counts`` (all nonzero): blocks (one ``dt-<elem>``
-    leaf per storage group with planned chunks), write events, lineage,
-    the commit ticket, then the per-run metrics json (event-log analog,
-    core/backend.py:23-28) plus ``extra`` — which it returns.
-    ``fail_after_blocks`` simulates a crash between the block write and
-    the lineage commit."""
+    """THE commit sequence every fill and patch runs on its non-empty
+    driver-side plan ``rows`` for ``batch_id``: blocks (one
+    ``dt-<elem>`` leaf per storage group with planned chunks), write
+    events, lineage, the commit ticket, then the per-run metrics json
+    (event-log analog, core/backend.py:23-28) plus ``extra`` — which it
+    returns. ``fail_after_blocks`` simulates a crash between the block
+    write and the lineage commit."""
+    groups = _sliced_plan(spark, spec, rows, batch_id)
     block_dir = os.path.join(path, "blocks", f"batch={batch_id}")
     t_write0 = time.time_ns() // 1000
-    _write_blocks(spec, plan, block_dir, make_blocks, set(ch_counts))
+    _write_blocks(spark, spec, groups, block_dir, make_blocks)
     # the per-chunk 'generate' event rows STAY inside the block files
     # (read_events column-prunes them out); the per-partition 'write'
     # rows come from the landed part files' metadata — no second events
@@ -938,26 +916,23 @@ def _commit_batch(
     if fail_after_blocks:
         raise RuntimeError("simulated crash before lineage commit")
 
-    # lineage rows from the SAME pt-bucketed partitions the blocks
-    # were written from, so partition_id names the block write
-    # partition (per-partition lineage contract)
+    # lineage rows from the SAME sliced plan rows the blocks were
+    # generated from, so partition_id names the block write partition
+    # (per-partition lineage contract); n_bytes counts the STORED type:
+    # a bool channel is 1 byte/px, not 8
     n_px = spec.grid.chunk_px * spec.grid.chunk_px
-    lin = (
-        plan.withColumn("partition_id", F.spark_partition_id())
-        .withColumn("n_rows", F.lit(1).cast("long"))
-        .withColumn("n_bytes", _lineage_nbytes(spec, n_px))
-        .withColumn("src_batch", F.col("batch_id"))
-        .select(
-            "chunk_key", "tile_id", "time_idx", "channel",
-            "batch_id", "partition_id", "n_rows", "n_bytes", "src_batch",
-        )
-    )
-    lin.write.mode("overwrite").parquet(os.path.join(path, "lineage", f"batch={batch_id}"))
+    lin = pd.concat(
+        [g.assign(n_rows=1, n_bytes=_ELEM_NBYTES[e] * n_px) for e, g in groups.items()],
+        ignore_index=True,
+    ).assign(src_batch=batch_id)
+    local_frame(spark, lin[_names(LINEAGE_SCHEMA)], LINEAGE_SCHEMA).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(path, "lineage", f"batch={batch_id}"))
     _allocate_commit_seq(path, batch_id)  # THE commit point (atomic ticket)
 
     metrics = {
         "batch_id": batch_id,
-        "written": int(sum(ch_counts.values())),
+        "written": len(rows),
         **extra,
         "sec": time.time() - t0,
     }
@@ -1008,12 +983,7 @@ def _fill(
     cands = candidate_chunks(spec, roi_bbox, toi_epochs)
     lineage = _candidate_lineage(spark, path, cands)
     missing = _missing(cands, lineage)
-    # per-channel counts off the driver-side plan: the total gates the
-    # all-cached return, the channel set lets _write_blocks skip dtype
-    # groups with no planned chunks (a lazy backfill of one evolved
-    # channel = one write job, not one per dtype group)
-    ch_counts = missing["channel"].value_counts().to_dict()
-    if not ch_counts:
+    if missing.empty:
         # nothing committed under this id — returning it would hand
         # the caller a batch_id that snapshots()/as_of reject
         return {
@@ -1021,11 +991,11 @@ def _fill(
             "sec": time.time() - t0,
         }, lineage
     return _commit_batch(
+        spark,
         path,
         spec,
         batch_id,
-        _bucketed(spark, missing, batch_id),
-        ch_counts,
+        missing,
         lambda part: part.mapInPandas(
             _gen_blocks_factory(spec.grid.chunk_px), schema=BLOCK_WRITE_SCHEMA
         ),
@@ -1084,7 +1054,6 @@ def materialize_patch(
     batch_id = _compact_id(path)
 
     cand = candidate_chunks(spec, patch_bbox, toi_epochs)
-    ch_counts = cand["channel"].value_counts().to_dict()
     gb = spec.grid.geobox
     # currently-visible content of exactly these chunks (winner rows,
     # patch-bounded — the same pruned scan load() serves readers);
@@ -1119,19 +1088,18 @@ def materialize_patch(
                 ),
             )
             .drop("old_block")
-            .select(*[f.split()[0] for f in BLOCK_WRITE_SCHEMA.split(", ")])
+            .select(*_names(BLOCK_WRITE_SCHEMA))
             # advisory repartition (no pinned count): these rows carry
             # the ~80 KB block arrays, so AQE sizes the write sensibly —
             # a tiny patch lands 1-2 part files instead of one near-empty
-            # file per task slot (the kernel-feeding frame above IS
-            # pinned: its rows are KB-sized plan rows AQE would fold
-            # into one serial task)
+            # file per task slot (the kernel-feeding frame above is
+            # sliced on the driver, one slice per task slot)
             .repartition(F.col("pt"))
             .sortWithinPartitions("tile_id", "time_idx", "channel")
         )
 
     metrics = _commit_batch(
-        path, spec, batch_id, _bucketed(spark, cand, batch_id), ch_counts, _merged, t0,
+        spark, path, spec, batch_id, cand, _merged, t0,
         patch_id=patch_id,
     )
     with open(marker, "w") as f:

@@ -406,6 +406,44 @@ def test_fill_runs_one_kernel_task_per_slot(spark, cube):
         assert len(glob.glob(os.path.join(d, "part-*"))) <= slots, d
 
 
+def test_lineage_event_and_file_partition_ids_agree(spark, tmp_path):
+    """Per chunk, the lineage row's ``partition_id``, the block row's
+    ``partition_id`` and the index of the ``part-<i>`` file holding it
+    name the same kernel task — on a two-dtype cube whose groups differ
+    in size (18 float rows, 9 bool rows), so each leaf is sliced on its
+    own."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "cube")
+    create_cube(path, CubeSpec(
+        grid=SMALL_GRID, channels=("dem", "slope", "mask"),
+        dtypes=("float32", "float32", "bool"), time_epochs=None,
+    ))
+    m = materialize(spark, path, ROI_A)
+    lin = {r.chunk_key: r.partition_id for r in read_lineage(spark, path).collect()}
+    assert len(lin) == m["written"] == 27
+    seen: dict[str, str] = {}
+    for leaf in glob.glob(os.path.join(path, "blocks", "batch=*", "dt-*")):
+        for f in glob.glob(os.path.join(leaf, "part-*")):
+            idx = int(os.path.basename(f).split("-")[1])
+            t = pq.read_table(f, columns=["chunk_key", "partition_id"]).to_pydict()
+            for key, pid in zip(t["chunk_key"], t["partition_id"]):
+                assert pid == idx == lin[key], (key, pid, idx, lin[key])
+                seen[key] = os.path.basename(leaf)
+    assert set(seen) == set(lin)
+    assert sorted(set(seen.values())) == ["dt-boolean", "dt-float"]
+
+
+def test_cold_fill_runs_two_jobs(spark, cube):
+    """A cold fill into an empty single-dtype cube is two Spark jobs:
+    the block write and the lineage write. Its plan rows are sliced on
+    the driver: no shuffle job, no checkpoint."""
+    with spark_jobs(spark) as cold:
+        assert materialize(spark, cube, ROI_A)["written"] == 18
+    assert len(cold) == 2, cold
+    assert not [j for j in cold if any(s.startswith("localCheckpoint") for s in j)], cold
+
+
 def test_plan_missing_antijoin(spark, cube):
     spec = open_spec(cube)
     materialize(spark, cube, ROI_A)

@@ -194,31 +194,38 @@ def _before_checkpoint(spark, monkeypatch, build) -> list:
 
 
 def test_driver_built_frames_are_local_relations(spark, tmp_path, monkeypatch):
-    """Driver-built frames enter Spark as Arrow tables: the fill's plan
-    frame, the broadcast catalog cells, kNN's query disk, an unfilled
-    ROI's load() and an empty cube's lineage each have a LocalRelation
-    leaf and no ExistingRDD."""
+    """Driver-built frames enter Spark as Arrow tables: the frame that
+    feeds the fill's block kernel, the broadcast catalog cells, kNN's
+    query disk, an unfilled ROI's load() and an empty cube's lineage
+    each have a LocalRelation leaf and no ExistingRDD."""
     import pandas as pd
 
     from smart_geocubes_spark.operators.knn import knn_join
     from smart_geocubes_spark.operators.spatial_join import explode_catalog_to_cells
     from smart_geocubes_spark.plans.materialize import (
         CubeSpec,
-        _bucketed,
-        candidate_chunks,
         create_cube,
         load,
+        materialize,
         read_lineage,
     )
     from smart_geocubes_spark.sources.synth import catalog_df
     from tests.test_materialize import ROI_A, SMALL_GRID
 
-    path = str(tmp_path / "cube")
     spec = CubeSpec(grid=SMALL_GRID, channels=("dem",), time_epochs=None)
+    path, filled = str(tmp_path / "cube"), str(tmp_path / "filled")
     create_cube(path, spec)
-    (plan,) = _before_checkpoint(
-        spark, monkeypatch, lambda: _bucketed(spark, candidate_chunks(spec, ROI_A), "b" * 12)
-    )
+    create_cube(filled, spec)
+    # the frames the fill hands its block kernel (mapInPandas), as built
+    fed: list = []
+    real = type(spark.range(1)).mapInPandas
+    with monkeypatch.context() as mp:
+        mp.setattr(
+            type(spark.range(1)), "mapInPandas",
+            lambda self, *a, **k: fed.append(self) or real(self, *a, **k),
+        )
+        materialize(spark, filled, ROI_A)
+    (plan,) = fed
     _assert_local_leaf(plan)
     _assert_local_leaf(explode_catalog_to_cells(spark, catalog_df(spark)))
     pts = spark.range(200).selectExpr(
