@@ -40,10 +40,12 @@ Scale notes (100 TB cube, 1000 executors):
 - every block row carries ``pt = tile_id % N_PARTS``, a stored bucket
   COLUMN (there are no ``pt=`` directories); a fill slices its plan
   rows on the driver — sorted by (tile_id, time_idx, channel), cut
-  into one contiguous slice per task slot — so no Spark job runs
-  before the kernel, a leaf holds at most one part file per slot, and
-  each file covers a contiguous tile_id range -> row-group min/max
-  pruning on reads, no small-file blowup at high tile counts;
+  into contiguous slices sized by the block bytes they generate, one
+  per ``spark.sql.files.openCostInBytes`` up to one per task slot —
+  so no Spark job runs before the kernel, a fill below one open cost
+  runs one Python task and writes one part file per leaf, and each
+  file covers a contiguous tile_id range -> row-group min/max pruning
+  on reads, no small-file blowup at high tile counts;
 - a fill and a read each collect the committed lineage rows pruned to
   the ROI's tiles (pushed ``tile_id IN``) ONCE — bounded by the ROI's
   chunk count x commits per chunk, never by the cube. The cache skip
@@ -804,48 +806,83 @@ def _gen_blocks_factory(
 KERNEL_SCHEMA = PLAN_SCHEMA + ", pt int, batch_id string, partition_id int"
 
 
+def _leaf_bounds(spark: SparkSession, m: int, df: DataFrame | None = None) -> np.ndarray:
+    """Row bounds of the partitions of the leaf Spark built for ``df``,
+    a :func:`~smart_geocubes_spark.sources.local.local_frame` of ``m``
+    rows — read off its analyzed plan, no job. A ``LocalRelation``
+    (``df=None`` predicts one) is scanned as ``SparkContext.parallelize``
+    slices: min(m, leafNodeDefaultParallelism) of them, bounded at
+    ``j*m//p``. Past ``spark.sql.execution.arrow.localRelationThreshold``
+    (48 MB of rows) PySpark ships a ``LogicalRDD`` instead: one
+    partition per ``maxRecordsPerBatch`` Arrow batch."""
+    if df is not None and df._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD":
+        b = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+        return np.append(np.arange(0, m, b), m)
+    p = min(m, int(
+        spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    ))
+    return np.arange(p + 1) * m // p
+
+
+def _open_costs(spark: SparkSession, n_bytes: int) -> int:
+    """How many ``spark.sql.files.openCostInBytes`` ``n_bytes`` fill
+    (at least one): the rule Spark packs small files into read splits
+    by, and the most slices that many bytes are worth."""
+    cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    return max(1, -(-int(n_bytes) // cost))
+
+
 def _sliced_plan(
     spark: SparkSession, spec: CubeSpec, rows: pd.DataFrame, batch_id: str
-) -> dict[str, pd.DataFrame]:
-    """A batch's driver-side plan ``rows`` per storage element type,
-    stamped with ``pt``, ``batch_id`` and ``partition_id`` — plain
-    pandas, no Spark job before the kernel.
+) -> dict[str, tuple[pd.DataFrame, DataFrame]]:
+    """A batch's driver-side plan ``rows`` per storage element type:
+    the group's rows stamped with ``pt``, ``batch_id`` and
+    ``partition_id``, and the frame that feeds them to the kernel — no
+    Spark job before the kernel.
 
     Each group is sorted by (tile_id, time_idx, channel): the kernel
     keeps row order, so the written files' row-group min/max stats are
     tight (the pruning the module docstring promises) and each part
-    file covers a contiguous tile_id range. A group becomes one
-    :func:`~smart_geocubes_spark.sources.local.local_frame`, whose
-    ``LocalTableScan`` hands its m rows to k = min(m,
-    leafNodeDefaultParallelism) tasks in contiguous slices bounded at
-    ``i*m//k`` (``SparkContext.parallelize``); ``partition_id`` is that
-    slice, so a chunk's lineage row, block row and ``part-<i>`` file
-    name the same task. Never ``spark_partition_id()`` over a local
-    frame: ``ConvertToLocalRelation`` folds it to 0 for every row.
-    Past ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB,
-    ~6*10^5 plan rows) Spark ships a group as one partition per Arrow
-    batch instead: lineage and block rows still agree, but part files
-    then follow the batches."""
-    slots = int(
-        spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
-        or spark.sparkContext.defaultParallelism
-    )
+    file covers a contiguous tile_id range. A group of m rows becomes
+    one local frame over p parent partitions (:func:`_leaf_bounds`),
+    coalesced to k = min(p, :func:`_open_costs` of the m*chunk_px²*8
+    double block bytes the kernel emits): a fill below one open cost
+    runs ONE Python task, since each task pays a fixed Python-worker
+    cost before its first row, and writes one part file per leaf. A
+    coalesce is narrow (no job, no shuffle) and, over parents without
+    locations, gives slice i the parents ``[i*p//k, (i+1)*p//k)``;
+    ``partition_id`` is that slice, so a chunk's lineage row, block row
+    and ``part-<i>`` file name the same task. Never
+    ``spark_partition_id()`` over a local frame:
+    ``ConvertToLocalRelation`` folds it to 0 for every row."""
     elem = rows["channel"].map({c: DTYPES[spec.channel_dtype(c)] for c in spec.channels})
     plan = rows.assign(pt=(rows["tile_id"] % N_PARTS).astype("int32"), batch_id=batch_id)
+    chunk_bytes = 8 * spec.grid.chunk_px * spec.grid.chunk_px
     groups = {}
     for e, g in plan.groupby(elem, sort=True):
         g = g.sort_values(["tile_id", "time_idx", "channel"], ignore_index=True)
-        k = min(len(g), slots)
-        bounds = np.arange(k + 1) * len(g) // k
-        g["partition_id"] = np.repeat(np.arange(k, dtype=np.int32), np.diff(bounds))
-        groups[e] = g
+        m = len(g)
+        parents = _leaf_bounds(spark, m)
+        while True:
+            p = len(parents) - 1
+            k = min(p, _open_costs(spark, m * chunk_bytes))
+            starts = parents[np.arange(k + 1) * p // k]
+            g["partition_id"] = np.repeat(np.arange(k, dtype=np.int32), np.diff(starts))
+            df = local_frame(spark, g[_names(KERNEL_SCHEMA)], KERNEL_SCHEMA)
+            leaf = _leaf_bounds(spark, m, df)
+            if np.array_equal(leaf, parents):
+                break
+            # a LogicalRDD leaf: restamp once — the ids do not change
+            # the Arrow bytes, so the rebuild gets the same leaf
+            parents = leaf
+        groups[e] = (g, df.coalesce(k))
     return groups
 
 
 def _write_blocks(
-    spark: SparkSession,
     spec: CubeSpec,
-    groups: dict[str, pd.DataFrame],
+    groups: dict[str, tuple[pd.DataFrame, DataFrame]],
     block_dir: str,
     make_blocks,
 ) -> None:
@@ -858,9 +895,9 @@ def _write_blocks(
     kernel runs once per chunk, and a lazy backfill of one evolved
     channel costs one write job, not one per dtype group."""
 
-    def _write_group(item: tuple[str, pd.DataFrame]) -> None:
-        elem, rows = item
-        sub = make_blocks(local_frame(spark, rows[_names(KERNEL_SCHEMA)], KERNEL_SCHEMA))
+    def _write_group(item: tuple[str, tuple[pd.DataFrame, DataFrame]]) -> None:
+        elem, (_, plan_frame) = item
+        sub = make_blocks(plan_frame)
         sub = sub.withColumn("block", _to_stored(spec, elem))
         sub = _with_chunk_stats(sub, elem)
         sub.write.mode("overwrite").parquet(os.path.join(block_dir, f"dt-{elem}"))
@@ -906,7 +943,7 @@ def _commit_batch(
     groups = _sliced_plan(spark, spec, rows, batch_id)
     block_dir = os.path.join(path, "blocks", f"batch={batch_id}")
     t_write0 = time.time_ns() // 1000
-    _write_blocks(spark, spec, groups, block_dir, make_blocks)
+    _write_blocks(spec, groups, block_dir, make_blocks)
     # the per-chunk 'generate' event rows STAY inside the block files
     # (read_events column-prunes them out); the per-partition 'write'
     # rows come from the landed part files' metadata — no second events
@@ -922,10 +959,17 @@ def _commit_batch(
     # a bool channel is 1 byte/px, not 8
     n_px = spec.grid.chunk_px * spec.grid.chunk_px
     lin = pd.concat(
-        [g.assign(n_rows=1, n_bytes=_ELEM_NBYTES[e] * n_px) for e, g in groups.items()],
+        [g.assign(n_rows=1, n_bytes=_ELEM_NBYTES[e] * n_px) for e, (g, _) in groups.items()],
         ignore_index=True,
     ).assign(src_batch=batch_id)
-    local_frame(spark, lin[_names(LINEAGE_SCHEMA)], LINEAGE_SCHEMA).write.mode(
+    lin_frame = local_frame(spark, lin[_names(LINEAGE_SCHEMA)], LINEAGE_SCHEMA)
+    # the kernel's byte rule on the lineage rows' own size (Spark's
+    # estimate of the leaf, 120 B a row): one file below ~3.5*10^4
+    # chunks. Their partition_id is data, so the file count need not
+    # follow the kernel slices; capped by the row count because a
+    # LogicalRDD leaf estimates Long.MaxValue bytes
+    size = lin_frame._jdf.queryExecution().analyzed().stats().sizeInBytes()
+    lin_frame.coalesce(min(len(lin), _open_costs(spark, size))).write.mode(
         "overwrite"
     ).parquet(os.path.join(path, "lineage", f"batch={batch_id}"))
     _allocate_commit_seq(path, batch_id)  # THE commit point (atomic ticket)
@@ -1092,8 +1136,8 @@ def materialize_patch(
             # advisory repartition (no pinned count): these rows carry
             # the ~80 KB block arrays, so AQE sizes the write sensibly —
             # a tiny patch lands 1-2 part files instead of one near-empty
-            # file per task slot (the kernel-feeding frame above is
-            # sliced on the driver, one slice per task slot)
+            # file per task slot (the frame feeding the kernel above is
+            # sliced on the driver by the bytes it generates)
             .repartition(F.col("pt"))
             .sortWithinPartitions("tile_id", "time_idx", "channel")
         )

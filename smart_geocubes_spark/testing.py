@@ -6,7 +6,7 @@ canonicalize every cell to a string (floats via shortest-roundtrip
 repr, NaN/None normalized), sort rows, compare the full multiset.
 
 Also :func:`spark_jobs`, the job counter that pins a code path's Spark
-job budget.
+job budget, and :func:`spark_conf`, which sets runtime confs for a block.
 """
 
 from __future__ import annotations
@@ -139,3 +139,20 @@ def spark_jobs(spark) -> Iterator[list[list[str]]]:
             info = tracker.getJobInfo(job_id)
             stages = [tracker.getStageInfo(s) for s in (info.stageIds if info else [])]
             jobs.append([st.name for st in stages if st is not None])
+
+
+@contextmanager
+def spark_conf(spark, confs: dict[str, str]) -> Iterator[None]:
+    """Set the runtime ``confs`` for the ``with`` block, then restore
+    each to its previous value (or unset it)."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

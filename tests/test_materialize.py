@@ -26,7 +26,7 @@ from smart_geocubes_spark.plans.materialize import (
     plan_missing,
     read_lineage,
 )
-from smart_geocubes_spark.testing import spark_jobs
+from smart_geocubes_spark.testing import spark_conf, spark_jobs
 
 SMALL_GRID = TileGrid(
     geobox=GeoBox(crs="EPSG:4326", x0=0.0, y0=20.0, res=0.01, width=2000, height=2000),
@@ -380,58 +380,110 @@ def test_visualize_state_renders_partition_lanes(spark, cube):
     assert "write" in s and "~" in s
 
 
-def test_fill_runs_one_kernel_task_per_slot(spark, cube):
-    """The kernel-feeding repartition is sized to the session's task
-    slots, not the N_PARTS bucket count: every partition of a
-    mapInPandas frame is a Python task (even an empty one), so 64
-    buckets cost 64 tasks per dtype-group write whatever the chunk
-    count. The count stays explicit, though: a 9-tile fill must still
-    spread over several kernel tasks, not the ONE serial task AQE folds
-    a bare repartition(col) of KB-sized plan rows into (round 4)."""
-    from smart_geocubes_spark.plans.materialize import N_PARTS, read_events
+OPEN_COST = "spark.sql.files.openCostInBytes"
 
-    slots = min(N_PARTS, spark.sparkContext.defaultParallelism)
+
+def test_fill_kernel_slices_follow_block_bytes(spark, cube, tmp_path):
+    """A fill cuts each dtype group into one kernel slice per
+    ``spark.sql.files.openCostInBytes`` of double blocks it generates,
+    up to one per task slot: every partition of a mapInPandas frame is
+    a Python task, and each task pays a fixed Python-worker cost before
+    its first row. ROI_A's 18 chunks emit 1.44 MB, below the default
+    4 MB: one task, one part file per leaf, one lineage file. With the
+    open cost lowered the same fill must still spread over several
+    tasks, not the ONE serial task AQE folds a bare repartition(col) of
+    KB-sized plan rows into (round 4)."""
+    from smart_geocubes_spark.plans.materialize import read_events
+
+    slots = spark.sparkContext.defaultParallelism
+
+    def gen_pids(path):
+        ev = read_events(spark, path).filter(F.col("action") == "generate")
+        return {r.partition_id for r in ev.collect()}
+
+    def part_files(path):
+        leaves = glob.glob(os.path.join(path, "blocks", "batch=*", "dt-*"))
+        leaves += glob.glob(os.path.join(path, "lineage", "batch=*"))
+        assert len(leaves) == 2  # one dt-double leaf + the lineage dir
+        return [len(glob.glob(os.path.join(d, "part-*"))) for d in leaves]
+
     materialize(spark, cube, ROI_A)
-    gen_pids = {
-        r.partition_id
-        for r in read_events(spark, cube).filter(F.col("action") == "generate").collect()
-    }
-    assert max(gen_pids) < slots
-    assert len(gen_pids) >= 2
+    assert gen_pids(cube) == {0}
+    assert part_files(cube) == [1, 1]
 
-    leaves = glob.glob(os.path.join(cube, "blocks", "batch=*", "dt-*"))
-    leaves += glob.glob(os.path.join(cube, "lineage", "batch=*"))
-    assert len(leaves) == 2  # one dt-double leaf + the lineage dir
-    for d in leaves:
-        assert len(glob.glob(os.path.join(d, "part-*"))) <= slots, d
+    wide = str(tmp_path / "wide")
+    create_cube(wide, CubeSpec(grid=SMALL_GRID, channels=("dem", "slope"), time_epochs=None))
+    with spark_conf(spark, {OPEN_COST: "200000"}):
+        materialize(spark, wide, ROI_A)
+    pids = gen_pids(wide)
+    assert 2 <= len(pids) <= slots and max(pids) < slots
+    assert part_files(wide) == [len(pids), 1]
 
 
-def test_lineage_event_and_file_partition_ids_agree(spark, tmp_path):
-    """Per chunk, the lineage row's ``partition_id``, the block row's
-    ``partition_id`` and the index of the ``part-<i>`` file holding it
-    name the same kernel task — on a two-dtype cube whose groups differ
-    in size (18 float rows, 9 bool rows), so each leaf is sliced on its
-    own."""
-    import pyarrow.parquet as pq
-
-    path = str(tmp_path / "cube")
+def _typed_cube(path: str) -> str:
+    """A two-dtype cube whose groups differ in size on ROI_A (18 float
+    rows, 9 bool rows), so each leaf is sliced on its own."""
     create_cube(path, CubeSpec(
         grid=SMALL_GRID, channels=("dem", "slope", "mask"),
         dtypes=("float32", "float32", "bool"), time_epochs=None,
     ))
-    m = materialize(spark, path, ROI_A)
+    return path
+
+
+def _partition_ids_agree(spark, path: str) -> dict[str, list[int]]:
+    """Assert that per chunk, the lineage row's ``partition_id``, the
+    block row's ``partition_id`` and the index of the ``part-<i>`` file
+    holding it name the same kernel task; return each leaf's chunk
+    count per slice, in slice order."""
+    import pyarrow.parquet as pq
+
     lin = {r.chunk_key: r.partition_id for r in read_lineage(spark, path).collect()}
-    assert len(lin) == m["written"] == 27
     seen: dict[str, str] = {}
+    sizes: dict[str, dict[int, int]] = {}
     for leaf in glob.glob(os.path.join(path, "blocks", "batch=*", "dt-*")):
+        name = os.path.basename(leaf)
         for f in glob.glob(os.path.join(leaf, "part-*")):
             idx = int(os.path.basename(f).split("-")[1])
             t = pq.read_table(f, columns=["chunk_key", "partition_id"]).to_pydict()
             for key, pid in zip(t["chunk_key"], t["partition_id"]):
                 assert pid == idx == lin[key], (key, pid, idx, lin[key])
-                seen[key] = os.path.basename(leaf)
+                seen[key] = name
+                sizes.setdefault(name, {}).setdefault(idx, 0)
+                sizes[name][idx] += 1
     assert set(seen) == set(lin)
-    assert sorted(set(seen.values())) == ["dt-boolean", "dt-float"]
+    return {name: [n for _, n in sorted(s.items())] for name, s in sorted(sizes.items())}
+
+
+def test_lineage_event_and_file_partition_ids_agree(spark, tmp_path):
+    """The three partition ids of a chunk agree at the default conf
+    (each group below one open cost: one slice) and with the open cost
+    lowered and four parents per group, where coalescing p = 4
+    ``LocalTableScan`` slices into k = 3 (float: 1.44 MB) and k = 2
+    (bool: 0.72 MB of generated doubles) gives uneven slices."""
+    path = _typed_cube(str(tmp_path / "default"))
+    assert materialize(spark, path, ROI_A)["written"] == 27
+    assert _partition_ids_agree(spark, path) == {"dt-boolean": [9], "dt-float": [18]}
+
+    path = _typed_cube(str(tmp_path / "lowered"))
+    with spark_conf(spark, {OPEN_COST: "600000", "spark.sql.leafNodeDefaultParallelism": "4"}):
+        assert materialize(spark, path, ROI_A)["written"] == 27
+    assert _partition_ids_agree(spark, path) == {"dt-boolean": [4, 5], "dt-float": [4, 5, 9]}
+
+
+def test_partition_ids_agree_past_local_relation_threshold(spark, tmp_path):
+    """Past ``spark.sql.execution.arrow.localRelationThreshold`` PySpark
+    ships a plan group as a ``LogicalRDD`` with one partition per
+    ``maxRecordsPerBatch`` Arrow batch, not as a ``LocalTableScan``: the
+    slices follow the leaf Spark built. Float: batches of 5, 5, 5, 3
+    rows coalesced into 3 slices; bool: batches of 5, 4 into 2."""
+    path = _typed_cube(str(tmp_path / "cube"))
+    with spark_conf(spark, {
+        "spark.sql.execution.arrow.localRelationThreshold": "100",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "5",
+        OPEN_COST: "600000",
+    }):
+        assert materialize(spark, path, ROI_A)["written"] == 27
+    assert _partition_ids_agree(spark, path) == {"dt-boolean": [5, 4], "dt-float": [5, 5, 8]}
 
 
 def test_cold_fill_runs_two_jobs(spark, cube):

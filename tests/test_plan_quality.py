@@ -8,6 +8,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from smart_geocubes_spark.testing import spark_conf
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -399,10 +401,7 @@ def test_aqe_skew_join_splits_hot_partition(spark):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    old = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with spark_conf(spark, confs):
         left = spark.range(1000000).selectExpr(
             "CASE WHEN id % 10 < 9 THEN 0 ELSE id % 1000 END AS k",
             "repeat('x', 64) AS pad",
@@ -414,12 +413,6 @@ def test_aqe_skew_join_splits_hot_partition(spark):
         assert row.s is not None
         plan = plan_of(j)
         assert "skew=true" in plan, "AQE did not split the hot partition"
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_star_join_broadcasts_dimensions(spark):
@@ -458,10 +451,7 @@ def test_runtime_bloom_filter_prunes_big_side(spark, tmp_path):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    old = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with spark_conf(spark, confs):
         spark.range(2000000).selectExpr("id AS k", "id % 97 AS v").write.parquet(
             str(tmp_path / "big")
         )
@@ -473,12 +463,6 @@ def test_runtime_bloom_filter_prunes_big_side(spark, tmp_path):
         assert row["count"] > 0
         plan = plan_of(j)
         assert "might_contain" in plan, "runtime Bloom filter not injected"
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_host_quota_single_shuffle(spark):
