@@ -4,7 +4,7 @@ Builds a one-channel cube of ``side`` x ``side`` tiny chunks (2x2 px),
 fills it in two halves, compacts it ``compactions`` times (each
 compaction adds one committed lineage row per chunk, until a vacuum),
 then reads the whole extent and prints one line per phase: the
-lineage rows collected, the driver time of the collect, of the read
+lineage rows read, the driver time of that pyarrow read, of the read
 rule and of building ``load()``'s plan, the size of that plan's
 formatted description (what the SQL UI and the event log store), and
 the wall time of the block count. Run:
@@ -63,8 +63,8 @@ def main() -> None:
         tile_ids, _ = M._roi_tile_ids(grid, roi)
         for rep in range(2):  # the first pass warms the JVM
             t = time.perf_counter()
-            lin = M._lineage_rows(spark, path, tile_ids)
-            t_collect = time.perf_counter() - t
+            lin = M._lineage_rows(path, tile_ids)
+            t_read = time.perf_counter() - t
             t = time.perf_counter()
             vis = M._visible(lin)
             t_rule = time.perf_counter() - t
@@ -77,7 +77,7 @@ def main() -> None:
             t_count = time.perf_counter() - t
             print(
                 f"rep {rep} chunks {len(vis)} lineage_rows {len(lin)} "
-                f"collect_s {t_collect:.3f} rule_s {t_rule:.3f} "
+                f"lineage_read_s {t_read:.3f} rule_s {t_rule:.3f} "
                 f"load_plan_s {t_load:.3f} plan_desc_kb {len(desc) / 1024:.0f} "
                 f"count_s {t_count:.3f} blocks {n}"
             )

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from smart_geocubes_spark.geo.geobox import GeoBox, TileGrid
 from smart_geocubes_spark.plans.materialize import (
     CubeSpec,
-    _fill,
     add_channel as cube_add_channel,
     create_cube,
     event_durations,
@@ -193,13 +192,10 @@ class GeocubeAccessor:
                 )
         # the FILL still covers every channel (cache completeness —
         # reference downloads whole patches regardless of band slice);
-        # only the returned scan projects (band slicing, P4). A fill that
-        # committed nothing hands the read its lineage rows: one lineage
-        # collect per cached load, not two
-        _, lineage = _fill(self.spark, self.path, roi, toi)
+        # only the returned scan projects (band slicing, P4)
+        materialize(self.spark, self.path, roi, toi)
         df = load_blocks(
-            self.spark, self.path, roi, toi,
-            channels=channels, value_range=value_range, _lineage=lineage,
+            self.spark, self.path, roi, toi, channels=channels, value_range=value_range
         )
         return df.toPandas() if persist else df
 

@@ -29,9 +29,10 @@ Transactional model: each run writes under ``blocks/batch=<id>/``,
 then ``lineage/batch=<id>/``, then takes its commit ticket; a batch
 exists iff its ticket was taken (after its lineage _SUCCESS). Readers
 serve a block row only if its (chunk_key, batch_id) wins in committed
-lineage (resolved on the driver from one ROI-pruned lineage collect),
-so a job killed at any point before the ticket leaves invisible
-orphans and the next run redoes exactly the missing chunks — the same
+lineage (resolved on the driver from one ROI-pruned pyarrow read of
+the ticketed lineage dirs), so a job killed at any point before the
+ticket leaves invisible orphans and the next run redoes exactly the
+missing chunks — the same
 observable semantics as one icechunk commit per patch with
 ``loaded_patches`` replay (``backends/threaded.py:119-122``), with
 Spark's task-commit protocol replacing the hand-built retry machinery.
@@ -46,12 +47,15 @@ Scale notes (100 TB cube, 1000 executors):
   runs one Python task and writes one part file per leaf, and each
   file covers a contiguous tile_id range -> row-group min/max pruning
   on reads, no small-file blowup at high tile counts;
-- a fill and a read each collect the committed lineage rows pruned to
-  the ROI's tiles (pushed ``tile_id IN``) ONCE — bounded by the ROI's
-  chunk count x commits per chunk, never by the cube. The cache skip
-  diffs the pandas-built candidates against the keys (only a non-empty
-  plan becomes a Spark frame); a read applies the read rule in pandas
-  and filters its block scan by a literal IN list — no window or join;
+- a fill and a read each read the committed lineage rows of the ROI's
+  tiles ONCE, on the driver with ``pyarrow.dataset`` — no Spark job.
+  The filter's tile_id range guard skips every lineage row group whose
+  tile range misses the ROI (fills and compactions write lineage in
+  tile order), so the rows decoded are bounded by the ROI's chunk count
+  x commits per chunk, never by the cube. The cache skip diffs the
+  pandas-built candidates against the keys (only a non-empty plan
+  becomes a Spark frame); a read applies the read rule in pandas and
+  filters its block scan by a literal IN list — no window or join;
 - block generation is an Arrow ``mapInPandas`` producing whole chunk
   arrays — one task per plan slice, no Python row loop;
 - the kernel emits a per-chunk EVENT row alongside each block
@@ -76,6 +80,8 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -98,6 +104,11 @@ LINEAGE_SCHEMA = (
     # from "actually new content".
     "src_batch string"
 )
+# LINEAGE_SCHEMA for the driver-side pyarrow read (:func:`_lineage_rows`)
+LINEAGE_ARROW = pa.schema([
+    (n, {"string": pa.string(), "long": pa.int64(), "int": pa.int32()}[t])
+    for n, t in (f.split() for f in LINEAGE_SCHEMA.split(", "))
+])
 # per-chunk event rows emitted from inside the block-generation kernel;
 # t_start/t_end bound the Arrow batch that produced the chunk (batch
 # granularity — the vectorized analog of the reference's per-patch
@@ -736,16 +747,11 @@ def _missing(candidates: pd.DataFrame, lineage: pd.DataFrame) -> pd.DataFrame:
     return candidates[~candidates["chunk_key"].isin(set(lineage["chunk_key"]))]
 
 
-def _candidate_lineage(spark: SparkSession, path: str, candidates: pd.DataFrame) -> pd.DataFrame:
-    """:func:`_lineage_rows` of the ``candidates``' tiles."""
-    return _lineage_rows(spark, path, np.unique(candidates["tile_id"].to_numpy()).tolist())
-
-
 def plan_missing(spark: SparkSession, path: str, candidates: pd.DataFrame) -> pd.DataFrame:
     """The ``candidates`` rows whose chunk no committed batch holds:
-    :func:`_missing` against their lineage (one Spark job, none on an
-    empty cube or for no candidates)."""
-    return _missing(candidates, _candidate_lineage(spark, path, candidates))
+    :func:`_missing` against the lineage of their tiles — a driver-side
+    read, no Spark job (``spark`` is unused)."""
+    return _missing(candidates, _lineage_rows(path, candidates["tile_id"].unique().tolist()))
 
 
 def _gen_blocks_factory(
@@ -1000,22 +1006,6 @@ def materialize(
     between the block write and the lineage commit (for resume tests —
     the reference's kill-safety comes from icechunk commits; ours from
     lineage-gated visibility)."""
-    return _fill(spark, path, roi_bbox, toi_epochs, fail_after_blocks)[0]
-
-
-def _fill(
-    spark: SparkSession,
-    path: str,
-    roi_bbox,
-    toi_epochs: list[int] | None = None,
-    fail_after_blocks: bool = False,
-) -> tuple[dict, pd.DataFrame | None]:
-    """:func:`materialize`'s run, and the ROI's lineage rows when it
-    committed nothing: they are then still the ROI's committed state,
-    so the read that follows takes them (``load(..., _lineage=)``)
-    instead of collecting them again. After a commit it returns None:
-    that read collects afresh, after the ticket, so two concurrent fills
-    of one chunk still resolve by the min-batch_id rule."""
     spec = open_spec(path)
     batch_id = uuid.uuid4().hex[:12]
     # the "0"-prefixed batch-id namespace is RESERVED for compaction
@@ -1024,16 +1014,14 @@ def _fill(
         batch_id = uuid.uuid4().hex[:12]
     t0 = time.time()
 
-    cands = candidate_chunks(spec, roi_bbox, toi_epochs)
-    lineage = _candidate_lineage(spark, path, cands)
-    missing = _missing(cands, lineage)
+    missing = plan_missing(spark, path, candidate_chunks(spec, roi_bbox, toi_epochs))
     if missing.empty:
         # nothing committed under this id — returning it would hand
         # the caller a batch_id that snapshots()/as_of reject
         return {
             "batch_id": None, "written": 0, "skipped": "all cached",
             "sec": time.time() - t0,
-        }, lineage
+        }
     return _commit_batch(
         spark,
         path,
@@ -1045,7 +1033,7 @@ def _fill(
         ),
         t0,
         fail_after_blocks=fail_after_blocks,
-    ), None
+    )
 
 
 def materialize_patch(
@@ -1177,42 +1165,54 @@ def snapshots(path: str) -> list[dict]:
     return sorted(out, key=lambda r: r["seq"])
 
 
-def _roi_lineage(
-    spark: SparkSession,
+def _lineage_filter(
+    tile_ids: list[int],
+    channels: list[str] | None = None,
+    allowed: set[str] | None = None,
+    time_idxs: list[int] | None = None,
+) -> ds.Expression:
+    """The pyarrow filter of :func:`_lineage_rows`: the ROI's tiles —
+    and optionally ``channels``, the ``allowed`` batch ids of a snapshot
+    and the ``time_idxs`` of a TOI. The tile_id RANGE guard is what
+    prunes: pyarrow skips a row group by its min/max statistics for a
+    comparison, not for an ``is_in`` (Spark's reader turns a large IN
+    into a range itself)."""
+    tile = ds.field("tile_id")
+    f = (tile >= int(min(tile_ids))) & (tile <= int(max(tile_ids))) & tile.isin(tile_ids)
+    for col, keep in (("channel", channels), ("batch_id", allowed), ("time_idx", time_idxs)):
+        if keep is not None:
+            f &= ds.field(col).isin(sorted(keep))
+    return f
+
+
+def _lineage_rows(
     path: str,
     tile_ids: list[int],
     channels: list[str] | None = None,
     allowed: set[str] | None = None,
     time_idxs: list[int] | None = None,
-) -> DataFrame:
-    """Committed lineage pruned to an ROI's tiles — and optionally to
-    ``channels``, the ``allowed`` batch ids of a snapshot and the
-    ``time_idxs`` of a TOI. The IN filters are pushed to the lineage
-    parquet scan, so what :func:`_lineage_rows` collects is bounded by
-    the query, never by the cube: ROI chunks x commits per chunk."""
-    lin = read_lineage(spark, path).filter(_in_literal("tile_id", tile_ids))
-    if channels is not None:
-        lin = lin.filter(_in_literal("channel", channels))
-    if allowed is not None:
-        lin = lin.filter(_in_literal("batch_id", sorted(allowed)))
-    if time_idxs is not None:
-        lin = lin.filter(_in_literal("time_idx", time_idxs))
-    return lin
-
-
-def _lineage_rows(spark: SparkSession, path: str, tile_ids: list[int], *pruning) -> pd.DataFrame:
-    """THE lineage read of a fill or an ROI read: the committed
-    ``(chunk_key, batch_id, src_batch, time_idx, channel)`` rows of
-    ``_roi_lineage(spark, path, tile_ids, *pruning)`` in ONE collect,
-    and no Spark job on an empty cube or ROI. Raw rows (more than one
-    per chunk): a ``distinct()`` adds a job. ``time_idx`` and
-    ``channel`` let a read narrow rows collected for a wider query
-    (:func:`_roi_visible`) without parsing ``chunk_key``."""
-    cols = ["chunk_key", "batch_id", "src_batch", "time_idx", "channel"]
-    if not tile_ids or not _lineage_batches(path):
+) -> pd.DataFrame:
+    """THE lineage read of a fill, an ROI read, :func:`chunk_stats` and
+    :func:`load_changes`: the committed ``(chunk_key, batch_id,
+    src_batch)`` rows that pass :func:`_lineage_filter`, read on the
+    driver with ``pyarrow.dataset`` over the ticket-gated
+    :func:`_lineage_batches` — no Spark job. Only the row groups whose
+    tile range meets the ROI are decoded, so the read is bounded by the
+    query (ROI chunks x commits per chunk), not by the cube. Raw rows:
+    more than one per double-committed chunk.
+    Spark's ``_SUCCESS``, ``.crc`` and ``_covered.json`` files are
+    skipped by pyarrow's default ``ignore_prefixes``."""
+    cols = ["chunk_key", "batch_id", "src_batch"]
+    if not tile_ids:
         return pd.DataFrame(columns=cols)
-    lin = _roi_lineage(spark, path, tile_ids, *pruning).select(*cols)
-    return pd.DataFrame(lin.collect(), columns=cols)
+    # a union of one dataset per batch dir: ds.dataset() takes a list
+    # of FILES, not of directories
+    lineage = ds.dataset(
+        [ds.dataset(b, format="parquet", schema=LINEAGE_ARROW) for b in _lineage_batches(path)],
+        schema=LINEAGE_ARROW,
+    )
+    f = _lineage_filter(tile_ids, channels, allowed, time_idxs)
+    return lineage.to_table(columns=cols, filter=f).to_pandas()
 
 
 def _winners(lineage: DataFrame) -> DataFrame:
@@ -1234,28 +1234,6 @@ def _visible(lineage: pd.DataFrame) -> pd.DataFrame:
     return lineage.sort_values(["chunk_key", "batch_id"]).drop_duplicates("chunk_key")
 
 
-def _roi_visible(
-    spark: SparkSession,
-    path: str,
-    tile_ids: list[int],
-    channels: list[str] | None,
-    allowed: set[str] | None,
-    time_idxs: list[int] | None,
-    lineage: pd.DataFrame | None = None,
-) -> pd.DataFrame:
-    """THE visibility read of every ROI read: :func:`_visible` over the
-    ROI's lineage rows pruned to ``channels``, the ``allowed`` batches
-    of a snapshot and the ``time_idxs`` of a TOI — collected here, or
-    narrowed in pandas from ``lineage``, rows the caller already
-    collected for these tiles (a cached fill's, or load_changes')."""
-    if lineage is None:
-        return _visible(_lineage_rows(spark, path, tile_ids, channels, allowed, time_idxs))
-    for col, keep in (("channel", channels), ("batch_id", allowed), ("time_idx", time_idxs)):
-        if keep is not None:
-            lineage = lineage[lineage[col].isin(keep)]
-    return _visible(lineage)
-
-
 def _in_literal(expr: str, values) -> Column:
     """``expr IN (v, ...)`` in ONE JVM call: THE IN filter of the read
     path (``Column.isin`` pays a py4j round trip per value, ~0.35 ms).
@@ -1275,15 +1253,14 @@ def load(
     channels: list[str] | None = None,
     value_range: tuple[float, float] | None = None,
     stats_only: bool = False,
-    _lineage: pd.DataFrame | None = None,
 ) -> DataFrame:
     """ROI read: materialize() first for the reference's full load()
     semantics; this is the scan+crop step (snapshot = committed lineage
     only). Visibility is resolved on the driver (:func:`_lineage_rows`,
-    :func:`_visible`) and filters the pruned block scan as a literal IN
-    list: no lineage scan, window or join in the returned plan. Partition
-    pruning: blocks are filtered on tile_id membership (small set ->
-    pushed to parquet row groups).
+    :func:`_visible`: no Spark job) and filters the pruned block scan as
+    a literal IN list: no lineage scan, window or join in the returned
+    plan. Partition pruning: blocks are filtered on tile_id membership
+    (small set -> pushed to parquet row groups).
 
     ``value_range=(lo, hi)``: ZONE-MAP pruning — a metadata pass reads
     only the per-chunk (v_min, v_max, n_valid) columns (the block
@@ -1299,10 +1276,11 @@ def load(
     per visible chunk with its bounds) instead of block rows.
 
     ``channels``: band projection (P4, reference ``load(..., bands)``
-    slicing) — the IN filter is pushed to BOTH parquet scans (blocks
-    and lineage), so a 1-of-64-channel read scans and collects 1/64th
-    of the ROI's rows, not all of them. Unknown names raise (silently
-    returning nothing would read as "not filled yet").
+    slicing) — the IN filter reaches BOTH reads (pushed to the block
+    scan, and in the lineage read's filter), so a 1-of-64-channel read
+    scans and keeps 1/64th of the ROI's rows, not all of them. Unknown
+    names raise (silently returning nothing would read as "not filled
+    yet").
 
     ``roi_bbox`` may be a LIST of bboxes (the reference's GeoDataFrame
     batch branch, ``core/accessor.py:400-426``): ONE pruned scan over
@@ -1317,11 +1295,7 @@ def load(
     batch's commit, i.e. the cube exactly as a reader saw it then.
     Composes with compaction (a compacted batch commits LAST even
     though its id sorts first, so historical as-of views are
-    unchanged); vacuum bounds how far back travel reaches.
-
-    ``_lineage``: the ROI's :func:`_lineage_rows`, already collected by
-    the caller (a fill that committed nothing, or load_changes) — the
-    read narrows them in pandas instead of collecting them again."""
+    unchanged); vacuum bounds how far back travel reaches."""
     spec = open_spec(path)
     time_idxs = _toi_idxs(spec, toi_epochs)
     if channels is not None:
@@ -1352,7 +1326,7 @@ def load(
     # retries, backends/threaded.py:85-99); we resolve it at read:
     # exactly one winning batch per chunk_key. Read BEFORE the block
     # listing: a batch's blocks land before its ticket.
-    vis = _roi_visible(spark, path, tile_ids, channels, allowed, time_idxs, _lineage)
+    vis = _visible(_lineage_rows(path, tile_ids, channels, allowed, time_idxs))
     stats_schema = BLOCK_SCHEMA.replace("block array<double>", STATS_COLS)
 
     def _pruned(df: DataFrame, tile_ids: list[int], vis: pd.DataFrame) -> DataFrame:
@@ -1488,15 +1462,17 @@ def load_changes(
     carries ``src_batch`` through, so it reports ZERO changes; a patch
     merge stamps its own id, so it reports exactly its footprint. New
     chunks (no winner at the snapshot) always report. The winners now
-    and at the snapshot come from one ROI-pruned lineage collect, which
-    :func:`load` reuses; the changed keys filter its result as a
-    literal IN list."""
+    and at the snapshot come from one ROI-pruned lineage read, and the
+    blocks from ``load(..., as_of_batch=<latest>)``: both resolve
+    against the commit prefix listed once up front, so a commit that
+    lands in between is invisible to both. The changed keys filter the
+    blocks as a literal IN list."""
     ids = [s["batch_id"] for s in snapshots(path)]
     if since_batch not in ids:
         raise ValueError(f"unknown snapshot {since_batch!r}; committed: {ids}")
     spec = open_spec(path)
     tile_ids, _ = _roi_tile_ids(spec.grid, roi_bbox)
-    lin = _lineage_rows(spark, path, tile_ids, channels, None, _toi_idxs(spec, toi_epochs))
+    lin = _lineage_rows(path, tile_ids, channels, set(ids), _toi_idxs(spec, toi_epochs))
     then = _visible(lin[lin["batch_id"].isin(ids[: ids.index(since_batch) + 1])])
     old_src = dict(zip(then["chunk_key"], then["src_batch"]))
     now = _visible(lin)
@@ -1504,9 +1480,9 @@ def load_changes(
         k for k, src in zip(now["chunk_key"], now["src_batch"])
         if k not in old_src or old_src[k] != src
     ]
-    return load(spark, path, roi_bbox, toi_epochs, channels=channels, _lineage=lin).filter(
-        _in_literal("chunk_key", changed)
-    )
+    return load(
+        spark, path, roi_bbox, toi_epochs, as_of_batch=ids[-1], channels=channels
+    ).filter(_in_literal("chunk_key", changed))
 
 
 # ---------------------------------------------------------------------------
@@ -1823,10 +1799,10 @@ def compact(spark: SparkSession, path: str) -> dict:
         # provenance survives the verbatim rewrite (src_batch carried
         # as is): CDC must see "same content" across a compaction
         winners.withColumn("batch_id", F.lit(new_id))
-        .select(
-            "chunk_key", "tile_id", "time_idx", "channel",
-            "batch_id", "partition_id", "n_rows", "n_bytes", "src_batch",
-        )
+        .select(*_names(LINEAGE_SCHEMA))
+        # in tile order, like a fill's: each file (and row group) covers
+        # its own tile range, which the driver read's range guard prunes
+        .orderBy("tile_id", "time_idx", "channel")
     )
     new_lineage.write.mode("overwrite").parquet(
         os.path.join(path, "lineage", f"batch={new_id}")

@@ -507,21 +507,20 @@ def test_plan_missing_antijoin(spark, cube):
     assert not keys & done
 
 
-def test_cached_fill_runs_one_lineage_job(spark, cube):
+def test_cached_fill_runs_no_job(spark, cube):
     """The cache skip is planned on the driver: a fill's per-channel
-    counts come off the pandas plan (no count job), and a fully cached
-    fill costs at most the one ROI-pruned lineage key collect."""
+    counts come off the pandas plan (no count job) and its lineage is a
+    driver-side pyarrow read, so no fill runs a collect job and a fully
+    cached fill runs no Spark job at all."""
     with spark_jobs(spark) as cold:
         assert materialize(spark, cube, ROI_A)["written"] == 18
-    # an empty cube has no lineage to collect: no collect job at all
     assert not [j for j in cold if any(n.startswith("collect at ") for n in j)], cold
     with spark_jobs(spark) as partial:
         assert materialize(spark, cube, ROI_B)["written"] == 16
-    # one lineage collect, no count on top of it
-    assert len([j for j in partial if any(n.startswith("collect at ") for n in j)]) == 1, partial
+    assert not [j for j in partial if any(n.startswith("collect at ") for n in j)], partial
     with spark_jobs(spark) as cached:
         assert materialize(spark, cube, ROI_A)["skipped"] == "all cached"
-    assert len(cached) <= 1, cached
+    assert cached == [], cached
 
 
 @pytest.mark.parametrize("kind", ["atemporal", "temporal_toi", "arcticdem_like"])
@@ -663,6 +662,46 @@ def test_read_rule_min_batch_wins_on_every_read(spark, cube, monkeypatch, later_
         served(changes, second)
 
 
+def test_load_changes_reads_one_snapshot(spark, cube, monkeypatch):
+    """load_changes resolves its change set and the blocks it serves
+    against ONE commit prefix: a commit landing between its lineage
+    read and its block read — a forced re-commit of the ROI under a
+    smaller batch id, which wins every chunk from then on — changes
+    nothing it returns."""
+    import types
+
+    import smart_geocubes_spark.plans.materialize as M
+    from smart_geocubes_spark.plans.materialize import load_changes
+
+    def served(df):
+        return sorted((r.chunk_key, r.batch_id) for r in df.select("chunk_key", "batch_id").collect())
+
+    ids = iter(h * 12 + "0" * 20 for h in "cda")
+    with monkeypatch.context() as mp:
+        mp.setattr(M, "uuid", types.SimpleNamespace(uuid4=lambda: types.SimpleNamespace(hex=next(ids))))
+        first = materialize(spark, cube, (2.3, 16.2, 3.8, 17.9))["batch_id"]  # 4 of ROI_A's tiles
+        assert materialize(spark, cube, ROI_A)["written"] == 10
+        want = served(load_changes(spark, cube, ROI_A, first))
+        assert len(want) == 10 and {b for _, b in want} == {"d" * 12}
+
+        real, raced = M._lineage_rows, []
+
+        def racing(*a, **k):
+            rows = real(*a, **k)
+            if not raced:  # once, and not again for its own fill
+                raced.append(True)
+                with monkeypatch.context() as inner:
+                    inner.setattr(M, "_missing", lambda candidates, lineage: candidates)
+                    assert materialize(spark, cube, ROI_A)["batch_id"] == "a" * 12
+            return rows
+
+        mp.setattr(M, "_lineage_rows", racing)
+        got = served(load_changes(spark, cube, ROI_A, first))
+    assert raced  # the re-commit did land mid-read
+    assert got == want
+    assert {b for _, b in served(load(spark, cube, ROI_A))} == {"a" * 12}
+
+
 def test_in_literal_quotes_values(spark):
     """The read path's literal IN list matches values with SQL quote
     and escape characters verbatim (channel names are free-form), keeps
@@ -683,48 +722,21 @@ def test_in_literal_quotes_values(spark):
         assert sorted(r.n for r in got) == [3, 7], typ
 
 
-def test_cached_accessor_load_runs_two_jobs(spark, tmp_path):
-    """A cached ``accessor.load(persist=True)`` is two Spark jobs: the
-    fill's lineage collect, which the read reuses, and the block
-    collect — no second lineage collect, no winner window, broadcast or
-    checkpoint job. A ``value_range`` read narrows its survivors in
-    Python: no localCheckpoint."""
+def test_cached_accessor_load_runs_one_job(spark, tmp_path):
+    """A cached ``accessor.load(persist=True)`` is one Spark job, the
+    block collect: the fill's cache skip and the read's visibility both
+    read lineage on the driver — no lineage collect, winner window,
+    broadcast or checkpoint job. A ``value_range`` read narrows its
+    survivors in Python: no localCheckpoint."""
     acc = arcticdem_like(spark, str(tmp_path / "c"))
     acc.create()
     n = len(acc.load(ROI_POLAR, persist=True))
     with spark_jobs(spark) as cached:
         assert len(acc.load(ROI_POLAR, persist=True)) == n
-    assert len(cached) <= 2, cached
+    assert len(cached) <= 1, cached
     with spark_jobs(spark) as ranged:
         assert len(acc.load(ROI_POLAR, persist=True, value_range=(-1e12, 1e12))) == n
     assert not [j for j in ranged if any(s.startswith("localCheckpoint") for s in j)], ranged
-
-
-def test_shared_lineage_read_matches_own_collect(spark, tmp_path):
-    """A read handed the ROI's unpruned lineage rows (a cached fill's)
-    narrows them by channel, TOI and snapshot in pandas to exactly what
-    its own pruned collect serves."""
-    from smart_geocubes_spark.plans.materialize import _fill, _lineage_rows, _roi_tile_ids
-
-    path = str(tmp_path / "cube")
-    epochs = (1577836800, 1609459200)
-    create_cube(path, CubeSpec(grid=SMALL_GRID, channels=("dem", "slope"), time_epochs=epochs))
-    first = materialize(spark, path, ROI_A, [epochs[0]])["batch_id"]
-    materialize(spark, path, ROI_A)
-    m, rows = _fill(spark, path, ROI_A)
-    assert m["written"] == 0 and len(rows) == 36  # 9 tiles x 2 steps x 2 channels
-    tile_ids = _roi_tile_ids(SMALL_GRID, ROI_A)[0]
-    assert sorted(rows["chunk_key"]) == sorted(_lineage_rows(spark, path, tile_ids)["chunk_key"])
-
-    def served(df):
-        return sorted((r.chunk_key, r.batch_id) for r in df.select("chunk_key", "batch_id").collect())
-
-    for kw in ({}, {"channels": ["slope"]}, {"toi_epochs": [epochs[1]]}, {"as_of_batch": first}):
-        own = served(load(spark, path, ROI_A, **kw))
-        assert own and served(load(spark, path, ROI_A, _lineage=rows, **kw)) == own, kw
-    # a fill that commits hands nothing on: the read collects after its ticket
-    m, rows = _fill(spark, path, (6.3, 15.2, 6.8, 15.9))
-    assert m["written"] == 4 and rows is None
 
 
 def test_vacuum_never_deletes_unvouched_shadowed_batch(spark, cube):
@@ -911,6 +923,48 @@ class TestAddChannel:
         assert before == after and len(before) == 27
 
 
+def test_compacted_lineage_is_in_tile_order(spark, cube):
+    """compact() writes its lineage in tile_id order, like a fill: read
+    in file-name and row order, tile_id never decreases, so each file
+    and row group covers its own tile range for the driver read's range
+    guard to prune (the winner window's chunk_key order puts tile_y 10
+    before tile_y 7)."""
+    import pyarrow.parquet as pq
+
+    from smart_geocubes_spark.plans.materialize import compact
+
+    materialize(spark, cube, (2.3, 7.2, 3.8, 12.9))  # tx 2..3, ty 7..12
+    materialize(spark, cube, (4.3, 7.2, 5.8, 12.9))  # tx 4..5, ty 7..12
+    bid = compact(spark, cube)["batch_id"]
+    files = sorted(glob.glob(os.path.join(cube, "lineage", f"batch={bid}", "*.parquet")))
+    tiles = [t for f in files for t in pq.read_table(f, columns=["tile_id"])["tile_id"].to_pylist()]
+    assert len(tiles) == 48
+    assert tiles == sorted(tiles)
+
+
+def test_lineage_read_prunes_other_batches_row_groups(spark, cube, monkeypatch):
+    """An ROI read's lineage filter skips every row group of a batch
+    whose tiles lie outside the ROI's tile range: pyarrow prunes by
+    row-group statistics on the range guard, not on an ``is_in``."""
+    import pyarrow.dataset as ds
+
+    from smart_geocubes_spark.plans.materialize import LINEAGE_ARROW
+    from tests.test_plan_quality import _lineage_filters
+
+    far_roi = (2.3, 7.2, 4.8, 9.9)  # tx 2..4, ty 10..12: tile ids 202..244
+    near = materialize(spark, cube, ROI_A)["batch_id"]  # tile ids 42..84
+    far = materialize(spark, cube, far_roi)["batch_id"]
+
+    def row_groups(batch, f):
+        d = ds.dataset(os.path.join(cube, "lineage", f"batch={batch}"), format="parquet", schema=LINEAGE_ARROW)
+        return [rg for frag in d.get_fragments() for rg in frag.split_by_row_group(filter=f)]
+
+    _, (f,) = _lineage_filters(monkeypatch, lambda: load(spark, cube, ROI_A))
+    assert row_groups(near, f) and not row_groups(far, f)
+    _, (f,) = _lineage_filters(monkeypatch, lambda: load(spark, cube, far_roi))
+    assert row_groups(far, f) and not row_groups(near, f)
+
+
 class TestChannelProjection:
     def test_load_channels_filters_and_raises(self, spark, cube):
         materialize(spark, cube, ROI_A)
@@ -921,24 +975,23 @@ class TestChannelProjection:
             load(spark, cube, ROI_A, channels=["nope"])
 
     def test_channel_filter_pushed_to_both_scans(self, spark, cube, monkeypatch):
-        """The channel IN filter reaches both parquet scans of a read:
-        the lineage read that load() collects to resolve visibility on
-        the driver, and the block scan — the only scan in load()'s
-        returned plan."""
+        """The channel IN filter reaches both reads of a load: the
+        driver-side lineage read that resolves visibility, and the block
+        scan — the only scan in load()'s returned plan."""
         from tests.test_plan_quality import (
-            _assert_lineage_pushes,
+            _assert_lineage_filters,
             _assert_no_visibility_subplan,
-            _lineage_plans,
+            _lineage_filters,
             _pushed,
             plan_of,
         )
 
         materialize(spark, cube, ROI_A)
-        df, lplans = _lineage_plans(monkeypatch, lambda: load(spark, cube, ROI_A, channels=["dem"]))
+        df, filters = _lineage_filters(monkeypatch, lambda: load(spark, cube, ROI_A, channels=["dem"]))
         plan = plan_of(df)
         assert len(_pushed(plan, "channel")) == 1, plan
         _assert_no_visibility_subplan(plan)
-        _assert_lineage_pushes(lplans, "tile_id", "channel")
+        _assert_lineage_filters(filters, "tile_id", "channel")
 
 
 class TestPolygonROI:

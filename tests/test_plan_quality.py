@@ -250,26 +250,27 @@ def _pushed(plan: str, col: str) -> list[str]:
     return [s for s in pushed if col in s.split("]", 1)[0]]
 
 
-def _lineage_plans(monkeypatch, read):
-    """Run ``read()`` with ``_roi_lineage`` wrapped: its result, and the
-    executed plans of the lineage frames it built — the lineage read
-    that load() really collects, with the pruning it really passes."""
+def _lineage_filters(monkeypatch, read):
+    """Run ``read()`` with ``_lineage_filter`` wrapped: its result, and
+    the pyarrow filters that the driver-side lineage reads it ran hand
+    to ``Dataset.to_table`` — the pruning they really pass."""
     import smart_geocubes_spark.plans.materialize as M
 
-    frames, real = [], M._roi_lineage
+    filters, real = [], M._lineage_filter
     with monkeypatch.context() as mp:
-        mp.setattr(M, "_roi_lineage", lambda *a, **k: frames.append(real(*a, **k)) or frames[-1])
+        mp.setattr(M, "_lineage_filter", lambda *a, **k: filters.append(real(*a, **k)) or filters[-1])
         out = read()
-    return out, [plan_of(f) for f in frames]
+    return out, filters
 
 
-def _assert_lineage_pushes(plans: list[str], *cols: str) -> None:
-    """Each recorded lineage read scans lineage and pushes ``cols``."""
-    assert plans, "no lineage read recorded"
-    for lplan in plans:
-        assert _LINEAGE_SCAN in lplan, lplan
+def _assert_lineage_filters(filters: list, *cols: str) -> None:
+    """Each recorded lineage read keeps the tile_id range guard, which
+    is what prunes row groups, and an ``is_in`` on each of ``cols``."""
+    assert filters, "no lineage read recorded"
+    for f in map(str, filters):
+        assert "(tile_id >= " in f and "(tile_id <= " in f, f
         for col in cols:
-            assert _pushed(lplan, col), (col, lplan)
+            assert f"is_in({col}," in f, (col, f)
 
 
 def _assert_no_visibility_subplan(plan: str) -> None:
@@ -282,11 +283,12 @@ def _assert_no_visibility_subplan(plan: str) -> None:
 
 def test_load_prunes_lineage_before_broadcast(spark, tmp_path, monkeypatch):
     """load()'s visibility read must read only the ROI's lineage rows:
-    the tile_id IN filter is pushed to the lineage parquet scan that
-    load() collects, so the collected set is bounded by the query, not
-    the cube — and to the block scan, the only scan left in load()'s
-    returned plan. A snapshot read of a temporal cube also pushes its
-    channels, allowed batch ids and TOI steps to that lineage read."""
+    the driver-side lineage read filters on the ROI's tile_id range and
+    set, so what it decodes is bounded by the query, not the cube — and
+    the tile_id IN filter is pushed to the block scan, the only scan
+    left in load()'s returned plan. A snapshot read of a temporal cube
+    also filters its lineage read on its channels, allowed batch ids
+    and TOI steps."""
     from smart_geocubes_spark.plans.materialize import (
         CubeSpec,
         create_cube,
@@ -299,17 +301,17 @@ def test_load_prunes_lineage_before_broadcast(spark, tmp_path, monkeypatch):
     epochs = (1577836800, 1609459200)
     create_cube(path, CubeSpec(grid=SMALL_GRID, channels=("dem", "slope"), time_epochs=epochs))
     bid = materialize(spark, path, ROI_A)["batch_id"]
-    df, lplans = _lineage_plans(monkeypatch, lambda: load(spark, path, ROI_A))
-    assert len(lplans) == 1
-    _assert_lineage_pushes(lplans, "tile_id")
+    df, filters = _lineage_filters(monkeypatch, lambda: load(spark, path, ROI_A))
+    assert len(filters) == 1
+    _assert_lineage_filters(filters, "tile_id")
     plan = plan_of(df)
     _assert_no_visibility_subplan(plan)
     assert len(_pushed(plan, "tile_id")) == 1, plan
-    _, lplans = _lineage_plans(
+    _, filters = _lineage_filters(
         monkeypatch,
         lambda: load(spark, path, ROI_A, toi_epochs=[epochs[1]], as_of_batch=bid, channels=["dem"]),
     )
-    _assert_lineage_pushes(lplans, "tile_id", "channel", "batch_id", "time_idx")
+    _assert_lineage_filters(filters, "tile_id", "channel", "batch_id", "time_idx")
 
 
 def test_ann_ivf_big_side_is_projection(spark):
@@ -728,7 +730,7 @@ def test_typed_load_prunes_every_dtype_leaf(spark, tmp_path, monkeypatch):
                  time_epochs=None),
     )
     materialize(spark, path, (2.3, 15.2, 4.8, 17.9))
-    df, lplans = _lineage_plans(
+    df, filters = _lineage_filters(
         monkeypatch, lambda: load(spark, path, (2.3, 15.2, 4.8, 17.9), channels=["dem"])
     )
     plan = df._sc._jvm.PythonSQLUtils.explainString(
@@ -739,11 +741,11 @@ def test_typed_load_prunes_every_dtype_leaf(spark, tmp_path, monkeypatch):
     assert "dt-float" in plan and "array<float>" in plan
     assert "dt-boolean" not in plan and "array<boolean>" not in plan
     assert "Union" not in plan
-    # (b) pushdown into the surviving leaf scan and into the lineage
-    # read that resolved its visibility (which is not in load()'s plan)
+    # (b) pushdown into the surviving leaf scan, and the channel filter
+    # in the driver-side lineage read that resolved its visibility
     assert len(_pushed(plan, "channel")) == 1, plan
     _assert_no_visibility_subplan(plan)
-    _assert_lineage_pushes(lplans, "tile_id", "channel")
+    _assert_lineage_filters(filters, "tile_id", "channel")
     # both-group read keeps the per-leaf typed schemas under one union
     both = load(spark, path, (2.3, 15.2, 4.8, 17.9))
     bplan = both._sc._jvm.PythonSQLUtils.explainString(
