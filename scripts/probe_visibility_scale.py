@@ -6,8 +6,11 @@ compaction adds one committed lineage row per chunk, until a vacuum),
 then reads the whole extent and prints one line per phase: the
 lineage rows read, the driver time of that pyarrow read, of the read
 rule and of building ``load()``'s plan, the size of that plan's
-formatted description (what the SQL UI and the event log store), and
-the wall time of the block count. Run:
+formatted description (what the SQL UI and the event log store), the
+wall time of the block count, and the wall and CPU time of the same
+read rendered on the driver (``load_local``, the read behind
+``accessor.load(persist=True)``; CPU is this process's, and the read
+runs in it). Run:
 
     python scripts/probe_visibility_scale.py --side 100 --compactions 1
 """
@@ -75,11 +78,15 @@ def main() -> None:
             t = time.perf_counter()
             n = df.count()
             t_count = time.perf_counter() - t
+            t, cpu = time.perf_counter(), time.process_time()
+            n_local = len(M.load_local(path, roi))
+            t_local, cpu_local = time.perf_counter() - t, time.process_time() - cpu
             print(
                 f"rep {rep} chunks {len(vis)} lineage_rows {len(lin)} "
                 f"lineage_read_s {t_read:.3f} rule_s {t_rule:.3f} "
                 f"load_plan_s {t_load:.3f} plan_desc_kb {len(desc) / 1024:.0f} "
-                f"count_s {t_count:.3f} blocks {n}"
+                f"count_s {t_count:.3f} blocks {n} "
+                f"local_read_s {t_local:.3f} local_read_cpu_s {cpu_local:.3f} local_rows {n_local}"
             )
     spark.stop()
 

@@ -10,7 +10,7 @@ EPSG:4326 — scaled-down pixel counts, identical math shape).
 
 Reference -> engine mapping:
   load(aoi, toi, persist, create)    -> GeocubeAccessor.load (materialize
-                                        + pruned scan; persist => toPandas)
+                                        + pruned scan; persist => driver read)
   procedural_download                -> GeocubeAccessor.fill (idempotent)
   loaded_patches (zarr attrs)        -> lineage chunk keys
   current_state                      -> lineage join tile bounds
@@ -34,6 +34,7 @@ from smart_geocubes_spark.plans.materialize import (
     create_cube,
     event_durations,
     load as load_blocks,
+    load_local,
     materialize,
     materialize_patch,
     open_spec,
@@ -160,8 +161,10 @@ class GeocubeAccessor:
     ) -> DataFrame | pd.DataFrame:
         """The flagship four-step query (docs/how_it_works.md:48-53):
         intersect -> download new -> store -> return ROI slice.
-        ``persist=True`` materializes driver-side (xarray-load analog);
-        otherwise the lazy DataFrame is the dask-lazy view.
+        ``persist=True`` reads the crop on the driver with pyarrow
+        (xarray-load analog; plans.materialize.load_local) and returns
+        the pandas frame ``load(...).toPandas()`` would, without a Spark
+        job; otherwise the lazy Spark DataFrame is the dask-lazy view.
 
         ``roi`` may be a LIST of bboxes (reference GeoDataFrame branch,
         core/accessor.py:400-426): ONE fill job covering the deduped
@@ -194,10 +197,11 @@ class GeocubeAccessor:
         # reference downloads whole patches regardless of band slice);
         # only the returned scan projects (band slicing, P4)
         materialize(self.spark, self.path, roi, toi)
-        df = load_blocks(
+        if persist:
+            return load_local(self.path, roi, toi, channels=channels, value_range=value_range)
+        return load_blocks(
             self.spark, self.path, roi, toi, channels=channels, value_range=value_range
         )
-        return df.toPandas() if persist else df
 
     def chunk_stats(
         self,

@@ -55,7 +55,11 @@ Scale notes (100 TB cube, 1000 executors):
   x commits per chunk, never by the cube. The cache skip diffs the
   pandas-built candidates against the keys (only a non-empty plan
   becomes a Spark frame); a read applies the read rule in pandas and
-  filters its block scan by a literal IN list — no window or join;
+  filters its block scan by a literal IN list — no window or join. The
+  lazy read (:func:`load`) is that Spark scan; a persisted read
+  (:func:`load_local`) renders the same plan as a pyarrow read of the
+  winning leaves on the driver, and a fill writes its lineage rows
+  with pyarrow: a cached persisted load runs no Spark job;
 - block generation is an Arrow ``mapInPandas`` producing whole chunk
   arrays — one task per plan slice, no Python row loop;
 - the kernel emits a per-chunk EVENT row alongside each block
@@ -73,6 +77,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from collections.abc import Iterator
@@ -82,6 +87,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -104,11 +110,6 @@ LINEAGE_SCHEMA = (
     # from "actually new content".
     "src_batch string"
 )
-# LINEAGE_SCHEMA for the driver-side pyarrow read (:func:`_lineage_rows`)
-LINEAGE_ARROW = pa.schema([
-    (n, {"string": pa.string(), "long": pa.int64(), "int": pa.int32()}[t])
-    for n, t in (f.split() for f in LINEAGE_SCHEMA.split(", "))
-])
 # per-chunk event rows emitted from inside the block-generation kernel;
 # t_start/t_end bound the Arrow batch that produced the chunk (batch
 # granularity — the vectorized analog of the reference's per-patch
@@ -166,6 +167,26 @@ _ELEM_NBYTES = {"double": 8, "float": 4, "smallint": 2, "boolean": 1}
 def _names(ddl: str) -> list[str]:
     """The column names of a flat DDL schema string, in order."""
     return [f.split()[0] for f in ddl.split(", ")]
+
+
+_ARROW_TYPES = {
+    "string": pa.string(), "long": pa.int64(), "int": pa.int32(), "double": pa.float64(),
+    "float": pa.float32(), "smallint": pa.int16(), "boolean": pa.bool_(),
+}
+
+
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """A flat DDL schema string as the pyarrow schema of its parquet
+    columns (``array<elem>`` -> ``list<elem>``), for driver-side reads
+    and writes of the store."""
+
+    def typ(t: str) -> pa.DataType:
+        return pa.list_(typ(t[6:-1])) if t.startswith("array<") else _ARROW_TYPES[t]
+
+    return pa.schema([(n, typ(t)) for n, t in (f.split() for f in ddl.split(", "))])
+
+
+LINEAGE_ARROW = _arrow_schema(LINEAGE_SCHEMA)
 
 
 def _typed_schema(base: str, elem: str) -> str:
@@ -673,10 +694,19 @@ def _roi_tile_ids(grid: TileGrid, roi) -> tuple[list[int], list[tuple[int, int]]
 
 def _chunk_key():
     """THE chunk identity column, ``<time_idx>-<tile_y>-<tile_x>-<channel>``.
-    :func:`candidate_chunks` builds the same string on the driver; the
-    two must stay byte-equal or a fill's chunks never match its reads."""
+    :func:`_chunk_keys` builds the same string on the driver; the two
+    must stay byte-equal or a fill's chunks never match its reads."""
     return F.concat_ws(
         "-", F.col("time_idx"), F.col("tile_y"), F.col("tile_x"), F.col("channel")
+    )
+
+
+def _chunk_keys(rows: pd.DataFrame) -> pd.Series:
+    """:func:`_chunk_key` on the driver, over pandas rows: the keys of
+    :func:`candidate_chunks` and of :func:`load_local`'s block rows."""
+    return (
+        rows["time_idx"].astype(str) + "-" + rows["tile_y"].astype(str) + "-"
+        + rows["tile_x"].astype(str) + "-" + rows["channel"]
     )
 
 
@@ -712,7 +742,7 @@ def candidate_chunks(
     ``accessors/gee.py:109-112``; temporal cross product
     ``accessors/gee.py:128-143``) as driver-side :data:`PLAN_SCHEMA`
     rows — the plan is metadata-sized, so it never costs a Spark job.
-    ``chunk_key`` is built to equal :func:`_chunk_key`'s ``concat_ws``.
+    ``chunk_key`` is :func:`_chunk_keys`, equal to :func:`_chunk_key`.
 
     ``roi_bbox`` takes every :func:`_roi_items` spelling — bbox,
     polygon (WKT or vertex pairs), or a list of them (the reference's
@@ -733,10 +763,7 @@ def candidate_chunks(
         "time_idx": np.tile(np.repeat(np.array(idxs, dtype=np.int32), n_c), len(tile_ids)),
         "channel": np.tile(np.array(spec.channels, dtype=object), len(tile_ids) * n_t),
     })
-    plan["chunk_key"] = (
-        plan["time_idx"].astype(str) + "-" + plan["tile_y"].astype(str) + "-"
-        + plan["tile_x"].astype(str) + "-" + plan["channel"]
-    )
+    plan["chunk_key"] = _chunk_keys(plan)
     return plan
 
 
@@ -928,6 +955,40 @@ def _write_blocks(
     open(os.path.join(block_dir, "_SUCCESS"), "w").close()
 
 
+# Spark's size estimate of a lineage row: 8 B + each column's default
+# size (20 B a string, 8 a long, 4 an int)
+_LINEAGE_ROW_BYTES = 8 + sum(
+    {"string": 20, "long": 8, "int": 4}[f.split()[1]] for f in LINEAGE_SCHEMA.split(", ")
+)
+
+
+def _write_lineage(spark: SparkSession, path: str, batch_id: str, lin: pd.DataFrame) -> None:
+    """Write a batch's lineage rows under ``lineage/batch=<id>/`` with
+    ``pyarrow.parquet`` — no Spark job: the rows are a few KB of pandas
+    on the driver — then its ``_SUCCESS``, which :func:`_lineage_batches`
+    requires, so a crash before it leaves the batch invisible. Rows go
+    in tile order, so each file and row group covers its own tile range
+    for :func:`_lineage_filter`'s range guard. The file count is the
+    kernel's byte rule (:func:`_open_costs`) on the rows' Spark-estimated
+    size: one file below ~3.5*10^4 rows. Physical types follow
+    :data:`LINEAGE_ARROW`, so Spark reads the files back under
+    :data:`LINEAGE_SCHEMA` (``time_idx`` int32)."""
+    d = os.path.join(path, "lineage", f"batch={batch_id}")
+    shutil.rmtree(d, ignore_errors=True)  # overwrite, as a Spark write would
+    os.makedirs(d)
+    table = pa.Table.from_pandas(
+        lin.sort_values(["tile_id", "time_idx", "channel"])[LINEAGE_ARROW.names],
+        schema=LINEAGE_ARROW,
+        preserve_index=False,
+    )
+    n = table.num_rows
+    k = min(n, _open_costs(spark, _LINEAGE_ROW_BYTES * n))
+    for i in range(k):
+        lo, hi = i * n // k, (i + 1) * n // k
+        pq.write_table(table.slice(lo, hi - lo), os.path.join(d, f"part-{i:05d}-{batch_id}.snappy.parquet"))
+    open(os.path.join(d, "_SUCCESS"), "w").close()
+
+
 def _commit_batch(
     spark: SparkSession,
     path: str,
@@ -968,16 +1029,7 @@ def _commit_batch(
         [g.assign(n_rows=1, n_bytes=_ELEM_NBYTES[e] * n_px) for e, (g, _) in groups.items()],
         ignore_index=True,
     ).assign(src_batch=batch_id)
-    lin_frame = local_frame(spark, lin[_names(LINEAGE_SCHEMA)], LINEAGE_SCHEMA)
-    # the kernel's byte rule on the lineage rows' own size (Spark's
-    # estimate of the leaf, 120 B a row): one file below ~3.5*10^4
-    # chunks. Their partition_id is data, so the file count need not
-    # follow the kernel slices; capped by the row count because a
-    # LogicalRDD leaf estimates Long.MaxValue bytes
-    size = lin_frame._jdf.queryExecution().analyzed().stats().sizeInBytes()
-    lin_frame.coalesce(min(len(lin), _open_costs(spark, size))).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "lineage", f"batch={batch_id}"))
+    _write_lineage(spark, path, batch_id, lin)
     _allocate_commit_seq(path, batch_id)  # THE commit point (atomic ticket)
 
     metrics = {
@@ -1171,7 +1223,8 @@ def _lineage_filter(
     allowed: set[str] | None = None,
     time_idxs: list[int] | None = None,
 ) -> ds.Expression:
-    """The pyarrow filter of :func:`_lineage_rows`: the ROI's tiles —
+    """The pyarrow filter of :func:`_lineage_rows` and of
+    :func:`load_local`'s block read: the ROI's tiles —
     and optionally ``channels``, the ``allowed`` batch ids of a snapshot
     and the ``time_idxs`` of a TOI. The tile_id RANGE guard is what
     prunes: pyarrow skips a row group by its min/max statistics for a
@@ -1244,6 +1297,77 @@ def _in_literal(expr: str, values) -> Column:
     return F.expr(f"{expr} IN ({', '.join(vals)})") if vals else F.lit(False)
 
 
+@dataclass(frozen=True)
+class _ReadPlan:
+    """What an ROI read resolves before it reads a block: the TOI
+    steps, the ROI's tiles (and ``(tile_id, roi_idx)`` pairs for a
+    batch ROI list), the visible ``(chunk_key, batch_id, src_batch)``
+    rows, and the ``dt-<elem>`` leaf dirs of the batches that win a
+    chunk. :func:`load` renders it as a Spark scan, :func:`load_local`
+    as a driver read."""
+
+    time_idxs: list[int] | None
+    tile_ids: list[int]
+    roi_pairs: list[tuple[int, int]] | None
+    vis: pd.DataFrame
+    leafs: dict[str, list[str]]
+
+
+def _read_plan(
+    path: str,
+    roi_bbox,
+    toi_epochs: list[int] | None,
+    as_of_batch: str | None,
+    channels: list[str] | None,
+) -> _ReadPlan:
+    """THE read plan of :func:`load` and :func:`load_local` — spec and
+    channel checks, snapshot prefix, ROI tiles, lineage read and read
+    rule, winning leaves and their channel-group pruning — computed on
+    the driver, no Spark job."""
+    spec = open_spec(path)
+    time_idxs = _toi_idxs(spec, toi_epochs)
+    if channels is not None:
+        if not channels:
+            # an explicitly EMPTY projection is a caller bug — silently
+            # returning 0 rows would read as "not filled yet", the very
+            # trap the unknown-name check below exists to prevent
+            raise ValueError("channels=[] — pass None to read every channel")
+        unknown = [c for c in channels if c not in spec.channels]
+        if unknown:
+            raise ValueError(
+                f"unknown channels {unknown}; cube has {list(spec.channels)}"
+            )
+    allowed: set[str] | None = None
+    if as_of_batch is not None:
+        ids = [s["batch_id"] for s in snapshots(path)]
+        if as_of_batch not in ids:
+            raise ValueError(f"unknown snapshot {as_of_batch!r}; committed: {ids}")
+        # PREFIX of the commit order, inclusive
+        allowed = set(ids[: ids.index(as_of_batch) + 1])
+    tile_ids, roi_pairs = _roi_tile_ids(spec.grid, roi_bbox)
+    # visibility: a block row is visible iff the winning lineage row of
+    # its chunk_key names its batch_id — orphan blocks from a crashed
+    # batch never match even when a later batch re-wrote the same chunk
+    # (icechunk-commit visibility semantics). CONCURRENT fills may both
+    # commit the same chunk (both planned against the pre-commit
+    # lineage — the reference resolves this with icechunk conflict
+    # retries, backends/threaded.py:85-99); we resolve it at read:
+    # exactly one winning batch per chunk_key. Read BEFORE the block
+    # listing: a batch's blocks land before its ticket.
+    vis = _visible(_lineage_rows(path, tile_ids, channels, allowed, time_idxs))
+    winning = set(vis["batch_id"])
+    leafs = _block_leaf_dirs(
+        [b for b in _block_batches(path) if os.path.basename(b).split("=", 1)[1] in winning]
+    )
+    if channels is not None:
+        # dtype-GROUP pruning: a channel projection maps to the storage
+        # groups that hold those channels; every other dt-<elem> leaf is
+        # dropped from the plan entirely — no file listing, no scan
+        wanted = {DTYPES[spec.channel_dtype(c)] for c in channels}
+        leafs = {e: dirs for e, dirs in leafs.items() if e in wanted}
+    return _ReadPlan(time_idxs, tile_ids, roi_pairs, vis, leafs)
+
+
 def load(
     spark: SparkSession,
     path: str,
@@ -1256,7 +1380,10 @@ def load(
 ) -> DataFrame:
     """ROI read: materialize() first for the reference's full load()
     semantics; this is the scan+crop step (snapshot = committed lineage
-    only). Visibility is resolved on the driver (:func:`_lineage_rows`,
+    only), rendered as a LAZY Spark scan — the frame every store
+    operator composes. :func:`load_local` renders the same
+    :func:`_read_plan` as a driver read (``accessor.load(persist=True)``).
+    Visibility is resolved on the driver (:func:`_lineage_rows`,
     :func:`_visible`: no Spark job) and filters the pruned block scan as
     a literal IN list: no lineage scan, window or join in the returned
     plan. Partition pruning: blocks are filtered on tile_id membership
@@ -1296,45 +1423,16 @@ def load(
     Composes with compaction (a compacted batch commits LAST even
     though its id sorts first, so historical as-of views are
     unchanged); vacuum bounds how far back travel reaches."""
-    spec = open_spec(path)
-    time_idxs = _toi_idxs(spec, toi_epochs)
-    if channels is not None:
-        if not channels:
-            # an explicitly EMPTY projection is a caller bug — silently
-            # returning 0 rows would read as "not filled yet", the very
-            # trap the unknown-name check below exists to prevent
-            raise ValueError("channels=[] — pass None to read every channel")
-        unknown = [c for c in channels if c not in spec.channels]
-        if unknown:
-            raise ValueError(
-                f"unknown channels {unknown}; cube has {list(spec.channels)}"
-            )
-    allowed: set[str] | None = None
-    if as_of_batch is not None:
-        ids = [s["batch_id"] for s in snapshots(path)]
-        if as_of_batch not in ids:
-            raise ValueError(f"unknown snapshot {as_of_batch!r}; committed: {ids}")
-        # PREFIX of the commit order, inclusive
-        allowed = set(ids[: ids.index(as_of_batch) + 1])
-    tile_ids, roi_pairs = _roi_tile_ids(spec.grid, roi_bbox)
-    # visibility: a block row is visible iff the winning lineage row of
-    # its chunk_key names its batch_id — orphan blocks from a crashed
-    # batch never match even when a later batch re-wrote the same chunk
-    # (icechunk-commit visibility semantics). CONCURRENT fills may both
-    # commit the same chunk (both planned against the pre-commit
-    # lineage — the reference resolves this with icechunk conflict
-    # retries, backends/threaded.py:85-99); we resolve it at read:
-    # exactly one winning batch per chunk_key. Read BEFORE the block
-    # listing: a batch's blocks land before its ticket.
-    vis = _visible(_lineage_rows(path, tile_ids, channels, allowed, time_idxs))
+    plan = _read_plan(path, roi_bbox, toi_epochs, as_of_batch, channels)
+    tile_ids, vis, leafs = plan.tile_ids, plan.vis, plan.leafs
     stats_schema = BLOCK_SCHEMA.replace("block array<double>", STATS_COLS)
 
     def _pruned(df: DataFrame, tile_ids: list[int], vis: pd.DataFrame) -> DataFrame:
         df = df.filter(_in_literal("tile_id", tile_ids))
         if channels is not None:
             df = df.filter(_in_literal("channel", channels))
-        if time_idxs is not None:
-            df = df.filter(_in_literal("time_idx", time_idxs))
+        if plan.time_idxs is not None:
+            df = df.filter(_in_literal("time_idx", plan.time_idxs))
         df = df.withColumn("chunk_key", _chunk_key()).filter(
             _in_literal("concat(batch_id, ':', chunk_key)", vis["batch_id"] + ":" + vis["chunk_key"])
         )
@@ -1343,11 +1441,11 @@ def load(
         return df.select("chunk_key", "batch_id", *rest)
 
     def _with_roi_idx(out: DataFrame) -> DataFrame:
-        if roi_pairs is None:
+        if plan.roi_pairs is None:
             return out
         mapdf = local_frame(
             spark,
-            pd.DataFrame(roi_pairs, columns=["tile_id", "roi_idx"]).astype(
+            pd.DataFrame(plan.roi_pairs, columns=["tile_id", "roi_idx"]).astype(
                 {"tile_id": "int64", "roi_idx": "int32"}
             ),
         )
@@ -1359,21 +1457,6 @@ def load(
             _pruned(local_frame(spark, [], schema), tile_ids, vis.iloc[:0])
         )
 
-    # per-dtype leaf scan: every batch stores one dt-<elem> subdir per
-    # storage group; each scan reads its own typed schema and widens to
-    # the array<double> compute representation with a JVM cast, then
-    # the groups union (filters below push through the union into every
-    # scan). A single-dtype cube hits exactly one scan.
-    winning = set(vis["batch_id"])
-    leafs = _block_leaf_dirs(
-        [b for b in _block_batches(path) if os.path.basename(b).split("=", 1)[1] in winning]
-    )
-    if channels is not None:
-        # dtype-GROUP pruning: a channel projection maps to the storage
-        # groups that hold those channels; every other dt-<elem> leaf is
-        # dropped from the plan entirely — no file listing, no scan
-        wanted = {DTYPES[spec.channel_dtype(c)] for c in channels}
-        leafs = {e: dirs for e, dirs in leafs.items() if e in wanted}
     if not leafs:  # nothing visible (for these channels) in the ROI
         return _empty(stats_schema if stats_only else BLOCK_SCHEMA)
 
@@ -1405,6 +1488,11 @@ def load(
         tile_ids = sorted({int(r["tile_id"]) for r in surv})
         vis = vis[vis["chunk_key"].isin({r["chunk_key"] for r in surv})]
 
+    # per-dtype leaf scan: every batch stores one dt-<elem> subdir per
+    # storage group; each scan reads its own typed schema and widens to
+    # the array<double> compute representation with a JVM cast, then
+    # the groups union (filters below push through the union into every
+    # scan). A single-dtype cube hits exactly one scan.
     parts = []
     for elem in sorted(leafs):
         part = spark.read.schema(_typed_schema(BLOCK_SCHEMA, elem)).parquet(
@@ -1415,6 +1503,79 @@ def load(
     for p_ in parts[1:]:
         df = df.unionByName(p_)
     return _with_roi_idx(_pruned(df, tile_ids, vis))
+
+
+def _list_cells(block: pa.ChunkedArray) -> list[list]:
+    """A ``list<double>`` block column as the cells Spark's row collect
+    gives: a Python list of floats per row, ``None`` for a NULL element
+    (a stored NaN stays NaN). Built from the flat values buffer with one
+    numpy ``tolist``: ``to_pylist`` costs several times as much."""
+    arr = block.combine_chunks()
+    flat = arr.flatten()  # the rows' values, slicing offset applied
+    vals = flat.to_numpy(zero_copy_only=False).tolist()  # NULL -> NaN
+    for i in np.flatnonzero(flat.is_null().to_numpy(zero_copy_only=False)):
+        vals[i] = None
+    ends = np.cumsum(arr.value_lengths().to_numpy()).tolist()
+    return [vals[a:b] for a, b in zip([0] + ends[:-1], ends)]
+
+
+def load_local(
+    path: str,
+    roi_bbox,  # bbox | polygon (WKT / vertex pairs) | list of those
+    toi_epochs: list[int] | None = None,
+    as_of_batch: str | None = None,
+    channels: list[str] | None = None,
+    value_range: tuple[float, float] | None = None,
+) -> pd.DataFrame:
+    """:func:`load`'s ROI crop read on the DRIVER — the xarray-load
+    analog behind ``accessor.load(persist=True)``: the same
+    :func:`_read_plan`, rendered as one ``pyarrow.dataset`` read per
+    winning ``dt-<elem>`` leaf group instead of a Spark scan and
+    collect, so it runs no Spark job. Returns the frame
+    ``load(...).toPandas()`` returns (Arrow off): its column order —
+    ``tile_id`` first under a batch ROI list, as the ``roi_idx`` USING
+    join puts it — int widths, and ``block`` as a Python list of floats
+    widened from the stored type (bool -> 0.0/1.0), ``None`` for a
+    stored NULL. Row order is not part of the contract (Spark's isn't).
+
+    The read is filtered like the lineage read (:func:`_lineage_filter`:
+    the tile_id range guard that prunes row groups, ``is_in`` on tiles,
+    channels, TOI steps and the winning batch ids), then joined to the
+    visible ``(batch_id, chunk_key)`` pairs in pandas, with ``chunk_key``
+    derived by :func:`_chunk_keys`. ``value_range`` keeps the chunks
+    whose zone-map columns, read in the same pass, meet [lo, hi];
+    ``roi_idx`` comes from a merge. Bounded by driver memory: the crop
+    is held once as Arrow and once as pandas."""
+    plan = _read_plan(path, roi_bbox, toi_epochs, as_of_batch, channels)
+    stats = ", " + STATS_COLS if value_range is not None else ""
+    f = _lineage_filter(plan.tile_ids, channels, set(plan.vis["batch_id"]), plan.time_idxs)
+    tables = []
+    for elem, dirs in sorted(plan.leafs.items()):
+        schema = _arrow_schema(_typed_schema(BLOCK_SCHEMA, elem) + stats)
+        t = ds.dataset(
+            [ds.dataset(d, format="parquet", schema=schema) for d in dirs], schema=schema
+        ).to_table(filter=f)
+        i = t.schema.get_field_index("block")
+        tables.append(t.set_column(i, "block", t["block"].cast(pa.list_(pa.float64()))))
+    table = (
+        pa.concat_tables(tables) if tables
+        else _arrow_schema(BLOCK_SCHEMA + stats).empty_table()
+    )
+    rows = table.drop_columns(["block"]).to_pandas()
+    rows["chunk_key"] = _chunk_keys(rows)
+    rows["_row"] = np.arange(len(rows))
+    rows = rows.merge(plan.vis[["batch_id", "chunk_key"]], on=["batch_id", "chunk_key"])
+    if value_range is not None:
+        lo, hi = (float(value_range[0]), float(value_range[1]))
+        rows = rows[(rows["n_valid"] > 0) & (rows["v_max"] >= lo) & (rows["v_min"] <= hi)]
+    cols = ["chunk_key", "batch_id"] + [c for c in _names(BLOCK_SCHEMA) if c != "batch_id"]
+    if plan.roi_pairs is not None:
+        pairs = pd.DataFrame(plan.roi_pairs, columns=["tile_id", "roi_idx"], dtype="int64")
+        rows = rows.merge(pairs, on="tile_id")
+        cols = ["tile_id"] + [c for c in cols if c != "tile_id"] + ["roi_idx"]
+    rows = rows.reset_index(drop=True)
+    rows["block"] = pd.Series(_list_cells(table["block"].take(rows["_row"].to_numpy())), dtype=object)
+    return rows[cols]
 
 
 def chunk_stats(
@@ -1550,8 +1711,11 @@ def build_overviews(
             gb.x0 + gb.width * gb.res,
             gb.y0,
         )
-    built_at = max(_commit_seqs(path).values(), default=0)
+    # ONE listing stamps both: a commit landing after it may or may not
+    # be in the level, and a stamp older than what was read costs at
+    # most a redundant re-merge on the next refresh, never a lost change
     snaps = snapshots(path)
+    built_at = snaps[-1]["seq"] if snaps else 0
     built_at_batch = snaps[-1]["batch_id"] if snaps else None
     # record the level's COVERAGE (r6 correctness fix, advisor item
     # #3): a partial (roi_bbox) build used to stamp only the cube-wide
@@ -1602,7 +1766,13 @@ def refresh_overviews(
     full_bbox = (
         gb.x0, gb.y0 - gb.height * gb.res, gb.x0 + gb.width * gb.res, gb.y0,
     )
-    cur_seq = max(_commit_seqs(path).values(), default=0)
+    # ONE snapshot, listed before any read: each level is stamped with
+    # it. A commit landing later may or may not be merged below; it is
+    # newer than the stamp either way, so the next refresh (re-)merges
+    # it — stamping a later listing would skip it for good
+    snaps = snapshots(path)
+    cur_seq = snaps[-1]["seq"] if snaps else 0
+    cur_batch = snaps[-1]["batch_id"] if snaps else None
     changed_total = 0
     levels = 0
     for f in factors:
@@ -1630,11 +1800,10 @@ def refresh_overviews(
         ).localCheckpoint(eager=True)  # feeds the count AND the merged write
         n_changed = new_part.count()
         changed_total += n_changed
-        snaps = snapshots(path)
         new_meta = {
             "factor": f, "chunk_px": spec.grid.chunk_px // f,
             "built_at_seq": cur_seq,
-            "built_at_batch": snaps[-1]["batch_id"] if snaps else None,
+            "built_at_batch": cur_batch,
             # a refresh never widens the level's coverage claim: carry
             # the original built tile set through
             "built_tile_ids": meta["built_tile_ids"],
@@ -1661,8 +1830,6 @@ def refresh_overviews(
         trash = d + f".old-{uuid.uuid4().hex[:8]}"
         os.rename(d, trash)
         os.rename(tmp, d)
-        import shutil
-
         shutil.rmtree(trash, ignore_errors=True)
         levels += 1
     return {"levels": levels, "changed_chunks": changed_total}
@@ -1843,8 +2010,6 @@ def vacuum(spark: SparkSession, path: str, min_orphan_age_sec: float = 86400.0) 
     shadowed files to outlive the compaction by the retention window.
     Default 24 h; pass 0 only when no fill can be running and no lazy
     reader is live (tests, single-actor admin)."""
-    import shutil
-
     committed = {os.path.basename(b) for b in _lineage_batches(path)}
     now = time.time()
     removed_orphans = []

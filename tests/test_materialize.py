@@ -486,13 +486,13 @@ def test_partition_ids_agree_past_local_relation_threshold(spark, tmp_path):
     assert _partition_ids_agree(spark, path) == {"dt-boolean": [5, 4], "dt-float": [5, 5, 8]}
 
 
-def test_cold_fill_runs_two_jobs(spark, cube):
-    """A cold fill into an empty single-dtype cube is two Spark jobs:
-    the block write and the lineage write. Its plan rows are sliced on
-    the driver: no shuffle job, no checkpoint."""
+def test_cold_fill_runs_one_job(spark, cube):
+    """A cold fill into an empty single-dtype cube is one Spark job, the
+    block write: its plan rows are sliced on the driver (no shuffle
+    job, no checkpoint) and its lineage rows are written with pyarrow."""
     with spark_jobs(spark) as cold:
         assert materialize(spark, cube, ROI_A)["written"] == 18
-    assert len(cold) == 2, cold
+    assert len(cold) == 1, cold
     assert not [j for j in cold if any(s.startswith("localCheckpoint") for s in j)], cold
 
 
@@ -722,21 +722,207 @@ def test_in_literal_quotes_values(spark):
         assert sorted(r.n for r in got) == [3, 7], typ
 
 
-def test_cached_accessor_load_runs_one_job(spark, tmp_path):
-    """A cached ``accessor.load(persist=True)`` is one Spark job, the
-    block collect: the fill's cache skip and the read's visibility both
-    read lineage on the driver — no lineage collect, winner window,
-    broadcast or checkpoint job. A ``value_range`` read narrows its
-    survivors in Python: no localCheckpoint."""
+def test_cached_accessor_load_runs_no_job(spark, tmp_path):
+    """A cached ``accessor.load(persist=True)`` runs no Spark job: the
+    fill's cache skip and the read's visibility read lineage on the
+    driver, and the crop itself is a driver-side pyarrow read — with or
+    without a ``value_range``, whose zone-map columns ride the same
+    read."""
     acc = arcticdem_like(spark, str(tmp_path / "c"))
     acc.create()
     n = len(acc.load(ROI_POLAR, persist=True))
     with spark_jobs(spark) as cached:
         assert len(acc.load(ROI_POLAR, persist=True)) == n
-    assert len(cached) <= 1, cached
+    assert cached == [], cached
     with spark_jobs(spark) as ranged:
         assert len(acc.load(ROI_POLAR, persist=True, value_range=(-1e12, 1e12))) == n
-    assert not [j for j in ranged if any(s.startswith("localCheckpoint") for s in j)], ranged
+    assert ranged == [], ranged
+
+
+def _assert_local_read_matches(spark, path: str, roi, **kw):
+    """``load_local`` returns the frame ``load(...).toPandas()`` returns
+    with Arrow off: the same columns in the same order, the same
+    dtypes, and cell for cell the same values — ``block`` a Python list
+    of floats with ``None`` where a NULL is stored and NaN where a NaN
+    is. Rows are compared sorted by ``(roi_idx, chunk_key)``: row order
+    is not part of the contract. Returns the driver-read frame."""
+    import numpy as np
+
+    from smart_geocubes_spark.plans.materialize import load_local
+
+    want = load(spark, path, roi, **kw).toPandas()
+    got = load_local(path, roi, **kw)
+    assert list(got.columns) == list(want.columns)
+    assert dict(got.dtypes) == dict(want.dtypes)
+    key = [c for c in ("roi_idx", "chunk_key") if c in want.columns]
+    want, got = (df.sort_values(key).reset_index(drop=True) for df in (want, got))
+    for c in want.columns:
+        if c != "block":
+            assert got[c].tolist() == want[c].tolist(), c
+    for g, w in zip(got["block"], want["block"]):
+        assert type(g) is list and len(g) == len(w)
+        assert [v is None for v in g] == [v is None for v in w]
+        assert all(type(v) is float for v in g if v is not None)
+        as_np = [np.array([np.nan if v is None else v for v in b], dtype=np.float64) for b in (g, w)]
+        assert np.array_equal(*as_np, equal_nan=True)
+    return got
+
+
+def test_local_read_matches_spark_frame(spark, cube, monkeypatch):
+    """The driver render of a read equals its Spark render frame for
+    frame on a float64 cube: channels, ``value_range`` (one that prunes
+    everything too), ``as_of_batch``, a bbox list and a polygon
+    (``roi_idx``), a double-committed chunk, a crashed orphan batch, a
+    patched chunk with NULL borders, a compacted cube and an ROI with
+    nothing committed."""
+    import smart_geocubes_spark.plans.materialize as M
+    from smart_geocubes_spark.plans.materialize import compact, materialize_patch
+
+    tri = "POLYGON ((2.3 15.2, 4.8 15.2, 2.3 17.9, 2.3 15.2))"
+    empty = (12.3, 5.2, 13.8, 6.9)
+    orphan = (6.3, 15.2, 7.8, 16.9)  # tx 6..7, ty 3..4: tx 7 only crashed
+    first = materialize(spark, cube, ROI_A)["batch_id"]
+    # re-commit ROI_B's chunks: ROI_A's 8 overlap chunks go to the min
+    # batch id, so one winning batch also holds losing rows — a read
+    # matches visibility per (batch_id, chunk_key), not per batch
+    with monkeypatch.context() as mp:
+        mp.setattr(M, "_missing", lambda candidates, lineage: candidates)
+        assert materialize(spark, cube, ROI_B)["written"] == 24
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        materialize(spark, cube, orphan, fail_after_blocks=True)
+    materialize_patch(spark, cube, (5.0, 16.0001, 5.5, 16.9999), "half")  # tile (5, 3)
+    n_tri = len(candidate_chunks(open_spec(cube), tri))  # all inside ROI_A
+
+    def reads():
+        assert len(_assert_local_read_matches(spark, cube, ROI_B)) == 24
+        assert len(_assert_local_read_matches(spark, cube, orphan)) == 4
+        assert len(_assert_local_read_matches(spark, cube, ROI_A, channels=["slope"])) == 9
+        assert len(_assert_local_read_matches(spark, cube, ROI_A, value_range=(2000.0, 2010.0))) == 3
+        assert _assert_local_read_matches(spark, cube, ROI_A, value_range=(1e12, 2e12)).empty
+        assert len(_assert_local_read_matches(spark, cube, [ROI_A, ROI_B, tri])) == 18 + 24 + n_tri
+        assert len(_assert_local_read_matches(spark, cube, tri, channels=["dem"])) == n_tri // 2
+        assert _assert_local_read_matches(spark, cube, empty).empty
+        assert _assert_local_read_matches(spark, cube, [empty]).empty
+
+    reads()
+    assert len(_assert_local_read_matches(spark, cube, ROI_A, as_of_batch=first)) == 18
+    assert compact(spark, cube)["batch_id"] is not None
+    reads()
+
+
+def test_local_read_matches_spark_frame_typed(spark, tmp_path):
+    """The same contract on typed storage: float32 + bool
+    (``arcticdem_like``, through ``accessor.load(persist=True)``), a
+    float32/bool cube whose patched chunk holds NULL holes in both
+    leaves, a uint8 cube, and a temporal cube read with a TOI."""
+    from smart_geocubes_spark.plans.materialize import materialize_patch
+
+    acc = arcticdem_like(spark, str(tmp_path / "arctic"))
+    acc.create()
+    got = acc.load([ROI_POLAR, ROI_POLAR_E], persist=True)
+    assert set(got["roi_idx"]) == {0, 1}
+    for kw in ({}, {"channels": ["datamask"]}, {"value_range": (1.0, 1.0)}):
+        _assert_local_read_matches(spark, acc.path, [ROI_POLAR, ROI_POLAR_E], **kw)
+        _assert_local_read_matches(spark, acc.path, ROI_POLAR, **kw)
+
+    typed = _typed_cube(str(tmp_path / "typed"))
+    materialize_patch(spark, typed, (2.0, 16.0001, 2.5, 16.9999), "left")  # tile (2, 3)
+    materialize(spark, typed, ROI_A)
+    got = _assert_local_read_matches(spark, typed, ROI_A)
+    assert len(got) == 27 and any(None in b for b in got["block"])
+
+    u8 = str(tmp_path / "u8")
+    grid = TileGrid(geobox=GeoBox(crs="EPSG:4326", x0=0.0, y0=20.0, res=0.25, width=80, height=80), chunk_px=4)
+    create_cube(u8, CubeSpec(grid=grid, channels=("m8", "dem"), dtypes=("uint8", "float64"), time_epochs=None))
+    materialize(spark, u8, (0.1, 19.1, 3.9, 19.9))  # tiles tx 0..3 of row 0
+    assert len(_assert_local_read_matches(spark, u8, (0.1, 19.1, 3.9, 19.9))) == 8
+    assert len(_assert_local_read_matches(spark, u8, (0.1, 19.1, 3.9, 19.9), channels=["m8"])) == 4
+
+    epochs = (1577836800, 1609459200, 1640995200)
+    temporal = str(tmp_path / "temporal")
+    create_cube(temporal, CubeSpec(grid=SMALL_GRID, channels=("dem",), time_epochs=epochs))
+    materialize(spark, temporal, ROI_A, [epochs[0], epochs[2]])
+    assert len(_assert_local_read_matches(spark, temporal, ROI_A, toi_epochs=[epochs[2]])) == 9
+    assert len(_assert_local_read_matches(spark, temporal, ROI_A)) == 18
+
+
+def test_pyarrow_lineage_reads_back_everywhere(spark, tmp_path):
+    """A fill's lineage files are written by pyarrow, in tile order, and
+    read back the same rows through Spark's ``read_lineage`` under
+    LINEAGE_SCHEMA — the read of ``compact``, ``vacuum``,
+    ``loaded_patches`` and ``current_state`` — and through the driver's
+    ``_lineage_rows``."""
+    import pyarrow.parquet as pq
+
+    from smart_geocubes_spark.accessor import GeocubeAccessor
+    from smart_geocubes_spark.plans.materialize import (
+        LINEAGE_SCHEMA,
+        _lineage_rows,
+        compact,
+        vacuum,
+    )
+
+    path = str(tmp_path / "c")
+    epochs = (1577836800, 1609459200)
+    create_cube(path, CubeSpec(
+        grid=SMALL_GRID, channels=("dem", "mask"), dtypes=("float32", "bool"), time_epochs=epochs,
+    ))
+    materialize(spark, path, ROI_A)
+    materialize(spark, path, ROI_B)
+    files = glob.glob(os.path.join(path, "lineage", "batch=*", "part-*.parquet"))
+    assert len(files) == 2
+    on_disk = []
+    for f in files:
+        t = pq.read_table(f)
+        assert t["tile_id"].to_pylist() == sorted(t["tile_id"].to_pylist())
+        on_disk += [tuple(r.values()) for r in t.to_pylist()]
+    lin = read_lineage(spark, path)
+    assert lin.dtypes == [tuple(c.split()) for c in LINEAGE_SCHEMA.replace(" long", " bigint").split(", ")]
+    assert sorted(tuple(r) for r in lin.collect()) == sorted(on_disk)
+    assert len(on_disk) == (9 + 8) * 2 * 2
+    tiles = sorted({r[1] for r in on_disk})
+    assert sorted(map(tuple, _lineage_rows(path, tiles).to_numpy().tolist())) == sorted(
+        (r[0], r[4], r[8]) for r in on_disk
+    )
+    acc = GeocubeAccessor(spark=spark, path=path, spec=open_spec(path))
+    assert sorted(acc.loaded_patches()) == sorted(r[0] for r in on_disk)
+    assert len(acc.current_state()) == len(on_disk)
+    before = sorted((r.chunk_key, r.tile_id) for r in load(spark, path, (2.0, 14.0, 7.0, 18.0)).collect())
+    assert compact(spark, path)["chunks"] == len(on_disk)
+    assert len(vacuum(spark, path, min_orphan_age_sec=0)["shadowed_removed"]) == 2
+    after = sorted((r.chunk_key, r.tile_id) for r in load(spark, path, (2.0, 14.0, 7.0, 18.0)).collect())
+    assert after == before and len(after) == len(on_disk)
+
+
+def test_crash_before_lineage_success_is_invisible(spark, cube, monkeypatch):
+    """A crash after the lineage parquet landed but before its
+    ``_SUCCESS`` leaves the batch invisible: no snapshot, no lineage
+    row, no block served, every chunk still planned — and the next fill
+    redoes exactly those chunks."""
+    import types
+
+    import smart_geocubes_spark.plans.materialize as M
+    from smart_geocubes_spark.plans.materialize import snapshots
+
+    real = M.pq.write_table
+
+    def crash(*a, **k):
+        real(*a, **k)
+        raise RuntimeError("simulated crash before the lineage _SUCCESS")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(M, "pq", types.SimpleNamespace(write_table=crash))
+        with pytest.raises(RuntimeError, match="lineage _SUCCESS"):
+            materialize(spark, cube, ROI_A)
+    (d,) = glob.glob(os.path.join(cube, "lineage", "batch=*"))
+    assert glob.glob(os.path.join(d, "part-*.parquet"))
+    assert not os.path.exists(os.path.join(d, "_SUCCESS"))
+    assert snapshots(cube) == []
+    assert read_lineage(spark, cube).count() == 0
+    assert load(spark, cube, ROI_A).count() == 0
+    assert len(plan_missing(spark, cube, candidate_chunks(open_spec(cube), ROI_A))) == 18
+    assert materialize(spark, cube, ROI_A)["written"] == 18
+    assert load(spark, cube, ROI_A).count() == 18
 
 
 def test_vacuum_never_deletes_unvouched_shadowed_batch(spark, cube):
@@ -1598,6 +1784,44 @@ def test_refresh_overviews_incremental_matches_full(spark, cube):
     r3 = refresh_overviews(spark, cube, factors=(4,))
     assert r3["levels"] == 1
     assert load_overview(spark, cube, ROI_A, 4).count() == 18
+
+
+def test_refresh_overviews_stamps_the_snapshot_it_read(spark, cube, monkeypatch):
+    """A refresh stamps each level with the snapshot it listed before
+    reading: a fill of tile (8, 4) committing right after the refresh's
+    change-feed lineage read is not merged, the level reads stale, and
+    the next refresh merges it — a stamp listed after the read would
+    mark the level current without it and serve 0 rows for the tile."""
+    import smart_geocubes_spark.plans.materialize as M
+    from smart_geocubes_spark.plans.materialize import (
+        build_overviews,
+        load_overview,
+        refresh_overviews,
+    )
+
+    t64, t84 = (6.3, 15.2, 6.8, 15.8), (8.3, 15.2, 8.8, 15.8)
+    materialize(spark, cube, ROI_A)
+    build_overviews(spark, cube, factors=(2,))
+    materialize(spark, cube, t64)
+
+    real, raced = M._lineage_rows, []
+
+    def racing(*a, **k):
+        rows = real(*a, **k)
+        if not raced:  # once, and not again for its own fill
+            raced.append(True)
+            assert materialize(spark, cube, t84)["written"] == 2
+        return rows
+
+    with monkeypatch.context() as mp:
+        mp.setattr(M, "_lineage_rows", racing)
+        assert refresh_overviews(spark, cube, factors=(2,))["changed_chunks"] == 2
+    assert raced
+    with pytest.raises(ValueError, match="stale"):
+        load_overview(spark, cube, t84, 2)
+    assert refresh_overviews(spark, cube, factors=(2,))["changed_chunks"] == 2
+    assert load_overview(spark, cube, t84, 2).count() == 2
+    assert load_overview(spark, cube, t64, 2).count() == 2
 
 
 def test_regrid_nearest_matches_affine_expectation(spark, cube):
