@@ -5,8 +5,8 @@ Re-expresses the reference's load-and-cache lifecycle
 
   candidates (tiles x time x channels intersecting ROI/TOI)
     -> minus the ROI's lineage keys      (cache skip, accessor.py:434-436)
-    -> mapInPandas block generation      (download_patch analog)
-    -> partitioned parquet append        (chunk-region write, backend.py:263-272)
+    -> mapInArrow block kernel that      (download_patch analog)
+       writes its own parquet files      (chunk-region write, backend.py:263-272)
     -> lineage append + commit ticket    (loaded_patches + icechunk commit,
                                           backends/simple.py:36-38)
 
@@ -17,7 +17,9 @@ On-disk layout — the one format every writer produces:
                                    type (``dt-double`` for float64
                                    channels), each with its _SUCCESS
   blocks/batch=<id>/_SUCCESS       every leaf of the batch landed
-  lineage/batch=<id>/              one payload-free row per chunk
+  lineage/batch=<id>/              one payload-free row per chunk, and
+                                   _tile_ranges.json: each part file's
+                                   tile_id min/max
   lineage/_commits/<seq>=<id>      the O_EXCL commit ticket, created
                                    with the cube by :func:`create_cube`
 
@@ -34,8 +36,12 @@ the ticketed lineage dirs), so a job killed at any point before the
 ticket leaves invisible orphans and the next run redoes exactly the
 missing chunks — the same
 observable semantics as one icechunk commit per patch with
-``loaded_patches`` replay (``backends/threaded.py:119-122``), with
-Spark's task-commit protocol replacing the hand-built retry machinery.
+``loaded_patches`` replay (``backends/threaded.py:119-122``). A kernel
+task moves each block file into place with ``os.replace`` from an
+attempt-unique temp name, so a retried task overwrites its file, and
+the batch's ``_SUCCESS`` lands only after the one write job succeeded.
+The executors write into the store's own directories, so the store must
+be one filesystem that the driver and every executor share.
 
 Scale notes (100 TB cube, 1000 executors):
 - every block row carries ``pt = tile_id % N_PARTS``, a stored bucket
@@ -49,10 +55,12 @@ Scale notes (100 TB cube, 1000 executors):
   on reads, no small-file blowup at high tile counts;
 - a fill and a read each read the committed lineage rows of the ROI's
   tiles ONCE, on the driver with ``pyarrow.dataset`` — no Spark job.
-  The filter's tile_id range guard skips every lineage row group whose
-  tile range misses the ROI (fills and compactions write lineage in
-  tile order), so the rows decoded are bounded by the ROI's chunk count
-  x commits per chunk, never by the cube. The cache skip diffs the
+  It opens only the part files whose tile range, as their batch's
+  manifest records it, meets the ROI's, and the filter's tile_id range
+  guard skips every row group whose tile range misses it (fills and
+  compactions write lineage in tile order), so the rows decoded are
+  bounded by the ROI's chunk count x commits per chunk, never by the
+  cube. The cache skip diffs the
   pandas-built candidates against the keys (only a non-empty plan
   becomes a Spark frame); a read applies the read rule in pandas and
   filters its block scan by a literal IN list — no window or join. The
@@ -60,13 +68,16 @@ Scale notes (100 TB cube, 1000 executors):
   (:func:`load_local`) renders the same plan as a pyarrow read of the
   winning leaves on the driver, and a fill writes its lineage rows
   with pyarrow: a cached persisted load runs no Spark job;
-- block generation is an Arrow ``mapInPandas`` producing whole chunk
-  arrays — one task per plan slice, no Python row loop;
+- a fill or patch is ONE Spark job: a ``mapInArrow`` kernel
+  (:func:`_fill_kernel`) generates whole chunk arrays in numpy (no
+  Python row loop), casts them to the stored type, computes their
+  zone-map stats and writes its slices' ``dt-<elem>`` part files with
+  ``pyarrow.parquet`` — block bytes never enter the JVM;
 - the kernel emits a per-chunk EVENT row alongside each block
   (chunk_key, partition_id, t_start_us, t_end_us, n_bytes — the
   reference's per-patch event log, ``core/backend.py:23-28,59-93``,
   with kernel task partition ids standing in for thread ids); event rows
-  live INSIDE the block files (one write job per fill — read_events
+  live INSIDE the block files (no separate events write — read_events
   column-prunes them out, lineage-gated like blocks; only compaction
   materializes a separate ``events/`` history copy), and
   :func:`event_durations` is the start/end -> duration merge the
@@ -75,6 +86,7 @@ Scale notes (100 TB cube, 1000 executors):
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -124,7 +136,7 @@ EVENT_SCHEMA = (
     "partition_id int, t_start_us long, t_end_us long, n_bytes long, "
     "batch_id string, action string"
 )
-# what the kernel yields = block columns + event columns (events are
+# what the kernel writes = block columns + event columns (events are
 # split out of the written files by a column-pruned read-back, so the
 # kernel runs ONCE)
 BLOCK_WRITE_SCHEMA = (
@@ -132,12 +144,12 @@ BLOCK_WRITE_SCHEMA = (
     + ", chunk_key string, partition_id int, t_start_us long, t_end_us long, n_bytes long"
 )
 # ZONE-MAP columns: per-chunk value bounds over the VALID (non-NaN)
-# pixels, computed in-plan at write time on the STORED (post-
+# pixels, computed by the kernel at write time on the STORED (post-
 # quantization) representation — so pruning decisions compare exactly
 # what load() will serve back, never the pre-quantization doubles (a
 # float32 round at a range boundary would otherwise prune a matching
 # chunk). They ride inside the block files like the event columns do
-# (one write job; stats reads are column-pruned so the 8 KB+ block
+# (no separate write; stats reads are column-pruned so the 8 KB+ block
 # arrays are never touched), and compaction carries them through.
 STATS_COLS = "v_min double, v_max double, n_valid long"
 BLOCK_FILE_SCHEMA = BLOCK_WRITE_SCHEMA + ", " + STATS_COLS
@@ -150,9 +162,10 @@ BLOCK_FILE_SCHEMA = BLOCK_WRITE_SCHEMA + ", " + STATS_COLS
 # and scan bandwidth at 100 TB); the COMPUTE representation stays
 # array<double> — load() widens on read with a JVM cast, so every
 # downstream operator (zonal/focal/patch merge) is dtype-oblivious.
-# Quantization happens at WRITE (cast semantics, ANSI-loud on overflow):
-# float32 rounds, int16 truncates toward zero, bool is value != 0,
-# uint8 is range-guarded [0,255] in-plan.
+# Quantization happens at WRITE, in the fill kernel (_stored_block),
+# with Spark's ANSI cast semantics: float32 rounds, int16 truncates
+# toward zero and raises CAST_OVERFLOW out of range, bool is
+# value != 0, uint8 is range-guarded [0,255]; no-data (NaN) is NULL.
 # ---------------------------------------------------------------------------
 DTYPES = {  # dtype name -> parquet/Spark element type it is stored as
     "float64": "double",
@@ -193,37 +206,13 @@ def _typed_schema(base: str, elem: str) -> str:
     return base.replace("block array<double>", f"block array<{elem}>")
 
 
-def _to_stored(spec: "CubeSpec", elem: str):
-    """double block -> stored element type (JVM codegen, per element)."""
-    if elem == "double":
-        return F.col("block")
-    if elem == "boolean":
-        return F.expr("transform(block, x -> x != 0.0D)")
-    if elem == "smallint" and any(
-        spec.channel_dtype(c) == "uint8" for c in spec.channels
-    ):
-        # uint8 range guard, in-plan and ANSI-loud (same convention as
-        # label_propagation's id-domain guard): smallint would silently
-        # admit [-32768, 32767]
-        return F.expr(
-            "transform(block, x -> CASE WHEN channel IN ("
-            + ",".join(
-                repr(c) for c in spec.channels if spec.channel_dtype(c) == "uint8"
-            )
-            + ") AND (x < 0.0D OR x > 255.0D) THEN raise_error(concat("
-            "'uint8 channel ', channel, ' value out of [0,255]: ', "
-            "CAST(x AS STRING))) ELSE CAST(x AS SMALLINT) END)"
-        )
-    return F.col("block").cast(f"array<{elem}>")
-
-
 def _to_double(elem: str):
     """stored element type -> the double compute representation.
 
     NULL-preserving for EVERY element type (r6 correctness fix,
     advisor item #1): Spark's ``IF`` treats a NULL condition as false,
     so the previous bool widen read stored NULL no-data holes (patch
-    borders, partial fills — _to_stored's ``x != 0.0`` correctly keeps
+    borders, partial fills — the write's ``x != 0.0`` correctly keeps
     them NULL) back as 0.0 — patch merges then treated holes as real
     'false' data and chunk stats counted them valid. Float/smallint
     casts already preserve NULL; bool now does too (pinned by
@@ -236,26 +225,6 @@ def _to_double(elem: str):
             " WHEN x THEN 1.0D ELSE 0.0D END)"
         )
     return F.col("block").cast("array<double>")
-
-
-def _with_chunk_stats(df: DataFrame, elem: str) -> DataFrame:
-    """Append the zone-map columns (STATS_COLS) to a block frame whose
-    ``block`` column already holds the STORED element type. All-JVM
-    codegen: widen -> drop NaN -> array_min/max/size. An all-NaN chunk
-    gets (NULL, NULL, 0) — prunable by any value range."""
-    return (
-        # "no data" is NULL-or-NaN (the kernel emits NaN; Arrow's
-        # pandas list conversion turns NaN into null crossing into the
-        # JVM) — and Spark's isnan(NULL) is FALSE, so both tests are
-        # required or null holes count as valid pixels
-        df.withColumn(
-            "_valid", F.filter(_to_double(elem), lambda x: x.isNotNull() & ~F.isnan(x))
-        )
-        .withColumn("v_min", F.array_min("_valid"))
-        .withColumn("v_max", F.array_max("_valid"))
-        .withColumn("n_valid", F.size("_valid").cast("long"))
-        .drop("_valid")
-    )
 
 
 def _block_leaf_dirs(batch_dirs: list[str]) -> dict[str, list[str]]:
@@ -575,12 +544,12 @@ def _record_write_events(path: str, batch_id: str, block_dir: str, job_start_us:
     import re as _re
 
     rows = []
-    # each dt-<elem> leaf is its own write JOB whose part files restart
-    # at part-00000, so the leaf index offsets the recorded
-    # partition_id (r6 correctness fix, advisor item #4): without it a
-    # multi-leaf batch emitted several 'write' rows sharing a
-    # partition_id and event_durations conflated files from different
-    # dtype-group jobs into one lane. The first leaf keeps offset 0 —
+    # each dt-<elem> leaf's slices are numbered on their own (their part
+    # files restart at part-00000), so the leaf index offsets the
+    # recorded partition_id (r6 correctness fix, advisor item #4):
+    # without it a multi-leaf batch emitted several 'write' rows sharing
+    # a partition_id and event_durations conflated files from different
+    # dtype groups into one lane. The first leaf keeps offset 0 —
     # a single-dtype cube's gen-lane <-> write-lane pid equality, which
     # the Gantt tests pin.
     subs = sorted(s for s in os.listdir(block_dir) if s.startswith("dt-"))
@@ -781,59 +750,6 @@ def plan_missing(spark: SparkSession, path: str, candidates: pd.DataFrame) -> pd
     return _missing(candidates, _lineage_rows(path, candidates["tile_id"].unique().tolist()))
 
 
-def _gen_blocks_factory(
-    chunk_px: int,
-    patch: tuple[float, float, float, tuple[float, float, float, float], float] | None = None,
-):
-    """ONE block-generation kernel for BOTH fill shapes (a second copy
-    of the value formula or the embedded event columns would silently
-    diverge — same single-definition rule as block_base_values).
-
-    ``patch=None``: full-coverage fill (every pixel generated).
-    ``patch=(x0, y0, res, bbox, value_offset)``: partial-coverage
-    source — values offset by ``value_offset`` and NaN outside ``bbox``
-    (the reference's nan-bordered STAC downloads,
-    ``core/backend.py:265-267``). A pixel belongs to the patch iff its
-    CENTER lies inside (x half-open [minx, maxx), y half-open
-    (miny, maxy] — the grid's own top-left convention)."""
-    n_px = chunk_px * chunk_px
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ramp = np.arange(n_px, dtype=np.float64) * 0.5
-        if patch is not None:
-            x0, y0, res, bbox, value_offset = patch
-            pminx, pminy, pmaxx, pmaxy = (float(v) for v in bbox)
-            rows_i = np.arange(n_px, dtype=np.float64) // chunk_px
-            cols_i = np.arange(n_px, dtype=np.float64) % chunk_px
-        for b in batches:
-            t0 = time.time_ns() // 1000
-            base = block_base_values(b)
-            # time shift so temporal chunks differ per step
-            base = base + np.where(b["time_idx"].to_numpy() >= 0, b["time_idx"].to_numpy() * 10.0, 0.0)
-            blocks = base[:, None] + ramp[None, :]
-            if patch is not None:
-                tx = b["tile_x"].to_numpy(dtype=np.float64)
-                ty = b["tile_y"].to_numpy(dtype=np.float64)
-                cx = x0 + (tx[:, None] * chunk_px + cols_i[None, :] + 0.5) * res
-                cy = y0 - (ty[:, None] * chunk_px + rows_i[None, :] + 0.5) * res
-                inside = (cx >= pminx) & (cx < pmaxx) & (cy > pminy) & (cy <= pmaxy)
-                blocks = np.where(inside, blocks + value_offset, np.nan)
-            # pt and partition_id come stamped on the plan rows
-            # (_sliced_plan): the driver is their one source
-            out = b[[
-                "tile_y", "tile_x", "tile_id", "time_idx", "channel", "pt", "batch_id",
-                "chunk_key", "partition_id",
-            ]].copy()
-            out["block"] = list(blocks)
-            # event columns: the download/write record of this chunk
-            out["t_start_us"] = np.int64(t0)
-            out["t_end_us"] = np.int64(time.time_ns() // 1000)
-            out["n_bytes"] = np.int64(8 * n_px)
-            yield out
-
-    return gen
-
-
 # a kernel task's input rows: plan rows stamped on the driver with their
 # stored bucket, their batch and the slice (task) that generates them
 KERNEL_SCHEMA = PLAN_SCHEMA + ", pt int, batch_id string, partition_id int"
@@ -886,7 +802,9 @@ def _sliced_plan(
     coalesce is narrow (no job, no shuffle) and, over parents without
     locations, gives slice i the parents ``[i*p//k, (i+1)*p//k)``;
     ``partition_id`` is that slice, so a chunk's lineage row, block row
-    and ``part-<i>`` file name the same task. Never
+    and ``part-<i>`` file name the same slice (groups of one slice each
+    share one task: Spark's union lines same-partitioned children up
+    partition by partition). Never
     ``spark_partition_id()`` over a local frame:
     ``ConvertToLocalRelation`` folds it to 0 for every row."""
     elem = rows["channel"].map({c: DTYPES[spec.channel_dtype(c)] for c in spec.channels})
@@ -917,42 +835,225 @@ def _write_blocks(
     spec: CubeSpec,
     groups: dict[str, tuple[pd.DataFrame, DataFrame]],
     block_dir: str,
-    make_blocks,
+    patch: tuple | None = None,
+    old: _ReadPlan | None = None,
 ) -> None:
-    """Write a fill/patch's blocks: one ``dt-<elem>`` leaf per
-    :func:`_sliced_plan` group (``dt-double`` for float64 channels).
-
-    ``make_blocks(plan_frame) -> BLOCK_WRITE_SCHEMA frame`` (double
-    blocks, straight from the kernel or the patch-merge pipeline). Each
-    group's plan rows enter Spark as their own local frame, so the
-    kernel runs once per chunk, and a lazy backfill of one evolved
-    channel costs one write job, not one per dtype group."""
-
-    def _write_group(item: tuple[str, tuple[pd.DataFrame, DataFrame]]) -> None:
-        elem, (_, plan_frame) = item
-        sub = make_blocks(plan_frame)
-        sub = sub.withColumn("block", _to_stored(spec, elem))
-        sub = _with_chunk_stats(sub, elem)
-        sub.write.mode("overwrite").parquet(os.path.join(block_dir, f"dt-{elem}"))
-
-    items = list(groups.items())
-    if len(items) == 1:
-        _write_group(items[0])
-    else:
-        # the dtype-group writes are INDEPENDENT jobs on disjoint plan
-        # slices into disjoint subdirs: submit them concurrently so the
-        # later groups' tasks back-fill the earlier groups' stragglers
-        # (guide §2.6 "overlap independent jobs") instead of paying one
-        # full job latency per storage type — measured r6: a 3-dtype
-        # fill's write phase ~3x job latency -> ~1x. The _SUCCESS
-        # marker below still lands only after EVERY group committed.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(3, len(items))) as pool:
-            list(pool.map(_write_group, items))
+    """Write a fill/patch's blocks in ONE Spark job, on the caller's
+    thread: the union of the :func:`_sliced_plan` groups' frames through
+    :func:`_fill_kernel`'s ``mapInArrow``, which writes one
+    ``dt-<elem>/part-<partition_id>`` file per slice itself. The
+    kernel's output schema is nominal (it yields no rows) and the job's
+    sink is ``noop``: block bytes never enter the JVM and nothing is
+    collected. ``block_dir`` is emptied first, as a Spark
+    overwrite would; each leaf's ``_SUCCESS`` and then the batch's land
+    after the job. ``patch`` and ``old`` are :func:`_fill_kernel`'s."""
+    shutil.rmtree(block_dir, ignore_errors=True)
+    for elem in groups:
+        os.makedirs(os.path.join(block_dir, f"dt-{elem}"))
+    plan = functools.reduce(DataFrame.union, [df for _, df in groups.values()])
+    kernel = functools.partial(_fill_kernel, spec=spec, block_dir=block_dir, patch=patch, old=old)
+    plan.mapInArrow(kernel, "n_rows long").write.format("noop").mode("overwrite").save()
+    for elem in groups:
+        open(os.path.join(block_dir, f"dt-{elem}", "_SUCCESS"), "w").close()
     # batch-level commit marker: _block_batches requires it, and the
     # per-subdir _SUCCESS files alone would leave the batch invisible
     open(os.path.join(block_dir, "_SUCCESS"), "w").close()
+
+
+# Spark's ``parquet.block.size``: the row-group cap of a block file, and
+# the most double block bytes a kernel step generates at once
+_ROW_GROUP_BYTES = 128 << 20
+
+
+def _fill_kernel(
+    batches: Iterator[pa.RecordBatch],
+    spec: CubeSpec,
+    block_dir: str,
+    patch: tuple | None = None,
+    old: _ReadPlan | None = None,
+) -> Iterator[pa.RecordBatch]:
+    """THE block kernel of fills and patches (the reference's download
+    + chunk-region write, ``core/backend.py:263-272``), bound with
+    ``functools.partial``: a module-level function pickles by reference.
+
+    Its input is one task's :func:`_sliced_plan` slices: one, or several
+    where Spark's union lines single-partition groups up into one task.
+    In steps of at most 128 MB of double blocks it generates the rows'
+    blocks (:func:`_gen_blocks`), NaN-coalesces a patch's against the
+    chunks' visible old blocks (:func:`_merge_visible`; ``old`` = the
+    patch's :func:`_read_plan`: its winning leaves and visible rows),
+    casts them to the stored type with their zone-map stats
+    (:func:`_stored_table`) and appends each slice's rows as one row
+    group to its ``dt-<elem>/part-<partition_id>-<batch_id>
+    .snappy.parquet``. A file is written under an attempt-unique hidden
+    temp name that ``os.replace`` moves into place, so a retried task
+    overwrites its file and no reader sees a torn one. Yields no rows."""
+    n_px = spec.grid.chunk_px * spec.grid.chunk_px
+    step = max(1, _ROW_GROUP_BYTES // (8 * n_px))
+    elem_of = {c: DTYPES[spec.channel_dtype(c)] for c in spec.channels}
+    vis = None if old is None else dict(zip(old.vis["chunk_key"], old.vis["batch_id"]))
+    files: dict[tuple[str, int], tuple[pq.ParquetWriter, str, str]] = {}
+    try:
+        for rb in batches:
+            for lo in range(0, rb.num_rows, step):
+                t0 = time.time_ns() // 1000
+                rows = rb.slice(lo, step)
+                b = rows.to_pandas()
+                slices = b.groupby([b["channel"].map(elem_of), "partition_id"], sort=False).indices
+                for (elem, pid), idx in slices.items():
+                    part = b.iloc[idx].reset_index(drop=True)
+                    blocks = _gen_blocks(part, spec.grid.chunk_px, patch)
+                    if old is not None:
+                        blocks = _merge_visible(part, blocks, elem, old.leafs.get(elem, []), vis)
+                    table = _stored_table(spec, elem, rows.take(idx), part, blocks, t0)
+                    if (elem, pid) not in files:
+                        leaf = os.path.join(block_dir, f"dt-{elem}")
+                        final = os.path.join(leaf, f"part-{pid:05d}-{part['batch_id'].iat[0]}.snappy.parquet")
+                        tmp = os.path.join(leaf, f".part-{pid:05d}-{uuid.uuid4().hex}.tmp")
+                        files[elem, pid] = (pq.ParquetWriter(tmp, table.schema), tmp, final)
+                    files[elem, pid][0].write_table(table, row_group_size=table.num_rows)
+        for writer, tmp, final in files.values():
+            writer.close()
+            os.replace(tmp, final)
+    except BaseException:
+        for writer, tmp, _ in files.values():
+            writer.close()
+            if os.path.exists(tmp):
+                os.remove(tmp)
+        raise
+    return iter(())
+
+
+def _gen_blocks(b: pd.DataFrame, chunk_px: int, patch: tuple | None) -> np.ndarray:
+    """The double blocks of plan rows ``b``, one row of chunk_px² pixels
+    each: :func:`block_base_values`, shifted by 10 a time step (temporal
+    chunks differ per step), plus a 0.5-a-pixel ramp.
+
+    ``patch=(x0, y0, res, bbox, value_offset)``: a partial-coverage
+    source — values offset by ``value_offset`` and NaN outside ``bbox``
+    (the reference's nan-bordered STAC downloads,
+    ``core/backend.py:265-267``). A pixel belongs to the patch iff its
+    CENTER lies inside (x half-open [minx, maxx), y half-open
+    (miny, maxy] — the grid's own top-left convention)."""
+    n_px = chunk_px * chunk_px
+    t = b["time_idx"].to_numpy()
+    base = block_base_values(b) + np.where(t >= 0, t * 10.0, 0.0)
+    blocks = base[:, None] + (np.arange(n_px, dtype=np.float64) * 0.5)[None, :]
+    if patch is None:
+        return blocks
+    x0, y0, res, bbox, value_offset = patch
+    pminx, pminy, pmaxx, pmaxy = (float(v) for v in bbox)
+    rows_i = np.arange(n_px, dtype=np.float64) // chunk_px
+    cols_i = np.arange(n_px, dtype=np.float64) % chunk_px
+    tx = b["tile_x"].to_numpy(dtype=np.float64)
+    ty = b["tile_y"].to_numpy(dtype=np.float64)
+    cx = x0 + (tx[:, None] * chunk_px + cols_i[None, :] + 0.5) * res
+    cy = y0 - (ty[:, None] * chunk_px + rows_i[None, :] + 0.5) * res
+    inside = (cx >= pminx) & (cx < pmaxx) & (cy > pminy) & (cy <= pmaxy)
+    return np.where(inside, blocks + value_offset, np.nan)
+
+
+def _merge_visible(
+    b: pd.DataFrame, blocks: np.ndarray, elem: str, dirs: list[str], vis: dict[str, str]
+) -> np.ndarray:
+    """A patch's NaN-bordered ``blocks`` with each NaN pixel taken from
+    its chunk's visible old block, where one exists (new data wins where
+    it has data: the reference's ``data[mask] = existing``, then write).
+    ``vis`` maps each chunk to its winning batch, ``dirs`` are the
+    winning ``dt-<elem>`` leaves; the old blocks come from
+    :func:`_read_leaf` (widened to double, a stored NULL reads as NaN),
+    filtered to the rows' tiles, channels, time steps and winners."""
+    won = b["chunk_key"].map(vis)
+    if not dirs or won.isna().all():
+        return blocks
+    f = _lineage_filter(
+        b["tile_id"].unique().tolist(), b["channel"].unique().tolist(),
+        set(won.dropna()), b["time_idx"].unique().tolist(),
+    )
+    t = _read_leaf(elem, dirs, f)
+    keys = _chunk_keys(t.drop_columns(["block"]).to_pandas())
+    hit = (t["batch_id"].to_pandas() == keys.map(vis)).to_numpy()
+    row = b["chunk_key"].map(pd.Series(np.flatnonzero(hit), index=keys[hit])).to_numpy()
+    have = ~pd.isna(row)
+    if not have.any():
+        return blocks
+    vals = t["block"].combine_chunks().flatten().to_numpy(zero_copy_only=False)
+    prev = vals.reshape(-1, blocks.shape[1])[row[have].astype(np.int64)]
+    cur = blocks[have]
+    blocks[have] = np.where(np.isnan(cur), prev, cur)
+    return blocks
+
+
+def _stored_block(spec: CubeSpec, elem: str, b: pd.DataFrame, blocks: np.ndarray) -> np.ndarray:
+    """Double ``blocks`` (NaN = no data) as the stored element type, with
+    Spark's ANSI cast semantics: float32 rounds to nearest, bool is
+    ``!= 0``, smallint truncates toward zero and raises
+    ``CAST_OVERFLOW`` outside [-32768, 32767] (numpy's ``astype`` would
+    wrap), and a uint8 channel's value outside [0, 255] raises first. The
+    caller stores NaN pixels as NULL."""
+    if elem == "double":
+        return blocks
+    if elem == "float":
+        with np.errstate(over="ignore"):
+            return blocks.astype(np.float32)
+    if elem == "boolean":
+        return blocks != 0.0
+    valid = ~np.isnan(blocks)
+    u8 = b["channel"].map(lambda c: spec.channel_dtype(c) == "uint8").to_numpy(dtype=bool)
+    bad = np.argwhere(u8[:, None] & valid & ((blocks < 0.0) | (blocks > 255.0)))
+    if len(bad):
+        i, j = bad[0]
+        raise ValueError(
+            f"uint8 channel {b['channel'].iat[i]} value out of [0,255]: {blocks[i, j]!r}"
+        )
+    t = np.trunc(np.where(valid, blocks, 0.0))
+    over = np.flatnonzero((t < -32768.0) | (t > 32767.0))
+    if len(over):
+        raise ArithmeticError(
+            f"[CAST_OVERFLOW] The value {blocks.flat[over[0]]!r}D of the type "
+            '"DOUBLE" cannot be cast to "SMALLINT" due to an overflow.'
+        )
+    return t.astype(np.int16)
+
+
+def _stored_table(
+    spec: CubeSpec, elem: str, rows: pa.RecordBatch, b: pd.DataFrame, blocks: np.ndarray, t0: int
+) -> pa.Table:
+    """Kernel input ``rows`` (and ``b``, their pandas form) with their
+    double ``blocks`` as ``dt-<elem>`` block file rows
+    (:data:`BLOCK_FILE_SCHEMA`): the block in its stored type
+    (:func:`_stored_block`, NaN -> NULL); the zone-map columns over the
+    stored values widened back to double (``v_min``/``v_max`` NULL and
+    ``n_valid`` 0 for an all-NULL chunk); and the event columns — the
+    step's generation window from ``t0`` and 8 bytes a pixel."""
+    n, n_px = blocks.shape
+    null = np.isnan(blocks)
+    stored = _stored_block(spec, elem, b, blocks)
+    wide = stored.astype(np.float64, copy=False)
+    n_valid = n_px - null.sum(axis=1)
+    if null.any():
+        v_min = np.where(null, np.inf, wide).min(axis=1)
+        v_max = np.where(null, -np.inf, wide).max(axis=1)
+    else:
+        v_min, v_max = wide.min(axis=1), wide.max(axis=1)
+    empty = n_valid == 0
+    schema = _arrow_schema(_typed_schema(BLOCK_FILE_SCHEMA, elem))
+    cols = {
+        "block": pa.ListArray.from_arrays(
+            pa.array(np.arange(n + 1, dtype=np.int32) * n_px),
+            pa.array(stored.ravel(), mask=null.ravel() if null.any() else None),
+        ),
+        "t_start_us": pa.array(np.full(n, t0, dtype=np.int64)),
+        "t_end_us": pa.array(np.full(n, time.time_ns() // 1000, dtype=np.int64)),
+        "n_bytes": pa.array(np.full(n, 8 * n_px, dtype=np.int64)),
+        "v_min": pa.array(v_min, mask=empty),
+        "v_max": pa.array(v_max, mask=empty),
+        "n_valid": pa.array(n_valid.astype(np.int64)),
+    }
+    return pa.Table.from_arrays(
+        [cols[f.name] if f.name in cols else rows.column(f.name).cast(f.type) for f in schema],
+        schema=schema,
+    )
 
 
 # Spark's size estimate of a lineage row: 8 B + each column's default
@@ -983,10 +1084,60 @@ def _write_lineage(spark: SparkSession, path: str, batch_id: str, lin: pd.DataFr
     )
     n = table.num_rows
     k = min(n, _open_costs(spark, _LINEAGE_ROW_BYTES * n))
+    tiles = table["tile_id"].to_numpy()
+    ranges = {}
     for i in range(k):
         lo, hi = i * n // k, (i + 1) * n // k
-        pq.write_table(table.slice(lo, hi - lo), os.path.join(d, f"part-{i:05d}-{batch_id}.snappy.parquet"))
+        name = f"part-{i:05d}-{batch_id}.snappy.parquet"
+        pq.write_table(table.slice(lo, hi - lo), os.path.join(d, name))
+        ranges[name] = [int(tiles[lo]), int(tiles[hi - 1])]
+    _write_tile_ranges(d, ranges)
     open(os.path.join(d, "_SUCCESS"), "w").close()
+
+
+# a lineage batch's manifest: part file name -> [min, max] of its tile_id
+# (leading underscore: Spark and pyarrow readers skip the file)
+_TILE_RANGES = "_tile_ranges.json"
+
+
+def _write_tile_ranges(batch_dir: str, ranges: dict[str, list[int]]) -> None:
+    with open(os.path.join(batch_dir, _TILE_RANGES), "w") as f:
+        json.dump(ranges, f)
+
+
+def _footer_tile_ranges(batch_dir: str) -> dict[str, list[int]] | None:
+    """The :data:`_TILE_RANGES` manifest of a Spark-written lineage
+    batch, from its part files' footer statistics (a file without rows
+    has no range and is left out); None if a file has rows but no
+    tile_id statistics — the batch is then read whole."""
+    ranges = {}
+    for name in sorted(os.listdir(batch_dir)):
+        if name.startswith(("_", ".")):
+            continue
+        md = pq.read_metadata(os.path.join(batch_dir, name))
+        col = md.schema.names.index("tile_id")
+        stats = [
+            md.row_group(g).column(col).statistics
+            for g in range(md.num_row_groups) if md.row_group(g).num_rows
+        ]
+        if any(st is None or not st.has_min_max for st in stats):
+            return None
+        if stats:
+            ranges[name] = [int(min(st.min for st in stats)), int(max(st.max for st in stats))]
+    return ranges
+
+
+def _lineage_files(batch_dir: str, lo: int, hi: int) -> list[str]:
+    """The lineage part files of ``batch_dir`` whose tile_id range, as
+    its :data:`_TILE_RANGES` manifest records it, meets [lo, hi]; every
+    part file of a batch without a manifest."""
+    try:
+        with open(os.path.join(batch_dir, _TILE_RANGES)) as f:
+            ranges = json.load(f)
+    except FileNotFoundError:
+        names = [n for n in sorted(os.listdir(batch_dir)) if not n.startswith(("_", "."))]
+        return [os.path.join(batch_dir, n) for n in names]
+    return [os.path.join(batch_dir, n) for n, (a, z) in sorted(ranges.items()) if a <= hi and z >= lo]
 
 
 def _commit_batch(
@@ -995,22 +1146,24 @@ def _commit_batch(
     spec: CubeSpec,
     batch_id: str,
     rows: pd.DataFrame,
-    make_blocks,
     t0: float,
     fail_after_blocks: bool = False,
+    patch: tuple | None = None,
+    old: _ReadPlan | None = None,
     **extra,
 ) -> dict:
     """THE commit sequence every fill and patch runs on its non-empty
-    driver-side plan ``rows`` for ``batch_id``: blocks (one
-    ``dt-<elem>`` leaf per storage group with planned chunks), write
-    events, lineage, the commit ticket, then the per-run metrics json
-    (event-log analog, core/backend.py:23-28) plus ``extra`` — which it
-    returns. ``fail_after_blocks`` simulates a crash between the block
-    write and the lineage commit."""
+    driver-side plan ``rows`` for ``batch_id``: blocks (one Spark job,
+    :func:`_write_blocks`: one ``dt-<elem>`` leaf per storage group with
+    planned chunks, ``patch``/``old`` as :func:`_fill_kernel` takes
+    them), write events, lineage, the commit ticket, then the per-run
+    metrics json (event-log analog, core/backend.py:23-28) plus
+    ``extra`` — which it returns. ``fail_after_blocks`` simulates a
+    crash between the block write and the lineage commit."""
     groups = _sliced_plan(spark, spec, rows, batch_id)
     block_dir = os.path.join(path, "blocks", f"batch={batch_id}")
     t_write0 = time.time_ns() // 1000
-    _write_blocks(spec, groups, block_dir, make_blocks)
+    _write_blocks(spec, groups, block_dir, patch, old)
     # the per-chunk 'generate' event rows STAY inside the block files
     # (read_events column-prunes them out); the per-partition 'write'
     # rows come from the landed part files' metadata — no second events
@@ -1075,16 +1228,7 @@ def materialize(
             "sec": time.time() - t0,
         }
     return _commit_batch(
-        spark,
-        path,
-        spec,
-        batch_id,
-        missing,
-        lambda part: part.mapInPandas(
-            _gen_blocks_factory(spec.grid.chunk_px), schema=BLOCK_WRITE_SCHEMA
-        ),
-        t0,
-        fail_after_blocks=fail_after_blocks,
+        spark, path, spec, batch_id, missing, t0, fail_after_blocks=fail_after_blocks
     )
 
 
@@ -1139,51 +1283,14 @@ def materialize_patch(
 
     cand = candidate_chunks(spec, patch_bbox, toi_epochs)
     gb = spec.grid.geobox
-    # currently-visible content of exactly these chunks (winner rows,
-    # patch-bounded — the same pruned scan load() serves readers);
-    # loaded as double regardless of storage dtype, so the merge is
-    # dtype-oblivious and re-quantization happens once at the write
-    existing = load(spark, path, patch_bbox, toi_epochs).select(
-        "chunk_key", F.col("block").alias("old_block")
-    )
-
-    def _merged(plan_part: DataFrame) -> DataFrame:
-        new_blocks = plan_part.mapInPandas(
-            _gen_blocks_factory(
-                spec.grid.chunk_px,
-                patch=(gb.x0, gb.y0, gb.res, patch_bbox, value_offset),
-            ),
-            schema=BLOCK_WRITE_SCHEMA,
-        )
-        # "no data" is NULL-or-NaN: the kernel emits NaN, but Arrow's
-        # pandas list conversion maps NaN to null on the way into the
-        # JVM, so stored partial blocks carry NULL holes — coalesce
-        # either form
-        return (
-            new_blocks.join(existing, "chunk_key", "left")
-            .withColumn(
-                "block",
-                F.when(F.col("old_block").isNull(), F.col("block")).otherwise(
-                    F.zip_with(
-                        "block",
-                        "old_block",
-                        lambda n, o: F.when(n.isNull() | F.isnan(n), o).otherwise(n),
-                    )
-                ),
-            )
-            .drop("old_block")
-            .select(*_names(BLOCK_WRITE_SCHEMA))
-            # advisory repartition (no pinned count): these rows carry
-            # the ~80 KB block arrays, so AQE sizes the write sensibly —
-            # a tiny patch lands 1-2 part files instead of one near-empty
-            # file per task slot (the frame feeding the kernel above is
-            # sliced on the driver by the bytes it generates)
-            .repartition(F.col("pt"))
-            .sortWithinPartitions("tile_id", "time_idx", "channel")
-        )
-
+    # the currently-visible content of exactly these chunks, resolved
+    # with the read plan load() serves readers: each kernel task reads
+    # its own chunks' winning blocks, widened to double, so the merge is
+    # dtype-oblivious and re-quantization happens once, at the write
     metrics = _commit_batch(
-        spark, path, spec, batch_id, cand, _merged, t0,
+        spark, path, spec, batch_id, cand, t0,
+        patch=(gb.x0, gb.y0, gb.res, tuple(patch_bbox), value_offset),
+        old=_read_plan(path, patch_bbox, toi_epochs, None, None),
         patch_id=patch_id,
     )
     with open(marker, "w") as f:
@@ -1249,21 +1356,22 @@ def _lineage_rows(
     :func:`load_changes`: the committed ``(chunk_key, batch_id,
     src_batch)`` rows that pass :func:`_lineage_filter`, read on the
     driver with ``pyarrow.dataset`` over the ticket-gated
-    :func:`_lineage_batches` — no Spark job. Only the row groups whose
-    tile range meets the ROI are decoded, so the read is bounded by the
-    query (ROI chunks x commits per chunk), not by the cube. Raw rows:
-    more than one per double-committed chunk.
-    Spark's ``_SUCCESS``, ``.crc`` and ``_covered.json`` files are
-    skipped by pyarrow's default ``ignore_prefixes``."""
+    :func:`_lineage_batches` — no Spark job. Only the part files whose
+    tile range, as their batch's :data:`_TILE_RANGES` manifest records
+    it, meets the ROI's are opened (:func:`_lineage_files`), and of those
+    only the row groups whose range meets it are decoded, so the read is
+    bounded by the query (ROI chunks x commits per chunk), not by the
+    cube: what grows with the committed batches is one listing entry and
+    one small manifest read each. Raw rows: more than one per
+    double-committed chunk."""
     cols = ["chunk_key", "batch_id", "src_batch"]
     if not tile_ids:
         return pd.DataFrame(columns=cols)
-    # a union of one dataset per batch dir: ds.dataset() takes a list
-    # of FILES, not of directories
-    lineage = ds.dataset(
-        [ds.dataset(b, format="parquet", schema=LINEAGE_ARROW) for b in _lineage_batches(path)],
-        schema=LINEAGE_ARROW,
-    )
+    lo, hi = int(min(tile_ids)), int(max(tile_ids))
+    files = [f for b in _lineage_batches(path) for f in _lineage_files(b, lo, hi)]
+    if not files:
+        return pd.DataFrame(columns=cols)
+    lineage = ds.dataset(files, format="parquet", schema=LINEAGE_ARROW)
     f = _lineage_filter(tile_ids, channels, allowed, time_idxs)
     return lineage.to_table(columns=cols, filter=f).to_pandas()
 
@@ -1519,6 +1627,20 @@ def _list_cells(block: pa.ChunkedArray) -> list[list]:
     return [vals[a:b] for a, b in zip([0] + ends[:-1], ends)]
 
 
+def _read_leaf(elem: str, dirs: list[str], f: ds.Expression, stats: str = "") -> pa.Table:
+    """THE pyarrow read of block rows, :func:`load_local`'s and a patch
+    kernel's: the rows of the ``dt-<elem>`` leaf ``dirs`` that pass ``f``
+    (a :func:`_lineage_filter`), :data:`BLOCK_SCHEMA` columns plus
+    ``stats`` (``", " + STATS_COLS`` or ""), ``block`` widened to
+    ``list<double>`` (bool -> 0.0/1.0, NULL kept)."""
+    schema = _arrow_schema(_typed_schema(BLOCK_SCHEMA, elem) + stats)
+    t = ds.dataset(
+        [ds.dataset(d, format="parquet", schema=schema) for d in dirs], schema=schema
+    ).to_table(filter=f)
+    i = t.schema.get_field_index("block")
+    return t.set_column(i, "block", t["block"].cast(pa.list_(pa.float64())))
+
+
 def load_local(
     path: str,
     roi_bbox,  # bbox | polygon (WKT / vertex pairs) | list of those
@@ -1549,14 +1671,7 @@ def load_local(
     plan = _read_plan(path, roi_bbox, toi_epochs, as_of_batch, channels)
     stats = ", " + STATS_COLS if value_range is not None else ""
     f = _lineage_filter(plan.tile_ids, channels, set(plan.vis["batch_id"]), plan.time_idxs)
-    tables = []
-    for elem, dirs in sorted(plan.leafs.items()):
-        schema = _arrow_schema(_typed_schema(BLOCK_SCHEMA, elem) + stats)
-        t = ds.dataset(
-            [ds.dataset(d, format="parquet", schema=schema) for d in dirs], schema=schema
-        ).to_table(filter=f)
-        i = t.schema.get_field_index("block")
-        tables.append(t.set_column(i, "block", t["block"].cast(pa.list_(pa.float64()))))
+    tables = [_read_leaf(elem, dirs, f, stats) for elem, dirs in sorted(plan.leafs.items())]
     table = (
         pa.concat_tables(tables) if tables
         else _arrow_schema(BLOCK_SCHEMA + stats).empty_table()
@@ -1979,10 +2094,14 @@ def compact(spark: SparkSession, path: str) -> dict:
     # batch committing concurrently (after our read_events above) is
     # not listed, so its events can never be vacuumed on our account.
     # Leading underscore: Spark/Hadoop readers ignore the file.
-    with open(
-        os.path.join(path, "lineage", f"batch={new_id}", "_covered.json"), "w"
-    ) as mf:
+    new_lin = os.path.join(path, "lineage", f"batch={new_id}")
+    with open(os.path.join(new_lin, "_covered.json"), "w") as mf:
         json.dump(sorted(os.path.basename(b).split("=", 1)[1] for b in committed), mf)
+    # the tile-range manifest of the driver's lineage read, from the
+    # written files' footers; without one the batch is read whole
+    ranges = _footer_tile_ranges(new_lin)
+    if ranges is not None:
+        _write_tile_ranges(new_lin, ranges)
     # THE commit point: until the ticket lands the compacted batch is an
     # invisible orphan (readers keep the old view); compaction commits
     # LAST in seq order

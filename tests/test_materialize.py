@@ -496,6 +496,142 @@ def test_cold_fill_runs_one_job(spark, cube):
     assert not [j for j in cold if any(s.startswith("localCheckpoint") for s in j)], cold
 
 
+def test_fill_and_patch_jobs_carry_the_callers_job_group(spark, tmp_path):
+    """A multi-dtype fill and a patch each run ONE Spark job, on the
+    caller's thread: it carries the caller's ``setJobGroup``, and no job
+    without a group runs (a writer thread's job would have none)."""
+    from smart_geocubes_spark.plans.materialize import materialize_patch
+
+    path = _typed_cube(str(tmp_path / "c"))
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    with spark_jobs(spark) as fill:
+        assert materialize(spark, path, ROI_A)["written"] == 27
+    with spark_jobs(spark) as patch:
+        assert materialize_patch(spark, path, (2.0, 17.0001, 2.5, 17.9999), "p")["written"] == 3
+    assert len(fill) == 1 and len(patch) == 1, (fill, patch)
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
+
+def test_kernel_crash_after_a_file_landed_is_invisible(spark, cube, monkeypatch):
+    """A kernel task that fails after its block file landed fails the
+    fill: no leaf or batch ``_SUCCESS``, no lineage, no snapshot, no
+    block served — and the next fill redoes every chunk."""
+    import smart_geocubes_spark.plans.materialize as M
+
+    real = M._fill_kernel
+
+    def crash(batches, **kw):
+        list(real(batches, **kw))  # the task's files land
+        raise RuntimeError("simulated kernel crash")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(M, "_fill_kernel", crash)
+        with pytest.raises(Exception, match="simulated kernel crash"):
+            materialize(spark, cube, ROI_A)
+    assert glob.glob(os.path.join(cube, "blocks", "batch=*", "dt-*", "part-*"))
+    assert not glob.glob(os.path.join(cube, "blocks", "batch=*", "**", "_SUCCESS"), recursive=True)
+    assert not glob.glob(os.path.join(cube, "lineage", "batch=*"))
+    assert M.snapshots(cube) == []
+    assert load(spark, cube, ROI_A).count() == 0
+    assert len(plan_missing(spark, cube, candidate_chunks(open_spec(cube), ROI_A))) == 18
+    assert materialize(spark, cube, ROI_A)["written"] == 18
+    got = {(r.chunk_key, r.mn) for r in load(spark, cube, ROI_A).select(
+        "chunk_key", F.array_min("block").alias("mn")).collect()}
+    assert len(got) == 18
+    assert ("-1-3-2-dem", 3002.0) in got and ("-1-3-2-slope", 503002.0) in got
+
+
+# each storage element type's parquet physical type
+_PHYSICAL = {
+    "double": "DOUBLE", "float": "FLOAT", "smallint": "INT32", "boolean": "BOOLEAN",
+    "long": "INT64", "int": "INT32", "string": "BYTE_ARRAY",
+}
+
+
+@pytest.mark.parametrize("kind", ["float64", "typed", "temporal", "patched"])
+def test_stored_block_files_follow_the_closed_form(spark, tmp_path, kind):
+    """Every block file a fill or a patch writes holds, per chunk, the
+    closed form of ``block_base_values`` (+10 a time step, +0.5 a pixel;
+    a patch's offset inside its footprint and NULL outside every patch)
+    cast to the channel's stored type as Spark's ANSI cast does (float32
+    rounds to nearest, bool is ``!= 0``, int16 truncates toward zero);
+    ``v_min``/``v_max``/``n_valid`` over those stored values (NULL,
+    NULL, 0 for no valid pixel); and BLOCK_FILE_SCHEMA's parquet
+    physical types, smallint as a 16-bit INT32."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from smart_geocubes_spark.plans.materialize import (
+        BLOCK_FILE_SCHEMA,
+        DTYPES,
+        block_base_values,
+        materialize_patch,
+    )
+
+    typed = dict(channels=("dem", "datamask", "class16"), dtypes=("float32", "bool", "int16"))
+    spec = {
+        "float64": dict(channels=("dem", "slope"), time_epochs=None),
+        "typed": dict(typed, time_epochs=None),
+        "temporal": dict(channels=("dem", "mask"), dtypes=("float32", "bool"),
+                         time_epochs=(1577836800, 1609459200)),
+        "patched": dict(typed, time_epochs=None),
+    }[kind]
+    path = str(tmp_path / "c")
+    create_cube(path, CubeSpec(grid=SMALL_GRID, **spec))
+    col = np.arange(100 * 100) % 100
+    if kind == "patched":
+        # both in tile (2, 2): A covers columns 0..49, B 40..99 (offset 1000)
+        a = materialize_patch(spark, path, (2.0, 17.0001, 2.5, 17.9999), "a")["batch_id"]
+        materialize_patch(spark, path, (2.4, 17.0001, 2.9999, 17.9999), "b", value_offset=1000.0)
+        written = 2 * 3
+    else:
+        written = materialize(spark, path, ROI_A)["written"]
+    spec = open_spec(path)
+    n_rows = 0
+    for f in glob.glob(os.path.join(path, "blocks", "batch=*", "dt-*", "part-*")):
+        elem = os.path.basename(os.path.dirname(f))[3:]
+        schema = pq.read_metadata(f).schema
+        physical = {schema.column(i).path.split(".")[0]: schema.column(i) for i in range(len(schema))}
+        for name, typ in (c.split() for c in BLOCK_FILE_SCHEMA.split(", ")):
+            want = elem if name == "block" else typ
+            assert physical[name].physical_type == _PHYSICAL[want], (name, physical[name])
+        if elem == "smallint":
+            assert str(physical["block"].logical_type) == "Int(bitWidth=16, isSigned=true)"
+
+        t = pq.read_table(f)
+        rows = t.drop_columns(["block"]).to_pandas()
+        assert {DTYPES[spec.channel_dtype(c)] for c in rows["channel"]} == {elem}
+        step = rows["time_idx"].to_numpy()
+        x = (block_base_values(rows) + np.where(step >= 0, step * 10.0, 0.0))[:, None] + 0.5 * np.arange(100 * 100)
+        if kind == "patched":
+            merged = os.path.basename(os.path.dirname(os.path.dirname(f))) != f"batch={a}"
+            # patch A alone is NULL outside its columns; B is merged over A
+            x = np.where(col >= 40, x + 1000.0, x) if merged else np.where(col < 50, x, np.nan)
+        null = np.isnan(x)
+        want = {
+            "double": lambda v: v, "float": lambda v: v.astype(np.float32),
+            "boolean": lambda v: v != 0.0, "smallint": lambda v: np.trunc(v).astype(np.int16),
+        }[elem](np.where(null, 0.0, x))
+        vals = t["block"].combine_chunks().flatten()
+        got_null = vals.is_null().to_numpy(zero_copy_only=False).reshape(x.shape)
+        got = vals.fill_null(False if elem == "boolean" else 0).to_numpy(zero_copy_only=False).reshape(x.shape)
+        assert got.dtype == want.dtype
+        assert np.array_equal(got_null, null)
+        assert np.array_equal(got[~null], want[~null])
+        wide = want.astype(np.float64)
+        n_valid = (~null).sum(axis=1)
+        assert rows["n_valid"].tolist() == n_valid.tolist()
+        for i in range(len(rows)):
+            lo, hi = rows["v_min"].iat[i], rows["v_max"].iat[i]
+            if n_valid[i]:
+                assert (lo, hi) == (wide[i][~null[i]].min(), wide[i][~null[i]].max())
+            else:
+                assert np.isnan(lo) and np.isnan(hi)
+        n_rows += len(rows)
+    assert n_rows == written
+
+
 def test_plan_missing_antijoin(spark, cube):
     spec = open_spec(cube)
     materialize(spark, cube, ROI_A)
@@ -1151,6 +1287,45 @@ def test_lineage_read_prunes_other_batches_row_groups(spark, cube, monkeypatch):
     assert row_groups(far, f) and not row_groups(near, f)
 
 
+def test_lineage_read_opens_only_the_rois_files(spark, cube, monkeypatch):
+    """Each lineage batch records its part files' tile_id ranges, so over
+    ten batches in distinct tile rows a one-row ROI's lineage read opens
+    only its own batch's files, not every committed batch's footer —
+    and after a compaction only the compacted files whose range meets
+    the ROI's, beside them."""
+    import smart_geocubes_spark.plans.materialize as M
+
+    rows = []
+    for ty in range(10):  # tiles tx 0..2 of row ty: tile ids 20*ty .. 20*ty + 2
+        roi = (0.2, 19.2 - ty, 2.8, 19.8 - ty)
+        rows.append((roi, materialize(spark, cube, roi)["batch_id"]))
+
+    def lineage_opened(roi) -> tuple[set[str], object]:
+        opened, real = [], M.ds.dataset
+
+        def spy(source, *a, **k):
+            opened.extend([source] if isinstance(source, str) else source)
+            return real(source, *a, **k)
+
+        with monkeypatch.context() as mp:
+            mp.setattr(M.ds, "dataset", spy)
+            got = M.load_local(cube, roi)
+        lineage = [p for p in opened if isinstance(p, str) and f"{os.sep}lineage{os.sep}" in p]
+        assert lineage
+        return {p.split("batch=")[1].split(os.sep)[0] for p in lineage}, got
+
+    roi, bid = rows[6]
+    batches, got = lineage_opened(roi)
+    assert batches == {bid}
+    assert len(got) == 6 and set(got["batch_id"]) == {bid}
+
+    cid = M.compact(spark, cube)["batch_id"]
+    assert os.path.exists(os.path.join(cube, "lineage", f"batch={cid}", M._TILE_RANGES))
+    batches, got = lineage_opened(roi)
+    assert batches <= {bid, cid} and cid in batches
+    assert len(got) == 6 and set(got["batch_id"]) == {cid}
+
+
 class TestChannelProjection:
     def test_load_channels_filters_and_raises(self, spark, cube):
         materialize(spark, cube, ROI_A)
@@ -1456,6 +1631,21 @@ class TestChannelDtypes:
         # the in-plan range guard must abort the fill loudly
         with pytest.raises(Exception, match="out of \\[0,255\\]"):
             materialize(spark, path, ROI_A)
+
+    def test_int16_overflow_raises_cast_overflow(self, spark, tmp_path):
+        """An int16 channel's value outside [-32768, 32767] aborts the
+        fill with Spark's ANSI ``CAST_OVERFLOW`` (numpy's ``astype``
+        would wrap it silently), and nothing becomes visible."""
+        path = str(tmp_path / "i16cube")
+        create_cube(
+            path,
+            CubeSpec(grid=SMALL_GRID, channels=("slope",), dtypes=("int16",),
+                     time_epochs=None),
+        )
+        # the slope channel's base is 500000 + ...: past int16
+        with pytest.raises(Exception, match="CAST_OVERFLOW"):
+            materialize(spark, path, ROI_A)
+        assert load(spark, path, ROI_A).count() == 0
 
     def test_add_channel_with_dtype(self, spark, tmp_path):
         from smart_geocubes_spark.plans.materialize import add_channel

@@ -218,12 +218,12 @@ def test_driver_built_frames_are_local_relations(spark, tmp_path, monkeypatch):
     path, filled = str(tmp_path / "cube"), str(tmp_path / "filled")
     create_cube(path, spec)
     create_cube(filled, spec)
-    # the frames the fill hands its block kernel (mapInPandas), as built
+    # the frames the fill hands its block kernel (mapInArrow), as built
     fed: list = []
-    real = type(spark.range(1)).mapInPandas
+    real = type(spark.range(1)).mapInArrow
     with monkeypatch.context() as mp:
         mp.setattr(
-            type(spark.range(1)), "mapInPandas",
+            type(spark.range(1)), "mapInArrow",
             lambda self, *a, **k: fed.append(self) or real(self, *a, **k),
         )
         materialize(spark, filled, ROI_A)
