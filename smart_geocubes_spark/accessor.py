@@ -33,8 +33,8 @@ from smart_geocubes_spark.plans.materialize import (
     add_channel as cube_add_channel,
     create_cube,
     event_durations,
+    fill_load_local,
     load as load_blocks,
-    load_local,
     materialize,
     materialize_patch,
     open_spec,
@@ -162,9 +162,11 @@ class GeocubeAccessor:
         """The flagship four-step query (docs/how_it_works.md:48-53):
         intersect -> download new -> store -> return ROI slice.
         ``persist=True`` reads the crop on the driver with pyarrow
-        (xarray-load analog; plans.materialize.load_local) and returns
-        the pandas frame ``load(...).toPandas()`` would, without a Spark
-        job; otherwise the lazy Spark DataFrame is the dask-lazy view.
+        (xarray-load analog; plans.materialize.fill_load_local, whose
+        read reuses the fill's lineage read when the ROI was cached) and
+        returns the pandas frame ``load(...).toPandas()`` would, without
+        a Spark job; otherwise the lazy Spark DataFrame is the dask-lazy
+        view.
 
         ``roi`` may be a LIST of bboxes (reference GeoDataFrame branch,
         core/accessor.py:400-426): ONE fill job covering the deduped
@@ -196,9 +198,11 @@ class GeocubeAccessor:
         # the FILL still covers every channel (cache completeness —
         # reference downloads whole patches regardless of band slice);
         # only the returned scan projects (band slicing, P4)
-        materialize(self.spark, self.path, roi, toi)
         if persist:
-            return load_local(self.path, roi, toi, channels=channels, value_range=value_range)
+            return fill_load_local(
+                self.spark, self.path, roi, toi, channels=channels, value_range=value_range
+            )
+        materialize(self.spark, self.path, roi, toi)
         return load_blocks(
             self.spark, self.path, roi, toi, channels=channels, value_range=value_range
         )

@@ -19,7 +19,8 @@ On-disk layout — the one format every writer produces:
   blocks/batch=<id>/_SUCCESS       every leaf of the batch landed
   lineage/batch=<id>/              one payload-free row per chunk, and
                                    _tile_ranges.json: each part file's
-                                   tile_id min/max
+                                   tile_id min/max (and tile_x min/max
+                                   for a fill's or patch's files)
   lineage/_commits/<seq>=<id>      the O_EXCL commit ticket, created
                                    with the cube by :func:`create_cube`
 
@@ -100,6 +101,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
+from pyarrow import acero
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -672,10 +674,13 @@ def _chunk_key():
 
 def _chunk_keys(rows: pd.DataFrame) -> pd.Series:
     """:func:`_chunk_key` on the driver, over pandas rows: the keys of
-    :func:`candidate_chunks` and of :func:`load_local`'s block rows."""
-    return (
-        rows["time_idx"].astype(str) + "-" + rows["tile_y"].astype(str) + "-"
-        + rows["tile_x"].astype(str) + "-" + rows["channel"]
+    :func:`candidate_chunks` and of :func:`load_local`'s block rows.
+    One f-string per row over the columns' Python values: a tenth of
+    pandas' ``astype(str)`` concatenation's CPU on a dozen rows, half
+    on 10^5."""
+    cols = (rows[c].tolist() for c in ("time_idx", "tile_y", "tile_x", "channel"))
+    return pd.Series(
+        [f"{t}-{y}-{x}-{c}" for t, y, x, c in zip(*cols)], index=rows.index, dtype=object
     )
 
 
@@ -966,11 +971,10 @@ def _merge_visible(
     won = b["chunk_key"].map(vis)
     if not dirs or won.isna().all():
         return blocks
-    f = _lineage_filter(
-        b["tile_id"].unique().tolist(), b["channel"].unique().tolist(),
+    t = _read_leaf(
+        elem, dirs, b["tile_id"].unique().tolist(), b["channel"].unique().tolist(),
         set(won.dropna()), b["time_idx"].unique().tolist(),
     )
-    t = _read_leaf(elem, dirs, f)
     keys = _chunk_keys(t.drop_columns(["block"]).to_pandas())
     hit = (t["batch_id"].to_pandas() == keys.map(vis)).to_numpy()
     row = b["chunk_key"].map(pd.Series(np.flatnonzero(hit), index=keys[hit])).to_numpy()
@@ -1063,7 +1067,9 @@ _LINEAGE_ROW_BYTES = 8 + sum(
 )
 
 
-def _write_lineage(spark: SparkSession, path: str, batch_id: str, lin: pd.DataFrame) -> None:
+def _write_lineage(
+    spark: SparkSession, path: str, batch_id: str, lin: pd.DataFrame, nx: int
+) -> None:
     """Write a batch's lineage rows under ``lineage/batch=<id>/`` with
     ``pyarrow.parquet`` — no Spark job: the rows are a few KB of pandas
     on the driver — then its ``_SUCCESS``, which :func:`_lineage_batches`
@@ -1073,7 +1079,9 @@ def _write_lineage(spark: SparkSession, path: str, batch_id: str, lin: pd.DataFr
     kernel's byte rule (:func:`_open_costs`) on the rows' Spark-estimated
     size: one file below ~3.5*10^4 rows. Physical types follow
     :data:`LINEAGE_ARROW`, so Spark reads the files back under
-    :data:`LINEAGE_SCHEMA` (``time_idx`` int32)."""
+    :data:`LINEAGE_SCHEMA` (``time_idx`` int32). The batch's
+    :data:`_TILE_RANGES` manifest records each file's
+    :func:`_tile_range` on the grid's ``nx`` tile columns."""
     d = os.path.join(path, "lineage", f"batch={batch_id}")
     shutil.rmtree(d, ignore_errors=True)  # overwrite, as a Spark write would
     os.makedirs(d)
@@ -1090,14 +1098,25 @@ def _write_lineage(spark: SparkSession, path: str, batch_id: str, lin: pd.DataFr
         lo, hi = i * n // k, (i + 1) * n // k
         name = f"part-{i:05d}-{batch_id}.snappy.parquet"
         pq.write_table(table.slice(lo, hi - lo), os.path.join(d, name))
-        ranges[name] = [int(tiles[lo]), int(tiles[hi - 1])]
+        ranges[name] = _tile_range(tiles[lo:hi], nx)
     _write_tile_ranges(d, ranges)
     open(os.path.join(d, "_SUCCESS"), "w").close()
 
 
-# a lineage batch's manifest: part file name -> [min, max] of its tile_id
+# a lineage batch's manifest: part file name -> [min, max] of its tile_id,
+# then [min, max] of its tile_x where known (:func:`_tile_range`)
 # (leading underscore: Spark and pyarrow readers skip the file)
 _TILE_RANGES = "_tile_ranges.json"
+
+
+def _tile_range(tiles: np.ndarray, nx: int) -> list[int]:
+    """The :data:`_TILE_RANGES` entry of sorted ``tiles`` on a grid
+    ``nx`` tile columns wide: tile_id min and max, then tile_x min and
+    max. Together they bound the tiles' rectangle, so a fill's block
+    meets an ROI only where it meets the ROI's columns too; the tile_id
+    range alone meets every block in the ROI's tile rows."""
+    xs = tiles % nx
+    return [int(tiles[0]), int(tiles[-1]), int(xs.min()), int(xs.max())]
 
 
 def _write_tile_ranges(batch_dir: str, ranges: dict[str, list[int]]) -> None:
@@ -1127,17 +1146,23 @@ def _footer_tile_ranges(batch_dir: str) -> dict[str, list[int]] | None:
     return ranges
 
 
-def _lineage_files(batch_dir: str, lo: int, hi: int) -> list[str]:
-    """The lineage part files of ``batch_dir`` whose tile_id range, as
-    its :data:`_TILE_RANGES` manifest records it, meets [lo, hi]; every
-    part file of a batch without a manifest."""
+def _lineage_files(batch_dir: str, roi: list[int]) -> list[str]:
+    """The lineage part files of ``batch_dir`` whose tile range, as its
+    :data:`_TILE_RANGES` manifest records it, meets ``roi``, the ROI
+    tiles' :func:`_tile_range`: the tile_id ranges meet, and so do the
+    tile_x ranges where the manifest has one (a compacted batch's has
+    not); every part file of a batch without a manifest."""
     try:
         with open(os.path.join(batch_dir, _TILE_RANGES)) as f:
             ranges = json.load(f)
     except FileNotFoundError:
         names = [n for n in sorted(os.listdir(batch_dir)) if not n.startswith(("_", "."))]
         return [os.path.join(batch_dir, n) for n in names]
-    return [os.path.join(batch_dir, n) for n, (a, z) in sorted(ranges.items()) if a <= hi and z >= lo]
+    lo, hi, x_lo, x_hi = roi
+    return [
+        os.path.join(batch_dir, n) for n, r in sorted(ranges.items())
+        if r[0] <= hi and r[1] >= lo and (len(r) < 4 or (r[2] <= x_hi and r[3] >= x_lo))
+    ]
 
 
 def _commit_batch(
@@ -1182,7 +1207,7 @@ def _commit_batch(
         [g.assign(n_rows=1, n_bytes=_ELEM_NBYTES[e] * n_px) for e, (g, _) in groups.items()],
         ignore_index=True,
     ).assign(src_batch=batch_id)
-    _write_lineage(spark, path, batch_id, lin)
+    _write_lineage(spark, path, batch_id, lin, spec.grid.n_tiles_x)
     _allocate_commit_seq(path, batch_id)  # THE commit point (atomic ticket)
 
     metrics = {
@@ -1211,6 +1236,20 @@ def materialize(
     between the block write and the lineage commit (for resume tests —
     the reference's kill-safety comes from icechunk commits; ours from
     lineage-gated visibility)."""
+    return _fill(spark, path, roi_bbox, toi_epochs, fail_after_blocks)[0]
+
+
+def _fill(
+    spark: SparkSession,
+    path: str,
+    roi_bbox,
+    toi_epochs: list[int] | None = None,
+    fail_after_blocks: bool = False,
+) -> tuple[dict, pd.DataFrame | None]:
+    """:func:`materialize`'s run: its summary and, when it found every
+    chunk cached, the lineage rows of the ROI's chunks that its cache
+    skip read (:func:`_lineage_rows` of the ROI's tiles and TOI steps,
+    every channel); None when it committed a batch."""
     spec = open_spec(path)
     batch_id = uuid.uuid4().hex[:12]
     # the "0"-prefixed batch-id namespace is RESERVED for compaction
@@ -1219,17 +1258,21 @@ def materialize(
         batch_id = uuid.uuid4().hex[:12]
     t0 = time.time()
 
-    missing = plan_missing(spark, path, candidate_chunks(spec, roi_bbox, toi_epochs))
+    candidates = candidate_chunks(spec, roi_bbox, toi_epochs)
+    lineage = _lineage_rows(path, candidates["tile_id"].unique().tolist())
+    missing = _missing(candidates, lineage)
     if missing.empty:
         # nothing committed under this id — returning it would hand
         # the caller a batch_id that snapshots()/as_of reject
-        return {
+        summary = {
             "batch_id": None, "written": 0, "skipped": "all cached",
             "sec": time.time() - t0,
         }
-    return _commit_batch(
+        return summary, lineage[lineage["chunk_key"].isin(set(candidates["chunk_key"]))]
+    metrics = _commit_batch(
         spark, path, spec, batch_id, missing, t0, fail_after_blocks=fail_after_blocks
     )
+    return metrics, None
 
 
 def materialize_patch(
@@ -1357,23 +1400,27 @@ def _lineage_rows(
     src_batch)`` rows that pass :func:`_lineage_filter`, read on the
     driver with ``pyarrow.dataset`` over the ticket-gated
     :func:`_lineage_batches` — no Spark job. Only the part files whose
-    tile range, as their batch's :data:`_TILE_RANGES` manifest records
-    it, meets the ROI's are opened (:func:`_lineage_files`), and of those
-    only the row groups whose range meets it are decoded, so the read is
-    bounded by the query (ROI chunks x commits per chunk), not by the
-    cube: what grows with the committed batches is one listing entry and
-    one small manifest read each. Raw rows: more than one per
-    double-committed chunk."""
+    tile rectangle, as their batch's :data:`_TILE_RANGES` manifest
+    records it, meets the ROI's are opened (:func:`_lineage_files`), and
+    of those only the row groups whose range meets it are decoded, so
+    the read is bounded by the query (ROI chunks x commits per chunk),
+    not by the cube: what grows with the committed batches is one
+    listing entry and one small manifest read each. Raw rows: more than
+    one per double-committed chunk. ``use_threads=False``: on a few
+    small files pyarrow's thread pools cost more CPU than they saved."""
     cols = ["chunk_key", "batch_id", "src_batch"]
     if not tile_ids:
         return pd.DataFrame(columns=cols)
-    lo, hi = int(min(tile_ids)), int(max(tile_ids))
-    files = [f for b in _lineage_batches(path) for f in _lineage_files(b, lo, hi)]
+    nx = open_spec(path).grid.n_tiles_x
+    roi = _tile_range(np.sort(np.asarray(tile_ids, dtype=np.int64)), nx)
+    files = [f for b in _lineage_batches(path) for f in _lineage_files(b, roi)]
     if not files:
         return pd.DataFrame(columns=cols)
     lineage = ds.dataset(files, format="parquet", schema=LINEAGE_ARROW)
     f = _lineage_filter(tile_ids, channels, allowed, time_idxs)
-    return lineage.to_table(columns=cols, filter=f).to_pandas()
+    return lineage.to_table(columns=cols, filter=f, use_threads=False).to_pandas(
+        use_threads=False
+    )
 
 
 def _winners(lineage: DataFrame) -> DataFrame:
@@ -1391,8 +1438,16 @@ def _winners(lineage: DataFrame) -> DataFrame:
 
 def _visible(lineage: pd.DataFrame) -> pd.DataFrame:
     """The read rule of :func:`_winners` on the driver, over
-    :func:`_lineage_rows`: one row per chunk_key, its min batch_id's."""
-    return lineage.sort_values(["chunk_key", "batch_id"]).drop_duplicates("chunk_key")
+    :func:`_lineage_rows`: one row per chunk_key, its min batch_id's, in
+    chunk_key order. One pass over the columns' Python values: pandas'
+    sort and dedup cost ~0.8 ms on an ROI's dozen rows."""
+    batch = lineage["batch_id"].tolist()
+    best: dict[str, int] = {}
+    for i, k in enumerate(lineage["chunk_key"].tolist()):
+        j = best.get(k)
+        if j is None or batch[i] < batch[j]:
+            best[k] = i
+    return lineage.iloc[[best[k] for k in sorted(best)]]
 
 
 def _in_literal(expr: str, values) -> Column:
@@ -1427,11 +1482,14 @@ def _read_plan(
     toi_epochs: list[int] | None,
     as_of_batch: str | None,
     channels: list[str] | None,
+    lineage: pd.DataFrame | None = None,
 ) -> _ReadPlan:
     """THE read plan of :func:`load` and :func:`load_local` — spec and
     channel checks, snapshot prefix, ROI tiles, lineage read and read
     rule, winning leaves and their channel-group pruning — computed on
-    the driver, no Spark job."""
+    the driver, no Spark job. ``lineage``, for a read of every channel
+    at the head: the ROI's lineage rows, already read (a fill's cache
+    skip, :func:`_fill`), which then are not read again."""
     spec = open_spec(path)
     time_idxs = _toi_idxs(spec, toi_epochs)
     if channels is not None:
@@ -1462,7 +1520,9 @@ def _read_plan(
     # retries, backends/threaded.py:85-99); we resolve it at read:
     # exactly one winning batch per chunk_key. Read BEFORE the block
     # listing: a batch's blocks land before its ticket.
-    vis = _visible(_lineage_rows(path, tile_ids, channels, allowed, time_idxs))
+    if lineage is None:
+        lineage = _lineage_rows(path, tile_ids, channels, allowed, time_idxs)
+    vis = _visible(lineage)
     winning = set(vis["batch_id"])
     leafs = _block_leaf_dirs(
         [b for b in _block_batches(path) if os.path.basename(b).split("=", 1)[1] in winning]
@@ -1627,16 +1687,67 @@ def _list_cells(block: pa.ChunkedArray) -> list[list]:
     return [vals[a:b] for a, b in zip([0] + ends[:-1], ends)]
 
 
-def _read_leaf(elem: str, dirs: list[str], f: ds.Expression, stats: str = "") -> pa.Table:
+def _tile_row_groups(md: pq.FileMetaData, lo: int, hi: int) -> list[int]:
+    """The row groups of a parquet file whose tile_id statistics meet
+    [lo, hi], and every group without them: the pruning that
+    :func:`_lineage_filter`'s range guard gets from ``pyarrow.dataset``."""
+    col = next(i for i in range(md.num_columns) if md.schema.column(i).path == "tile_id")
+    out = []
+    for g in range(md.num_row_groups):
+        st = md.row_group(g).column(col).statistics
+        if st is None or not st.has_min_max or (st.min <= hi and st.max >= lo):
+            out.append(g)
+    return out
+
+
+def _read_leaf(
+    elem: str,
+    dirs: list[str],
+    tile_ids: list[int],
+    channels: list[str] | None = None,
+    allowed: set[str] | None = None,
+    time_idxs: list[int] | None = None,
+    stats: str = "",
+) -> pa.Table:
     """THE pyarrow read of block rows, :func:`load_local`'s and a patch
-    kernel's: the rows of the ``dt-<elem>`` leaf ``dirs`` that pass ``f``
-    (a :func:`_lineage_filter`), :data:`BLOCK_SCHEMA` columns plus
-    ``stats`` (``", " + STATS_COLS`` or ""), ``block`` widened to
-    ``list<double>`` (bool -> 0.0/1.0, NULL kept)."""
+    kernel's: the rows of the ``dt-<elem>`` leaf ``dirs`` that pass the
+    :func:`_lineage_filter` of the other arguments,
+    :data:`BLOCK_SCHEMA` columns plus ``stats`` (``", " + STATS_COLS``
+    or ""; a column a file lacks reads as NULL), ``block`` widened to
+    ``list<double>`` (bool -> 0.0/1.0, NULL kept). Each part file's
+    row groups that meet the tiles' range (:func:`_tile_row_groups`)
+    are decoded with ``pyarrow.parquet`` and filtered by an Acero plan,
+    all on the calling thread: a ``pyarrow.dataset`` scan decodes on
+    pyarrow's thread pools even with ``use_threads=False``; on an ROI's
+    two small files it took ~1.1x the CPU, more than half of it on the
+    pools, a share that varied from call to call."""
     schema = _arrow_schema(_typed_schema(BLOCK_SCHEMA, elem) + stats)
-    t = ds.dataset(
-        [ds.dataset(d, format="parquet", schema=schema) for d in dirs], schema=schema
-    ).to_table(filter=f)
+    lo, hi = int(min(tile_ids)), int(max(tile_ids))
+    parts = []
+    for d in dirs:
+        # pyarrow.dataset's default ignore_prefixes: _SUCCESS, and the
+        # fill kernel's hidden temp names
+        for name in sorted(n for n in os.listdir(d) if not n.startswith(("_", "."))):
+            with pq.ParquetFile(os.path.join(d, name)) as pf:
+                groups = _tile_row_groups(pf.metadata, lo, hi)
+                have = set(pf.schema_arrow.names)
+                if not groups:
+                    continue
+                t = pf.read_row_groups(
+                    groups, columns=[c for c in schema.names if c in have], use_threads=False
+                )
+            for field in schema:
+                if field.name not in have:
+                    t = t.append_column(field, pa.nulls(t.num_rows, field.type))
+            parts.append(t.select(schema.names).cast(schema))
+    t = acero.Declaration.from_sequence([
+        acero.Declaration("table_source", acero.TableSourceNodeOptions(
+            pa.concat_tables(parts) if parts else schema.empty_table()
+        )),
+        acero.Declaration("filter", acero.FilterNodeOptions(
+            _lineage_filter(tile_ids, channels, allowed, time_idxs)
+        )),
+    ]).to_table(use_threads=False)
     i = t.schema.get_field_index("block")
     return t.set_column(i, "block", t["block"].cast(pa.list_(pa.float64())))
 
@@ -1651,8 +1762,8 @@ def load_local(
 ) -> pd.DataFrame:
     """:func:`load`'s ROI crop read on the DRIVER — the xarray-load
     analog behind ``accessor.load(persist=True)``: the same
-    :func:`_read_plan`, rendered as one ``pyarrow.dataset`` read per
-    winning ``dt-<elem>`` leaf group instead of a Spark scan and
+    :func:`_read_plan`, rendered as one pyarrow read (:func:`_read_leaf`)
+    per winning ``dt-<elem>`` leaf group instead of a Spark scan and
     collect, so it runs no Spark job. Returns the frame
     ``load(...).toPandas()`` returns (Arrow off): its column order —
     ``tile_id`` first under a batch ROI list, as the ``roi_idx`` USING
@@ -1662,24 +1773,58 @@ def load_local(
 
     The read is filtered like the lineage read (:func:`_lineage_filter`:
     the tile_id range guard that prunes row groups, ``is_in`` on tiles,
-    channels, TOI steps and the winning batch ids), then joined to the
-    visible ``(batch_id, chunk_key)`` pairs in pandas, with ``chunk_key``
-    derived by :func:`_chunk_keys`. ``value_range`` keeps the chunks
+    channels, TOI steps and the winning batch ids), then kept where the
+    row's batch wins its chunk (the visible ``(batch_id, chunk_key)``
+    pairs), with ``chunk_key`` derived by :func:`_chunk_keys`.
+    ``value_range`` keeps the chunks
     whose zone-map columns, read in the same pass, meet [lo, hi];
     ``roi_idx`` comes from a merge. Bounded by driver memory: the crop
     is held once as Arrow and once as pandas."""
     plan = _read_plan(path, roi_bbox, toi_epochs, as_of_batch, channels)
+    return _local_rows(plan, channels, value_range)
+
+
+def fill_load_local(
+    spark: SparkSession,
+    path: str,
+    roi_bbox,
+    toi_epochs: list[int] | None = None,
+    channels: list[str] | None = None,
+    value_range: tuple[float, float] | None = None,
+) -> pd.DataFrame:
+    """:func:`materialize`, then :func:`load_local` of the same ROI —
+    ``accessor.load(persist=True)`` — reading the ROI's lineage once
+    where it was all cached: the fill's cache-skip read, taken before
+    the read plan lists the block batches as a read of its own would
+    be, is the plan's lineage (for every channel; a channel projection
+    reads its own)."""
+    _, lineage = _fill(spark, path, roi_bbox, toi_epochs)
+    plan = _read_plan(
+        path, roi_bbox, toi_epochs, None, channels, lineage if channels is None else None
+    )
+    return _local_rows(plan, channels, value_range)
+
+
+def _local_rows(
+    plan: _ReadPlan, channels: list[str] | None, value_range: tuple[float, float] | None
+) -> pd.DataFrame:
+    """:func:`load_local`'s rendering of its read ``plan``."""
     stats = ", " + STATS_COLS if value_range is not None else ""
-    f = _lineage_filter(plan.tile_ids, channels, set(plan.vis["batch_id"]), plan.time_idxs)
-    tables = [_read_leaf(elem, dirs, f, stats) for elem, dirs in sorted(plan.leafs.items())]
+    winning = set(plan.vis["batch_id"])
+    tables = [
+        _read_leaf(elem, dirs, plan.tile_ids, channels, winning, plan.time_idxs, stats)
+        for elem, dirs in sorted(plan.leafs.items())
+    ]
     table = (
         pa.concat_tables(tables) if tables
         else _arrow_schema(BLOCK_SCHEMA + stats).empty_table()
     )
-    rows = table.drop_columns(["block"]).to_pandas()
+    rows = table.drop_columns(["block"]).to_pandas(use_threads=False)
     rows["chunk_key"] = _chunk_keys(rows)
     rows["_row"] = np.arange(len(rows))
-    rows = rows.merge(plan.vis[["batch_id", "chunk_key"]], on=["batch_id", "chunk_key"])
+    winner = dict(zip(plan.vis["chunk_key"], plan.vis["batch_id"]))
+    won = [winner.get(k) == b for k, b in zip(rows["chunk_key"], rows["batch_id"])]
+    rows = rows[np.array(won, dtype=bool)]
     if value_range is not None:
         lo, hi = (float(value_range[0]), float(value_range[1]))
         rows = rows[(rows["n_valid"] > 0) & (rows["v_max"] >= lo) & (rows["v_min"] <= hi)]
@@ -1689,7 +1834,8 @@ def load_local(
         rows = rows.merge(pairs, on="tile_id")
         cols = ["tile_id"] + [c for c in cols if c != "tile_id"] + ["roi_idx"]
     rows = rows.reset_index(drop=True)
-    rows["block"] = pd.Series(_list_cells(table["block"].take(rows["_row"].to_numpy())), dtype=object)
+    cells = _list_cells(table["block"])
+    rows["block"] = pd.Series([cells[i] for i in rows["_row"]], dtype=object)
     return rows[cols]
 
 

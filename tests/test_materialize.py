@@ -1326,6 +1326,72 @@ def test_lineage_read_opens_only_the_rois_files(spark, cube, monkeypatch):
     assert len(got) == 6 and set(got["batch_id"]) == {cid}
 
 
+def test_lineage_read_prunes_batches_side_by_side(spark, cube, monkeypatch):
+    """A fill's manifest entry bounds its file's tile columns too: six
+    3x3-tile batches side by side in the same tile rows all meet a
+    2x2-tile ROI's tile_id range, but only the batch under it is
+    opened."""
+    import smart_geocubes_spark.plans.materialize as M
+
+    bids = [
+        materialize(spark, cube, (3 * bx + 0.2, 17.2, 3 * bx + 2.8, 19.8))["batch_id"]
+        for bx in range(6)  # tiles tx 3bx..3bx+2, ty 0..2
+    ]
+    ranges = [
+        next(iter(M._footer_tile_ranges(os.path.join(cube, "lineage", f"batch={b}")).values()))
+        for b in bids
+    ]
+    roi = (9.2, 18.2, 10.8, 19.8)  # tx 9..10, ty 0..1: tile ids 9..30
+    assert all(lo <= 30 and hi >= 9 for lo, hi in ranges)  # the id ranges all meet it
+
+    opened, real = [], M.ds.dataset
+
+    def spy(source, *a, **k):
+        opened.extend([source] if isinstance(source, str) else source)
+        return real(source, *a, **k)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(M.ds, "dataset", spy)
+        got = M.load_local(cube, roi)
+    lineage = [p for p in opened if isinstance(p, str) and f"{os.sep}lineage{os.sep}" in p]
+    assert {p.split("batch=")[1].split(os.sep)[0] for p in lineage} == {bids[3]}
+    assert len(got) == 8 and set(got["batch_id"]) == {bids[3]}
+
+
+def test_persisted_cached_load_reads_lineage_once(spark, tmp_path, monkeypatch):
+    """``accessor.load(persist=True)`` of a cached ROI plans its read
+    from the fill's cache-skip lineage read instead of reading the
+    lineage again; a channel projection and a load that filled read
+    their own. Each returns what ``load_local`` returns afterwards."""
+    import smart_geocubes_spark.plans.materialize as M
+    from smart_geocubes_spark.accessor import arcticdem_like
+
+    acc = arcticdem_like(spark, str(tmp_path / "cube"))
+    acc.create()
+
+    def load(roi, **kw):
+        calls, real = [], M._lineage_rows
+        with monkeypatch.context() as mp:
+            mp.setattr(M, "_lineage_rows", lambda *a, **k: calls.append(a) or real(*a, **k))
+            got = acc.load(roi, persist=True, **kw)
+        want = M.load_local(acc.path, roi, channels=kw.get("channels"))
+        key = ["chunk_key", "batch_id"] + (["roi_idx"] if "roi_idx" in got.columns else [])
+        assert got.sort_values(key).reset_index(drop=True).equals(
+            want.sort_values(key).reset_index(drop=True)
+        )
+        return len(calls), got
+
+    assert load(ROI_POLAR)[0] == 2  # the fill's read, then the plan's after its commit
+    n, got = load(ROI_POLAR)
+    assert n == 1 and len(got) == len(M.candidate_chunks(acc.spec, ROI_POLAR))
+    n, got = load(ROI_POLAR, channels=["dem"])
+    assert n == 2 and set(got["channel"]) == {"dem"}
+    # overlapping ROIs: the shared tiles' chunks come from the first batch
+    assert load(ROI_POLAR_E)[0] == 2
+    n, got = load([ROI_POLAR, ROI_POLAR_E])
+    assert n == 1 and "roi_idx" in got.columns
+
+
 class TestChannelProjection:
     def test_load_channels_filters_and_raises(self, spark, cube):
         materialize(spark, cube, ROI_A)
