@@ -14,13 +14,22 @@ plan itself).
 
 from __future__ import annotations
 
+import re
+
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from smart_geocubes_spark.text.extract import extract_text
 
 _GEO_URL_RE = r"/geo/(-?\d+),(-?\d+)/"
+# the same pattern with its groups named, as ``pc.extract_regex`` needs
+_GEO_URL_NAMED = re.sub(
+    r"\((?!\?)", lambda g, names=iter(("lat", "lon")): f"(?P<{next(names)}>", _GEO_URL_RE
+)
 
 # pandas_udf with a DDL-string return type needs an active session to
 # parse it, so UDFs are built lazily and memoized per process.
@@ -92,17 +101,32 @@ def geoparsed_points(pages: DataFrame) -> DataFrame:
     )
 
 
-def parse_latlon_np(url: pd.Series):
+def parse_latlon_np(url):
     """THE shared url -> (lat, lon, has) parse for every fused Arrow
-    kernel (float64 degrees via int micro-degrees / 1e5 — the same IEEE
-    double the JVM path computes as ``lat_e5 / 100000.0``). One
-    definition: a second copy of this float path is an oracle-parity
-    desync waiting to happen, exactly like a second copy of
-    ``_GEO_URL_RE`` (see operators/tiles.py consumers)."""
-    import numpy as np
+    kernel: numpy float64 degrees (NaN where ``has`` is False) from any
+    ``url`` that ``pa.array`` accepts (a pandas Series, an Arrow string
+    array). One definition: a second copy of this float path is an
+    oracle-parity desync waiting to happen, exactly like a second copy
+    of ``_GEO_URL_RE`` (see operators/tiles.py and operators/prep.py).
 
-    ext = url.str.extract(_GEO_URL_RE)
-    lat = pd.to_numeric(ext[0], errors="coerce").to_numpy(dtype=np.float64) / 1e5
-    lon = pd.to_numeric(ext[1], errors="coerce").to_numpy(dtype=np.float64) / 1e5
-    has = ~np.isnan(lat) & ~np.isnan(lon)
+    The regex runs in Arrow's RE2, whose ``\\d`` is ASCII-only like
+    Java's (Spark's ``regexp_extract``) and DuckDB's; Python's ``re``
+    also matches non-ASCII digits. A match's digits are cast to int64
+    and then to float64 and divided by 1e5: the same IEEE double the
+    JVM path computes as ``CAST(.. AS BIGINT) / 100000.0``, so ``-0``
+    gives +0.0 (a direct string -> float64 cast gives -0.0)."""
+    m = pc.extract_regex(pa.array(url, type=pa.string()), _GEO_URL_NAMED)
+    valid = m.is_valid()
+    has = valid.to_numpy(zero_copy_only=False)
+    # a non-matching row's children hold "", which no cast accepts:
+    # only the matches are cast
+    m = m.filter(valid)
+    lat = np.full(len(has), np.nan)
+    lon = np.full(len(has), np.nan)
+    lat[has] = _e5_degrees(m.field("lat"))
+    lon[has] = _e5_degrees(m.field("lon"))
     return lat, lon, has
+
+
+def _e5_degrees(digits: pa.Array) -> np.ndarray:
+    return digits.cast(pa.int64()).to_numpy().astype(np.float64) / 1e5

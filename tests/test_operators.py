@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -67,6 +68,64 @@ class TestPrepKernel:
         assert (a["page_id"] == b["page_id"]).all()
         assert np.array_equal(a["lat"].to_numpy(), b["lat"].to_numpy())
         assert np.array_equal(a["lon"].to_numpy(), b["lon"].to_numpy())
+
+    # (url, what it checks) — each parsed as Spark SQL's regexp_extract does
+    EDGE_URLS = [
+        ("https://h/geo/-0,-0/p", "-0 parses to +0.0"),
+        ("https://h/geo/0070000,-000123/p", "leading zeros"),
+        ("https://h/geo/٣٤,5/p", "non-ASCII digits: no match"),
+        ("https://h/geo/٣,5/geo/7,8/p", "non-ASCII digits, then an ASCII match"),
+        ("https://h/geo/1,2/geo/3,4/p", "two /geo/ segments: the first wins"),
+        ("https://h/geo/12,x/geo/-5,6/p", "a broken segment, then a match"),
+        ("https://h/about/p", "no geo"),
+        (None, "null url"),
+    ]
+
+    def test_prep_parse_edge_cases_match_regexp_extract(self, spark):
+        """The fused kernel's RE2 parse == the JVM's regexp_extract +
+        CAST AS BIGINT / 100000.0, bit for bit (lat/lon viewed as int64)."""
+        from smart_geocubes_spark.operators.geoparse import _GEO_URL_RE
+        from smart_geocubes_spark.sources import local_frame
+
+        pdf = pd.DataFrame({
+            "page_id": np.arange(len(self.EDGE_URLS), dtype=np.int64),
+            "url": [u for u, _ in self.EDGE_URLS],
+            "html": [b"<p>x</p>"] * len(self.EDGE_URLS),
+            "warc_epoch": np.zeros(len(self.EDGE_URLS), dtype=np.int64),
+        })
+        pages = local_frame(spark, pdf, "page_id long, url string, html binary, warc_epoch long")
+        got = prep_pages(pages).select("page_id", "lat", "lon").toPandas()
+        la, lo = (F.regexp_extract("url", _GEO_URL_RE, g) for g in (1, 2))
+        want = (
+            pages.filter((la != "") & (lo != ""))
+            .select("page_id",
+                    (la.cast("bigint") / F.lit(100000.0)).alias("lat"),
+                    (lo.cast("bigint") / F.lit(100000.0)).alias("lon"))
+            .toPandas()
+        )
+        got, want = (d.sort_values("page_id").reset_index(drop=True) for d in (got, want))
+        assert got["page_id"].tolist() == want["page_id"].tolist() == [0, 1, 3, 4, 5]
+        for c in ("lat", "lon"):
+            assert np.array_equal(got[c].to_numpy().view(np.int64), want[c].to_numpy().view(np.int64)), c
+
+    def test_prep_batch_without_geo_rows_is_typed_and_empty(self, spark):
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        from smart_geocubes_spark.operators.prep import PREP_SCHEMA, _prep_batches
+        from smart_geocubes_spark.sources import local_frame
+
+        batch = pa.RecordBatch.from_pydict(
+            {"page_id": [1, 2], "url": ["https://h/about/1", None],
+             "html": [b"<p>a</p>", None], "warc_epoch": [0, 0]},
+            schema=pa.schema([("page_id", pa.int64()), ("url", pa.string()),
+                              ("html", pa.binary()), ("warc_epoch", pa.int64())]),
+        )
+        (out,) = list(_prep_batches(iter([batch])))
+        assert out.num_rows == 0 and out.schema == PREP_SCHEMA
+        pages = local_frame(spark, batch.to_pandas(), "page_id long, url string, html binary, warc_epoch long")
+        df = prep_pages(pages)
+        assert df.collect() == []
+        assert df.schema == from_arrow_schema(PREP_SCHEMA)
 
     def test_fused_tile_and_norm_udfs_match_column_api(self, spark):
         """The url-fused kernels (make_geoparse_tile_udf /

@@ -88,8 +88,53 @@ def test_prep_pipeline_single_python_node(spark):
 
     df = prep_pages(pages_df(spark, SF).select("page_id", "url", "html", "warc_epoch"))
     plan = plan_of(df.groupBy("cell12").count())
-    assert plan.count("MapInPandas") == 1
-    assert "ArrowEvalPython" not in plan
+    assert plan.count("MapInArrow") == 1
+    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
+
+
+def _tasks_of(spark, df) -> list[int]:
+    """Task count of each stage of one noop write of ``df``."""
+    sc = spark.sparkContext
+    group = f"tasks-of-{id(df)}"
+    sc.setJobGroup(group, group)
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    return [st.getStageInfo(s).numTasks
+            for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds]
+
+
+def _synthetic_pages(spark, n_parts: int):
+    return spark.range(0, 10 * n_parts, 1, numPartitions=n_parts).selectExpr(
+        "id AS page_id",
+        "concat('https://h/geo/', id, ',', -id, '/p') AS url",
+        "CAST(concat('<p>page ', id, '</p>') AS BINARY) AS html",
+        "id AS warc_epoch",
+    )
+
+
+def test_prep_runs_one_python_task_per_slot(spark):
+    """Each Python task pays a fixed cost before its first row: the prep
+    hop over 3x the slots in partitions runs exactly one task per slot,
+    and a frame with fewer partitions than slots keeps its count."""
+    from smart_geocubes_spark.operators.prep import prep_pages
+
+    slots = spark.sparkContext.defaultParallelism
+    assert _tasks_of(spark, prep_pages(_synthetic_pages(spark, 3 * slots))) == [slots]
+    assert _tasks_of(spark, prep_pages(_synthetic_pages(spark, 2))) == [2]
+    assert prep_pages(_synthetic_pages(spark, 3 * slots)).count() == 30 * slots
+
+
+def test_prep_adds_no_exchange(spark):
+    """The narrowing is a coalesce: no html is shuffled."""
+    from smart_geocubes_spark.operators.prep import prep_pages
+    from smart_geocubes_spark.sources.synth import pages_df
+
+    slots = spark.sparkContext.defaultParallelism
+    pages = pages_df(spark, SF, parallelism=3 * slots).select("page_id", "url", "html", "warc_epoch")
+    assert plan_of(prep_pages(pages)).count("Exchange") == plan_of(pages).count("Exchange") == 1
 
 
 def test_asof_is_pure_projection(spark):
