@@ -30,12 +30,14 @@ Fills, patches and compactions all write this layout (beside it:
 
 Transactional model: each run writes under ``blocks/batch=<id>/``,
 then ``lineage/batch=<id>/``, then takes its commit ticket; a batch
-exists iff its ticket was taken (after its lineage _SUCCESS). Readers
-serve a block row only if its (chunk_key, batch_id) wins in committed
-lineage (resolved on the driver from one ROI-pruned pyarrow read of
-the ticketed lineage dirs), so a job killed at any point before the
-ticket leaves invisible orphans and the next run redoes exactly the
-missing chunks — the same
+exists iff its ticket was taken (after its lineage _SUCCESS). Each
+store call lists commit state ONCE (:func:`snapshots`) and resolves
+every read against those batch ids, as an icechunk session reads one
+snapshot: a reader serves a block row only if its (chunk_key,
+batch_id) wins in those batches' lineage (one ROI-pruned read on the
+driver), from the winners' ``blocks/batch=<id>/`` (never listed), so
+a job killed at any point before the ticket leaves invisible orphans
+and the next run redoes exactly the missing chunks — the same
 observable semantics as one icechunk commit per patch with
 ``loaded_patches`` replay (``backends/threaded.py:119-122``). A kernel
 task moves each block file into place with ``os.replace`` from an
@@ -55,7 +57,8 @@ Scale notes (100 TB cube, 1000 executors):
   file covers a contiguous tile_id range -> row-group min/max pruning
   on reads, no small-file blowup at high tile counts;
 - a fill and a read each read the committed lineage rows of the ROI's
-  tiles ONCE, on the driver with ``pyarrow.dataset`` — no Spark job.
+  tiles ONCE, on the driver with ``pyarrow.parquet``, file by file on
+  the calling thread (:func:`_read_files`) — no Spark job.
   It opens only the part files whose tile range, as their batch's
   manifest records it, meets the ROI's, and the filter's tile_id range
   guard skips every row group whose tile range misses it (fills and
@@ -99,7 +102,7 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.dataset as ds
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyarrow import acero
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -230,12 +233,13 @@ def _to_double(elem: str):
 
 
 def _block_leaf_dirs(batch_dirs: list[str]) -> dict[str, list[str]]:
-    """Element type -> parquet leaf dirs across batch dirs: every batch
-    holds one ``dt-<elem>`` subdir per storage type it wrote."""
+    """Element type -> parquet leaf dirs across committed batch dirs:
+    every batch holds one ``dt-<elem>`` subdir per storage type it
+    wrote, all landed before its ticket."""
     out: dict[str, list[str]] = {}
     for bd in batch_dirs:
         for s in sorted(os.listdir(bd)):
-            if s.startswith("dt-") and os.path.exists(os.path.join(bd, s, "_SUCCESS")):
+            if s.startswith("dt-"):
                 out.setdefault(s[3:], []).append(os.path.join(bd, s))
     return out
 
@@ -385,25 +389,6 @@ def add_channel(path: str, name: str, dtype: str = "float64") -> CubeSpec:
     return new
 
 
-def _lineage_batches(path: str) -> list[str]:
-    """Committed batch dirs: _SUCCESS present AND a commit ticket
-    taken. The seq snapshot is read FIRST, so a batch ticketing
-    mid-listing is consistently excluded from this read and appears
-    atomically on the next one."""
-    seqs = _commit_seqs(path)
-    ldir = os.path.join(path, "lineage")
-    out = []
-    for b in sorted(os.listdir(ldir)):
-        if not b.startswith("batch="):
-            continue
-        if not os.path.exists(os.path.join(ldir, b, "_SUCCESS")):
-            continue
-        if b.split("=", 1)[1] not in seqs:
-            continue  # lineage landed but ticket not yet taken (or crashed)
-        out.append(os.path.join(ldir, b))
-    return out
-
-
 def _commits_dir(path: str) -> str:
     return os.path.join(path, "lineage", "_commits")
 
@@ -435,33 +420,51 @@ def _allocate_commit_seq(path: str, batch_id: str) -> int:
             seq += 1
 
 
-def _commit_seqs(path: str) -> dict[str, int]:
-    """batch_id -> seq of its commit ticket (one ticket per batch)."""
-    out: dict[str, int] = {}
+def snapshots(path: str) -> list[dict]:
+    """Committed snapshots in COMMIT order (the icechunk commit-log
+    analog: every fill or compaction commit is a readable version).
+    Each entry: {batch_id, seq, committed_at}. THE listing of commit
+    state, which each store call takes once: one read of the tickets,
+    and a stat of each ticketed batch's lineage _SUCCESS (missing: not
+    committed; its mtime is ``committed_at``). Order comes from the
+    atomic commit counter (_allocate_commit_seq) — NEVER from mtimes,
+    which coarse filesystems and cp/untar restores make equal or
+    non-monotonic. Vacuum sets the retention horizon: it physically
+    drops shadowed batches, so time travel reaches only as far back as
+    the last vacuum left intact."""
+    out = []
     for f in os.listdir(_commits_dir(path)):
-        if "=" in f:
-            s, bid = f.split("=", 1)
-            out[bid] = int(s)
-    return out
+        if "=" not in f:
+            continue
+        seq, bid = f.split("=", 1)
+        try:
+            at = os.path.getmtime(os.path.join(path, "lineage", f"batch={bid}", "_SUCCESS"))
+        except FileNotFoundError:
+            continue
+        out.append({"batch_id": bid, "seq": int(seq), "committed_at": at})
+    return sorted(out, key=lambda r: r["seq"])
 
 
-def _block_batches(path: str) -> list[str]:
-    """Committed block batch dirs (_SUCCESS present) — the one listing
-    shared by load() and compact()."""
-    bdir = os.path.join(path, "blocks")
-    return [
-        os.path.join(bdir, b)
-        for b in sorted(os.listdir(bdir))
-        if os.path.exists(os.path.join(bdir, b, "_SUCCESS"))
-    ]
+def _committed_ids(path: str) -> list[str]:
+    """The committed batch ids in commit order, from :func:`snapshots`."""
+    return [s["batch_id"] for s in snapshots(path)]
+
+
+def _batch_dirs(path: str, sub: str, ids) -> list[str]:
+    """The ``<sub>/batch=<id>`` dirs of batch ``ids``, in their order."""
+    return [os.path.join(path, sub, f"batch={b}") for b in ids]
 
 
 def read_lineage(spark: SparkSession, path: str) -> DataFrame:
     """Committed lineage (the ``loaded_patches`` list)."""
-    batches = _lineage_batches(path)
-    if not batches:
+    return _read_lineage(spark, path, _committed_ids(path))
+
+
+def _read_lineage(spark: SparkSession, path: str, ids: list[str]) -> DataFrame:
+    """:func:`read_lineage` of the committed batch ``ids``."""
+    if not ids:
         return local_frame(spark, [], LINEAGE_SCHEMA)
-    return spark.read.schema(LINEAGE_SCHEMA).parquet(*batches)
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(*_batch_dirs(path, "lineage", ids))
 
 
 def read_events(spark: SparkSession, path: str) -> DataFrame:
@@ -480,10 +483,14 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
     materializes an ``events/batch=`` dir — the carried history of the
     batches it shadows, which read_events prefers over that batch's
     rewritten blocks (whose batch_id column holds the NEW id)."""
-    committed = sorted(os.path.basename(b) for b in _lineage_batches(path))
+    return _read_events(spark, path, _committed_ids(path))
+
+
+def _read_events(spark: SparkSession, path: str, ids: list[str]) -> DataFrame:
+    """:func:`read_events` of the committed batch ``ids``."""
     dirs = []
     write_rows: list[dict] = []
-    for b in committed:
+    for b in sorted(f"batch={i}" for i in ids):
         ed = os.path.join(path, "events", b)
         bd = os.path.join(path, "blocks", b)
         if os.path.exists(os.path.join(ed, "_SUCCESS")):
@@ -860,8 +867,8 @@ def _write_blocks(
     plan.mapInArrow(kernel, "n_rows long").write.format("noop").mode("overwrite").save()
     for elem in groups:
         open(os.path.join(block_dir, f"dt-{elem}", "_SUCCESS"), "w").close()
-    # batch-level commit marker: _block_batches requires it, and the
-    # per-subdir _SUCCESS files alone would leave the batch invisible
+    # the layout's batch-level marker: no reader needs it (the batch's
+    # ticket, taken after its lineage, vouches for its blocks)
     open(os.path.join(block_dir, "_SUCCESS"), "w").close()
 
 
@@ -1072,7 +1079,7 @@ def _write_lineage(
 ) -> None:
     """Write a batch's lineage rows under ``lineage/batch=<id>/`` with
     ``pyarrow.parquet`` — no Spark job: the rows are a few KB of pandas
-    on the driver — then its ``_SUCCESS``, which :func:`_lineage_batches`
+    on the driver — then its ``_SUCCESS``, which :func:`snapshots`
     requires, so a crash before it leaves the batch invisible. Rows go
     in tile order, so each file and row group covers its own tile range
     for :func:`_lineage_filter`'s range guard. The file count is the
@@ -1341,50 +1348,24 @@ def materialize_patch(
     return metrics
 
 
-def snapshots(path: str) -> list[dict]:
-    """Committed snapshots in COMMIT order (the icechunk commit-log
-    analog: every fill or compaction commit is a readable version).
-    Each entry: {batch_id, seq, committed_at}. Order comes from the
-    atomic commit counter (_allocate_commit_seq) — NEVER from mtimes,
-    which coarse filesystems and cp/untar restores make equal or
-    non-monotonic. Vacuum sets the retention horizon: it physically
-    drops shadowed batches, so time travel reaches only as far back as
-    the last vacuum left intact."""
-    batches = _lineage_batches(path)
-    # read AFTER the listing: every listed batch's ticket is in it,
-    # even when another batch commits in between
-    seqs = _commit_seqs(path)
-    out = []
-    for b in batches:
-        bid = os.path.basename(b).split("=", 1)[1]
-        out.append(
-            {
-                "batch_id": bid,
-                "seq": seqs[bid],
-                "committed_at": os.path.getmtime(os.path.join(b, "_SUCCESS")),
-            }
-        )
-    return sorted(out, key=lambda r: r["seq"])
-
-
 def _lineage_filter(
     tile_ids: list[int],
     channels: list[str] | None = None,
     allowed: set[str] | None = None,
     time_idxs: list[int] | None = None,
-) -> ds.Expression:
-    """The pyarrow filter of :func:`_lineage_rows` and of
-    :func:`load_local`'s block read: the ROI's tiles —
-    and optionally ``channels``, the ``allowed`` batch ids of a snapshot
-    and the ``time_idxs`` of a TOI. The tile_id RANGE guard is what
-    prunes: pyarrow skips a row group by its min/max statistics for a
-    comparison, not for an ``is_in`` (Spark's reader turns a large IN
-    into a range itself)."""
-    tile = ds.field("tile_id")
+) -> pc.Expression:
+    """The pyarrow filter of :func:`_read_files`, the driver read of
+    lineage and block rows: the ROI's tiles — and optionally
+    ``channels``, the ``allowed`` batch ids of a snapshot and the
+    ``time_idxs`` of a TOI. The tile_id RANGE guard is what prunes
+    (:func:`_tile_row_groups`): row-group min/max statistics answer a
+    comparison, not an ``is_in`` (Spark's reader turns a large IN into a
+    range itself)."""
+    tile = pc.field("tile_id")
     f = (tile >= int(min(tile_ids))) & (tile <= int(max(tile_ids))) & tile.isin(tile_ids)
     for col, keep in (("channel", channels), ("batch_id", allowed), ("time_idx", time_idxs)):
         if keep is not None:
-            f &= ds.field(col).isin(sorted(keep))
+            f &= pc.field(col).isin(sorted(keep))
     return f
 
 
@@ -1397,30 +1378,32 @@ def _lineage_rows(
 ) -> pd.DataFrame:
     """THE lineage read of a fill, an ROI read, :func:`chunk_stats` and
     :func:`load_changes`: the committed ``(chunk_key, batch_id,
-    src_batch)`` rows that pass :func:`_lineage_filter`, read on the
-    driver with ``pyarrow.dataset`` over the ticket-gated
-    :func:`_lineage_batches` — no Spark job. Only the part files whose
-    tile rectangle, as their batch's :data:`_TILE_RANGES` manifest
+    src_batch)`` rows of the ``allowed`` batches (a snapshot's ids; None
+    reads the head, :func:`snapshots`) that pass :func:`_lineage_filter`
+    — which keeps ``allowed`` as a ``batch_id`` filter — read on the
+    driver by :func:`_read_files`, no Spark job. Only the part files
+    whose tile rectangle, as their batch's :data:`_TILE_RANGES` manifest
     records it, meets the ROI's are opened (:func:`_lineage_files`), and
     of those only the row groups whose range meets it are decoded, so
     the read is bounded by the query (ROI chunks x commits per chunk),
     not by the cube: what grows with the committed batches is one
-    listing entry and one small manifest read each. Raw rows: more than
-    one per double-committed chunk. ``use_threads=False``: on a few
-    small files pyarrow's thread pools cost more CPU than they saved."""
+    ticket and one small manifest read each. Raw rows: more than one per
+    double-committed chunk."""
     cols = ["chunk_key", "batch_id", "src_batch"]
     if not tile_ids:
         return pd.DataFrame(columns=cols)
     nx = open_spec(path).grid.n_tiles_x
     roi = _tile_range(np.sort(np.asarray(tile_ids, dtype=np.int64)), nx)
-    files = [f for b in _lineage_batches(path) for f in _lineage_files(b, roi)]
+    ids = _committed_ids(path) if allowed is None else sorted(allowed)
+    files = [f for b in _batch_dirs(path, "lineage", ids) for f in _lineage_files(b, roi)]
     if not files:
         return pd.DataFrame(columns=cols)
-    lineage = ds.dataset(files, format="parquet", schema=LINEAGE_ARROW)
-    f = _lineage_filter(tile_ids, channels, allowed, time_idxs)
-    return lineage.to_table(columns=cols, filter=f, use_threads=False).to_pandas(
-        use_threads=False
-    )
+    # the rows' columns and the ones the filter reads
+    filtered = (("channel", channels), ("time_idx", time_idxs))
+    read = cols + ["tile_id"] + [c for c, keep in filtered if keep is not None]
+    schema = pa.schema([LINEAGE_ARROW.field(c) for c in read])
+    t = _read_files(files, schema, tile_ids, channels, allowed, time_idxs)
+    return t.select(cols).to_pandas(use_threads=False)
 
 
 def _winners(lineage: DataFrame) -> DataFrame:
@@ -1466,8 +1449,8 @@ class _ReadPlan:
     steps, the ROI's tiles (and ``(tile_id, roi_idx)`` pairs for a
     batch ROI list), the visible ``(chunk_key, batch_id, src_batch)``
     rows, and the ``dt-<elem>`` leaf dirs of the batches that win a
-    chunk. :func:`load` renders it as a Spark scan, :func:`load_local`
-    as a driver read."""
+    chunk. :func:`_spark_rows` renders it as a lazy Spark scan,
+    :func:`_local_rows` as a driver read."""
 
     time_idxs: list[int] | None
     tile_ids: list[int]
@@ -1484,12 +1467,13 @@ def _read_plan(
     channels: list[str] | None,
     lineage: pd.DataFrame | None = None,
 ) -> _ReadPlan:
-    """THE read plan of :func:`load` and :func:`load_local` — spec and
-    channel checks, snapshot prefix, ROI tiles, lineage read and read
-    rule, winning leaves and their channel-group pruning — computed on
-    the driver, no Spark job. ``lineage``, for a read of every channel
-    at the head: the ROI's lineage rows, already read (a fill's cache
-    skip, :func:`_fill`), which then are not read again."""
+    """THE read plan of every ROI read — spec and channel checks,
+    snapshot prefix of one :func:`snapshots` listing, ROI tiles, lineage
+    read and read rule, winning leaves and their channel-group pruning —
+    computed on the driver, no Spark job. ``lineage``: rows already read
+    against the caller's own listing (a fill's cache skip for a read of
+    every channel at the head, :func:`_changes_plan`'s changed chunks,
+    an overview build's), which then are not read again."""
     spec = open_spec(path)
     time_idxs = _toi_idxs(spec, toi_epochs)
     if channels is not None:
@@ -1505,7 +1489,7 @@ def _read_plan(
             )
     allowed: set[str] | None = None
     if as_of_batch is not None:
-        ids = [s["batch_id"] for s in snapshots(path)]
+        ids = _committed_ids(path)
         if as_of_batch not in ids:
             raise ValueError(f"unknown snapshot {as_of_batch!r}; committed: {ids}")
         # PREFIX of the commit order, inclusive
@@ -1518,15 +1502,13 @@ def _read_plan(
     # commit the same chunk (both planned against the pre-commit
     # lineage — the reference resolves this with icechunk conflict
     # retries, backends/threaded.py:85-99); we resolve it at read:
-    # exactly one winning batch per chunk_key. Read BEFORE the block
-    # listing: a batch's blocks land before its ticket.
+    # exactly one winning batch per chunk_key. The winners' blocks are
+    # their ``blocks/batch=<id>`` dirs, never listed: a committed
+    # batch's blocks landed before its ticket.
     if lineage is None:
         lineage = _lineage_rows(path, tile_ids, channels, allowed, time_idxs)
     vis = _visible(lineage)
-    winning = set(vis["batch_id"])
-    leafs = _block_leaf_dirs(
-        [b for b in _block_batches(path) if os.path.basename(b).split("=", 1)[1] in winning]
-    )
+    leafs = _block_leaf_dirs(_batch_dirs(path, "blocks", sorted(set(vis["batch_id"]))))
     if channels is not None:
         # dtype-GROUP pruning: a channel projection maps to the storage
         # groups that hold those channels; every other dt-<elem> leaf is
@@ -1592,6 +1574,14 @@ def load(
     though its id sorts first, so historical as-of views are
     unchanged); vacuum bounds how far back travel reaches."""
     plan = _read_plan(path, roi_bbox, toi_epochs, as_of_batch, channels)
+    return _spark_rows(spark, plan, channels, value_range, stats_only)
+
+
+def _spark_rows(
+    spark: SparkSession, plan: _ReadPlan, channels: list[str] | None = None,
+    value_range: tuple[float, float] | None = None, stats_only: bool = False,
+) -> DataFrame:
+    """:func:`load`'s rendering of its read ``plan``: the lazy Spark scan."""
     tile_ids, vis, leafs = plan.tile_ids, plan.vis, plan.leafs
     stats_schema = BLOCK_SCHEMA.replace("block array<double>", STATS_COLS)
 
@@ -1689,8 +1679,7 @@ def _list_cells(block: pa.ChunkedArray) -> list[list]:
 
 def _tile_row_groups(md: pq.FileMetaData, lo: int, hi: int) -> list[int]:
     """The row groups of a parquet file whose tile_id statistics meet
-    [lo, hi], and every group without them: the pruning that
-    :func:`_lineage_filter`'s range guard gets from ``pyarrow.dataset``."""
+    [lo, hi], and every group without them."""
     col = next(i for i in range(md.num_columns) if md.schema.column(i).path == "tile_id")
     out = []
     for g in range(md.num_row_groups):
@@ -1698,6 +1687,44 @@ def _tile_row_groups(md: pq.FileMetaData, lo: int, hi: int) -> list[int]:
         if st is None or not st.has_min_max or (st.min <= hi and st.max >= lo):
             out.append(g)
     return out
+
+
+def _read_files(files: list[str], schema: pa.Schema, tile_ids: list[int], *keep) -> pa.Table:
+    """THE driver read of the store's parquet files, lineage
+    (:func:`_lineage_rows`) and blocks (:func:`_read_leaf`): the
+    ``schema`` columns (a column a file lacks reads as NULL) of the rows
+    of ``files`` that pass the :func:`_lineage_filter` of ``tile_ids``
+    and ``keep`` (its channels, allowed batch ids, TOI steps). Each
+    file's row groups that meet the tiles' range
+    (:func:`_tile_row_groups`) are decoded with ``pyarrow.parquet`` and
+    filtered by an Acero plan, all on the calling thread: a
+    ``pyarrow.dataset`` scan decodes on pyarrow's thread pools even with
+    ``use_threads=False``; on an ROI's two small block files it took
+    ~1.1x the CPU, more than half of it on the pools, a share that
+    varied from call to call."""
+    lo, hi = int(min(tile_ids)), int(max(tile_ids))
+    parts = []
+    for p in files:
+        with pq.ParquetFile(p) as pf:
+            groups = _tile_row_groups(pf.metadata, lo, hi)
+            have = set(pf.schema_arrow.names)
+            if not groups:
+                continue
+            t = pf.read_row_groups(
+                groups, columns=[c for c in schema.names if c in have], use_threads=False
+            )
+        for field in schema:
+            if field.name not in have:
+                t = t.append_column(field, pa.nulls(t.num_rows, field.type))
+        parts.append(t.select(schema.names).cast(schema))
+    return acero.Declaration.from_sequence([
+        acero.Declaration("table_source", acero.TableSourceNodeOptions(
+            pa.concat_tables(parts) if parts else schema.empty_table()
+        )),
+        acero.Declaration("filter", acero.FilterNodeOptions(
+            _lineage_filter(tile_ids, *keep)
+        )),
+    ]).to_table(use_threads=False)
 
 
 def _read_leaf(
@@ -1710,44 +1737,18 @@ def _read_leaf(
     stats: str = "",
 ) -> pa.Table:
     """THE pyarrow read of block rows, :func:`load_local`'s and a patch
-    kernel's: the rows of the ``dt-<elem>`` leaf ``dirs`` that pass the
-    :func:`_lineage_filter` of the other arguments,
+    kernel's: the rows of the ``dt-<elem>`` leaf ``dirs`` that
+    :func:`_read_files` keeps for the other arguments,
     :data:`BLOCK_SCHEMA` columns plus ``stats`` (``", " + STATS_COLS``
-    or ""; a column a file lacks reads as NULL), ``block`` widened to
-    ``list<double>`` (bool -> 0.0/1.0, NULL kept). Each part file's
-    row groups that meet the tiles' range (:func:`_tile_row_groups`)
-    are decoded with ``pyarrow.parquet`` and filtered by an Acero plan,
-    all on the calling thread: a ``pyarrow.dataset`` scan decodes on
-    pyarrow's thread pools even with ``use_threads=False``; on an ROI's
-    two small files it took ~1.1x the CPU, more than half of it on the
-    pools, a share that varied from call to call."""
+    or ""), ``block`` widened to ``list<double>`` (bool -> 0.0/1.0,
+    NULL kept)."""
+    # not _SUCCESS, nor the fill kernel's hidden temp names
+    files = [
+        os.path.join(d, n) for d in dirs for n in sorted(os.listdir(d))
+        if not n.startswith(("_", "."))
+    ]
     schema = _arrow_schema(_typed_schema(BLOCK_SCHEMA, elem) + stats)
-    lo, hi = int(min(tile_ids)), int(max(tile_ids))
-    parts = []
-    for d in dirs:
-        # pyarrow.dataset's default ignore_prefixes: _SUCCESS, and the
-        # fill kernel's hidden temp names
-        for name in sorted(n for n in os.listdir(d) if not n.startswith(("_", "."))):
-            with pq.ParquetFile(os.path.join(d, name)) as pf:
-                groups = _tile_row_groups(pf.metadata, lo, hi)
-                have = set(pf.schema_arrow.names)
-                if not groups:
-                    continue
-                t = pf.read_row_groups(
-                    groups, columns=[c for c in schema.names if c in have], use_threads=False
-                )
-            for field in schema:
-                if field.name not in have:
-                    t = t.append_column(field, pa.nulls(t.num_rows, field.type))
-            parts.append(t.select(schema.names).cast(schema))
-    t = acero.Declaration.from_sequence([
-        acero.Declaration("table_source", acero.TableSourceNodeOptions(
-            pa.concat_tables(parts) if parts else schema.empty_table()
-        )),
-        acero.Declaration("filter", acero.FilterNodeOptions(
-            _lineage_filter(tile_ids, channels, allowed, time_idxs)
-        )),
-    ]).to_table(use_threads=False)
+    t = _read_files(files, schema, tile_ids, channels, allowed, time_idxs)
     i = t.schema.get_field_index("block")
     return t.set_column(i, "block", t["block"].cast(pa.list_(pa.float64())))
 
@@ -1794,10 +1795,9 @@ def fill_load_local(
 ) -> pd.DataFrame:
     """:func:`materialize`, then :func:`load_local` of the same ROI —
     ``accessor.load(persist=True)`` — reading the ROI's lineage once
-    where it was all cached: the fill's cache-skip read, taken before
-    the read plan lists the block batches as a read of its own would
-    be, is the plan's lineage (for every channel; a channel projection
-    reads its own)."""
+    where it was all cached: the fill's cache-skip read, against the
+    fill's one :func:`snapshots` listing, is the plan's lineage (for
+    every channel; a channel projection reads its own)."""
     _, lineage = _fill(spark, path, roi_bbox, toi_epochs)
     plan = _read_plan(
         path, roi_bbox, toi_epochs, None, channels, lineage if channels is None else None
@@ -1853,15 +1853,7 @@ def chunk_stats(
     pruned: the block arrays never enter the plan, so at 100 TB this
     reads a few bytes per chunk, not the chunks. Same ROI/TOI/channel/
     time-travel semantics as :func:`load`."""
-    return load(
-        spark,
-        path,
-        roi_bbox,
-        toi_epochs=toi_epochs,
-        as_of_batch=as_of_batch,
-        channels=channels,
-        stats_only=True,
-    )
+    return load(spark, path, roi_bbox, toi_epochs, as_of_batch, channels, stats_only=True)
 
 
 def load_changes(
@@ -1884,12 +1876,27 @@ def load_changes(
     carries ``src_batch`` through, so it reports ZERO changes; a patch
     merge stamps its own id, so it reports exactly its footprint. New
     chunks (no winner at the snapshot) always report. The winners now
-    and at the snapshot come from one ROI-pruned lineage read, and the
-    blocks from ``load(..., as_of_batch=<latest>)``: both resolve
-    against the commit prefix listed once up front, so a commit that
-    lands in between is invisible to both. The changed keys filter the
-    blocks as a literal IN list."""
-    ids = [s["batch_id"] for s in snapshots(path)]
+    and at the snapshot, and the changed chunks' blocks, all come from
+    one ROI-pruned lineage read of the batches listed once up front, so
+    a commit that lands in between is invisible to all of them. The
+    changed chunks' visible pairs filter the blocks as a literal IN
+    list."""
+    plan = _changes_plan(path, roi_bbox, since_batch, _committed_ids(path), toi_epochs, channels)
+    return _spark_rows(spark, plan, channels)
+
+
+def _changes_plan(
+    path: str,
+    roi_bbox,
+    since_batch: str,
+    ids: list[str],
+    toi_epochs: list[int] | None = None,
+    channels: list[str] | None = None,
+) -> _ReadPlan:
+    """:func:`load_changes`' read plan against the committed batch
+    ``ids`` of one listing: the ROI's lineage rows of those batches,
+    read once, resolved to the winners now and at ``since_batch``, and
+    the plan of the chunks whose ``src_batch`` differs."""
     if since_batch not in ids:
         raise ValueError(f"unknown snapshot {since_batch!r}; committed: {ids}")
     spec = open_spec(path)
@@ -1898,13 +1905,13 @@ def load_changes(
     then = _visible(lin[lin["batch_id"].isin(ids[: ids.index(since_batch) + 1])])
     old_src = dict(zip(then["chunk_key"], then["src_batch"]))
     now = _visible(lin)
-    changed = [
+    changed = {
         k for k, src in zip(now["chunk_key"], now["src_batch"])
         if k not in old_src or old_src[k] != src
-    ]
-    return load(
-        spark, path, roi_bbox, toi_epochs, as_of_batch=ids[-1], channels=channels
-    ).filter(_in_literal("chunk_key", changed))
+    }
+    return _read_plan(
+        path, roi_bbox, toi_epochs, None, channels, lin[lin["chunk_key"].isin(changed)]
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1963,19 +1970,17 @@ def build_overviews(
     :func:`load_changes` to re-derive only changed tiles — rather than
     full-cube. Contract: one maintenance actor at a time (same as
     compact/vacuum)."""
+    return _build_overviews(spark, path, factors, roi_bbox, snapshots(path))
+
+
+def _build_overviews(spark: SparkSession, path: str, factors, roi_bbox, snaps: list[dict]) -> dict:
+    """:func:`build_overviews` of the committed ``snaps`` of one
+    :func:`snapshots` listing."""
     spec = open_spec(path)
-    gb = spec.grid.geobox
     if roi_bbox is None:
-        roi_bbox = (
-            gb.x0,
-            gb.y0 - gb.height * gb.res,
-            gb.x0 + gb.width * gb.res,
-            gb.y0,
-        )
-    # ONE listing stamps both: a commit landing after it may or may not
-    # be in the level, and a stamp older than what was read costs at
-    # most a redundant re-merge on the next refresh, never a lost change
-    snaps = snapshots(path)
+        roi_bbox = spec.grid.geobox.extent
+    # ONE listing is what the level reads and what stamps it: a commit
+    # landing after it is not in the level and is newer than the stamp
     built_at = snaps[-1]["seq"] if snaps else 0
     built_at_batch = snaps[-1]["batch_id"] if snaps else None
     # record the level's COVERAGE (r6 correctness fix, advisor item
@@ -1986,7 +1991,8 @@ def build_overviews(
     # same enumeration load() prunes by; <= n_tiles ints) makes the
     # claim exact for every ROI spelling.
     built_tiles, _ = _roi_tile_ids(spec.grid, roi_bbox)
-    src = load(spark, path, roi_bbox)
+    lineage = _lineage_rows(path, built_tiles, allowed={s["batch_id"] for s in snaps})
+    src = _spark_rows(spark, _read_plan(path, roi_bbox, None, None, None, lineage))
     n = 0
     for f in factors:
         expr = _downsample_sql(spec.grid.chunk_px, int(f))
@@ -2023,40 +2029,30 @@ def refresh_overviews(
     then swaps in with two renames — a crash in the window loses only
     the level (rebuildable), never cube data."""
     spec = open_spec(path)
-    gb = spec.grid.geobox
-    full_bbox = (
-        gb.x0, gb.y0 - gb.height * gb.res, gb.x0 + gb.width * gb.res, gb.y0,
-    )
-    # ONE snapshot, listed before any read: each level is stamped with
-    # it. A commit landing later may or may not be merged below; it is
-    # newer than the stamp either way, so the next refresh (re-)merges
-    # it — stamping a later listing would skip it for good
+    # ONE snapshot, listed before any read: each level reads it and is
+    # stamped with it. A commit landing later is newer than the stamp,
+    # so the next refresh merges it — stamping a later listing would
+    # skip it for good
     snaps = snapshots(path)
+    ids = [s["batch_id"] for s in snaps]
     cur_seq = snaps[-1]["seq"] if snaps else 0
     cur_batch = snaps[-1]["batch_id"] if snaps else None
     changed_total = 0
-    levels = 0
-    for f in factors:
-        f = int(f)
+    for f in map(int, factors):
         d = os.path.join(path, "overviews", f"f={f}")
         meta_p = os.path.join(d, "_overview.json")
-        if not os.path.exists(meta_p):
-            build_overviews(spark, path, factors=(f,))
-            levels += 1
-            continue
-        with open(meta_p) as fh:
-            meta = json.load(fh)
-        if meta["built_at_seq"] >= cur_seq:
-            levels += 1  # already current
-            continue
         try:
-            ch = load_changes(spark, path, full_bbox, meta["built_at_batch"])
-        except ValueError:  # build snapshot gone (or never existed): rebuild
-            build_overviews(spark, path, factors=(f,))
-            levels += 1
+            with open(meta_p) as fh:
+                meta = json.load(fh)
+            if meta["built_at_seq"] >= cur_seq:
+                continue  # already current
+            plan = _changes_plan(path, spec.grid.geobox.extent, meta["built_at_batch"], ids)
+        except (FileNotFoundError, ValueError):
+            # no level, or its build snapshot is gone (or never existed)
+            _build_overviews(spark, path, (f,), None, snaps)
             continue
         cols = ["tile_y", "tile_x", "tile_id", "time_idx", "channel", "chunk_key"]
-        new_part = ch.select(
+        new_part = _spark_rows(spark, plan).select(
             *cols, F.expr(_downsample_sql(spec.grid.chunk_px, f)).alias("block")
         ).localCheckpoint(eager=True)  # feeds the count AND the merged write
         n_changed = new_part.count()
@@ -2074,7 +2070,6 @@ def refresh_overviews(
             # level content is already correct — just advance the meta
             with open(meta_p, "w") as fh:
                 json.dump(new_meta, fh)
-            levels += 1
             continue
         keep = (
             spark.read.schema(OVERVIEW_SCHEMA)
@@ -2092,8 +2087,7 @@ def refresh_overviews(
         os.rename(d, trash)
         os.rename(tmp, d)
         shutil.rmtree(trash, ignore_errors=True)
-        levels += 1
-    return {"levels": levels, "changed_chunks": changed_total}
+    return {"levels": len(factors), "changed_chunks": changed_total}
 
 
 def load_overview(
@@ -2116,7 +2110,8 @@ def load_overview(
         )
     with open(meta_p) as fh:
         meta = json.load(fh)
-    cur = max(_commit_seqs(path).values(), default=0)
+    snaps = snapshots(path)
+    cur = snaps[-1]["seq"] if snaps else 0
     if cur > meta["built_at_seq"]:
         raise ValueError(
             f"overview f={factor} is stale (built at seq "
@@ -2183,18 +2178,18 @@ def compact(spark: SparkSession, path: str) -> dict:
     append-only log — maintenance must not erase it; read_events
     de-duplicates the carried copies). Returns
     {batch_id, chunks, batches_covered}."""
-    committed = _lineage_batches(path)
+    committed = _committed_ids(path)
     if len(committed) <= 1:
         return {"batch_id": None, "chunks": 0, "batches_covered": 0}
     new_id = _compact_id(path)
     # feeds blocks semi-join AND the new lineage
-    winners = _winners(read_lineage(spark, path)).localCheckpoint(eager=True)
+    winners = _winners(_read_lineage(spark, path, committed)).localCheckpoint(eager=True)
 
     # per-dtype leaf groups: each storage element type is read with its
     # typed schema, semi-joined, and rewritten AS STORED into its own
     # dt-<elem> leaf — compaction never round-trips typed blocks
     # through double
-    leafs = _block_leaf_dirs(_block_batches(path))
+    leafs = _block_leaf_dirs(_batch_dirs(path, "blocks", sorted(committed)))
     new_dir = os.path.join(path, "blocks", f"batch={new_id}")
     for elem in sorted(leafs):
         # BLOCK_FILE_SCHEMA so zone-map stats survive the rewrite
@@ -2218,7 +2213,7 @@ def compact(spark: SparkSession, path: str) -> dict:
     # values preserved in the COLUMN; the dir is the visibility unit)
     # into the compacted batch BEFORE its lineage commit, so vacuuming
     # the shadowed batches later loses nothing
-    events = read_events(spark, path)
+    events = _read_events(spark, path, committed)
     events.write.mode("overwrite").parquet(
         os.path.join(path, "events", f"batch={new_id}")
     )
@@ -2237,12 +2232,12 @@ def compact(spark: SparkSession, path: str) -> dict:
     )
     # manifest of the batches whose event history THIS compaction
     # carried — vacuum's ground truth for what is safe to delete. A
-    # batch committing concurrently (after our read_events above) is
-    # not listed, so its events can never be vacuumed on our account.
+    # batch committing concurrently (after the listing above) is not
+    # listed, so its events can never be vacuumed on our account.
     # Leading underscore: Spark/Hadoop readers ignore the file.
     new_lin = os.path.join(path, "lineage", f"batch={new_id}")
     with open(os.path.join(new_lin, "_covered.json"), "w") as mf:
-        json.dump(sorted(os.path.basename(b).split("=", 1)[1] for b in committed), mf)
+        json.dump(sorted(committed), mf)
     # the tile-range manifest of the driver's lineage read, from the
     # written files' footers; without one the batch is read whole
     ranges = _footer_tile_ranges(new_lin)
@@ -2275,7 +2270,13 @@ def vacuum(spark: SparkSession, path: str, min_orphan_age_sec: float = 86400.0) 
     shadowed files to outlive the compaction by the retention window.
     Default 24 h; pass 0 only when no fill can be running and no lazy
     reader is live (tests, single-actor admin)."""
-    committed = {os.path.basename(b) for b in _lineage_batches(path)}
+    # ONE read of commit state: the tickets, their mtimes (commit
+    # times) and the committed batches among them, as snapshots() has it
+    cdir = _commits_dir(path)
+    tickets = {f.split("=", 1)[1]: os.path.join(cdir, f) for f in os.listdir(cdir) if "=" in f}
+    ticket_mtime = {bid: os.path.getmtime(p) for bid, p in tickets.items()}
+    lin = os.path.join(path, "lineage")
+    committed = {b for b in tickets if os.path.exists(os.path.join(lin, f"batch={b}", "_SUCCESS"))}
     now = time.time()
     removed_orphans = []
     for sub in ("blocks", "events", "events_write", "lineage"):
@@ -2286,7 +2287,7 @@ def vacuum(spark: SparkSession, path: str, min_orphan_age_sec: float = 86400.0) 
             p = os.path.join(d, b)
             if (
                 b.startswith("batch=")
-                and b not in committed
+                and b[6:] not in committed
                 and now - os.path.getmtime(p) >= min_orphan_age_sec
             ):
                 shutil.rmtree(p, ignore_errors=True)
@@ -2297,33 +2298,31 @@ def vacuum(spark: SparkSession, path: str, min_orphan_age_sec: float = 86400.0) 
     # metadata-only read, never touches block data)
     winning = {
         r["batch_id"]
-        for r in _winners(read_lineage(spark, path)).select("batch_id").distinct().collect()
+        for r in _winners(_read_lineage(spark, path, sorted(committed)))
+        .select("batch_id").distinct().collect()
     }
 
     # which shadowed batches did a compaction actually CARRY, and has
     # that compaction been committed long enough for lazy readers to
     # have drained (ticket mtime = commit time)?
-    cdir = _commits_dir(path)
-    ticket_mtime: dict[str, float] = {}
-    for f in os.listdir(cdir):
-        if "=" in f:
-            ticket_mtime[f.split("=", 1)[1]] = os.path.getmtime(os.path.join(cdir, f))
     vouched: set[str] = set()
-    for b in sorted(committed):
-        bid = b.split("=", 1)[1]
-        mf = os.path.join(path, "lineage", b, "_covered.json")
+    for bid in sorted(committed):
+        mf = os.path.join(lin, f"batch={bid}", "_covered.json")
         if not os.path.exists(mf):
             continue
-        if now - ticket_mtime.get(bid, now) < min_orphan_age_sec:
+        if now - ticket_mtime[bid] < min_orphan_age_sec:
             continue  # compaction too fresh: retention window still open
         with open(mf) as fh:
             vouched.update(json.load(fh))
     removed_shadowed = []
     removed_bids = set()
-    for b in sorted(committed):
-        bid = b.split("=", 1)[1]
+    for bid in sorted(committed):
         if bid in winning or bid not in vouched:
             continue
+        b = f"batch={bid}"
+        # uncommit first: a crash below leaves an orphan, never a
+        # committed batch without its blocks
+        os.unlink(os.path.join(lin, b, "_SUCCESS"))
         for sub in ("blocks", "events", "events_write", "lineage"):
             p = os.path.join(path, sub, b)
             if os.path.isdir(p):
@@ -2334,14 +2333,9 @@ def vacuum(spark: SparkSession, path: str, min_orphan_age_sec: float = 86400.0) 
     # commit-ticket hygiene: entries of removed batches, plus any
     # dangling ticket whose lineage no longer exists, past the same
     # age guard
-    live = {b.split("=", 1)[1] for b in committed} - removed_bids
-    for f in os.listdir(cdir):
-        if "=" not in f:
-            continue
-        bid = f.split("=", 1)[1]
-        p = os.path.join(cdir, f)
+    for bid, p in tickets.items():
         if bid in removed_bids or (
-            bid not in live and now - os.path.getmtime(p) >= min_orphan_age_sec
+            bid not in committed and now - ticket_mtime[bid] >= min_orphan_age_sec
         ):
             os.unlink(p)
     return {"orphans_removed": removed_orphans, "shadowed_removed": removed_shadowed}

@@ -838,6 +838,73 @@ def test_load_changes_reads_one_snapshot(spark, cube, monkeypatch):
     assert {b for _, b in served(load(spark, cube, ROI_A))} == {"a" * 12}
 
 
+@pytest.mark.parametrize(
+    "call, listings, lineage_reads",
+    [
+        ("snapshots", 1, 0),
+        ("load", 1, 1),
+        ("load_as_of", 1, 1),
+        ("chunk_stats", 1, 1),
+        ("load_local", 1, 1),
+        ("cached_persisted_load", 1, 1),
+        ("cold_persisted_load", 2, 2),  # before its fill, and after its commit
+        ("load_changes", 1, 1),
+        ("refresh_overviews", 1, 1),
+        ("load_overview", 1, 0),
+        ("compact", 1, 0),
+        ("vacuum", 1, 0),
+    ],
+)
+def test_each_store_call_lists_commit_state_once(spark, cube, monkeypatch, call, listings, lineage_reads):
+    """Each public store call reads ``lineage/_commits`` once — through
+    ``snapshots()``, or vacuum's own read — and resolves every read it
+    makes against that listing; its ROI lineage is read by as many
+    ``_lineage_rows`` calls as it has listings. A fill's commit-ticket
+    allocation is a write and not counted."""
+    import sys
+
+    import smart_geocubes_spark.plans.materialize as M
+    from smart_geocubes_spark.accessor import GeocubeAccessor
+
+    first = materialize(spark, cube, ROI_A)["batch_id"]
+    M.build_overviews(spark, cube, factors=(2,))
+    if call != "load_overview":  # a change to merge, and a second batch to compact
+        materialize(spark, cube, ROI_B)
+    acc = GeocubeAccessor(spark=spark, path=cube, spec=open_spec(cube))
+    run = {
+        "snapshots": lambda: M.snapshots(cube),
+        "load": lambda: load(spark, cube, ROI_A),
+        "load_as_of": lambda: load(spark, cube, ROI_A, as_of_batch=first),
+        "chunk_stats": lambda: M.chunk_stats(spark, cube, ROI_A),
+        "load_local": lambda: M.load_local(cube, ROI_A),
+        "cached_persisted_load": lambda: acc.load(ROI_B, persist=True),
+        "cold_persisted_load": lambda: acc.load((8.3, 15.2, 8.8, 15.8), persist=True),
+        "load_changes": lambda: M.load_changes(spark, cube, ROI_A, first),
+        "refresh_overviews": lambda: M.refresh_overviews(spark, cube, factors=(2,)),
+        "load_overview": lambda: M.load_overview(spark, cube, ROI_A, 2),
+        "compact": lambda: M.compact(spark, cube),
+        "vacuum": lambda: M.vacuum(spark, cube, min_orphan_age_sec=0),
+    }[call]
+    listed, real_listdir = [], os.listdir
+    rows, real_rows = [], M._lineage_rows
+
+    def listdir(p="."):
+        if (
+            isinstance(p, str)
+            and os.path.basename(os.path.normpath(p)) == "_commits"
+            and sys._getframe(1).f_code.co_name != "_allocate_commit_seq"
+        ):
+            listed.append(p)
+        return real_listdir(p)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(os, "listdir", listdir)
+        mp.setattr(M, "_lineage_rows", lambda *a, **k: rows.append(a) or real_rows(*a, **k))
+        run()
+    assert len(listed) == listings
+    assert len(rows) == lineage_reads
+
+
 def test_in_literal_quotes_values(spark):
     """The read path's literal IN list matches values with SQL quote
     and escape characters verbatim (channel names are free-form), keeps
@@ -1301,14 +1368,14 @@ def test_lineage_read_opens_only_the_rois_files(spark, cube, monkeypatch):
         rows.append((roi, materialize(spark, cube, roi)["batch_id"]))
 
     def lineage_opened(roi) -> tuple[set[str], object]:
-        opened, real = [], M.ds.dataset
+        opened, real = [], M._read_files
 
         def spy(source, *a, **k):
             opened.extend([source] if isinstance(source, str) else source)
             return real(source, *a, **k)
 
         with monkeypatch.context() as mp:
-            mp.setattr(M.ds, "dataset", spy)
+            mp.setattr(M, "_read_files", spy)
             got = M.load_local(cube, roi)
         lineage = [p for p in opened if isinstance(p, str) and f"{os.sep}lineage{os.sep}" in p]
         assert lineage
@@ -1344,14 +1411,14 @@ def test_lineage_read_prunes_batches_side_by_side(spark, cube, monkeypatch):
     roi = (9.2, 18.2, 10.8, 19.8)  # tx 9..10, ty 0..1: tile ids 9..30
     assert all(lo <= 30 and hi >= 9 for lo, hi in ranges)  # the id ranges all meet it
 
-    opened, real = [], M.ds.dataset
+    opened, real = [], M._read_files
 
     def spy(source, *a, **k):
         opened.extend([source] if isinstance(source, str) else source)
         return real(source, *a, **k)
 
     with monkeypatch.context() as mp:
-        mp.setattr(M.ds, "dataset", spy)
+        mp.setattr(M, "_read_files", spy)
         got = M.load_local(cube, roi)
     lineage = [p for p in opened if isinstance(p, str) and f"{os.sep}lineage{os.sep}" in p]
     assert {p.split("batch=")[1].split(os.sep)[0] for p in lineage} == {bids[3]}
