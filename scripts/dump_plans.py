@@ -22,7 +22,7 @@ NODE_RE = re.compile(
     r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|"
     r"CartesianProduct|Exchange hashpartitioning|Exchange rangepartitioning|"
     r"Exchange RoundRobinPartitioning|Exchange SinglePartition|ArrowEvalPython|"
-    r"BatchEvalPython|MapInPandas|FlatMapGroupsInPandas|Window|HashAggregate|"
+    r"BatchEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas|Window|HashAggregate|"
     r"ObjectHashAggregate|SortAggregate)"
 )
 
@@ -72,7 +72,7 @@ def main() -> None:
                      "BroadcastNestedLoopJoin", "CartesianProduct"})
         exch = fmt({"Exchange hashpartitioning", "Exchange rangepartitioning",
                     "Exchange RoundRobinPartitioning", "Exchange SinglePartition"})
-        py = fmt({"ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+        py = fmt({"ArrowEvalPython", "BatchEvalPython", "MapInPandas", "MapInArrow",
                   "FlatMapGroupsInPandas"})
         aggs = fmt({"HashAggregate", "ObjectHashAggregate", "SortAggregate", "Window"})
         print(f"| {name} | {joins} | {exch} | {py} | {aggs} |")

@@ -85,46 +85,6 @@ def explode_catalog_to_cells(spark: SparkSession, catalog: DataFrame) -> DataFra
 _UDF_CACHE: dict[str, object] = {}
 
 
-def diamond_pip_udf():
-    """Exact refine: ray-cast each candidate point against its patch's
-    diamond polygon. Grouped by patch center within the Arrow batch so
-    the O(n_points * n_edges) kernel is fully vectorized per group."""
-    if "pip" not in _UDF_CACHE:
-
-        @F.pandas_udf("boolean")
-        def _udf(
-            lon: pd.Series,
-            lat: pd.Series,
-            cx: pd.Series,
-            cy: pd.Series,
-            rx: pd.Series,
-            ry: pd.Series,
-        ) -> pd.Series:
-            lon_v = lon.to_numpy(dtype=np.float64)
-            lat_v = lat.to_numpy(dtype=np.float64)
-            cx_v = cx.to_numpy(dtype=np.float64)
-            cy_v = cy.to_numpy(dtype=np.float64)
-            rx_v = rx.to_numpy(dtype=np.float64)
-            ry_v = ry.to_numpy(dtype=np.float64)
-            out = np.zeros(len(lon_v), dtype=bool)
-            # group candidate rows by full diamond geometry — co-centered
-            # patches with different radii must not share a group
-            key = np.stack([cx_v, cy_v, rx_v, ry_v], axis=1)
-            _, inverse = np.unique(key, axis=0, return_inverse=True)
-            for g in np.unique(inverse):
-                sel = inverse == g
-                i = np.flatnonzero(sel)[0]
-                vx = np.array([cx_v[i], cx_v[i] + rx_v[i], cx_v[i], cx_v[i] - rx_v[i]])
-                vy = np.array([cy_v[i] + ry_v[i], cy_v[i], cy_v[i] - ry_v[i], cy_v[i]])
-                out[sel] = points_in_polygon(lon_v[sel], lat_v[sel], vx, vy)
-            return pd.Series(out)
-
-        # expensive kernel: pin one evaluation (CLAUDE.md rule 4 —
-        # Catalyst may duplicate deterministic UDFs across exchanges)
-        _UDF_CACHE["pip"] = _udf.asNondeterministic()
-    return _UDF_CACHE["pip"]
-
-
 def polygon_pip_udf():
     """Generic-polygon exact refine: candidate rows carry the patch's
     vertex arrays; rows are grouped per patch inside the batch and
@@ -224,10 +184,9 @@ def pip_join(points: DataFrame, catalog_cells: DataFrame) -> DataFrame:
     expression (same term order, identical IEEE doubles) the DuckDB
     oracle has always used, so the whole join now runs inside
     WholeStageCodegen with ZERO Python nodes. The ray-cast Arrow
-    kernel this replaces (:func:`diamond_pip_udf`, kept for generic
-    use) was pinned result-equal to this predicate by every green
-    driver row; generic/concave footprints still take the ray-cast
-    path (:func:`polygon_pip_join`), which has no closed form."""
+    kernel it replaced was pinned result-equal to this predicate by
+    every green driver row; generic/concave footprints still take the
+    ray-cast path (:func:`polygon_pip_join`), which has no closed form."""
     cand = bbox_join(points, catalog_cells)
     inside = (
         F.abs(F.col("lon") - F.col("cx")) / F.col("rx")

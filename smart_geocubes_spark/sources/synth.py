@@ -24,7 +24,11 @@ All integer arithmetic stays below 2**62 (h1 < 2**31 times multiplier
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from smart_geocubes_spark.geo.geobox import TileGrid, arctic_4326_grid
 
@@ -209,16 +213,31 @@ def patches_sql(dialect: str) -> str:
 _VIEWS_KEY = "smart_geocubes.base_views_dir"
 
 
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without Spark's schema inference,
+    which runs one Spark job per call: a single-file table's schema
+    comes from its footer, read on the driver, as Spark would infer it
+    (a timestamp without a time zone is TIMESTAMP_NTZ under
+    ``spark.sql.parquet.inferTimestampNTZ.enabled``). A directory is
+    left to Spark."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    return spark.read.schema(from_arrow_schema(pq.read_schema(path), ntz)).parquet(path)
+
+
 def ensure_base_views(spark: SparkSession, sf_dir: str) -> None:
     """Register the driver parquet tables as temp views (idempotent) and
     pin UTC so timestamp semantics match the DuckDB oracle. Repeat
     calls with the same ``sf_dir`` on the same session are no-ops while
-    every view still exists (catalog lookups, no Spark job)."""
+    every view still exists (catalog lookups); a registration reads the
+    tables' footers on the driver (:func:`read_table`) — no Spark job
+    either way."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if spark.conf.get(_VIEWS_KEY, None) == sf_dir and all(map(spark.catalog.tableExists, TABLES)):
         return
     for t in TABLES:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
+        read_table(spark, f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
     spark.conf.set(_VIEWS_KEY, sf_dir)
 
 
@@ -242,7 +261,7 @@ def pages_df(
         tag = f"{sf_dir}|{parallelism}"
         cached = spark.conf.get("smart_geocubes.orders_spread", None) == tag
         if not (cached and spark.catalog.tableExists("orders_spread")):
-            spark.read.parquet(f"{sf_dir}/orders.parquet").repartition(
+            read_table(spark, f"{sf_dir}/orders.parquet").repartition(
                 parallelism
             ).createOrReplaceTempView("orders_spread")
             spark.conf.set("smart_geocubes.orders_spread", tag)

@@ -486,6 +486,29 @@ def test_partition_ids_agree_past_local_relation_threshold(spark, tmp_path):
     assert _partition_ids_agree(spark, path) == {"dt-boolean": [5, 4], "dt-float": [5, 5, 8]}
 
 
+def test_partition_ids_agree_on_a_scattered_kernel_frame(spark, tmp_path, monkeypatch):
+    """The slice ids follow the tasks that actually run, not a plan of
+    Spark's slicing: a kernel-feeding frame that comes back scattered
+    over 3 round-robin partitions still gives every chunk one id in its
+    lineage row, its block row and its part file's name, and no task
+    overwrites another's file."""
+    import smart_geocubes_spark.plans.materialize as M
+
+    real = M.local_frame
+
+    def scattered(spark, rows, schema=None):
+        df = real(spark, rows, schema)
+        return df.repartition(3) if schema == M.KERNEL_SCHEMA else df
+
+    monkeypatch.setattr(M, "local_frame", scattered)
+    path = _typed_cube(str(tmp_path / "cube"))
+    with spark_conf(spark, {OPEN_COST: "600000"}):
+        assert materialize(spark, path, ROI_A)["written"] == 27
+    sizes = _partition_ids_agree(spark, path)
+    assert {k: sum(v) for k, v in sizes.items()} == {"dt-boolean": 9, "dt-float": 18}
+    assert load(spark, path, ROI_A).count() == 27
+
+
 def test_cold_fill_runs_one_job(spark, cube):
     """A cold fill into an empty single-dtype cube is one Spark job, the
     block write: its plan rows are sliced on the driver (no shuffle

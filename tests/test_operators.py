@@ -329,6 +329,25 @@ class TestPagesContract:
         spark.catalog.dropTempView("orders_spread")
         assert pages_df(spark, SF, parallelism=2).limit(1).count() == 1
 
+    @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+    def test_views_register_with_spark_schemas_and_no_job(self, spark, sf):
+        """A view registration reads each table's schema from its footer
+        on the driver: the schema Spark's own inference gives (a
+        timestamp without a time zone is TIMESTAMP_NTZ), and no Spark
+        job — inference runs one per table."""
+        from smart_geocubes_spark.sources.synth import TABLES, ensure_base_views
+        from smart_geocubes_spark.testing import spark_jobs
+
+        sf_dir = f"/root/testdata/{sf}"
+        for t in (*TABLES, "orders_spread"):
+            spark.catalog.dropTempView(t)
+        with spark_jobs(spark) as jobs:
+            ensure_base_views(spark, sf_dir)
+            pages_df(spark, sf_dir, parallelism=2)
+        assert not jobs, jobs
+        for t in TABLES:
+            assert spark.table(t).schema == spark.read.parquet(f"{sf_dir}/{t}.parquet").schema, t
+
     def test_skew_clusters_exist(self, spark):
         """~30% of geo pages live in 3 dense clusters (FIXTURES.md)."""
         pts = geoparsed_points(
