@@ -2,7 +2,8 @@
 
 For every `queries()` entry this prints the plan-shape summary the
 scale design cares about — join strategies, exchanges, Python eval
-nodes — plus the full formatted plan for the flagship queries. Run:
+nodes — plus the full formatted plan for the flagship queries, its
+ids renumbered so that two runs print the same bytes. Run:
 
     python scripts/dump_plans.py > PLANS.md
 """
@@ -25,6 +26,22 @@ NODE_RE = re.compile(
     r"BatchEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas|Window|HashAggregate|"
     r"ObjectHashAggregate|SortAggregate)"
 )
+# Spark's expression ids (``#17243``, ``#17243L``) and exchange
+# ``plan_id=``s count up with everything the session ran before
+ID_RE = re.compile(r"(#|plan_id=)(\d+)")
+
+
+def masked(plan: str) -> str:
+    """``plan`` with its expression ids and plan ids renumbered from 0
+    in order of first appearance, so the same plan prints the same text
+    in every run while references between its nodes stay readable."""
+    seen: dict[str, dict[str, int]] = {"#": {}, "plan_id=": {}}
+
+    def renumber(m: re.Match) -> str:
+        ids = seen[m.group(1)]
+        return m.group(1) + str(ids.setdefault(m.group(2), len(ids)))
+
+    return ID_RE.sub(renumber, plan)
 
 
 def main() -> None:
@@ -87,7 +104,7 @@ def main() -> None:
         print(f"## {name} (full executed plan)")
         print()
         print("```")
-        print(rows[name].rstrip()[:4000])
+        print(masked(rows[name]).rstrip()[:4000])
         print("```")
     spark.stop()
 

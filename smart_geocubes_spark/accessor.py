@@ -311,8 +311,12 @@ class GeocubeAccessor:
 
     def snapshots(self) -> list[dict]:
         """Committed versions in commit order (icechunk commit-log
-        analog); each fill/compaction is a readable snapshot."""
-        return cube_snapshots(self.path)
+        analog); each fill/compaction is a readable snapshot:
+        {seq, batch_id, committed_at}."""
+        return [
+            {k: s[k] for k in ("seq", "batch_id", "committed_at")}
+            for s in cube_snapshots(self.path)
+        ]
 
     def read_snapshot(
         self,

@@ -98,13 +98,6 @@ def ring_offsets(k: int) -> np.ndarray:
     return np.asarray(offs, dtype=np.int64)
 
 
-def disk_offsets(k: int) -> np.ndarray:
-    """All offsets with Chebyshev radius <= k ((2k+1)^2 cells)."""
-    r = np.arange(-k, k + 1, dtype=np.int64)
-    dx, dy = np.meshgrid(r, r)
-    return np.column_stack([dx.ravel(), dy.ravel()])
-
-
 def cell_ring(cell: int, k: int) -> np.ndarray:
     """Cell ids of the ring at radius k around ``cell`` (same res),
     clipped at grid edges (no wrap in y; wrap in x for antimeridian)."""

@@ -1,4 +1,4 @@
-"""Explicit skew handling: salted two-level aggregation + salted join.
+"""Explicit skew handling: salted two-level aggregation.
 
 North-rule requirement ("skew from dense web regions is handled
 explicitly with salted repartitioning on cell prefix"). The fixture
@@ -35,13 +35,3 @@ def salted_count_sum(
         final_aggs.append(F.sum("_ps").cast("long").alias(f"sum_{sum_col}"))
     return partial.groupBy(key).agg(*final_aggs)
 
-
-def salted_join(
-    big: DataFrame, small: DataFrame, key: str, n_salts: int = 8
-) -> DataFrame:
-    """Salted equi-join for a skewed big side: big rows get a random-ish
-    deterministic salt, the small side is exploded across all salts, and
-    the join key becomes (key, salt). Equivalent rows, no hot reducer."""
-    b = big.withColumn("_salt", F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(n_salts)))
-    s = small.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)])))
-    return b.join(s, [key, "_salt"]).drop("_salt")

@@ -18,7 +18,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from smart_geocubes_spark.geo.cells import cell_encode
 from smart_geocubes_spark.geo.geobox import TileGrid
 from smart_geocubes_spark.geo.projection import normalize_antimeridian, project
 
@@ -60,29 +59,6 @@ def make_tile_udf(grid: TileGrid, crs: str):
         )
 
     return tile_udf
-
-
-def make_cell_udf(res: int):
-    """Arrow-batched Morton cell encode at resolution ``res`` (the
-    engine's H3/S2-role index; oracle: functions.sqlgen.morton_cell_sql)."""
-
-    @F.pandas_udf("long")
-    def cell_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        import numpy as np
-
-        lo = lon.to_numpy(np.float64)
-        la = lat.to_numpy(np.float64)
-        ok = ~np.isnan(lo) & ~np.isnan(la)
-        cells = cell_encode(np.nan_to_num(lo), np.nan_to_num(la), res)
-        # NULL in -> NULL out: an unmasked NaN would cast through int64
-        # and CLAMP to the grid corner — the same cell id as a real
-        # point at the extent edge, silently polluting that cell's
-        # aggregates (the SQL oracle yields NULL for NULL coords).
-        out = pd.array(cells, dtype="Int64")
-        out[~ok] = pd.NA
-        return pd.Series(out)
-
-    return cell_udf
 
 
 # imported, not copied: every fused kernel MUST parse exactly what the

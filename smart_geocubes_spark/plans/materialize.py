@@ -7,7 +7,7 @@ Re-expresses the reference's load-and-cache lifecycle
     -> minus the ROI's lineage keys      (cache skip, accessor.py:434-436)
     -> mapInArrow block kernel that      (download_patch analog)
        writes its own parquet files      (chunk-region write, backend.py:263-272)
-    -> lineage append + commit ticket    (loaded_patches + icechunk commit,
+    -> lineage append + commit record    (loaded_patches + icechunk commit,
                                           backends/simple.py:36-38)
 
 On-disk layout — the one format every writer produces:
@@ -15,34 +15,32 @@ On-disk layout — the one format every writer produces:
   _meta.json                       CubeSpec (grid, channels, time, dtypes)
   blocks/batch=<id>/dt-<elem>/     one parquet leaf per storage element
                                    type (``dt-double`` for float64
-                                   channels), each with its _SUCCESS
-  blocks/batch=<id>/_SUCCESS       every leaf of the batch landed
-  lineage/batch=<id>/              one payload-free row per chunk, and
-                                   _tile_ranges.json: each part file's
-                                   tile_id min/max (and tile_x min/max
-                                   for a fill's or patch's files)
-  lineage/_commits/<seq>=<id>      the O_EXCL commit ticket, created
-                                   with the cube by :func:`create_cube`
+                                   channels)
+  lineage/batch=<id>/              one payload-free row per chunk
+  lineage/_commits/<seq>           a batch's COMMIT RECORD, a JSON
+                                   {batch_id, committed_at, ranges,
+                                   covered} (:func:`_allocate_commit_seq`);
+                                   the dir is created with the cube
 
 Fills, patches and compactions all write this layout (beside it:
 ``events_write/``, ``metrics/``, ``patches/``, and ``events/`` and
 ``overviews/`` once compaction or a pyramid build ran).
 
 Transactional model: each run writes under ``blocks/batch=<id>/``,
-then ``lineage/batch=<id>/``, then takes its commit ticket; a batch
-exists iff its ticket was taken (after its lineage _SUCCESS). Each
-store call lists commit state ONCE (:func:`snapshots`) and resolves
-every read against those batch ids, as an icechunk session reads one
+then ``lineage/batch=<id>/``, then publishes its commit record; a
+batch exists iff its record was published. Each store call lists
+commit state ONCE (:func:`snapshots`, which reads the records) and
+resolves every read against them, as an icechunk session reads one
 snapshot: a reader serves a block row only if its (chunk_key,
 batch_id) wins in those batches' lineage (one ROI-pruned read on the
 driver), from the winners' ``blocks/batch=<id>/`` (never listed), so
-a job killed at any point before the ticket leaves invisible orphans
+a job killed at any point before the record leaves invisible orphans
 and the next run redoes exactly the missing chunks — the same
 observable semantics as one icechunk commit per patch with
 ``loaded_patches`` replay (``backends/threaded.py:119-122``). A kernel
 task moves each block file into place with ``os.replace`` from an
 attempt-unique temp name, so a retried task overwrites its file, and
-the batch's ``_SUCCESS`` lands only after the one write job succeeded.
+the record is published only after the one write job succeeded.
 The executors write into the store's own directories, so the store must
 be one filesystem that the driver and every executor share.
 
@@ -60,7 +58,7 @@ Scale notes (100 TB cube, 1000 executors):
   tiles ONCE, on the driver with ``pyarrow.parquet``, file by file on
   the calling thread (:func:`_read_files`) — no Spark job.
   It opens only the part files whose tile range, as their batch's
-  manifest records it, meets the ROI's, and the filter's tile_id range
+  commit record has it, meets the ROI's, and the filter's tile_id range
   guard skips every row group whose tile range misses it (fills and
   compactions write lineage in tile order), so the rows decoded are
   bounded by the ROI's chunk count x commits per chunk, never by the
@@ -96,6 +94,7 @@ import functools
 import json
 import os
 import shutil
+import tempfile
 import time
 import uuid
 from collections.abc import Iterator
@@ -395,56 +394,97 @@ def _commits_dir(path: str) -> str:
     return os.path.join(path, "lineage", "_commits")
 
 
-def _allocate_commit_seq(path: str, batch_id: str) -> int:
-    """The COMMIT TICKET: an O_EXCL-created file under lineage/_commits
-    whose creation is the batch's atomic commit point — taken AFTER the
-    lineage parquet lands, so commit ORDER is completion order, sealed
-    the instant a reader can see the batch (a ticket taken before the
-    write would let a stalled fill retroactively insert itself under
-    already-read snapshots). Order never depends on _SUCCESS mtimes
-    (coarse-granularity filesystems and cp/untar/object-store restores
-    produce equal or reordered mtimes). A crash between the lineage
-    write and the ticket leaves an invisible orphan that the next fill
-    redoes and vacuum() reaps."""
+def _ticket(path: str, seq: int) -> str:
+    """The commit record at ``seq``."""
+    return os.path.join(_commits_dir(path), f"{seq:010d}")
+
+
+def _allocate_commit_seq(
+    path: str, batch_id: str, ranges: dict[str, list[int]] | None, covered: list[str] | None
+) -> int:
+    """THE commit point: publish the batch's COMMIT RECORD
+    ``lineage/_commits/<seq>``, a JSON object of ``batch_id``,
+    ``committed_at`` (driver clock), ``ranges`` (each lineage part
+    file's :func:`_tile_range`, None: read every file) and ``covered``
+    (the batch ids whose event history a compaction carried, which
+    :func:`vacuum` may drop; None for a fill or patch). The record is
+    written to a hidden temp file first and published with
+    ``os.link``, which is atomic and fails if the name exists, so a
+    reader sees a whole record or none and a concurrent committer that
+    took ``seq`` moves this one to the next (the name is the seq alone:
+    one with the batch id in it would let two batches share a seq). It
+    is published AFTER the lineage parquet lands, so commit ORDER is
+    completion order, sealed the instant a reader can see the batch (a
+    seq taken before the write would let a stalled fill retroactively
+    insert itself under already-read snapshots). A crash before it
+    leaves an invisible orphan that the next fill redoes and vacuum()
+    reaps. Returns the seq."""
     d = _commits_dir(path)
-    seq = 1 + max(
-        (int(f.split("=", 1)[0]) for f in os.listdir(d) if "=" in f), default=0
-    )
-    while True:
-        try:
-            fd = os.open(
-                os.path.join(d, f"{seq:010d}={batch_id}"),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+    fd, tmp = tempfile.mkstemp(dir=d, prefix=".")
+    try:
+        # mkstemp makes it owner-only; every reader of the store reads it
+        os.fchmod(fd, 0o644)
+        with os.fdopen(fd, "w") as f:
+            json.dump(
+                {"batch_id": batch_id, "committed_at": time.time(), "ranges": ranges,
+                 "covered": covered},
+                f,
             )
-            os.close(fd)
-            return seq
-        except FileExistsError:  # concurrent committer took this seq
-            seq += 1
+            # durable before it is published: a torn record would make
+            # every later snapshots() call fail
+            f.flush()
+            os.fsync(f.fileno())
+        seq = 1 + max((int(f) for f in os.listdir(d) if not f.startswith(".")), default=0)
+        while True:
+            try:
+                os.link(tmp, _ticket(path, seq))
+                break
+            except FileExistsError:  # concurrent committer took this seq
+                seq += 1
+    finally:
+        os.unlink(tmp)
+    dfd = os.open(d, os.O_RDONLY)
+    try:
+        os.fsync(dfd)  # the link itself
+    finally:
+        os.close(dfd)
+    return seq
 
 
 def snapshots(path: str) -> list[dict]:
     """Committed snapshots in COMMIT order (the icechunk commit-log
     analog: every fill or compaction commit is a readable version).
-    Each entry: {batch_id, seq, committed_at}. THE listing of commit
-    state, which each store call takes once: one read of the tickets,
-    and a stat of each ticketed batch's lineage _SUCCESS (missing: not
-    committed; its mtime is ``committed_at``). Order comes from the
-    atomic commit counter (_allocate_commit_seq) — NEVER from mtimes,
+    Each entry is a commit record with its ``seq``:
+    {seq, batch_id, committed_at, ranges, covered}
+    (:func:`_allocate_commit_seq`). THE reader of commit state, which
+    each store call takes once: one listing of ``lineage/_commits`` and
+    one read of each record (hidden names are records being written).
+    Order comes from the atomic commit counter — NEVER from mtimes,
     which coarse filesystems and cp/untar restores make equal or
     non-monotonic. Vacuum sets the retention horizon: it physically
     drops shadowed batches, so time travel reaches only as far back as
     the last vacuum left intact."""
-    out = []
-    for f in os.listdir(_commits_dir(path)):
-        if "=" not in f:
+    return _commit_state(path)[0]
+
+
+def _commit_state(path: str) -> tuple[list[dict], list[str]]:
+    """:func:`snapshots`' records and the hidden temp files in
+    ``lineage/_commits`` (records being written, or left by a committer
+    killed before it removed its temp), from one listing. A record
+    unlinked between the listing and its read was uncommitted by a
+    concurrent :func:`vacuum`, and reads as not committed."""
+    d = _commits_dir(path)
+    out, temps = [], []
+    for f in os.listdir(d):
+        if f.startswith("."):
+            temps.append(f)
             continue
-        seq, bid = f.split("=", 1)
         try:
-            at = os.path.getmtime(os.path.join(path, "lineage", f"batch={bid}", "_SUCCESS"))
+            with open(os.path.join(d, f)) as fh:
+                out.append({"seq": int(f), **json.load(fh)})
         except FileNotFoundError:
             continue
-        out.append({"batch_id": bid, "seq": int(seq), "committed_at": at})
-    return sorted(out, key=lambda r: r["seq"])
+    return sorted(out, key=lambda r: r["seq"]), temps
 
 
 def _committed_ids(path: str) -> list[str]:
@@ -821,19 +861,15 @@ def _write_blocks(
     enter the JVM — and yields one (chunk_key, partition_id) row per
     chunk written, the job's only result. Returns those partition ids,
     indexed by chunk_key. ``block_dir`` is emptied first, as a Spark
-    overwrite would; each leaf's ``_SUCCESS`` and then the batch's land
-    after the job. ``patch`` and ``old`` are :func:`_fill_kernel`'s."""
+    overwrite would; no marker lands after the job, since the batch's
+    commit record, published after its lineage, vouches for its blocks.
+    ``patch`` and ``old`` are :func:`_fill_kernel`'s."""
     shutil.rmtree(block_dir, ignore_errors=True)
     for elem in frames:
         os.makedirs(os.path.join(block_dir, f"dt-{elem}"))
     plan = functools.reduce(DataFrame.union, frames.values())
     kernel = functools.partial(_fill_kernel, spec=spec, block_dir=block_dir, patch=patch, old=old)
     written = plan.mapInArrow(kernel, "chunk_key string, partition_id int").toArrow()
-    for elem in frames:
-        open(os.path.join(block_dir, f"dt-{elem}", "_SUCCESS"), "w").close()
-    # the layout's batch-level marker: no reader needs it (the batch's
-    # ticket, taken after its lineage, vouches for its blocks)
-    open(os.path.join(block_dir, "_SUCCESS"), "w").close()
     return written.to_pandas().set_index("chunk_key")["partition_id"]
 
 
@@ -1053,19 +1089,18 @@ _LINEAGE_ROW_BYTES = 8 + sum(
 
 def _write_lineage(
     spark: SparkSession, path: str, batch_id: str, lin: pd.DataFrame, nx: int
-) -> None:
+) -> dict[str, list[int]]:
     """Write a batch's lineage rows under ``lineage/batch=<id>/`` with
     ``pyarrow.parquet`` — no Spark job: the rows are a few KB of pandas
-    on the driver — then its ``_SUCCESS``, which :func:`snapshots`
-    requires, so a crash before it leaves the batch invisible. Rows go
-    in tile order, so each file and row group covers its own tile range
-    for :func:`_lineage_filter`'s range guard. The file count is the
-    kernel's byte rule (:func:`_open_costs`) on the rows' Spark-estimated
-    size: one file below ~3.5*10^4 rows. Physical types follow
-    :data:`LINEAGE_ARROW`, so Spark reads the files back under
-    :data:`LINEAGE_SCHEMA` (``time_idx`` int32). The batch's
-    :data:`_TILE_RANGES` manifest records each file's
-    :func:`_tile_range` on the grid's ``nx`` tile columns."""
+    on the driver. Rows go in tile order, so each file and row group
+    covers its own tile range for :func:`_lineage_filter`'s range
+    guard. The file count is the kernel's byte rule
+    (:func:`_open_costs`) on the rows' Spark-estimated size: one file
+    below ~3.5*10^4 rows. Physical types follow :data:`LINEAGE_ARROW`,
+    so Spark reads the files back under :data:`LINEAGE_SCHEMA`
+    (``time_idx`` int32). Returns each file's :func:`_tile_range` on
+    the grid's ``nx`` tile columns, by file name: the ``ranges`` of the
+    batch's commit record."""
     d = os.path.join(path, "lineage", f"batch={batch_id}")
     shutil.rmtree(d, ignore_errors=True)  # overwrite, as a Spark write would
     os.makedirs(d)
@@ -1083,36 +1118,26 @@ def _write_lineage(
         name = f"part-{i:05d}-{batch_id}.snappy.parquet"
         pq.write_table(table.slice(lo, hi - lo), os.path.join(d, name))
         ranges[name] = _tile_range(tiles[lo:hi], nx)
-    _write_tile_ranges(d, ranges)
-    open(os.path.join(d, "_SUCCESS"), "w").close()
-
-
-# a lineage batch's manifest: part file name -> [min, max] of its tile_id,
-# then [min, max] of its tile_x where known (:func:`_tile_range`)
-# (leading underscore: Spark and pyarrow readers skip the file)
-_TILE_RANGES = "_tile_ranges.json"
+    return ranges
 
 
 def _tile_range(tiles: np.ndarray, nx: int) -> list[int]:
-    """The :data:`_TILE_RANGES` entry of sorted ``tiles`` on a grid
-    ``nx`` tile columns wide: tile_id min and max, then tile_x min and
-    max. Together they bound the tiles' rectangle, so a fill's block
-    meets an ROI only where it meets the ROI's columns too; the tile_id
-    range alone meets every block in the ROI's tile rows."""
+    """The tile range of sorted ``tiles`` on a grid ``nx`` tile columns
+    wide, as a commit record's ``ranges`` hold it: tile_id min and max,
+    then tile_x min and max. Together they bound the tiles' rectangle,
+    so a fill's block meets an ROI only where it meets the ROI's
+    columns too; the tile_id range alone meets every block in the ROI's
+    tile rows."""
     xs = tiles % nx
     return [int(tiles[0]), int(tiles[-1]), int(xs.min()), int(xs.max())]
 
 
-def _write_tile_ranges(batch_dir: str, ranges: dict[str, list[int]]) -> None:
-    with open(os.path.join(batch_dir, _TILE_RANGES), "w") as f:
-        json.dump(ranges, f)
-
-
 def _footer_tile_ranges(batch_dir: str) -> dict[str, list[int]] | None:
-    """The :data:`_TILE_RANGES` manifest of a Spark-written lineage
-    batch, from its part files' footer statistics (a file without rows
-    has no range and is left out); None if a file has rows but no
-    tile_id statistics — the batch is then read whole."""
+    """The commit record's ``ranges`` of a Spark-written lineage batch
+    (a compaction's), from its part files' footer statistics: tile_id
+    min and max only (a file without rows has no range and is left
+    out); None if a file has rows but no tile_id statistics — the batch
+    is then read whole."""
     ranges = {}
     for name in sorted(os.listdir(batch_dir)):
         if name.startswith(("_", ".")):
@@ -1130,21 +1155,19 @@ def _footer_tile_ranges(batch_dir: str) -> dict[str, list[int]] | None:
     return ranges
 
 
-def _lineage_files(batch_dir: str, roi: list[int]) -> list[str]:
-    """The lineage part files of ``batch_dir`` whose tile range, as its
-    :data:`_TILE_RANGES` manifest records it, meets ``roi``, the ROI
-    tiles' :func:`_tile_range`: the tile_id ranges meet, and so do the
-    tile_x ranges where the manifest has one (a compacted batch's has
-    not); every part file of a batch without a manifest."""
-    try:
-        with open(os.path.join(batch_dir, _TILE_RANGES)) as f:
-            ranges = json.load(f)
-    except FileNotFoundError:
-        names = [n for n in sorted(os.listdir(batch_dir)) if not n.startswith(("_", "."))]
-        return [os.path.join(batch_dir, n) for n in names]
+def _lineage_files(path: str, snap: dict, roi: list[int]) -> list[str]:
+    """The lineage part files of the committed ``snap`` whose tile
+    range, as its commit record's ``ranges`` has it, meets ``roi``, the
+    ROI tiles' :func:`_tile_range`: the tile_id ranges meet, and so do
+    the tile_x ranges where the record has them (a compaction's has
+    not); every part file of a batch recorded without ranges."""
+    d = os.path.join(path, "lineage", f"batch={snap['batch_id']}")
+    ranges = snap["ranges"]
+    if ranges is None:
+        return [os.path.join(d, n) for n in sorted(os.listdir(d)) if not n.startswith(("_", "."))]
     lo, hi, x_lo, x_hi = roi
     return [
-        os.path.join(batch_dir, n) for n, r in sorted(ranges.items())
+        os.path.join(d, n) for n, r in sorted(ranges.items())
         if r[0] <= hi and r[1] >= lo and (len(r) < 4 or (r[2] <= x_hi and r[3] >= x_lo))
     ]
 
@@ -1165,7 +1188,7 @@ def _commit_batch(
     driver-side plan ``rows`` for ``batch_id``: blocks (one Spark job,
     :func:`_write_blocks`: one ``dt-<elem>`` leaf per storage group with
     planned chunks, ``patch``/``old`` as :func:`_fill_kernel` takes
-    them), write events, lineage, the commit ticket, then the per-run
+    them), write events, lineage, the commit record, then the per-run
     metrics json (event-log analog, core/backend.py:23-28) plus
     ``extra`` — which it returns. ``fail_after_blocks`` simulates a
     crash between the block write and the lineage commit."""
@@ -1195,8 +1218,8 @@ def _commit_batch(
         ),
         src_batch=batch_id,
     )
-    _write_lineage(spark, path, batch_id, lin, spec.grid.n_tiles_x)
-    _allocate_commit_seq(path, batch_id)  # THE commit point (atomic ticket)
+    ranges = _write_lineage(spark, path, batch_id, lin, spec.grid.n_tiles_x)
+    _allocate_commit_seq(path, batch_id, ranges, None)  # THE commit point
 
     metrics = {
         "batch_id": batch_id,
@@ -1354,29 +1377,30 @@ def _lineage_rows(
     path: str,
     tile_ids: list[int],
     channels: list[str] | None = None,
-    allowed: set[str] | None = None,
+    snaps: list[dict] | None = None,
     time_idxs: list[int] | None = None,
 ) -> pd.DataFrame:
     """THE lineage read of a fill, an ROI read, :func:`chunk_stats` and
-    :func:`load_changes`: the committed ``(chunk_key, batch_id,
-    src_batch)`` rows of the ``allowed`` batches (a snapshot's ids; None
-    reads the head, :func:`snapshots`) that pass :func:`_lineage_filter`
-    — which keeps ``allowed`` as a ``batch_id`` filter — read on the
-    driver by :func:`_read_files`, no Spark job. Only the part files
-    whose tile rectangle, as their batch's :data:`_TILE_RANGES` manifest
-    records it, meets the ROI's are opened (:func:`_lineage_files`), and
-    of those only the row groups whose range meets it are decoded, so
-    the read is bounded by the query (ROI chunks x commits per chunk),
-    not by the cube: what grows with the committed batches is one
-    ticket and one small manifest read each. Raw rows: more than one per
-    double-committed chunk."""
+    :func:`load_changes`: the ``(chunk_key, batch_id, src_batch)`` rows
+    of the committed ``snaps`` (a snapshot's records; None reads the
+    head, :func:`snapshots`) that pass :func:`_lineage_filter` — which
+    keeps given ``snaps``' batch ids as a ``batch_id`` filter — read on
+    the driver by :func:`_read_files`, no Spark job. Only the part
+    files whose tile rectangle, as their batch's commit record has it,
+    meets the ROI's are opened (:func:`_lineage_files`), and of those
+    only the row groups whose range meets it are decoded, so the read
+    is bounded by the query (ROI chunks x commits per chunk), not by
+    the cube: what grows with the committed batches is one small record
+    read each. Raw rows: more than one per double-committed chunk."""
     cols = ["chunk_key", "batch_id", "src_batch"]
     if not tile_ids:
         return pd.DataFrame(columns=cols)
     nx = open_spec(path).grid.n_tiles_x
     roi = _tile_range(np.sort(np.asarray(tile_ids, dtype=np.int64)), nx)
-    ids = _committed_ids(path) if allowed is None else sorted(allowed)
-    files = [f for b in _batch_dirs(path, "lineage", ids) for f in _lineage_files(b, roi)]
+    allowed = None if snaps is None else {s["batch_id"] for s in snaps}
+    if snaps is None:
+        snaps = snapshots(path)
+    files = [f for s in snaps for f in _lineage_files(path, s, roi)]
     if not files:
         return pd.DataFrame(columns=cols)
     # the rows' columns and the ones the filter reads
@@ -1468,13 +1492,14 @@ def _read_plan(
             raise ValueError(
                 f"unknown channels {unknown}; cube has {list(spec.channels)}"
             )
-    allowed: set[str] | None = None
+    snaps: list[dict] | None = None
     if as_of_batch is not None:
-        ids = _committed_ids(path)
+        snaps = snapshots(path)
+        ids = [s["batch_id"] for s in snaps]
         if as_of_batch not in ids:
             raise ValueError(f"unknown snapshot {as_of_batch!r}; committed: {ids}")
         # PREFIX of the commit order, inclusive
-        allowed = set(ids[: ids.index(as_of_batch) + 1])
+        snaps = snaps[: ids.index(as_of_batch) + 1]
     tile_ids, roi_pairs = _roi_tile_ids(spec.grid, roi_bbox)
     # visibility: a block row is visible iff the winning lineage row of
     # its chunk_key names its batch_id — orphan blocks from a crashed
@@ -1487,7 +1512,7 @@ def _read_plan(
     # their ``blocks/batch=<id>`` dirs, never listed: a committed
     # batch's blocks landed before its ticket.
     if lineage is None:
-        lineage = _lineage_rows(path, tile_ids, channels, allowed, time_idxs)
+        lineage = _lineage_rows(path, tile_ids, channels, snaps, time_idxs)
     vis = _visible(lineage)
     leafs = _block_leaf_dirs(_batch_dirs(path, "blocks", sorted(set(vis["batch_id"]))))
     if channels is not None:
@@ -1723,7 +1748,7 @@ def _read_leaf(
     :data:`BLOCK_SCHEMA` columns plus ``stats`` (``", " + STATS_COLS``
     or ""), ``block`` widened to ``list<double>`` (bool -> 0.0/1.0,
     NULL kept)."""
-    # not _SUCCESS, nor the fill kernel's hidden temp names
+    # not Spark's marker files, nor the fill kernel's hidden temp names
     files = [
         os.path.join(d, n) for d in dirs for n in sorted(os.listdir(d))
         if not n.startswith(("_", "."))
@@ -1862,7 +1887,7 @@ def load_changes(
     a commit that lands in between is invisible to all of them. The
     changed chunks' visible pairs filter the blocks as a literal IN
     list."""
-    plan = _changes_plan(path, roi_bbox, since_batch, _committed_ids(path), toi_epochs, channels)
+    plan = _changes_plan(path, roi_bbox, since_batch, snapshots(path), toi_epochs, channels)
     return _spark_rows(spark, plan, channels)
 
 
@@ -1870,19 +1895,21 @@ def _changes_plan(
     path: str,
     roi_bbox,
     since_batch: str,
-    ids: list[str],
+    snaps: list[dict],
     toi_epochs: list[int] | None = None,
     channels: list[str] | None = None,
 ) -> _ReadPlan:
-    """:func:`load_changes`' read plan against the committed batch
-    ``ids`` of one listing: the ROI's lineage rows of those batches,
-    read once, resolved to the winners now and at ``since_batch``, and
-    the plan of the chunks whose ``src_batch`` differs."""
+    """:func:`load_changes`' read plan against the committed ``snaps``
+    of one :func:`snapshots` listing: the ROI's lineage rows of those
+    batches, read once, resolved to the winners now and at
+    ``since_batch``, and the plan of the chunks whose ``src_batch``
+    differs."""
+    ids = [s["batch_id"] for s in snaps]
     if since_batch not in ids:
         raise ValueError(f"unknown snapshot {since_batch!r}; committed: {ids}")
     spec = open_spec(path)
     tile_ids, _ = _roi_tile_ids(spec.grid, roi_bbox)
-    lin = _lineage_rows(path, tile_ids, channels, set(ids), _toi_idxs(spec, toi_epochs))
+    lin = _lineage_rows(path, tile_ids, channels, snaps, _toi_idxs(spec, toi_epochs))
     then = _visible(lin[lin["batch_id"].isin(ids[: ids.index(since_batch) + 1])])
     old_src = dict(zip(then["chunk_key"], then["src_batch"]))
     now = _visible(lin)
@@ -1972,7 +1999,7 @@ def _build_overviews(spark: SparkSession, path: str, factors, roi_bbox, snaps: l
     # same enumeration load() prunes by; <= n_tiles ints) makes the
     # claim exact for every ROI spelling.
     built_tiles, _ = _roi_tile_ids(spec.grid, roi_bbox)
-    lineage = _lineage_rows(path, built_tiles, allowed={s["batch_id"] for s in snaps})
+    lineage = _lineage_rows(path, built_tiles, snaps=snaps)
     src = _spark_rows(spark, _read_plan(path, roi_bbox, None, None, None, lineage))
     n = 0
     for f in factors:
@@ -2015,7 +2042,6 @@ def refresh_overviews(
     # so the next refresh merges it — stamping a later listing would
     # skip it for good
     snaps = snapshots(path)
-    ids = [s["batch_id"] for s in snaps]
     cur_seq = snaps[-1]["seq"] if snaps else 0
     cur_batch = snaps[-1]["batch_id"] if snaps else None
     changed_total = 0
@@ -2027,7 +2053,7 @@ def refresh_overviews(
                 meta = json.load(fh)
             if meta["built_at_seq"] >= cur_seq:
                 continue  # already current
-            plan = _changes_plan(path, spec.grid.geobox.extent, meta["built_at_batch"], ids)
+            plan = _changes_plan(path, spec.grid.geobox.extent, meta["built_at_batch"], snaps)
         except (FileNotFoundError, ValueError):
             # no level, or its build snapshot is gone (or never existed)
             _build_overviews(spark, path, (f,), None, snaps)
@@ -2188,7 +2214,6 @@ def compact(spark: SparkSession, path: str) -> dict:
             "left_semi",
         ).withColumn("batch_id", F.lit(new_id))
         visible.write.mode("overwrite").parquet(os.path.join(new_dir, f"dt-{elem}"))
-    open(os.path.join(new_dir, "_SUCCESS"), "w").close()
 
     # event history: copy every committed event row (original batch_id
     # values preserved in the COLUMN; the dir is the visibility unit)
@@ -2208,40 +2233,33 @@ def compact(spark: SparkSession, path: str) -> dict:
         # its own tile range, which the driver read's range guard prunes
         .orderBy("tile_id", "time_idx", "channel")
     )
-    new_lineage.write.mode("overwrite").parquet(
-        os.path.join(path, "lineage", f"batch={new_id}")
-    )
-    # manifest of the batches whose event history THIS compaction
-    # carried — vacuum's ground truth for what is safe to delete. A
-    # batch committing concurrently (after the listing above) is not
-    # listed, so its events can never be vacuumed on our account.
-    # Leading underscore: Spark/Hadoop readers ignore the file.
     new_lin = os.path.join(path, "lineage", f"batch={new_id}")
-    with open(os.path.join(new_lin, "_covered.json"), "w") as mf:
-        json.dump(sorted(committed), mf)
-    # the tile-range manifest of the driver's lineage read, from the
-    # written files' footers; without one the batch is read whole
-    ranges = _footer_tile_ranges(new_lin)
-    if ranges is not None:
-        _write_tile_ranges(new_lin, ranges)
-    # THE commit point: until the ticket lands the compacted batch is an
+    new_lineage.write.mode("overwrite").parquet(new_lin)
+    # THE commit point: until its record lands the compacted batch is an
     # invisible orphan (readers keep the old view); compaction commits
-    # LAST in seq order
-    _allocate_commit_seq(path, new_id)
+    # LAST in seq order. The record's ranges come from the written
+    # files' footers (without them the batch is read whole); ``covered``
+    # names the batches whose event history THIS compaction carried —
+    # vacuum's ground truth for what is safe to delete. A batch
+    # committing concurrently (after the listing above) is not named,
+    # so its events can never be vacuumed on our account
+    _allocate_commit_seq(path, new_id, _footer_tile_ranges(new_lin), sorted(committed))
     n_chunks = winners.count()
     return {"batch_id": new_id, "chunks": int(n_chunks), "batches_covered": len(committed)}
 
 
 def vacuum(spark: SparkSession, path: str, min_orphan_age_sec: float = 86400.0) -> dict:
     """Physically remove (1) uncommitted batch dirs older than
-    ``min_orphan_age_sec`` (crashed orphans — invisible by the lineage
-    gate) and (2) committed batches that a compaction RECORDED as
-    carried (its ``_covered.json`` manifest) and whose covering
-    compaction committed at least ``min_orphan_age_sec`` ago. Never
-    touches a batch that wins any chunk, and never deletes a shadowed
-    batch no manifest vouches for (e.g. a dup-only concurrent fill that
-    lost every chunk but whose event history was never carried — its
-    events stay, the log is append-only).
+    ``min_orphan_age_sec`` (crashed orphans — invisible without a
+    commit record) and commit-record temp files as old (left by a
+    committer killed before it removed its temp), and (2) committed
+    batches that a compaction RECORDED as carried (its record's
+    ``covered``) and whose covering compaction
+    committed at least ``min_orphan_age_sec`` ago. Never touches a
+    batch that wins any chunk, and never deletes a shadowed batch no
+    record vouches for (e.g. a dup-only concurrent fill that lost every
+    chunk but whose event history was never carried — its events stay,
+    the log is append-only).
 
     The age guard serves twice: a fill IN FLIGHT looks exactly like a
     crashed orphan (blocks written, lineage not yet) — deleting it
@@ -2251,15 +2269,18 @@ def vacuum(spark: SparkSession, path: str, min_orphan_age_sec: float = 86400.0) 
     shadowed files to outlive the compaction by the retention window.
     Default 24 h; pass 0 only when no fill can be running and no lazy
     reader is live (tests, single-actor admin)."""
-    # ONE read of commit state: the tickets, their mtimes (commit
-    # times) and the committed batches among them, as snapshots() has it
-    cdir = _commits_dir(path)
-    tickets = {f.split("=", 1)[1]: os.path.join(cdir, f) for f in os.listdir(cdir) if "=" in f}
-    ticket_mtime = {bid: os.path.getmtime(p) for bid, p in tickets.items()}
-    lin = os.path.join(path, "lineage")
-    committed = {b for b in tickets if os.path.exists(os.path.join(lin, f"batch={b}", "_SUCCESS"))}
+    snaps, temps = _commit_state(path)
+    committed = {s["batch_id"] for s in snaps}
     now = time.time()
     removed_orphans = []
+    for f in temps:  # a committer killed between its temp's write and unlink
+        p = os.path.join(_commits_dir(path), f)
+        try:
+            if now - os.path.getmtime(p) >= min_orphan_age_sec:
+                os.unlink(p)
+                removed_orphans.append(f"lineage/_commits/{f}")
+        except FileNotFoundError:  # its committer removed it
+            pass
     for sub in ("blocks", "events", "events_write", "lineage"):
         d = os.path.join(path, sub)
         if not os.path.isdir(d):
@@ -2285,38 +2306,24 @@ def vacuum(spark: SparkSession, path: str, min_orphan_age_sec: float = 86400.0) 
 
     # which shadowed batches did a compaction actually CARRY, and has
     # that compaction been committed long enough for lazy readers to
-    # have drained (ticket mtime = commit time)?
-    vouched: set[str] = set()
-    for bid in sorted(committed):
-        mf = os.path.join(lin, f"batch={bid}", "_covered.json")
-        if not os.path.exists(mf):
-            continue
-        if now - ticket_mtime[bid] < min_orphan_age_sec:
-            continue  # compaction too fresh: retention window still open
-        with open(mf) as fh:
-            vouched.update(json.load(fh))
+    # have drained?
+    vouched = {
+        b for s in snaps
+        if s["covered"] is not None and now - s["committed_at"] >= min_orphan_age_sec
+        for b in s["covered"]
+    }
     removed_shadowed = []
-    removed_bids = set()
-    for bid in sorted(committed):
+    for s in sorted(snaps, key=lambda s: s["batch_id"]):
+        bid = s["batch_id"]
         if bid in winning or bid not in vouched:
             continue
         b = f"batch={bid}"
         # uncommit first: a crash below leaves an orphan, never a
         # committed batch without its blocks
-        os.unlink(os.path.join(lin, b, "_SUCCESS"))
+        os.unlink(_ticket(path, s["seq"]))
         for sub in ("blocks", "events", "events_write", "lineage"):
             p = os.path.join(path, sub, b)
             if os.path.isdir(p):
                 shutil.rmtree(p, ignore_errors=True)
         removed_shadowed.append(b)
-        removed_bids.add(bid)
-
-    # commit-ticket hygiene: entries of removed batches, plus any
-    # dangling ticket whose lineage no longer exists, past the same
-    # age guard
-    for bid, p in tickets.items():
-        if bid in removed_bids or (
-            bid not in committed and now - ticket_mtime[bid] >= min_orphan_age_sec
-        ):
-            os.unlink(p)
     return {"orphans_removed": removed_orphans, "shadowed_removed": removed_shadowed}

@@ -229,6 +229,15 @@ def test_snapshots_and_read_snapshot(spark, tmp_path):
     assert acc.fill(ROI_POLAR)["written"] == 0  # read_snapshot never fills
 
 
+def test_snapshots_name_version_not_manifest(spark, tmp_path):
+    """The accessor's snapshots() names each version by its seq, batch
+    id and commit time, and exposes no store-internal manifest fields."""
+    acc = arcticdem_like(spark, str(tmp_path / "adem"))
+    acc.load(ROI_POLAR, create=True)
+    (snap,) = acc.snapshots()
+    assert set(snap) == {"seq", "batch_id", "committed_at"} and snap["seq"] == 1
+
+
 def test_load_like_foreign_time_idx_clamped(spark, tmp_path):
     """A ref frame carrying time_idx values past this cube's epoch axis
     (frame from a different/longer-axis cube) must not IndexError —

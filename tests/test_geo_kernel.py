@@ -20,7 +20,7 @@ from smart_geocubes_spark.geo import (
     project,
     unproject,
 )
-from smart_geocubes_spark.geo.cells import disk_offsets, ring_offsets
+from smart_geocubes_spark.geo.cells import ring_offsets
 from smart_geocubes_spark.geo.geobox import arctic_4326_grid, polar_3413_grid
 from smart_geocubes_spark.geo.projection import normalize_antimeridian
 from smart_geocubes_spark.text import extract_text
@@ -159,7 +159,6 @@ class TestCells:
         assert ring_offsets(0).shape == (1, 2)
         assert ring_offsets(1).shape == (8, 2)
         assert ring_offsets(3).shape == (24, 2)
-        assert disk_offsets(2).shape == (25, 2)
         c = int(cell_encode(np.array([0.0]), np.array([0.0]), 8)[0])
         ring1 = cell_ring(c, 1)
         assert len(ring1) == 8

@@ -310,19 +310,6 @@ class TestEdgeCaseFixes:
         assert len(wrap_rows) >= 2
         assert wrap_rows["minx"].min() == -180.0 and wrap_rows["maxx"].max() == 180.0
 
-    def test_cell_udf_null_coords_give_null(self, spark):
-        from smart_geocubes_spark.operators.tiles import make_cell_udf
-
-        df = spark.createDataFrame(
-            [(1, -180.0, 84.0), (2, None, 50.0), (3, 10.0, None)],
-            "id long, lon double, lat double",
-        )
-        out = df.select("id", make_cell_udf(8)("lon", "lat").alias("cell")).collect()
-        got = {r["id"]: r["cell"] for r in out}
-        assert got[1] is not None
-        # NULL coords must NOT collapse onto the extent-corner cell
-        assert got[2] is None and got[3] is None
-
     def test_asof_null_ts_stays_null(self, spark):
         from smart_geocubes_spark.operators.temporal import asof_nearest
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import glob
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -123,7 +124,7 @@ def test_crash_before_first_ticket_is_invisible(spark, cube, monkeypatch):
     fill, with no ticket-less first-fill mode."""
     import smart_geocubes_spark.plans.materialize as mat
 
-    def crash(path, batch_id):
+    def crash(*a, **k):
         raise RuntimeError("simulated crash before the commit ticket")
 
     monkeypatch.setattr(mat, "_allocate_commit_seq", crash)
@@ -1155,14 +1156,15 @@ def test_vacuum_never_deletes_unvouched_shadowed_batch(spark, cube):
     """A committed batch that wins zero chunks (dup-only concurrent
     fill) is shadowed, but if no compaction ever carried its event
     history there is no copy anywhere — vacuum must keep it (the event
-    log is append-only). Only after a compaction's _covered.json
-    vouches for it may vacuum drop it."""
+    log is append-only). Only after a compaction's commit record
+    vouches for it (``covered``) may vacuum drop it."""
     import shutil as _sh
 
     from smart_geocubes_spark.plans.materialize import (
         _allocate_commit_seq,
         compact,
         read_events,
+        snapshots,
         vacuum,
     )
 
@@ -1175,7 +1177,7 @@ def test_vacuum_never_deletes_unvouched_shadowed_batch(spark, cube):
         src = os.path.join(cube, sub, f"batch={m['batch_id']}")
         if os.path.isdir(src):
             _sh.copytree(src, os.path.join(cube, sub, f"batch={dup}"))
-    _allocate_commit_seq(cube, dup)
+    _allocate_commit_seq(cube, dup, snapshots(cube)[0]["ranges"], covered=None)
     ev_before = read_events(spark, cube).count()
 
     v = vacuum(spark, cube, min_orphan_age_sec=0)
@@ -1187,6 +1189,135 @@ def test_vacuum_never_deletes_unvouched_shadowed_batch(spark, cube):
     assert any(dup in b for b in v2["shadowed_removed"])
     # event history survives via the compacted copy (dedup'd by reader)
     assert read_events(spark, cube).count() == ev_before
+
+
+def test_commit_record_seq_collision(spark, cube, monkeypatch):
+    """Three commits that each see an empty ``_commits`` listing all
+    try seq 1 first: the atomic link of each record fails on a taken
+    seq and moves to the next, so they get seqs 1, 2 and 3, and every
+    record reads back whole. A hidden temp file — a record still being
+    written — is not a snapshot."""
+    import sys
+
+    import smart_geocubes_spark.plans.materialize as M
+
+    real_listdir = os.listdir
+
+    def listdir(p="."):
+        if sys._getframe(1).f_code.co_name == "_allocate_commit_seq":
+            return []
+        return real_listdir(p)
+
+    rois = [ROI_A, (8.3, 15.2, 9.8, 16.9), (12.3, 10.2, 13.8, 11.9)]
+    with monkeypatch.context() as mp:
+        mp.setattr(os, "listdir", listdir)
+        bids = [materialize(spark, cube, roi)["batch_id"] for roi in rois]
+    with open(os.path.join(cube, "lineage", "_commits", ".torn"), "w") as f:
+        f.write('{"committed_at": 1')
+    snaps = M.snapshots(cube)
+    assert [(s["batch_id"], s["seq"]) for s in snaps] == list(zip(bids, [1, 2, 3]))
+    for s in snaps:
+        assert s["covered"] is None and isinstance(s["committed_at"], float)
+        (name,) = os.listdir(os.path.join(cube, "lineage", f"batch={s['batch_id']}"))
+        assert list(s["ranges"]) == [name]
+    assert sorted(os.listdir(os.path.join(cube, "lineage", "_commits"))) == [
+        ".torn", "0000000001", "0000000002", "0000000003"
+    ]
+    assert load(spark, cube, (2.0, 10.0, 14.0, 18.0)).count() == 18 + 8 + 8
+
+
+def test_interrupted_vacuum_leaves_an_orphan(spark, cube, monkeypatch):
+    """A vacuum killed after it uncommitted a shadowed batch (its record
+    unlinked) but before its dirs were gone changes no visible row: the
+    batch is no longer a snapshot, and the next vacuum removes its dirs
+    as an orphan."""
+    import smart_geocubes_spark.plans.materialize as M
+    from smart_geocubes_spark.plans.materialize import compact, snapshots, vacuum
+
+    big = (2.0, 14.0, 7.0, 18.0)
+    materialize(spark, cube, ROI_A)
+    materialize(spark, cube, ROI_B)
+    compact(spark, cube)
+    before = _visible_state(spark, cube, big)
+    ids = {s["batch_id"] for s in snapshots(cube)}
+
+    def killed(*a, **k):
+        raise RuntimeError("simulated crash during vacuum")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(M.shutil, "rmtree", killed)
+        with pytest.raises(RuntimeError, match="during vacuum"):
+            vacuum(spark, cube, min_orphan_age_sec=0)
+    (gone,) = ids - {s["batch_id"] for s in snapshots(cube)}
+    assert os.path.isdir(os.path.join(cube, "blocks", f"batch={gone}"))
+    assert _visible_state(spark, cube, big) == before
+
+    v = vacuum(spark, cube, min_orphan_age_sec=0)
+    assert f"blocks/batch={gone}" in v["orphans_removed"]
+    assert f"lineage/batch={gone}" in v["orphans_removed"]
+    assert len(v["shadowed_removed"]) == 1
+    assert not glob.glob(os.path.join(cube, "*", f"batch={gone}"))
+    assert _visible_state(spark, cube, big) == before
+
+
+def test_record_unlinked_under_a_reader_reads_as_uncommitted(spark, cube, monkeypatch):
+    """A vacuum that uncommits a shadowed batch between a reader's
+    listing of ``_commits`` and its read of that record leaves the
+    reader a snapshot without the batch, not an error, and the same
+    visible rows."""
+    import smart_geocubes_spark.plans.materialize as M
+    from smart_geocubes_spark.plans.materialize import compact, snapshots
+
+    big = (2.0, 14.0, 7.0, 18.0)
+    materialize(spark, cube, ROI_A)
+    materialize(spark, cube, ROI_B)
+    compact(spark, cube)
+    before = _visible_state(spark, cube, big)
+    first = snapshots(cube)[0]
+    rec = M._ticket(cube, first["seq"])
+    with open(rec) as f:
+        saved = f.read()
+    real_listdir = os.listdir
+
+    def listdir(p="."):
+        names = real_listdir(p)
+        if isinstance(p, str) and os.path.basename(os.path.normpath(p)) == "_commits":
+            if os.path.exists(rec):
+                os.unlink(rec)
+        return names
+
+    for read in (lambda: snapshots(cube), lambda: _visible_state(spark, cube, big)):
+        with open(rec, "w") as f:
+            f.write(saved)
+        with monkeypatch.context() as mp:
+            mp.setattr(os, "listdir", listdir)
+            got = read()
+        assert not os.path.exists(rec)
+        if isinstance(got, list):
+            assert len(got) == 2 and first["batch_id"] not in {s["batch_id"] for s in got}
+        else:
+            assert got == before
+
+
+def test_vacuum_reaps_old_commit_temps(spark, cube):
+    """A commit-record temp file left in ``_commits`` (its committer was
+    killed before it removed it) is no snapshot, and vacuum removes it
+    once it is older than ``min_orphan_age_sec``."""
+    from smart_geocubes_spark.plans.materialize import snapshots, vacuum
+
+    materialize(spark, cube, ROI_A)
+    tmp = os.path.join(cube, "lineage", "_commits", ".left")
+    with open(tmp, "w") as f:
+        f.write('{"committed_at": 1')
+    assert len(snapshots(cube)) == 1
+    assert vacuum(spark, cube, min_orphan_age_sec=3600)["orphans_removed"] == []
+    assert os.path.exists(tmp)
+    os.utime(tmp, (time.time() - 7200,) * 2)
+    assert vacuum(spark, cube, min_orphan_age_sec=3600)["orphans_removed"] == [
+        "lineage/_commits/.left"
+    ]
+    assert not os.path.exists(tmp)
+    assert len(snapshots(cube)) == 1
 
 
 def test_patch_merge_preserves_borders_and_time_travel(spark, cube):
@@ -1410,7 +1541,7 @@ def test_lineage_read_opens_only_the_rois_files(spark, cube, monkeypatch):
     assert len(got) == 6 and set(got["batch_id"]) == {bid}
 
     cid = M.compact(spark, cube)["batch_id"]
-    assert os.path.exists(os.path.join(cube, "lineage", f"batch={cid}", M._TILE_RANGES))
+    assert next(s for s in M.snapshots(cube) if s["batch_id"] == cid)["ranges"]
     batches, got = lineage_opened(roi)
     assert batches <= {bid, cid} and cid in batches
     assert len(got) == 6 and set(got["batch_id"]) == {cid}
@@ -1845,12 +1976,12 @@ class TestChannelDtypes:
         formula = 3 * 1000.0 + 2 + 0.5 * np.arange(100 * 100)
         assert np.array_equal(by_ch["dem"], formula)  # untouched float64
         assert np.array_equal(by_ch["datamask"], (formula != 0).astype(float))
-        # each batch physically holds only its own dtype leaf + _SUCCESS
+        # each batch physically holds only its own dtype leaf
         def entries(batch_id):
             return set(os.listdir(os.path.join(path, "blocks", f"batch={batch_id}")))
 
-        assert entries(m0["batch_id"]) == {"dt-double", "_SUCCESS"}
-        assert entries(m["batch_id"]) == {"dt-boolean", "_SUCCESS"}
+        assert entries(m0["batch_id"]) == {"dt-double"}
+        assert entries(m["batch_id"]) == {"dt-boolean"}
 
 
 def test_zone_map_stats_and_value_range_pruning(spark, cube):

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from smart_geocubes_spark.operators.geoparse import geoparsed_points
 from smart_geocubes_spark.operators.knn import knn_join
 from smart_geocubes_spark.operators.prep import prep_pages
-from smart_geocubes_spark.operators.skew import salted_count_sum, salted_join
+from smart_geocubes_spark.operators.skew import salted_count_sum
 from smart_geocubes_spark.sources.synth import pages_df
 from smart_geocubes_spark.text.extract import extract_text
 
@@ -195,18 +195,6 @@ class TestSkew:
         g = {r.host_id: (r.n, r.sum_page_id) for r in got.collect()}
         w = {r.host_id: (r.n, r.sum_page_id) for r in want.collect()}
         assert g == w
-
-    def test_salted_join_equals_plain(self, spark):
-        big = pages_df(spark, SF).select("page_id", "host_id")
-        small = spark.createDataFrame(
-            pd.DataFrame({"host_id": range(50), "region": [f"r{i % 5}" for i in range(50)]})
-        )
-        got = salted_join(big, small, "host_id").groupBy("region").count()
-        want = big.join(small, "host_id").groupBy("region").count()
-        assert {(r.region, r["count"]) for r in got.collect()} == {
-            (r.region, r["count"]) for r in want.collect()
-        }
-
 
 class TestMultimodal:
     def test_real_codec_seam_raises(self, spark):
